@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.GraftSession
+import graft.engine.{Codegen, GraftSession}
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{name:sec}}. Headline set =
@@ -266,7 +266,7 @@ object Bench {
       try { qs(name)(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
       catch { case _: Throwable => false }
     for (round <- 1 to rounds) {
-      val results = names.map { name =>
+      val measured = names.map { name =>
         // Hygiene between queries: the caching operators benched since r7
         // (quickselect, PageRank) release their persists on exit, but a
         // failure path or executor-side stragglers can leave blocks behind;
@@ -282,7 +282,9 @@ object Bench {
         graft.engine.BoundedCaches.releaseAll()
         spark.catalog.clearCache()
         System.gc()
+        val codegen0 = Codegen.count()
         run(name)
+        val codegen1 = Codegen.count()
         var ok = true
         def timed(): Double = {
           val t0 = System.nanoTime()
@@ -298,13 +300,20 @@ object Bench {
             base ++ Array.fill(ExtraIters)(timed())
           else base).sorted
         val median = times(times.length / 2)
-        (name, median, times.head, times.last, ok)
+        val compiles = ((codegen1 - codegen0).compiles, (Codegen.count() - codegen1).compiles)
+        ((name, median, times.head, times.last, ok), compiles)
       }
+      val results = measured.map(_._1)
       // Full-precision per-query detail: stdout for humans AND ./BENCH.out
       // for whole-file readers (the driver's tail cap never truncates a
-      // file), min/max included there.
-      val detail = results.map { case (k, med, mn, mx, ok) =>
-        f"BENCH $k%-28s median=$med%.4f min=$mn%.4f max=$mx%.4f ${if (ok) "ok" else "FAILED"}"
+      // file), min/max included there. `compiles` counts generated-code
+      // compile units in the warm-up run and across all timed runs. Timed
+      // compiles are code that differs between runs, or a query that
+      // outgrew the codegen class cache; a second round whose warm-ups
+      // still compile means the whole pass outgrew it.
+      val detail = measured.map { case ((k, med, mn, mx, ok), (warm, timed)) =>
+        f"BENCH $k%-28s median=$med%.4f min=$mn%.4f max=$mx%.4f " +
+          s"${if (ok) "ok" else "FAILED"} compiles warm=$warm timed=$timed"
       }
       detail.foreach(println)
       import java.nio.file.StandardOpenOption._

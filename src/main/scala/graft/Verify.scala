@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.GraftSession
+import graft.engine.{Codegen, GraftSession}
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -40,6 +40,16 @@ object Verify {
     // visible the round it lands, not discovered in a later bench sweep
     System.err.println("[verify-timing-top10] " + timings.sortBy(-_._2).take(10)
       .map { case (n, s) => f"$n=$s%.2fs" }.mkString(" "))
+    // The pass's codegen working set (compile units; each distinct unit
+    // compiles once while the class cache holds it) and the Metaspace the
+    // cached classes keep alive.
+    val codegen = Codegen.count()
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .stream().filter(_.getName == "Metaspace").findFirst()
+      .map[String](p => (p.getUsage.getUsed >> 20).toString).orElse("?")
+    System.err.println(s"[verify-codegen] compiles=${codegen.compiles} " +
+      s"compile_ms=${codegen.ms} cache_cap=${Codegen.cacheMaxEntries().getOrElse("?")} " +
+      s"metaspace_used_mb=$metaspaceMb")
     // A query that errors writes no output and would silently vanish from
     // the driver's tally (the r7 TIMESTAMP_NTZ drift cost 9 queries this
     // way) — so the dump ends with an unmissable count line, and

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
@@ -11,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * joins/aggregations re-plan at runtime, and a shuffle-partition count sized
   * for the local[32] test harness. On a real cluster the same builder is used
   * with `master` unset and shuffle partitions sized to cores × executors.
+  *
+  * [[builder]] also sizes Spark's JVM-wide codegen class cache
+  * ([[CodegenCacheMaxEntries]], via [[Codegen.size]]) and prints one stderr
+  * line with the scratch directory it chose, why, and the cache cap in
+  * effect, so every session (`local`, the test session, every main) starts
+  * with the same, visible engine configuration.
   */
 object GraftSession {
 
@@ -23,6 +30,18 @@ object GraftSession {
     */
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val (localDir, localDirWhy) = scratchDir(sys.env.get)
+    // A cap the user already put in the SparkConf (spark-submit --conf or
+    // -Dspark.sql.codegen.cache.maxEntries) wins over ours.
+    val codegenCap = new SparkConf().getOption(Codegen.CacheMaxEntriesKey)
+      .getOrElse(CodegenCacheMaxEntries.toString)
+    val capNote = Codegen.size(codegenCap) match {
+      case Some(n) if n.toString == codegenCap => s"$n"
+      case Some(n) => s"$n (requested $codegenCap, but the cache was sized earlier in this JVM)"
+      case None => s"unknown (requested $codegenCap)"
+    }
+    System.err.println(s"[graft] session '$appName': spark.local.dir=$localDir " +
+      s"($localDirWhy); codegen cache cap=$capNote entries")
     SparkSession
       .builder()
       .appName(appName)
@@ -38,6 +57,10 @@ object GraftSession {
       // ANN ranker) must stay hash-based: the default sort-fallback kicks in
       // at 128 distinct keys and re-sorts the whole input.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
+      // Codegen.size above sized this JVM's cache; the conf carries the
+      // cap to executor JVMs on a cluster, whose caches are sized from
+      // the SQL conf a task propagates.
+      .config(Codegen.CacheMaxEntriesKey, codegenCap)
       // Kryo for broadcasts/closures (e.g. the ANN index matrix); DataFrame
       // shuffles already use Tungsten encoders either way.
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -48,33 +71,61 @@ object GraftSession {
       // path instead.
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
-      // Shuffle/spill scratch dir. Guide §2.1: local storage latency is
-      // part of every shuffle's cost, and the iterative operators run
-      // dozens of tiny per-round shuffles whose cost is FILE-CREATION
-      // latency, not bandwidth — A/B on the iterative bench subset:
-      // tmpfs scratch took d51 3.09→1.76 s, d56 1.85→1.40, h2 2.68→2.33
-      // (d21 flat). Default = memory-backed /dev/shm when present (the
-      // local-harness analog of the fast local NVMe scratch a production
-      // cluster mounts for spark.local.dir); SPARK_GRAFT_LOCAL_DIR
-      // overrides for deployments whose shuffle volume exceeds RAM.
-      // r19 GUARD (r18 advice): a RAM-backed scratch dir fills MEMORY when
-      // shuffle volume exceeds it — Docker's default /dev/shm is 64 MB and
-      // tmpfs is typically capped at 50% RAM, so the tmpfs default only
-      // applies when the mount has real headroom
-      // (SPARK_GRAFT_SHM_MIN_FREE_GB, default 16 GiB usable). Under the
-      // bound — or on any deployment whose cluster manager sets
-      // spark.local.dir itself (YARN/K8s override this config) — the
-      // scratch stays on disk-backed java.io.tmpdir.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-          val shm = new java.io.File("/dev/shm")
-          val minFree = sys.env.getOrElse(
-            "SPARK_GRAFT_SHM_MIN_FREE_GB", "16").toLong * (1L << 30)
-          if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= minFree)
-            "/dev/shm/graft_scratch"
-          else sys.props.getOrElse("java.io.tmpdir", "/tmp")
-        }))
+      .config("spark.local.dir", localDir)
   }
+
+  /** Cap for Spark's JVM-wide codegen class cache (Spark's default: 100).
+    * Sized from measured working sets, in compile units per pass: 229 for
+    * the perfbench `queries` set, 1209 for the `graft.Bench` headline (plus
+    * 174 that recompile on every run whatever the cap), 4278 for one
+    * `graft.Verify` catalog pass. At 100, an LRU cache cycled over any of
+    * these loops never hits and every warm query recompiles all its
+    * classes. 2000 holds the largest warm loop, the headline, with ~45%
+    * headroom; Guava splits the cap over 4 segments, so it needs some.
+    * Verify is left out: it runs each query once, so only reuse across
+    * queries can hit, and an unbounded cap saved just 337 of its 4615
+    * compiles at 2000. */
+  val CodegenCacheMaxEntries: Int = 2000
+
+  /** Shuffle/spill scratch dir (`spark.local.dir`) and why it was chosen,
+    * the reason printed in the session's startup line.
+    *
+    * Guide §2.1: local storage latency is part of every shuffle's cost,
+    * and the iterative operators run
+    * dozens of tiny per-round shuffles whose cost is FILE-CREATION
+    * latency, not bandwidth — A/B on the iterative bench subset:
+    * tmpfs scratch took d51 3.09→1.76 s, d56 1.85→1.40, h2 2.68→2.33
+    * (d21 flat). Default = memory-backed /dev/shm when present (the
+    * local-harness analog of the fast local NVMe scratch a production
+    * cluster mounts for spark.local.dir); SPARK_GRAFT_LOCAL_DIR
+    * overrides for deployments whose shuffle volume exceeds RAM.
+    * r19 GUARD (r18 advice): a RAM-backed scratch dir fills MEMORY when
+    * shuffle volume exceeds it — Docker's default /dev/shm is 64 MB and
+    * tmpfs is typically capped at 50% RAM, so the tmpfs default only
+    * applies when the mount has real headroom
+    * (SPARK_GRAFT_SHM_MIN_FREE_GB, default 16 GiB usable). Under the
+    * bound — or on any deployment whose cluster manager sets
+    * spark.local.dir itself (YARN/K8s override this config) — the
+    * scratch stays on disk-backed java.io.tmpdir.
+    */
+  private[graft] def scratchDir(env: String => Option[String],
+      shm: java.io.File = new java.io.File("/dev/shm")): (String, String) =
+    env("SPARK_GRAFT_LOCAL_DIR") match {
+      case Some(dir) => (dir, "SPARK_GRAFT_LOCAL_DIR")
+      case None =>
+        val minFreeGiB = env("SPARK_GRAFT_SHM_MIN_FREE_GB").fold(16L) { v =>
+          v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+            s"SPARK_GRAFT_SHM_MIN_FREE_GB must be a whole number of GiB >= 0, got '$v'"))
+        }
+        val disk = sys.props.getOrElse("java.io.tmpdir", "/tmp")
+        if (!(shm.isDirectory && shm.canWrite)) (disk, s"disk: $shm is not a writable directory")
+        else {
+          val free = shm.getUsableSpace
+          val vs = f"${free / (1L << 30).toDouble}%.1f GiB free vs the $minFreeGiB GiB guard"
+          if (free.toDouble >= minFreeGiB.toDouble * (1L << 30)) (s"$shm/graft_scratch", s"tmpfs: $vs")
+          else (disk, s"disk: $shm has $vs")
+        }
+    }
 
   /** Local session for tests / CLI mains. */
   def local(appName: String = "graft"): SparkSession = {

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.engine.Codegen
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
@@ -45,7 +46,8 @@ object Runner {
   }
 
   /** Run the selected modules ("all" or a set), fail-fast (first error
-    * aborts, matching main.py:65-71), logging elapsed per pipeline —
+    * aborts, matching main.py:65-71), logging elapsed time and codegen
+    * compiles per pipeline —
     * through the timestamped [[RunLog]] when one is supplied (the
     * reference's console+file dual sink), else silently (callers print
     * the returned results). */
@@ -66,13 +68,18 @@ object Runner {
           s"which the module selection $modules excludes")))
     selected.map { p =>
       val t0 = System.nanoTime()
+      val codegen0 = Codegen.count()
       ctx.spark.sparkContext.setJobDescription(s"pipeline:${p.name}")
       log.foreach(_.info(s"Starting pipeline '${p.name}' (module ${p.module})"))
       try {
         p.run(ctx)
         val ms = (System.nanoTime() - t0) / 1000000
         ctx.spark.sparkContext.setJobDescription(null)
-        log.foreach(_.info(s"Completed pipeline '${p.name}' in ${ms} ms"))
+        // Pipelines run one at a time, so the JVM-wide compile counters'
+        // delta is this pipeline's own codegen cost.
+        val codegen = Codegen.count() - codegen0
+        log.foreach(_.info(s"Completed pipeline '${p.name}' in ${ms} ms " +
+          s"(codegen: ${codegen.compiles} compiles, ${codegen.ms} ms)"))
         Result(p.name, ms)
       } catch {
         case e: Throwable =>

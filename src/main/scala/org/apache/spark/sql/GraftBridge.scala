@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Minimal bridge to the private[sql] Column↔Expression converters, so
   * graft's custom Catalyst expressions (e.g. ArrayDotProduct) can be used
@@ -35,13 +36,17 @@ object GraftBridge {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
     session.sharedState.cacheManager.lookupCachedData(ds) match {
-      // newInstance(), matching Spark's own substitution
-      // (CacheManager.useCachedData): every handed-out frame gets FRESH
-      // ExprIds, so two plan-identical persist calls can be self-joined
-      // without relying on DeduplicateRelations to rescue duplicate
-      // attribute ids (r18 advice item 3).
+      // The leaf takes the frame's own attribute ids, exactly Spark's own
+      // substitution (CacheManager.useCachedData: withOutput(output)), and
+      // carries NO logical outputOrdering: InMemoryRelation.newInstance()
+      // keeps the ordering on the old ids, so once DeduplicateRelations
+      // re-instances the leaf (any self-join), canonicalizing the plan
+      // would fail with `key not found`. Physical sort elision is unaffected:
+      // InMemoryTableScanExec takes its ordering from the cached plan.
       case Some(cd) =>
-        classic.Dataset.ofRows(session, cd.cachedRepresentation.newInstance())
+        val cached = cd.cachedRepresentation
+        classic.Dataset.ofRows(session, InMemoryRelation(ds.queryExecution.analyzed.output,
+          cached.cacheBuilder, Nil, cached.statsOfPlanToCache))
       case None => df
     }
   }

@@ -1,0 +1,58 @@
+package graft
+
+import graft.engine.{Codegen, GraftSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The session's engine-level settings take effect: the codegen class cache
+  * really has the builder's cap (Spark sizes it once per JVM, from whatever
+  * conf is current at its first use), a warm loop larger than Spark's
+  * default 100 entries stops recompiling, and the scratch-dir guard fails
+  * loudly on a malformed bound.
+  */
+class GraftSessionSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  test("codegen cache: a 150-plan cycle compiles once, its second pass hits the cache") {
+    spark // the session is built, so the builder has sized the cache
+    assert(Codegen.cacheMaxEntries().contains(GraftSession.CodegenCacheMaxEntries.toLong))
+    // Each plan inlines its own literals into its generated code, so the
+    // cycle holds 150 structurally distinct compile units; the salt keeps
+    // them apart from anything another suite compiled.
+    val salt = System.nanoTime() % 1000000007L
+    def cycle(): Long = {
+      val before = Codegen.count()
+      (1 to 150).foreach { i =>
+        val rows = spark.range(4).selectExpr(s"id * $i + $salt AS v").collect()
+        assert(rows.map(_.getLong(0)).toSeq == (0L until 4L).map(_ * i + salt))
+      }
+      (Codegen.count() - before).compiles
+    }
+    val first = cycle()
+    val second = cycle()
+    assert(first >= 150, s"the cycle should compile each distinct plan once, compiled $first")
+    assert(second <= 5, s"second cycle recompiled $second units (first: $first)")
+  }
+
+  test("scratch dir: malformed SPARK_GRAFT_SHM_MIN_FREE_GB fails naming the variable") {
+    for (bad <- Seq("16g", "", "-1", "1.5")) {
+      val e = intercept[IllegalArgumentException] {
+        GraftSession.scratchDir(Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> bad).get)
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_SHM_MIN_FREE_GB"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("scratch dir: the choice comes with its reason") {
+    val tmp = java.nio.file.Files.createTempDirectory("shm").toFile
+    val (tmpfs, why) = GraftSession.scratchDir(Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> "0").get, tmp)
+    assert(tmpfs == s"$tmp/graft_scratch")
+    assert(why.startsWith("tmpfs: ") && why.contains("vs the 0 GiB guard"), why)
+    val (disk, whyDisk) = GraftSession.scratchDir(
+      Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> Long.MaxValue.toString).get, tmp)
+    assert(disk == sys.props("java.io.tmpdir"))
+    assert(whyDisk.startsWith("disk: "), whyDisk)
+    assert(GraftSession.scratchDir(Map("SPARK_GRAFT_LOCAL_DIR" -> "/x").get) ==
+      ("/x", "SPARK_GRAFT_LOCAL_DIR"))
+  }
+}

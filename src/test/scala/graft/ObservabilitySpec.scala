@@ -51,6 +51,32 @@ class ObservabilitySpec extends AnyFunSuite {
     assert(text.contains("| ERROR | Pipeline 'boom' failed after "))
   }
 
+  test("Runner's completion line carries the pipeline's codegen compiles and compile ms") {
+    val dir = tmpDir("runlog")
+    val log = RunLog.timestamped(dir, echo = false)
+    // a literal no other plan in the JVM has: one fresh compile unit at least
+    val salt = System.nanoTime() % 1000000007L
+    val idle = new Pipeline {
+      val name = "idle"; def run(ctx: PipelineContext): Unit = ()
+    }
+    val compiling = new Pipeline {
+      val name = "compiling"; override val dependsOn = Seq("idle")
+      def run(ctx: PipelineContext): Unit =
+        ctx.spark.range(4).selectExpr(s"id * 3 + $salt AS v").collect()
+    }
+    val results = Runner.run(PipelineContext(spark), Seq(idle, compiling), Set("all"), Some(log))
+    log.close()
+    assert(results.map(_.name) == Seq("idle", "compiling"))
+    val text = new String(java.nio.file.Files.readAllBytes(log.path))
+    val completed =
+      """Completed pipeline '(\w+)' in \d+ ms \(codegen: (\d+) compiles, (\d+) ms\)""".r
+    val compiles = completed.findAllMatchIn(text)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    assert(compiles.keySet == Set("idle", "compiling"), text)
+    assert(compiles("idle") == 0, text)
+    assert(compiles("compiling") >= 1, text)
+  }
+
   test("uploadAndLog: files/sec line + stats over the real partitioned upload path") {
     val dir = tmpDir("runlog")
     val store = tmpDir("objstore")
