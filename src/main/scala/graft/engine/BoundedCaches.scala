@@ -23,9 +23,16 @@ object BoundedCaches {
   // SPARK_GRAFT_MAXLIVE overrides for A/B measurement (the r17 verdict's
   // MaxLive-vs-drift experiment) and for deployments whose compositions
   // run deeper or whose executors run tighter than the default assumes.
-  private val MaxLive =
-    sys.env.get("SPARK_GRAFT_MAXLIVE").map(_.toInt).getOrElse(6)
+  private val MaxLive = maxLive(sys.env.get)
   private val live = new java.util.ArrayDeque[DataFrame]
+
+  /** The frame cap: SPARK_GRAFT_MAXLIVE if set, else 6. A malformed or
+    * negative value throws IllegalArgumentException naming the variable. */
+  private[graft] def maxLive(env: String => Option[String]): Int =
+    env("SPARK_GRAFT_MAXLIVE").fold(6) { v =>
+      v.trim.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_MAXLIVE must be a whole number of frames >= 0, got '$v'"))
+    }
 
   // r18: every persisted frame is handed back RE-ROOTED on its cache
   // entry (logical plan = the InMemoryRelation leaf, not the full
@@ -35,12 +42,9 @@ object BoundedCaches {
   // DeduplicateRelations re-analysis at each composition step and full
   // plan-string rendering at each execution start / AQE update (stack-
   // sampled; t94 warm iteration = 3.2 s construction vs 0.5 s execution
-  // before this change). SPARK_GRAFT_REROOT=0 restores the old behavior
-  // for A/B measurement.
-  private val Reroot =
-    sys.env.get("SPARK_GRAFT_REROOT").forall(_ != "0")
+  // before this change).
   private def reroot(df: DataFrame): DataFrame =
-    if (Reroot) org.apache.spark.sql.GraftBridge.rerootOnCache(df) else df
+    org.apache.spark.sql.GraftBridge.rerootOnCache(df)
 
   /** Persist `df` (MEMORY_AND_DISK), register it for bounded retire, and
     * return it re-rooted on the cache entry (plan-truncation, above).

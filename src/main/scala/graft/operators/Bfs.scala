@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,20 +24,13 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: ONE fact-scale shuffle (frontier⋈edges keyed on
   * src), a map-side-combined distinct, and a settled-set anti-join that is
   * vertex-scale, not edge-scale. One action per round (the frontier
-  * materialize/early-exit count). Iteration hygiene is the PageRank rule:
-  * every persisted frame is re-rooted as an RDD leaf, so the plan stays
-  * one round deep; the settled table is a linear union of ≤ maxHops+1
-  * cached leaves, never a self-referencing chain.
+  * materialize/early-exit count). Iteration hygiene is
+  * [[graft.engine.Lineage]]'s: every level is pinned and read through its
+  * truncated view, so the plan stays one round deep; the settled table is
+  * a linear union of ≤ maxHops+1 cached leaves, never a self-referencing
+  * chain.
   */
 object Bfs {
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * TreeDepth/LabelPropagation truncateLineage pattern): the settled
-    * union and next round's anti-join both reference each level, so
-    * un-truncated lineage would nest every prior round's plan text into
-    * each new one. */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** @param edges   directed (src, dst) long ids; mirror before calling
     *                for an undirected walk
@@ -47,18 +41,14 @@ object Bfs {
     *         unreachable vertices are absent
     */
   def hopDistances(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0, 64], got $maxHops (for unbounded reachability use ConnectedComponents)")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val eH = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .persist(MEMORY_AND_DISK)
-    val eRows = eH.count()
-    val e = truncateLineage(eH)
-    val frontierH = sources.select(col("v").cast("long").as("v")).distinct()
-      .persist(MEMORY_AND_DISK)
-    var frontierRows = frontierH.count()
-    var frontier = truncateLineage(frontierH)
+    val (eP, eRows) = s.pinBy(
+      edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")))(_.count())
+    val e = eP.view
+    val (seedsP, frontierRows) = s.pinBy(
+      sources.select(col("v").cast("long").as("v")).distinct())(_.count())
     if (eRows + frontierRows <= localFinishMaxRows) {
       // --- SERIAL ENDGAME (the Scc.components doctrine): the edge set
       // and seed set fit the documented driver budget — one collect +
@@ -67,7 +57,7 @@ object Bfs {
       // to the distributed frontier expansion. 0 forces distributed.
       val es = e.select(col("src"), col("dst")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
-      val seeds = frontier.select(col("v")).collect().map(_.getLong(0))
+      val seeds = seedsP.view.select(col("v")).collect().map(_.getLong(0))
       Console.err.println(
         s"[bfs] local-endgame seeds=${seeds.length} edges=${es.length}")
       val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
@@ -89,56 +79,29 @@ object Bfs {
           }
         }
       }
-      eH.unpersist(blocking = false)
-      frontierH.unpersist(blocking = false)
       val rows = {
         val it = dist.entrySet().iterator()
         val buf = Seq.newBuilder[(Long, Long)]
         while (it.hasNext) { val kv = it.next(); buf += ((kv.getKey, kv.getValue.longValue)) }
         buf.result().sortBy(_._1)
       }
-      return edges.sparkSession.createDataFrame(rows).toDF("v", "dist")
+      edges.sparkSession.createDataFrame(rows).toDF("v", "dist")
         .select(col("v").cast("long"), col("dist").cast("long"))
+    } else {
+      // Synchronous frontier expansion, TWO hops per action (the Scc sweep
+      // economy, see Lineage's wave): the settled set each hop anti-joins is
+      // the linear union of every level so far.
+      val levels = s.wave(seedsP, frontierRows, maxHops) { (frontier, _, settled) =>
+        e.join(frontier.select(col("v").as("__f")), col("src") === col("__f"))
+          .select(col("dst").as("v"))
+          .distinct()
+          .join(settled.reduce(_ unionAll _).select(col("v")), Seq("v"), "left_anti")
+      }.levels
+      // levels stay persisted — same contract as PageRank's ranks: the
+      // caller reads the result from cache; blocks age out via LRU.
+      levels.map(s.keep).zipWithIndex
+        .map { case (level, h) => level.view.withColumn("dist", lit(h.toLong)) }
+        .reduce(_ unionAll _)
     }
-    // settled levels: each element is a persisted RDD-leaf (v, dist) frame
-    val levels = scala.collection.mutable.ArrayBuffer(
-      frontier.withColumn("dist", lit(0L)))
-    def hop(fr: DataFrame, settled: DataFrame): DataFrame =
-      e.join(fr.select(col("v").as("__f")), col("src") === col("__f"))
-        .select(col("dst").as("v"))
-        .distinct()
-        .join(settled, Seq("v"), "left_anti")
-    var h = 1
-    // TWO hops per ACTION (the Scc sweep economy): hop h carries a
-    // persist marker and materializes inside hop h+1's count; an empty
-    // second hop still terminates correctly (preds of empty is empty),
-    // and possibly-empty level leaves union away. The odd final hop
-    // under maxHops runs single.
-    while (h <= maxHops && frontierRows > 0L) {
-      val settled = levels.reduce(_ unionAll _).select(col("v"))
-      if (h == maxHops) {
-        var next = hop(frontier, settled).persist(MEMORY_AND_DISK)
-        frontierRows = next.count() // ONE action: materialize + early-exit test
-        next = truncateLineage(next)
-        levels += next.withColumn("dist", lit(h.toLong))
-        frontier = next
-        h += 1
-      } else {
-        val n1 = truncateLineage(hop(frontier, settled).persist(MEMORY_AND_DISK))
-        val n2H = hop(n1, settled.unionAll(n1.select(col("v"))))
-          .persist(MEMORY_AND_DISK)
-        frontierRows = n2H.count()
-        val n2 = truncateLineage(n2H)
-        levels += n1.withColumn("dist", lit(h.toLong))
-        levels += n2.withColumn("dist", lit(h + 1L))
-        frontier = n2
-        h += 2
-      }
-    }
-    val out = levels.reduce(_ unionAll _)
-    e.unpersist(blocking = false)
-    // levels stay persisted — same contract as PageRank's ranks: the
-    // caller reads the result from cache; blocks age out via LRU.
-    out
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ListBuffer
 
+import graft.engine.Lineage
 import graft.functions.expr.{BpeApply, BpeMergePass}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
   * (left,right) — shuffle rows bounded by distinct pairs, not corpus
   * size), a 1-ROW collect for the argmax (never data-scale), and one
   * embarrassingly-parallel rewrite via the native [[BpeMergePass]]
-  * expression. The corpus frame is persisted per round and re-rooted as
-  * an RDD leaf (the PageRank/TreeDepth lineage rule: each round's frame
-  * feeds BOTH the count job and the next round, and an un-truncated plan
-  * would re-run every prior merge pass each round).
+  * expression. The corpus frame is pinned per round and read through its
+  * truncated view ([[graft.engine.Lineage]]: each round's frame feeds BOTH
+  * the count job and the next round, and an un-truncated plan would re-run
+  * every prior merge pass each round).
   */
 object BpeTrain {
 
@@ -39,43 +40,34 @@ object BpeTrain {
     *         merge, in training order; stops early when no pair repeats
     */
   def train(docs: DataFrame, tokenCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
     import spark.implicits._
 
-    def truncate(df: DataFrame): DataFrame =
-      graft.engine.Lineage.truncate(df)
-
-    val h0 = docs.select(col(tokenCol).cast("array<string>").as("toks"))
-      .persist()
-    val st = h0.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L)))
-      .collect()(0)
+    val (h0, st) = s.pinBy(docs.select(col(tokenCol).cast("array<string>").as("toks")))(
+      _.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L))).collect()(0))
     val (hRows, hSyms) = (st.getLong(0), st.getLong(1))
     if (hRows + hSyms <= localFinishMaxRows) {
       // null token arrays contribute nothing on the distributed path
       // (explode/zip_with of null yields no rows) — drop them here too,
       // or getSeq would NPE and the same input would crash or not
       // depending on which side of the budget it lands
-      val rows = h0.select(col("toks")).filter(col("toks").isNotNull).collect()
-      h0.unpersist(blocking = false)
+      val rows = h0.frame.select(col("toks")).filter(col("toks").isNotNull).collect()
+      h0.release()
       Console.err.println(
         s"[bpe] local-endgame rows=$hRows symbols=$hSyms rounds<=$rounds")
       val toks = rows.map(_.getSeq[String](0).toArray)
-      return LocalSubword.bpeLocal(toks, Array.fill(toks.length)(1L), rounds)
+      LocalSubword.bpeLocal(toks, Array.fill(toks.length)(1L), rounds)
         .toDF("round", "left", "right", "pair_count")
         .withColumn("round", col("round").cast("long"))
-    }
-    var cur = truncate(h0)
-    // handles hold the PERSISTED frames (unpersist on a truncated leaf
-    // would be a no-op on the original's storage)
-    val handles = ListBuffer(h0)
-    val merges = ListBuffer.empty[(Int, String, String, Long)]
-    try {
+    } else {
+      var cur = h0
+      val merges = ListBuffer.empty[(Int, String, String, Long)]
       var round = 1
       var exhausted = false
       while (round <= rounds && !exhausted) {
-        val pairs = cur.select(explode(zip_with(
+        val pairs = cur.view.select(explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
           slice(col("toks"), lit(2), size(col("toks")) - 1),
           (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
@@ -91,20 +83,16 @@ object BpeTrain {
         } else {
           val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
           merges += ((round, l, r, cnt))
-          val next = cur.select(BpeMergePass(col("toks"), l, r).as("toks"))
-            .persist()
-          next.count()
-          val leaf = truncate(next)
-          handles += next
-          cur = leaf
+          val next = s.pin(cur.view.select(BpeMergePass(col("toks"), l, r).as("toks")))
           // previous round's blocks are no longer referenced
-          handles.remove(0).unpersist(blocking = false)
+          cur.release()
+          cur = next
           round += 1
         }
       }
-    } finally handles.foreach(_.unpersist(blocking = false))
-    merges.toSeq.toDF("round", "left", "right", "pair_count")
-      .withColumn("round", col("round").cast("long"))
+      merges.toSeq.toDF("round", "left", "right", "pair_count")
+        .withColumn("round", col("round").cast("long"))
+    }
   }
 }
 

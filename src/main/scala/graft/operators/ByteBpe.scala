@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ListBuffer
 
+import graft.engine.Lineage
 import graft.functions.expr.{BpeApply, BpeMergePass}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -108,48 +109,41 @@ object ByteBpe {
     *         when no pair reaches weighted count 2
     */
   def train(docs: DataFrame, textCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
     import spark.implicits._
-
-    def truncate(df: DataFrame): DataFrame =
-      graft.engine.Lineage.truncate(df)
 
     // corpus-scale once: pretoken frequencies (ONE map-side-combined
     // shuffle); everything after is vocab-scale
     val freqs = docs.select(explode(pretokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val h0 = freqs.as[(String, Long)]
-      .map { case (w, f) => (toByteSymbols(w), f) }
-      .toDF("toks", "freq")
-      .persist()
     // budget probe (one pass, also materializes the cache): rows + total
     // symbols — the driver holds symbol ARRAYS, so rows alone undercount
-    val st = h0.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L)))
-      .collect()(0)
+    val (h0, st) = s.pinBy(freqs.as[(String, Long)]
+      .map { case (w, f) => (toByteSymbols(w), f) }
+      .toDF("toks", "freq"))(
+      _.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L))).collect()(0))
     val (hRows, hSyms) = (st.getLong(0), st.getLong(1))
     if (hRows + hSyms <= localFinishMaxRows) {
       // --- LOCAL ENDGAME: collect the vocab-scale histogram once and
       // finish in LocalSubword (see scaladoc above / the Scc doctrine)
-      val rows = h0.select(col("toks"), col("freq")).collect()
-      h0.unpersist(blocking = false)
+      val rows = h0.frame.select(col("toks"), col("freq")).collect()
+      h0.release()
       Console.err.println(
         s"[bytebpe] local-endgame rows=$hRows symbols=$hSyms rounds<=$rounds")
       val toks = rows.map(_.getSeq[String](0).toArray)
       val ws = rows.map(_.getLong(1))
-      return LocalSubword.bpeLocal(toks, ws, rounds)
+      LocalSubword.bpeLocal(toks, ws, rounds)
         .toDF("round", "left", "right", "pair_count")
         .withColumn("round", col("round").cast("long"))
-    }
-    var cur = truncate(h0)
-    val handles = ListBuffer(h0)
-    val merges = ListBuffer.empty[(Int, String, String, Long)]
-    try {
+    } else {
+      var cur = h0
+      val merges = ListBuffer.empty[(Int, String, String, Long)]
       var round = 1
       var exhausted = false
       while (round <= rounds && !exhausted) {
-        val pairs = cur.select(col("freq"), explode(zip_with(
+        val pairs = cur.view.select(col("freq"), explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
           slice(col("toks"), lit(2), size(col("toks")) - 1),
           (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
@@ -163,20 +157,16 @@ object ByteBpe {
         } else {
           val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
           merges += ((round, l, r, cnt))
-          val next = cur
-            .select(BpeMergePass(col("toks"), l, r).as("toks"), col("freq"))
-            .persist()
-          next.count()
-          val leaf = truncate(next)
-          handles += next
-          cur = leaf
-          handles.remove(0).unpersist(blocking = false)
+          val next = s.pin(cur.view
+            .select(BpeMergePass(col("toks"), l, r).as("toks"), col("freq")))
+          cur.release()
+          cur = next
           round += 1
         }
       }
-    } finally handles.foreach(_.unpersist(blocking = false))
-    merges.toSeq.toDF("round", "left", "right", "pair_count")
-      .withColumn("round", col("round").cast("long"))
+      merges.toSeq.toDF("round", "left", "right", "pair_count")
+        .withColumn("round", col("round").cast("long"))
+    }
   }
 
   /** Corpus-scale byte-level encoding: pretokenize, seed each DISTINCT

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,10 +21,10 @@ import org.apache.spark.sql.functions._
   * — this implementation documents that as the scale escape hatch and
   * guards with `maxIters`.
   *
-  * Cache lifecycle: each round's labels are persisted, materialized by the
-  * convergence aggregate, and the PREVIOUS round is unpersisted — lineage
-  * would otherwise deepen by two joins per round and recompute the whole
-  * history every action. The returned frame is the final (vertex-count ×
+  * Cache lifecycle ([[graft.engine.Lineage]]): each round's labels are
+  * pinned, materialized by the convergence aggregate, and the PREVIOUS
+  * round is released — lineage would otherwise deepen by two joins per
+  * round and recompute the whole history every action. The returned frame is the final (vertex-count ×
   * 16 bytes) label set, still cached; long-lived sessions use
   * [[minLabelWithRelease]] and release after consuming.
   */
@@ -103,17 +104,15 @@ object ConnectedComponents {
   def starContractionWithRelease(
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 30): (DataFrame, () => Unit) = {
+      maxIters: Int = 30): (DataFrame, () => Unit) = Lineage.scope { s =>
     import org.apache.spark.sql.expressions.Window
 
     // canonical undirected pair set (a < b), deduped
-    var cur = edges
+    val cur0 = s.pin(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .persist()
-    cur.count()
+      .distinct())
 
     def adjacency(e: DataFrame): DataFrame =
       e.select(col("a").as("u"), col("b").as("v"))
@@ -141,49 +140,31 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var curHandle = cur // persist handle for unpersist; `cur` is the truncated view
-    cur = truncateLineage(cur)
+    // Each round references the prior frame several times, so it reads the
+    // prior round's truncated view (building on the raw plan quadruples the
+    // logical tree per round: OOM by round ~10 just RENDERING it).
+    var cur = cur0
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      val nextHandle = smallStar(largeStar(cur)).persist()
-      nextHandle.count()
-      // Each round references the prior frame several times, so building
-      // on the raw plan quadruples the logical tree per round (OOM by
-      // round ~10 just RENDERING it). The cached data is re-rooted as a
-      // leaf scan, which is what actually bounds iterative lineage.
-      val next = truncateLineage(nextHandle)
+      val next = s.pin(smallStar(largeStar(cur.view)))
       // exact fixpoint: identical canonical pair sets
-      converged = next.except(cur).isEmpty && cur.except(next).isEmpty
-      curHandle.unpersist()
-      curHandle = nextHandle
+      converged = next.view.except(cur.view).isEmpty && cur.view.except(next.view).isEmpty
+      cur.release()
       cur = next
       iter += 1
     }
-    if (!converged) {
-      curHandle.unpersist()
+    if (!converged)
       throw new IllegalStateException(
         s"star contraction did not converge in $maxIters rounds")
-    }
     // At the fixpoint each edge is (componentMin, member); isolated
     // vertices label themselves.
     val verts = vertices.select(col(idCol).cast("long").as("id"))
-    val labels = verts
-      .join(cur.select(col("b").as("id"), col("a").as("lbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("label"))
-      .persist()
-    labels.count()
-    curHandle.unpersist()
-    (labels, () => { labels.unpersist(); () })
+    val labels = s.keep(s.pin(verts
+      .join(cur.view.select(col("b").as("id"), col("a").as("lbl")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("label"))))
+    (labels.frame, () => labels.release())
   }
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD: the
-    * DATA stays in the cache, but the logical plan stops nesting the whole
-    * iteration history (which grows geometrically when a round references
-    * its predecessor more than once). RDD lineage remains fault-tolerant
-    * and linear. */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** @param localFinishMaxRows the serial-endgame cutover (the
     *        [[Scc.components]] doctrine): when vertices + directed edge
@@ -196,99 +177,76 @@ object ConnectedComponents {
   def minLabelWithRelease(
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 20, localFinishMaxRows: Long = 4000000L): (DataFrame, () => Unit) = {
-    // Persisted for the loop: every round's neighbor-min join reads the
+      maxIters: Int = 20,
+      localFinishMaxRows: Long = 4000000L): (DataFrame, () => Unit) = Lineage.scope { s =>
+    // Pinned for the loop: every round's neighbor-min join reads the
     // edge set, and without the cache each labelSum action would re-run
     // the caller's whole edge-producing subplan (e.g. d13's pair
-    // detection) twice per round via the two union branches. Persisted
+    // detection) twice per round via the two union branches. Pinned
     // ALREADY HASH-PARTITIONED on the probe key: the cache retains the
     // repartition's output partitioning (InMemoryTableScan reports it),
     // so at shuffle-join scale each round's neighbor-min join re-shuffles
     // only the vertex-scale label frame — the edge set, the big side,
     // shuffles exactly once for the whole iteration instead of per round.
-    val undirected = edges
+    // The rounds read its truncated view, which keeps the caller's
+    // edge-producing subplan out of every round's plan text.
+    val (undirected, edgeRows) = s.pinBy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .union(edges
         .select(col(dstCol).cast("long").as("src"), col(srcCol).cast("long").as("dst")))
-      .repartition(col("src"))
-      .persist()
-    // Materialize + re-root the edge cache as an RDD leaf too: each
-    // round's neighbor-min join would otherwise re-embed the caller's
-    // whole edge-producing subplan in the round's plan text (the d21
-    // lesson — Catalyst re-analysis is paid per round even though
-    // execution reads the cache).
-    val edgeRows = undirected.count()
-    val undirectedLeaf = truncateLineage(undirected)
+      .repartition(col("src")))(_.count())
+    val undirectedLeaf = undirected.view
 
     // NULL on an empty frame (sum over zero rows) — handled below.
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
 
-    var labelsHandle = vertices
-      .select(col(idCol).cast("long").as("id"), col(idCol).cast("long").as("label"))
-      .persist()
     // ONE materializing action carries both the convergence seed and the
     // vertex count the endgame cutover needs
-    val first = labelsHandle
-      .agg(sum(col("label").cast("decimal(38,0)")).as("s"), count(lit(1)).as("n")).head()
-    var prevSum = first.getDecimal(0)
+    val (labels0, first) = s.pinBy(vertices
+      .select(col(idCol).cast("long").as("id"), col(idCol).cast("long").as("label")))(
+      _.agg(sum(col("label").cast("decimal(38,0)")).as("s"), count(lit(1)).as("n")).head())
+    val firstSum = first.getDecimal(0)
     val vertexRows = first.getLong(1)
-    if (prevSum == null) { // no vertices: trivially converged, nothing cached to keep
-      undirected.unpersist()
-      val empty = labelsHandle
-      return (empty, () => { empty.unpersist(); () })
-    }
-    if (vertexRows + edgeRows <= localFinishMaxRows) {
+    if (firstSum == null) { // no vertices: trivially converged
+      val empty = s.keep(labels0)
+      (empty.frame, () => empty.release())
+    } else if (vertexRows + edgeRows <= localFinishMaxRows) {
       // --- SERIAL ENDGAME (the Scc.components doctrine): the whole graph
       // fits the documented driver budget — one collect + union-find
       // replaces diameter-many fixed-overhead distributed rounds.
-      val ids = labelsHandle.select(col("id")).collect().map(_.getLong(0))
+      val ids = labels0.frame.select(col("id")).collect().map(_.getLong(0))
       val es = undirectedLeaf.select(col("src"), col("dst")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       Console.err.println(
         s"[cc] local-endgame vertices=${ids.length} directedEdges=${es.length}")
       val labeled = unionFindMinLabels(ids, es)
-      undirected.unpersist()
-      labelsHandle.unpersist()
-      val out = vertices.sparkSession.createDataFrame(labeled.toSeq)
+      undirected.release()
+      labels0.release()
+      val out = s.keep(s.pin(vertices.sparkSession.createDataFrame(labeled.toSeq)
         .toDF("id", "label")
-        .select(col("id").cast("long"), col("label").cast("long"))
-        .persist()
-      out.count()
-      return (truncateLineage(out), () => { out.unpersist(); () })
+        .select(col("id").cast("long"), col("label").cast("long"))))
+      (out.view, () => out.release())
+    } else {
+      // Each round references `labels` twice, so it reads the previous
+      // round's truncated view or the logical plan grows geometrically with
+      // the iteration count. The label sum is the round's one action.
+      val labels = s.fixpoint(labels0, firstSum, maxIters) { (_, labels, _) =>
+        val nbrMin = undirectedLeaf.join(labels, col("src") === col("id"))
+          .groupBy(col("dst"))
+          .agg(min(col("label")).as("nbr_label"))
+        labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
+          .select(labels("id"),
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+      }(labelSum)(_.compareTo(_) == 0)
+      if (!labels.converged)
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxIters rounds " +
+            "(long-chain graph: use starContractionWithRelease)")
+      // truncated view over the still-persisted final labels, so a caller
+      // referencing the result more than once doesn't re-nest the rounds
+      val done = s.keep(labels.state)
+      (done.view, () => done.release())
     }
-    // Each round references `labels` twice, so lineage must be re-rooted
-    // per round (see truncateLineage) or the logical plan grows
-    // geometrically with the iteration count.
-    var labels = truncateLineage(labelsHandle)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val nbrMin = undirectedLeaf.join(labels, col("src") === col("id"))
-        .groupBy(col("dst"))
-        .agg(min(col("label")).as("nbr_label"))
-      val nextHandle = labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
-        .select(labels("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        .persist()
-      val newSum = labelSum(nextHandle) // materializes, so the old cache can go
-      labelsHandle.unpersist()
-      labelsHandle = nextHandle
-      labels = truncateLineage(nextHandle)
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      iter += 1
-    }
-    undirected.unpersist() // labels is materialized; the edge cache is done
-    if (!converged) {
-      labelsHandle.unpersist() // failure path hands out no release hook
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIters rounds " +
-          "(long-chain graph: use starContractionWithRelease)")
-    }
-    // truncated view over the still-persisted final labels, so a caller
-    // referencing the result more than once doesn't re-nest the rounds
-    val done = labelsHandle
-    (truncateLineage(done), () => { done.unpersist(); () })
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,20 +23,16 @@ import org.apache.spark.sql.functions._
   * exactly the PageRank cost profile. Rounds are synchronous with a fixed
   * count (deterministic plans beat adaptive stopping for parity).
   *
-  * Cache lifecycle: the edge list and vertex set are persisted once and
-  * re-rooted as RDD leaves; each round's (a, h) pair is persisted,
-  * materialized, truncated, and the previous round released — lineage
-  * stays one round deep (the [[PageRank]]/[[ConnectedComponents]]
-  * contract), so the plan does not grow with `rounds`.
+  * Cache lifecycle ([[graft.engine.Lineage]]): the edge list and vertex
+  * set are pinned once; each round's (a, h) pair is pinned and the
+  * previous round released — lineage stays one round deep, so the plan
+  * does not grow with `rounds`.
   *
   * Reference scope: the reference engine has no graph operators — this is
   * part of the training-data-pipeline extension surface (link-structure
   * quality signals for web corpora, bipartite co-occurrence ranking).
   */
 object Hits {
-
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** Hook-less form for one-shot processes; see [[runWithRelease]]. */
   def run(edges: DataFrame, rounds: Int): DataFrame =
@@ -47,18 +44,17 @@ object Hits {
     * @return ((v, hub, authority) for every vertex appearing in `edges`,
     *         release hook for the returned frame's cache)
     */
-  def runWithRelease(edges: DataFrame, rounds: Int): (DataFrame, () => Unit) = {
+  def runWithRelease(
+      edges: DataFrame, rounds: Int): (DataFrame, () => Unit) = Lineage.scope { s =>
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).persist()
-    val vsHandle = e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct().persist()
+    val e = s.pinLazy(edges.select(col("src").cast("long"), col("dst").cast("long")))
 
     // Overflow guard: one pass over the persisted edges yields both max
     // degrees; (Δin·Δout)^rounds bounds every iterate (each a-step
     // multiplies by ≤ Δin, each h-step by ≤ Δout).
-    val degs = e.groupBy("src").agg(count(lit(1)).as("d"))
+    val degs = e.frame.groupBy("src").agg(count(lit(1)).as("d"))
       .agg(max(col("d")).as("dout"))
-      .crossJoin(e.groupBy("dst").agg(count(lit(1)).as("d"))
+      .crossJoin(e.frame.groupBy("dst").agg(count(lit(1)).as("d"))
         .agg(max(col("d")).as("din")))
       .head()
     val (dout, din) = (degs.getLong(0), degs.getLong(1))
@@ -67,38 +63,27 @@ object Hits {
       s"HITS with $rounds rounds over max in-degree $din × out-degree $dout " +
         s"can exceed Long range (~2^$boundBits); reduce rounds or pre-thin the graph.")
 
-    val eLeaf = truncateLineage(e)        // materialized by the degree pass
-    vsHandle.count()
-    val vs = truncateLineage(vsHandle)
+    val eLeaf = e.view // materialized by the degree pass
+    val vs = s.pin(e.frame.select(col("src").as("v"))
+      .union(e.frame.select(col("dst").as("v"))).distinct()).view
 
-    var handle = vs.select(col("v"), lit(1L).as("hub"), lit(0L).as("authority")).persist()
-    handle.count()
-    var cur = truncateLineage(handle)
-
-    for (_ <- 1 to rounds) {
-      // a(v) = Σ h over in-edges — vertex-scale aggregate, persisted
-      // LAZILY (it has two consumers below; the round's single count()
-      // fills it on first use, the second consumer reads the cache).
-      val aAgg = eLeaf.join(cur.select(col("v"), col("hub")), col("src") === col("v"))
-        .groupBy(col("dst")).agg(sum(col("hub")).as("a")).persist()
+    val h0 = s.pin(vs.select(col("v"), lit(1L).as("hub"), lit(0L).as("authority")))
+    val fin = s.rounds(h0, rounds) { (round, cur) =>
+      // a(v) = Σ h over in-edges — vertex-scale aggregate, pinned LAZILY
+      // for this round (it has two consumers below; the round's single
+      // count fills it on first use, the second consumer reads the cache).
+      val aAgg = round.pinLazy(eLeaf.join(cur.select(col("v"), col("hub")), col("src") === col("v"))
+        .groupBy(col("dst")).agg(sum(col("hub")).as("a"))).frame
       // h(u) = Σ a over out-edges, against the SAME round's authorities.
       val hAgg = eLeaf.join(aAgg.withColumnRenamed("dst", "av"), col("dst") === col("av"))
         .groupBy(col("src")).agg(sum(col("a")).as("h"))
-      val next = vs
+      vs
         .join(aAgg, vs("v") === aAgg("dst"), "left")
         .join(hAgg, vs("v") === hAgg("src"), "left")
         .select(vs("v"), coalesce(col("h"), lit(0L)).as("hub"),
           coalesce(col("a"), lit(0L)).as("authority"))
-        .persist()
-      next.count() // ONE action per round: materializes aAgg + next
-      handle.unpersist()
-      aAgg.unpersist(blocking = false)
-      handle = next
-      cur = truncateLineage(next)
     }
-    e.unpersist()
-    vsHandle.unpersist()
-    val fin = handle
-    (cur, () => { fin.unpersist(); () })
+    val out = s.keep(fin)
+    (out.view, () => out.release())
   }
 }

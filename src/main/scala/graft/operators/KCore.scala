@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,10 +31,9 @@ import org.apache.spark.sql.functions._
   * so round cost decays; at 100 TB each round is a bounded number of
   * hash-partitioned passes over the current (not original) edge set.
   *
-  * Cache lifecycle: the re-induced edge list is persisted and materialized
-  * each round and the previous round's unpersisted, so lineage stays one
-  * round deep and the plan does not grow with `rounds` (same contract as
-  * [[PageRank]] / [[ConnectedComponents]]).
+  * Cache lifecycle ([[graft.engine.Lineage]]): the re-induced edge list is
+  * pinned each round and the previous round's released, so lineage stays
+  * one round deep and the plan does not grow with `rounds`.
   *
   * Input contract: `edges` holds each undirected edge ONCE as (src, dst)
   * with src ≠ dst and no duplicate pairs (the d4 canonical id_a < id_b
@@ -42,14 +42,6 @@ import org.apache.spark.sql.functions._
   * the dedup family the same way PageRank/Triangles do.
   */
 object KCore {
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * shared iterative-operator pattern): each peel references `live`
-    * THREE times (degree agg + both semi-joins), so the un-truncated
-    * plan tripled per round — d31's plan text carried 2376 nested scans
-    * before truncation, re-analyzed every round. */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** One survivor re-induction: both endpoints must survive — two hash
     * SEMI-joins on node ids, never a nested loop (KCoreSpec pins this
@@ -60,34 +52,25 @@ object KCore {
       .join(survivors.select(col("a").as("b")), Seq("b"), "left_semi")
 
   /** Peel for `rounds` rounds at threshold `k`; returns (id, core_deg). */
-  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Lineage.scope { s =>
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    import org.apache.spark.storage.StorageLevel
+    def degrees(live: DataFrame): DataFrame =
+      live.groupBy(col("a")).agg(count(lit(1)).as("core_deg"))
 
     // Symmetrize once: each edge contributes to both endpoints' degrees.
-    var liveHandle = edges.select(col("src").as("a"), col("dst").as("b"))
-      .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    liveHandle.count()
-    var live = truncateLineage(liveHandle)
-
-    var deg: DataFrame = null
-    for (i <- 1 to rounds) {
-      deg = live.groupBy(col("a")).agg(count(lit(1)).as("core_deg"))
-      if (i < rounds) { // the last round only needs degrees, not re-induction
-        val survivors = deg.filter(col("core_deg") >= k).select(col("a"))
-        val next = induce(live, survivors).persist(StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before releasing the parent
-        liveHandle.unpersist()
-        liveHandle = next
-        live = truncateLineage(next)
-      }
+    val live0 = s.pin(edges.select(col("src").as("a"), col("dst").as("b"))
+      .union(edges.select(col("dst").as("a"), col("src").as("b"))))
+    // Each peel references `live` THREE times (degree agg + both
+    // semi-joins), so it reads the truncated view — d31's un-truncated plan
+    // text carried 2376 nested scans. The last round only needs degrees,
+    // not re-induction.
+    val live = s.rounds(live0, rounds - 1) { (_, cur) =>
+      induce(cur, degrees(cur).filter(col("core_deg") >= k).select(col("a")))
     }
-    val out = deg.filter(col("core_deg") >= k)
-      .select(col("a").as("id"), col("core_deg"))
     // The final round's degree frame derives from the still-cached `live`;
     // result cardinality is |core| — tiny relative to the edge stream.
-    out
+    degrees(s.keep(live).view).filter(col("core_deg") >= k)
+      .select(col("a").as("id"), col("core_deg"))
   }
 }

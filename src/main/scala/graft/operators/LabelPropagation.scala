@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,10 +24,9 @@ import org.apache.spark.sql.functions._
   * (the only fact-scale shuffle), a (vertex, label)-keyed count with
   * map-side combine, a vertex-keyed window for the argmax (partitioned BY
   * VERTEX — bounded by its distinct neighbor labels, never global), and a
-  * vertex-scale join-back. Iteration hygiene matches [[PageRank]]: edges
-  * persist once, each round's labels persist and the predecessor releases
-  * — lineage stays one round deep (the round references its predecessor
-  * twice, so an unpersisted chain would double the plan per round).
+  * vertex-scale join-back. Iteration hygiene is [[graft.engine.Lineage]]'s:
+  * edges persist once, each round's labels are pinned and the predecessor
+  * released — lineage stays one round deep.
   */
 object LabelPropagation {
 
@@ -36,30 +36,20 @@ object LabelPropagation {
     * @param rounds fixed synchronous rounds
     * @return (v, label) — vertices sharing a label form a community
     */
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * TreeDepth/ConnectedComponents truncateLineage pattern): each round
-    * references its predecessor TWICE (message join + keep-label
-    * join-back), so without truncation the LOGICAL plan doubles per round
-    * and Catalyst re-analysis alone grows exponentially with rounds even
-    * though execution reads the caches (measured on d45: the returned
-    * plan text carried 1592 nested scans before truncation). */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
-
-  def run(vertices: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
+  def run(vertices: DataFrame, edges: DataFrame, rounds: Int): DataFrame = Lineage.scope { s =>
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges
+    val e = s.pinLazy(edges
       .select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-      .unionAll(edges.select(col("dst").cast("long").as("a"), col("src").cast("long").as("b")))
-      .persist(MEMORY_AND_DISK)
-    var lab = vertices.select(col("v").cast("long").as("v"), col("v").cast("long").as("label"))
-      .persist(MEMORY_AND_DISK)
-    lab.count() // materialize round-0 labels
+      .unionAll(edges.select(col("dst").cast("long").as("a"), col("src").cast("long").as("b"))))
+      .frame
+    val lab0 = s.pin(
+      vertices.select(col("v").cast("long").as("v"), col("v").cast("long").as("label")))
     val w = Window.partitionBy(col("v")).orderBy(col("c").desc, col("label"))
-    for (_ <- 1 to rounds) {
-      val prevHandle = lab
-      val prev = truncateLineage(lab)
+    // Each round references its predecessor TWICE (message join + keep-label
+    // join-back), so it reads the predecessor's truncated view: un-truncated,
+    // the LOGICAL plan doubles per round (measured on d45: the returned plan
+    // text carried 1592 nested scans before truncation).
+    val lab = s.rounds(lab0, rounds) { (_, prev) =>
       val best = e.join(prev.select(col("v").as("src_v"), col("label")),
           col("a") === col("src_v"))
         .groupBy(col("b").as("v"), col("label"))
@@ -67,18 +57,14 @@ object LabelPropagation {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("v"), col("label").as("best_label"))
-      lab = prev.join(best, Seq("v"), "left")
+      prev.join(best, Seq("v"), "left")
         .select(col("v"), coalesce(col("best_label"), col("label")).as("label"))
-        .persist(MEMORY_AND_DISK)
-      lab.count() // materialize before releasing the predecessor
-      prevHandle.unpersist(blocking = false)
     }
-    e.unpersist(blocking = false)
     // Returned labels stay persisted (same contract as PageRank's ranks),
     // but hand back the TRUNCATED view: the RDD leaf still reads the
     // cached blocks, and a caller that references the result more than
     // once (d45 joins it onto both edge endpoints) would otherwise nest
     // the whole round-chain text once per reference.
-    truncateLineage(lab)
+    s.keep(lab).view
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Maximal independent set by Luby's algorithm (Luby 1986 — the public
   * classic for distributed symmetry breaking): each round, every live
@@ -33,14 +33,11 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * Scale shape per round: one edge-keyed join shipping live priorities
   * to neighbors + a map-side-combined min, a vertex-scale winner
   * filter, one more edge join to collect dominated neighbors, and two
-  * vertex-scale anti-joins. RDD-leaf re-rooting per round (the
-  * PageRank hygiene); winners accumulate as cached leaves (the Bfs
-  * levels contract).
+  * vertex-scale anti-joins. Every round's frames are pinned and read
+  * through their truncated views ([[graft.engine.Lineage]]); winners
+  * accumulate as cached leaves until the result is built.
   */
 object Mis {
-
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** Round-r priority — REPLICATED in the d63 oracle; change both or
     * neither. */
@@ -55,79 +52,56 @@ object Mis {
   def maximalIndependentSet(
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 30): DataFrame = {
+      maxRounds: Int = 30): DataFrame = Lineage.scope { s =>
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val ueH = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
-    ueH.count()
-    val ue = truncateLineage(ueH)
+    val ue = s.pin(e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()).view
 
-    val allH = vertices.select(col(idCol).cast("long").as("id")).distinct()
-      .persist(MEMORY_AND_DISK)
-    var liveRows = allH.count()
-    val all = truncateLineage(allH)
+    val (all, allRows) = s.pinBy(
+      vertices.select(col(idCol).cast("long").as("id")).distinct())(_.count())
     var live = all
-    var liveH = allH
+    var liveRows = allRows
 
-    val winners = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, DataFrame)]
+    val winners = scala.collection.mutable.ArrayBuffer.empty[Lineage.Pinned]
     var round = 0
     while (liveRows > 0L && round < maxRounds) {
-      val pr = live.select(col("id"), priority(col("id"), round).as("p"))
+      val pr = live.view.select(col("id"), priority(col("id"), round).as("p"))
       // Lexicographic (p, id) key — struct ordering in Spark, ROW min in
       // the oracle. REPLICATED in the d63 oracle; change both or neither.
       val nbrMin = ue
         .join(pr.select(col("id").as("src"),
           struct(col("p").as("p"), col("id").as("id")).as("pk")), Seq("src"))
         .groupBy(col("dst")).agg(min(col("pk")).as("np"))
-      val candH = pr.join(nbrMin, pr("id") === nbrMin("dst"), "left")
+      val cand = s.pin(pr.join(nbrMin, pr("id") === nbrMin("dst"), "left")
         .filter(col("np").isNull ||
           struct(pr("p").as("p"), pr("id").as("id")) < col("np"))
-        .select(pr("id"))
-        .persist(MEMORY_AND_DISK)
-      candH.count()
-      val cand = truncateLineage(candH)
-      winners += ((cand, candH))
-      val dominated = ue.join(cand.select(col("id").as("src")), Seq("src"))
+        .select(pr("id")))
+      winners += cand
+      val dominated = ue.join(cand.view.select(col("id").as("src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
-      val nextH = live
-        .join(cand, Seq("id"), "left_anti")
-        .join(dominated, Seq("id"), "left_anti")
-        .persist(MEMORY_AND_DISK)
-      liveRows = nextH.count()
-      if (liveH ne allH) liveH.unpersist(blocking = false) // `all` feeds the final join
-      live = truncateLineage(nextH)
-      liveH = nextH
+      val (next, nextRows) = s.pinBy(live.view
+        .join(cand.view, Seq("id"), "left_anti")
+        .join(dominated, Seq("id"), "left_anti"))(_.count())
+      if (live ne all) live.release() // `all` feeds the final join
+      live = next
+      liveRows = nextRows
       round += 1
     }
-    if (liveRows > 0L) {
-      winners.foreach(_._2.unpersist(blocking = false))
-      if (liveH ne allH) liveH.unpersist(blocking = false)
-      allH.unpersist(blocking = false)
-      ueH.unpersist(blocking = false)
+    if (liveRows > 0L)
       throw new IllegalStateException(
         s"Luby MIS did not finish in $maxRounds rounds (raise maxRounds)")
+    // the result stays persisted (the Bfs contract)
+    if (winners.isEmpty) // no vertices at all
+      s.keep(all).view.select(col("id"), lit(false).as("in_mis"))
+    else {
+      val mis = winners.map(_.view).reduce(_ unionAll _)
+      s.keep(s.pin(all.view
+        .join(mis.select(col("id"), lit(true).as("in_mis")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("in_mis"), lit(false)).as("in_mis")))).view
     }
-    if (winners.isEmpty) { // no vertices at all
-      ueH.unpersist(blocking = false)
-      return all.select(col("id"), lit(false).as("in_mis"))
-    }
-    val mis = winners.map(_._1).reduce(_ unionAll _)
-    val outH = all
-      .join(mis.select(col("id"), lit(true).as("in_mis")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("in_mis"), lit(false)).as("in_mis"))
-      .persist(MEMORY_AND_DISK)
-    outH.count()
-    val out = truncateLineage(outH)
-    winners.foreach(_._2.unpersist(blocking = false))
-    if (liveH ne allH) liveH.unpersist(blocking = false)
-    allH.unpersist(blocking = false)
-    ueH.unpersist(blocking = false)
-    // out stays persisted (the Bfs contract)
-    out
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.engine.Lineage
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank over an explicit edge list.
@@ -21,27 +22,22 @@ import org.apache.spark.sql.functions._
   * Spark-idiomatic loop mirrors GraphX's staticPageRank contract without
   * the RDD API).
   *
-  * Cache lifecycle: each round's ranks are persisted and materialized, the
-  * previous round unpersisted — lineage stays one round deep (same contract
-  * as [[ConnectedComponents]]), so the plan does not grow with `iters` and
-  * a 100 TB run is `iters` bounded passes. The returned frame is the final
-  * (vertex-count × 16 bytes) rank set, still cached; long-lived sessions
-  * use [[runWithRelease]] and release after consuming.
+  * Cache lifecycle ([[graft.engine.Lineage]]): each round's ranks are
+  * pinned, the previous round released — lineage stays one round deep, so
+  * the plan does not grow with `iters` and a 100 TB run is `iters` bounded
+  * passes. The returned frame is the final (vertex-count × 16 bytes) rank
+  * set, still cached; long-lived sessions use [[runWithRelease]] and
+  * release after consuming.
+  *
+  * The uniform, weighted and TrustRank variants share one round loop
+  * ([[iterate]]) and differ only in their SQL expression strings, which
+  * are passed through verbatim: the uniform formula's floor-division ORDER
+  * (`(Scale·15 div 100) div n`) is hash-pinned by d21's driver oracle.
   */
 object PageRank {
 
   /** 1e12 — rank mass is tracked in trillionths. */
   val Scale: Long = 1000000000000L
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * TreeDepth/ConnectedComponents/LabelPropagation pattern). PageRank's
-    * round plan nests eDeg (which embeds the caller's whole edge
-    * pipeline, itself often a self-join) plus the previous round — the
-    * catalog's d21 plan text carried 4186 nested scans before truncation,
-    * and Catalyst re-analysis of that tree is paid EVERY round even
-    * though execution reads the caches. */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** Hook-less form for one-shot processes; see [[runWithRelease]]. */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
@@ -57,143 +53,36 @@ object PageRank {
     *         that unpersists the returned frame)
     */
   def runWithRelease(
-      nodes: DataFrame, edges: DataFrame, iters: Int): (DataFrame, () => Unit) = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Inputs are re-read every round — persist both, or an expensive
-    // upstream (e.g. the Jaccard pair self-join) recomputes once per round.
-    val e = edges.persist()
-    val vs = nodes.persist()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    // Degree is attached to the edge list ONCE, outside the loop — the
-    // rounds previously joined `deg` per round, an edge-scale shuffle
-    // join × iters that this single persisted frame replaces. The join
-    // output is hash-partitioned by src and the cache RETAINS that
-    // partitioning (InMemoryTableScan reports it), so at shuffle-join
-    // scale each round's e⋈r probe re-shuffles only the vertex-scale
-    // rank frame, never the edges.
-    val eDegHandle = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg")).persist()
-    // Vertex count once, eagerly: a literal in every round's expression
-    // beats re-running even a 1-row aggregate subplan per round.
-    val n = vs.count()
-    // Materialize eDeg explicitly, then iterate over its RDD leaf: every
-    // round references eDeg, and the un-truncated text embeds the whole
-    // upstream edge pipeline per round.
-    eDegHandle.count()
-    val eDeg = truncateLineage(eDegHandle)
-    val vsLeaf = truncateLineage(vs) // materialized by the count above
-    // deg's cache is materialized by the count above (it feeds eDeg);
-    // the dangling probe then reads its RDD leaf so the per-round agg
-    // plan doesn't re-embed the caller's edge pipeline via deg's lineage
-    val degLeaf = truncateLineage(deg)
-
-    var rHandle = vsLeaf.selectExpr("v", s"$Scale div ${n}L AS r").persist()
-
-    // Dangling mass: ranks of vertices with no out-edges. A 1-row
-    // aggregate pulled DRIVER-SIDE (same bounded contract as the vertex
-    // count) and folded into the next round's expression as a literal.
-    // Two plan economies vs earlier formulations:
-    //  - an earlier version shipped it back as crossJoin(broadcast(agg)) —
-    //    semantically identical, but the per-round BroadcastExchange +
-    //    nested-loop stage cost ~6s/round at local[32];
-    //  - the anti-join aggregate doubles as the CACHE MATERIALIZATION of
-    //    its argument (it consumes every partition), so each round runs
-    //    exactly ONE job — round t's action computes round t's ranks AND
-    //    the dangling scalar round t+1 needs, instead of a count() job
-    //    followed by a separate dangling job re-scanning the cache.
-    def danglingOf(ranks: DataFrame): Long =
-      ranks.join(degLeaf, ranks("v") === degLeaf("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-        .head().getLong(0)
-
-    var dang = danglingOf(rHandle) // also materializes r's cache
-    var r = truncateLineage(rHandle)
-
-    for (_ <- 1 to iters) {
-      // Each vertex ships r div deg along every out-edge; sum at the dst.
-      val contrib = eDeg.join(r, col("src") === col("v"))
-        .selectExpr("dst", "r div deg AS share")
-        .groupBy("dst").agg(sum(col("share")).as("contrib"))
-      val next = vsLeaf
-        .join(contrib, col("v") === col("dst"), "left")
-        .selectExpr("v",
-          s"(($Scale * 15) div 100) div ${n}L + " +
-            s"(85 * (coalesce(contrib, 0) + ${dang}L div ${n}L)) div 100 AS r")
-        .persist()
-      dang = danglingOf(next) // one job: materializes next + its dangling mass
-      rHandle.unpersist()
-      rHandle = next
-      r = truncateLineage(next)
-    }
-    eDegHandle.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    vs.unpersist()
-    // truncated view over the still-persisted final round (multi-reference
-    // callers don't re-nest the round chain); release via the handle
-    val handle = rHandle
-    (r, () => { handle.unpersist(); () })
-  }
+      nodes: DataFrame, edges: DataFrame, iters: Int): (DataFrame, () => Unit) =
+    iterate(nodes, _.count(), edges, Seq("src", "dst"), count(lit(1)).as("deg"),
+      n => s"$Scale div ${n}L AS r",
+      "r div deg AS share",
+      (n, dang) => s"(($Scale * 15) div 100) div ${n}L + " +
+        s"(85 * (coalesce(contrib, 0) + ${dang}L div ${n}L)) div 100 AS r",
+      iters)
 
   /** Weighted PageRank: [[run]] with per-edge transition mass — each
     * vertex ships `(r · w_e) div W(v)` along edge e, W(v) = Σ w over its
     * out-edges, instead of the uniform `r div deg`. Same exact 64-bit
     * fixed-point discipline, damping, dangling handling, plan shape, and
-    * cache lifecycle as [[run]] (a separate loop for the same reason as
-    * [[trustRank]]: d21's oracle hash-pins the unweighted formula).
-    * Integer weights only; ANSI mode makes any `r·w` overflow THROW
-    * loudly rather than wrap (size weights so max r · max w ≪ 2^63 —
-    * rank mass is bounded by [[Scale]], so w up to ~10^6 is safe).
+    * cache lifecycle as [[run]]. Integer weights only; ANSI mode makes any
+    * `r·w` overflow THROW loudly rather than wrap (size weights so
+    * max r · max w ≪ 2^63 — rank mass is bounded by [[Scale]], so w up to
+    * ~10^6 is safe).
     *
     * @param edges columns `src`, `dst`, `w` (positive integer weight;
     *              parallel (src, dst) rows pre-aggregate upstream)
     */
-  def runWeighted(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .persist()
-    val vs = nodes.persist()
-    val wdeg = e.groupBy("src").agg(sum(col("w")).as("sumw")).persist()
-    val eDegHandle = e.join(wdeg, "src")
-      .select(col("src"), col("dst"), col("w"), col("sumw")).persist()
-    val n = vs.count()
-    eDegHandle.count()
-    val eDeg = truncateLineage(eDegHandle)
-    val vsLeaf = truncateLineage(vs)
-    val degLeaf = truncateLineage(wdeg)
-
-    var rHandle = vsLeaf.selectExpr("v", s"$Scale div ${n}L AS r").persist()
-
-    def danglingOf(ranks: DataFrame): Long =
-      ranks.join(degLeaf, ranks("v") === degLeaf("src"), "left_anti")
-        .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-        .head().getLong(0)
-
-    var dang = danglingOf(rHandle)
-    var r = truncateLineage(rHandle)
-
-    for (_ <- 1 to iters) {
-      val contrib = eDeg.join(r, col("src") === col("v"))
-        .selectExpr("dst", "(r * w) div sumw AS share")
-        .groupBy("dst").agg(sum(col("share")).as("contrib"))
-      val next = vsLeaf
-        .join(contrib, col("v") === col("dst"), "left")
-        .selectExpr("v",
-          s"(($Scale * 15) div 100) div ${n}L + " +
-            s"(85 * (coalesce(contrib, 0) + ${dang}L div ${n}L)) div 100 AS r")
-        .persist()
-      dang = danglingOf(next)
-      rHandle.unpersist()
-      rHandle = next
-      r = truncateLineage(next)
-    }
-    eDegHandle.unpersist()
-    wdeg.unpersist()
-    e.unpersist()
-    vs.unpersist()
-    r
-  }
+  def runWeighted(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    iterate(nodes, _.count(),
+      edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), col("w").cast("long").as("w")),
+      Seq("src", "dst", "w"), sum(col("w")).as("sumw"),
+      n => s"$Scale div ${n}L AS r",
+      "(r * w) div sumw AS share",
+      (n, dang) => s"(($Scale * 15) div 100) div ${n}L + " +
+        s"(85 * (coalesce(contrib, 0) + ${dang}L div ${n}L)) div 100 AS r",
+      iters)._1
 
   /** Hook-less form for one-shot processes; see [[trustRankWithRelease]]. */
   def trustRank(
@@ -213,63 +102,104 @@ object PageRank {
     *    — dangling mass teleports to the SEEDS, the personalized twin of
     *    [[run]]'s uniform redistribution.
     *
-    * A separate loop rather than a parameterized [[run]] ON PURPOSE: the
-    * uniform formula's floor-division ORDER (`(Scale·15 div 100) div n`)
-    * is hash-pinned by d21's driver oracle, and unifying the two would
-    * perturb it for no plan-shape gain. Same per-round cost profile and
-    * cache lifecycle as [[run]]; seeds outside `nodes` are ignored.
+    * Same per-round cost profile and cache lifecycle as [[run]]; seeds
+    * outside `nodes` are ignored.
     */
   def trustRankWithRelease(
       nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       iters: Int): (DataFrame, () => Unit) = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.persist()
-    val vs = nodes
+    val flagged = nodes
       .join(seeds.select(col("v")).distinct().withColumn("__s", lit(1L)),
         Seq("v"), "left")
       .select(col("v"), coalesce(col("__s"), lit(0L)).as("s"))
-      .persist()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-    val eDegHandle = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg")).persist()
-    val nSeeds = vs.filter(col("s") === 1L).count() // also materializes vs
-    require(nSeeds > 0L, "trustRank needs at least one seed inside `nodes`")
-    eDegHandle.count()
-    val eDeg = truncateLineage(eDegHandle)
-    val vsLeaf = truncateLineage(vs)
-    val degLeaf = truncateLineage(deg)
+    def seedCount(vs: DataFrame): Long = {
+      val k = vs.filter(col("s") === 1L).count()
+      require(k > 0L, "trustRank needs at least one seed inside `nodes`")
+      k
+    }
+    iterate(flagged, seedCount, edges, Seq("src", "dst"), count(lit(1)).as("deg"),
+      k => s"s * ($Scale div ${k}L) AS r",
+      "r div deg AS share",
+      (k, dang) => s"(15 * (s * ($Scale div ${k}L))) div 100 + " +
+        s"(85 * (coalesce(contrib, 0) + s * (${dang}L div ${k}L))) div 100 AS r",
+      iters)
+  }
 
-    var rHandle = vsLeaf
-      .selectExpr("v", "s", s"s * ($Scale div ${nSeeds}L) AS r").persist()
+  /** The one round loop behind every variant.
+    *
+    * @param vertices `v` plus any columns carried through every round
+    *                 (TrustRank's seed flag `s`)
+    * @param mass     the teleport denominator (all vertices, or the seeds);
+    *                 its action also materializes the vertex cache
+    * @param edgeCols the edge columns the `share` expression reads
+    * @param degree   the out-degree aggregate attached to every edge, named
+    *                 as the `share` expression reads it
+    * @param initial  round-0 rank expression, given the mass
+    * @param share    per-edge rank share expression
+    * @param update   next-rank expression, given the mass and the previous
+    *                 round's dangling mass
+    */
+  private def iterate(
+      vertices: DataFrame, mass: DataFrame => Long,
+      edges: DataFrame, edgeCols: Seq[String], degree: Column,
+      initial: Long => String, share: String, update: (Long, Long) => String,
+      iters: Int): (DataFrame, () => Unit) = Lineage.scope { s =>
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    val carried = vertices.columns.toSeq.filter(_ != "v")
+    // Inputs are re-read every round — persist both, or an expensive
+    // upstream (e.g. the Jaccard pair self-join) recomputes once per round.
+    val e = s.pinLazy(edges)
+    // Vertex count once, eagerly: a literal in every round's expression
+    // beats re-running even a 1-row aggregate subplan per round.
+    val (vs, n) = s.pinBy(vertices)(mass)
+    val deg = s.pinLazy(e.frame.groupBy("src").agg(degree))
+    // Degree is attached to the edge list ONCE, outside the loop — the
+    // rounds previously joined `deg` per round, an edge-scale shuffle
+    // join × iters that this single pinned frame replaces. The join
+    // output is hash-partitioned by src and the cache RETAINS that
+    // partitioning (InMemoryTableScan reports it), so at shuffle-join
+    // scale each round's e⋈r probe re-shuffles only the vertex-scale
+    // rank frame, never the edges. Its count also materializes `e` and
+    // `deg`; the rounds read its view, since the un-truncated text embeds
+    // the whole upstream edge pipeline per round (the catalog's d21 plan
+    // carried 4186 nested scans before truncation).
+    val eDeg = s.pin(e.frame.join(deg.frame, "src")
+      .select((edgeCols ++ deg.frame.columns.filter(_ != "src")).map(col): _*)).view
+    // the dangling probe reads deg's view so the per-round agg plan
+    // doesn't re-embed the caller's edge pipeline via deg's lineage
+    val degLeaf = deg.view
 
+    // Dangling mass: ranks of vertices with no out-edges. A 1-row
+    // aggregate pulled DRIVER-SIDE (same bounded contract as the vertex
+    // count) and folded into the next round's expression as a literal.
+    // Two plan economies vs earlier formulations:
+    //  - an earlier version shipped it back as crossJoin(broadcast(agg)) —
+    //    semantically identical, but the per-round BroadcastExchange +
+    //    nested-loop stage cost ~6s/round at local[32];
+    //  - the anti-join aggregate doubles as the CACHE MATERIALIZATION of
+    //    its argument (it consumes every partition), so each round runs
+    //    exactly ONE job — round t's action computes round t's ranks AND
+    //    the dangling scalar round t+1 needs, instead of a count() job
+    //    followed by a separate dangling job re-scanning the cache.
     def danglingOf(ranks: DataFrame): Long =
       ranks.join(degLeaf, ranks("v") === degLeaf("src"), "left_anti")
         .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
         .head().getLong(0)
 
-    var dang = danglingOf(rHandle)
-    var r = truncateLineage(rHandle)
-
-    for (_ <- 1 to iters) {
+    val (r0, dang0) = s.pinBy(
+      vs.view.selectExpr(("v" +: carried) :+ initial(n): _*))(danglingOf)
+    val ranks = s.fixpoint(r0, dang0, iters) { (_, r, dang) =>
+      // Each vertex ships its share along every out-edge; sum at the dst.
       val contrib = eDeg.join(r, col("src") === col("v"))
-        .selectExpr("dst", "r div deg AS share")
+        .selectExpr("dst", share)
         .groupBy("dst").agg(sum(col("share")).as("contrib"))
-      val next = vsLeaf
+      vs.view
         .join(contrib, col("v") === col("dst"), "left")
-        .selectExpr("v", "s",
-          s"(15 * (s * ($Scale div ${nSeeds}L))) div 100 + " +
-            s"(85 * (coalesce(contrib, 0) + s * (${dang}L div ${nSeeds}L))) div 100 AS r")
-        .persist()
-      dang = danglingOf(next)
-      rHandle.unpersist()
-      rHandle = next
-      r = truncateLineage(next)
-    }
-    eDegHandle.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    vs.unpersist()
-    val handle = rHandle
-    (r.select(col("v"), col("r")), () => { handle.unpersist(); () })
+        .selectExpr(("v" +: carried) :+ update(n, dang): _*)
+    }(danglingOf)((_, _) => false)
+    // the final round's view stays cached (multi-reference callers don't
+    // re-nest the round chain); release via the hook
+    val out = s.keep(ranks.state)
+    (out.view.select(col("v"), col("r")), () => out.release())
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** DeepWalk-style random-walk corpus generation (Perozzi, Al-Rfou &
   * Skiena, KDD 2014 — public algorithm): fixed-length uniform walks from
@@ -25,15 +25,12 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * adjacency (edge-keyed, the only fact-scale shuffle); walks at dangling
   * vertices stop (no emissions past the dead end). The adjacency is
   * indexed ONCE (row_number over the src partition) and persisted for
-  * the loop; per-step frames are persisted, materialized, and RDD-leaf
-  * re-rooted (the d21/PageRank iteration hygiene), so the plan stays one
-  * step deep for any length; the step leaves stay cached because the
-  * final union reads every one (the Bfs levels contract).
+  * the loop; per-step frames are pinned and read through their truncated
+  * views ([[graft.engine.Lineage]]), so the plan stays one step deep for
+  * any length; the step leaves stay cached because the final union reads
+  * every one (the Bfs levels contract).
   */
 object RandomWalks {
-
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** The walk's deterministic transition mix — REPLICATED in the d57
     * oracle; change both or neither. Inputs are reduced mod 1e6+3 before
@@ -66,7 +63,7 @@ object RandomWalks {
   def deepWalks(
       edges: DataFrame, seeds: DataFrame,
       length: Int, walksPerSeed: Int = 1,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
     require(length >= 1 && length <= 64,
       s"walk length must be in [1, 64], got $length")
     require(walksPerSeed >= 1 && walksPerSeed <= 128,
@@ -76,18 +73,16 @@ object RandomWalks {
     // dst-sorted neighbor index + degree, attached once: the step join
     // needs (src, idx) → dst and deg(src) together.
     import org.apache.spark.sql.expressions.Window
-    val eDistinctH = e.distinct().persist(MEMORY_AND_DISK)
-    val eRows = eDistinctH.count()
-    val seedsH = seeds.select(col("v").cast("long").as("v")).distinct()
-      .persist(MEMORY_AND_DISK)
-    val seedRows = seedsH.count()
+    val (eDistinct, eRows) = s.pinBy(e.distinct())(_.count())
+    val (seedsP, seedRows) = s.pinBy(seeds.select(col("v").cast("long").as("v")).distinct())(
+      _.count())
     if (eRows + seedRows * walksPerSeed * (length + 1L) <= localFinishMaxRows) {
       // --- SERIAL ENDGAME: collect the dst-sorted adjacency once and
       // replay the deterministic hash-chosen walks on the driver.
       // buffer-then-sort: a per-edge Array append would be O(degree²) on
       // skewed hubs (self-review finding) — the buffer keeps it linear
       val adjBuf = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      eDistinctH.collect().foreach { r =>
+      eDistinct.frame.collect().foreach { r =>
         val s = r.getLong(0)
         var cur = adjBuf.get(s)
         if (cur == null) {
@@ -104,7 +99,7 @@ object RandomWalks {
         java.util.Arrays.sort(arr)
         adjMap.put(e2.getKey, arr)
       }
-      val seedArr = seedsH.collect().map(_.getLong(0)).sorted
+      val seedArr = seedsP.frame.collect().map(_.getLong(0)).sorted
       Console.err.println(
         s"[walks] local-endgame seeds=${seedArr.length} edges=$eRows")
       val rows = Seq.newBuilder[(Long, Long, Long, Long)]
@@ -132,73 +127,40 @@ object RandomWalks {
           w += 1
         }
       }
-      eDistinctH.unpersist(blocking = false)
-      seedsH.unpersist(blocking = false)
-      return seeds.sparkSession.createDataFrame(rows.result())
+      seeds.sparkSession.createDataFrame(rows.result())
         .toDF("seed", "walk", "step", "v")
         .select(col("seed").cast("long"), col("walk").cast("long"),
           col("step").cast("long"), col("v").cast("long"))
+    } else {
+      val adj = s.pin(eDistinct.view
+        .withColumn("idx",
+          (row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
+            .cast("long"))
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))).view
+      val degs = adj.select(col("src"), col("deg")).distinct()
+      val (frontier0, frontierRows) = s.pinBy(seedsP.view
+        .crossJoin(
+          seeds.sparkSession.range(walksPerSeed.toLong).select(col("id").as("walk")))
+        .select(col("v").as("seed"), col("walk"), col("v")))(_.count())
+      // TWO steps per ACTION (Lineage's wave). The step leaves stay cached
+      // after return because the result reads every one (unpersisting
+      // early would force recompute chains).
+      val steps = s.wave(frontier0, frontierRows, length) { (fr, step, _) => fr
+        .join(degs, fr("v") === degs("src"))
+        .select(col("seed"), col("walk"),
+          (mix(col("seed"), col("walk"), lit(step.toLong), col("v")) % col("deg"))
+            .as("pick"),
+          col("v").as("cur"))
+        .join(adj, col("cur") === adj("src") && col("pick") === adj("idx"))
+        .select(col("seed"), col("walk"), col("dst").as("v"))
+      }.levels
+      // steps stay persisted (the Bfs contract): the caller reads the walk
+      // corpus from cache; blocks age out via LRU.
+      steps.map(s.keep).zipWithIndex
+        .map { case (level, step) => level.view.withColumn("step", lit(step.toLong)) }
+        .reduce(_ unionAll _)
+        .select(col("seed"), col("walk"), col("step"), col("v"))
     }
-    val adjH = truncateLineage(eDistinctH)
-      .withColumn("idx",
-        (row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
-          .cast("long"))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .persist(MEMORY_AND_DISK)
-    adjH.count()
-    val adj = truncateLineage(adjH)
-    val degs = adj.select(col("src"), col("deg")).distinct()
-
-    val frontier0 = truncateLineage(seedsH)
-      .crossJoin(
-        seeds.sparkSession.range(walksPerSeed.toLong).select(col("id").as("walk")))
-      .select(col("v").as("seed"), col("walk"), col("v"))
-      .persist(MEMORY_AND_DISK)
-    var frontierRows = frontier0.count()
-    var frontier = truncateLineage(frontier0)
-    val levels = scala.collection.mutable.ArrayBuffer(
-      frontier.withColumn("step", lit(0L)))
-    def stepFn(fr: DataFrame, s: Int): DataFrame = fr
-      .join(degs, fr("v") === degs("src"))
-      .select(col("seed"), col("walk"),
-        (mix(col("seed"), col("walk"), lit(s.toLong), col("v")) % col("deg"))
-          .as("pick"),
-        col("v").as("cur"))
-      .join(adj, col("cur") === adj("src") && col("pick") === adj("idx"))
-      .select(col("seed"), col("walk"), col("dst").as("v"))
-    var step = 1
-    // TWO steps per ACTION (the Scc sweep economy): the mid step carries
-    // a persist marker and materializes inside the outer step's count;
-    // an empty mid step makes the outer empty too, so the single count
-    // still terminates correctly. Levels OWN their caches until the
-    // final union (unpersisting early would force recompute chains).
-    while (step <= length && frontierRows > 0L) {
-      if (step == length) {
-        val nextH = stepFn(frontier, step).persist(MEMORY_AND_DISK)
-        frontierRows = nextH.count()
-        val next = truncateLineage(nextH)
-        levels += next.withColumn("step", lit(step.toLong))
-        frontier = next
-        step += 1
-      } else {
-        val n1 = truncateLineage(stepFn(frontier, step).persist(MEMORY_AND_DISK))
-        val n2H = stepFn(n1, step + 1).persist(MEMORY_AND_DISK)
-        frontierRows = n2H.count()
-        val n2 = truncateLineage(n2H)
-        levels += n1.withColumn("step", lit(step.toLong))
-        levels += n2.withColumn("step", lit(step + 1L))
-        frontier = n2
-        step += 2
-      }
-    }
-    val out = levels.reduce(_ unionAll _)
-      .select(col("seed"), col("walk"), col("step"), col("v"))
-    adjH.unpersist(blocking = false)
-    eDistinctH.unpersist(blocking = false)
-    seedsH.unpersist(blocking = false)
-    // levels stay persisted (the Bfs contract): the caller reads the walk
-    // corpus from cache; blocks age out via LRU.
-    out
   }
 
   /** node2vec-biased walks (Grover & Leskovec, KDD 2016 — public
@@ -217,11 +179,11 @@ object RandomWalks {
     * [[deepWalks]], ONE extra (prev, dst)-keyed join tagging
     * triangle-closers, and a per-walker cumulative window whose
     * partitions are single-walker candidate lists (bounded by max
-    * degree, never corpus-scale). Same RDD-leaf iteration hygiene.
+    * degree, never corpus-scale). Same iteration hygiene.
     */
   def node2vecWalks(
       edges: DataFrame, seeds: DataFrame, length: Int,
-      wBack: Long = 1L, wCommon: Long = 2L, wForward: Long = 4L): DataFrame = {
+      wBack: Long = 1L, wCommon: Long = 2L, wForward: Long = 4L): DataFrame = Lineage.scope { s =>
     require(length >= 1 && length <= 64,
       s"walk length must be in [1, 64], got $length")
     require(wBack >= 0L && wCommon >= 0L && wForward >= 0L &&
@@ -230,27 +192,16 @@ object RandomWalks {
     import org.apache.spark.sql.expressions.Window
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    val adjH = e.distinct()
+    val adj = s.pin(e.distinct()
       .withColumn("idx",
         (row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
-          .cast("long"))
-      .persist(MEMORY_AND_DISK)
-    adjH.count()
-    val adj = truncateLineage(adjH)
+          .cast("long"))).view
     // triangle tags probe this as (prev, dst) — one copy, same cache
     val epairs = adj.select(col("src").as("__p"), col("dst").as("__c"), lit(1L).as("__t"))
-
-    var frontierRows = 0L
-    var frontier = { // (seed, prev, v); prev = -1 sentinel at step 0
-      val f0 = seeds.select(col("v").cast("long").as("v")).distinct()
-        .select(col("v").as("seed"), lit(-1L).as("prev"), col("v"))
-        .persist(MEMORY_AND_DISK)
-      frontierRows = f0.count()
-      truncateLineage(f0)
-    }
-    val levels = scala.collection.mutable.ArrayBuffer(
-      frontier.select(col("seed"), lit(0L).as("step"), col("v")))
-    def stepFn(fr: DataFrame, s: Int): DataFrame = {
+    // (seed, prev, v); prev = -1 sentinel at step 0
+    val (frontier0, frontierRows) = s.pinBy(seeds.select(col("v").cast("long").as("v")).distinct()
+      .select(col("v").as("seed"), lit(-1L).as("prev"), col("v")))(_.count())
+    def stepFn(fr: DataFrame, step: Int): DataFrame = {
       val wCand = fr
         .join(adj, fr("v") === adj("src"))
         .join(epairs,
@@ -269,34 +220,17 @@ object RandomWalks {
         // ANSI mode makes a bare `% 0` throw rather than null
         .withColumn("r",
           when(col("total") > 0L,
-            mix(col("seed"), lit(0L), lit(s.toLong), col("v")) % col("total")))
+            mix(col("seed"), lit(0L), lit(step.toLong), col("v")) % col("total")))
         .filter(col("cum") - col("w") <= col("r") && col("r") < col("cum"))
         .select(col("seed"), col("v").as("prev"), col("dst").as("v"))
     }
-    var step = 1
     // TWO steps per ACTION (the deepWalks economy above)
-    while (step <= length && frontierRows > 0L) {
-      if (step == length) {
-        val nextH = stepFn(frontier, step).persist(MEMORY_AND_DISK)
-        frontierRows = nextH.count()
-        val next = truncateLineage(nextH)
-        levels += next.select(col("seed"), lit(step.toLong).as("step"), col("v"))
-        frontier = next
-        step += 1
-      } else {
-        val n1 = truncateLineage(stepFn(frontier, step).persist(MEMORY_AND_DISK))
-        val n2H = stepFn(n1, step + 1).persist(MEMORY_AND_DISK)
-        frontierRows = n2H.count()
-        val n2 = truncateLineage(n2H)
-        levels += n1.select(col("seed"), lit(step.toLong).as("step"), col("v"))
-        levels += n2.select(col("seed"), lit(step + 1L).as("step"), col("v"))
-        frontier = n2
-        step += 2
+    s.wave(frontier0, frontierRows, length)((fr, step, _) => stepFn(fr, step)).levels
+      .map(s.keep).zipWithIndex
+      .map { case (level, step) =>
+        level.view.select(col("seed"), lit(step.toLong).as("step"), col("v"))
       }
-    }
-    val out = levels.reduce(_ unionAll _)
+      .reduce(_ unionAll _)
       .select(col("seed"), col("step"), col("v"))
-    adjH.unpersist(blocking = false)
-    out
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Strongly connected components over a DIRECTED edge list — the
   * directed-graph partner of [[ConnectedComponents]]: link graphs,
@@ -52,31 +52,14 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * quadratic in SCC size — exactly what a 100 TB run cannot do). Per
   * inner round: one edge-keyed shuffle join + a map-side-combined min or
   * distinct + a vertex-scale anti/left join. Edges are induced once per
-  * outer round from the shrinking live set. Iteration hygiene is the
-  * d21/PageRank doctrine: every persisted frame is materialized and
-  * re-rooted as an RDD leaf ([[truncateLineage]]), predecessors
-  * unpersisted, so the plan stays one round deep no matter how many
-  * rounds run.
+  * outer round from the shrinking live set. Iteration hygiene is
+  * [[graft.engine.Lineage]]'s: every frame is pinned and read through its
+  * truncated view (the sweep and the anti-joins reference each round's
+  * state more than once), predecessors released, so the plan stays one
+  * round deep no matter how many rounds run; a refusal releases every
+  * cache the operator pinned.
   */
 object Scc {
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * ConnectedComponents/TreeDepth rule): the sweep and the anti-joins
-    * reference each round's state more than once, so un-truncated lineage
-    * would nest geometrically. */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
-
-  /** persist → materialize → RDD-leaf view. Returns (view, handle, rows):
-    * read through the view, unpersist through the handle; the row count is
-    * the materializing action's result, kept because the endgame cutover
-    * and the shrink tests need it (re-counting a cached frame would be an
-    * extra action per round). */
-  private def pin(df: DataFrame): (DataFrame, DataFrame, Long) = {
-    val h = df.persist(MEMORY_AND_DISK)
-    val rows = h.count()
-    (truncateLineage(h), h, rows)
-  }
 
   private def labelSum(df: DataFrame, c: String): java.math.BigDecimal =
     df.agg(sum(col(c).cast("decimal(38,0)"))).head().getDecimal(0)
@@ -126,55 +109,40 @@ object Scc {
     */
   def topologicalLevels(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 60): DataFrame = {
+      maxRounds: Int = 60): DataFrame = Lineage.scope { s =>
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val (e, eH, _) = pin(edges
+    val e = s.pin(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val (nodes, nodesH, nodeRows) = pin(
-      e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct())
-    if (nodeRows == 0L) { // no edges at all — every vertex is the caller's
-      eH.unpersist(blocking = false) // level-0 default; SUM() of an empty
-      nodesH.unpersist(blocking = false) // frame is null and would NPE the
-      return nodes.select(col("id"), lit(0L).as("level")) // convergence test
+      .distinct()).view
+    val (nodesP, nodeRows) = s.pinBy(
+      e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct())(_.count())
+    val nodes = nodesP.view
+    // no edges at all — every vertex is the caller's level-0 default; SUM()
+    // of an empty frame is null and would NPE the convergence test
+    if (nodeRows == 0L) nodes.select(col("id"), lit(0L).as("level"))
+    else {
+      def relax(cur: DataFrame): DataFrame = {
+        val stepped = e.join(cur.select(col("id").as("src"), col("level")), Seq("src"))
+          .groupBy(col("dst")).agg(max(col("level") + lit(1L)).as("nl"))
+        nodes.join(stepped, nodes("id") === stepped("dst"), "left")
+          .select(nodes("id"), coalesce(col("nl"), lit(0L)).as("level"))
+      }
+      val (lvl0, sum0) = s.pinBy(nodes.select(col("id"), lit(0L).as("level")))(
+        labelSum(_, "level"))
+      // TWO relaxations per ACTION (the components color-loop economy):
+      // levels are pointwise NONDECREASING in rounds, so sum(k) ==
+      // sum(k+2) still reads "nothing moved in either round", and extra
+      // rounds past the fixpoint are the identity — bit-identical output.
+      val levels = s.fixpoint(lvl0, sum0, (maxRounds + 1) / 2) { (round, cur, _) =>
+        relax(round.pinLazy(relax(cur)).view)
+      }(labelSum(_, "level"))(_.compareTo(_) == 0)
+      if (!levels.converged)
+        throw new IllegalStateException(
+          s"topologicalLevels did not converge in $maxRounds rounds — " +
+            "the graph has a cycle (not a DAG) or depth exceeds maxRounds")
+      // the levels stay persisted (the components contract)
+      s.keep(levels.state).view
     }
-    var lvlH = nodes.select(col("id"), lit(0L).as("level"))
-      .persist(MEMORY_AND_DISK)
-    var prevSum = labelSum(lvlH, "level")
-    var lvl = truncateLineage(lvlH)
-    var round = 0
-    var converged = false
-    def relax(cur: DataFrame): DataFrame = {
-      val stepped = e.join(cur.select(col("id").as("src"), col("level")), Seq("src"))
-        .groupBy(col("dst")).agg(max(col("level") + lit(1L)).as("nl"))
-      nodes.join(stepped, nodes("id") === stepped("dst"), "left")
-        .select(nodes("id"), coalesce(col("nl"), lit(0L)).as("level"))
-    }
-    // TWO relaxations per ACTION (the components color-loop economy):
-    // levels are pointwise NONDECREASING in rounds, so sum(k) ==
-    // sum(k+2) still reads "nothing moved in either round", and extra
-    // rounds past the fixpoint are the identity — bit-identical output.
-    while (!converged && round < maxRounds) {
-      val midH = relax(lvl).persist(MEMORY_AND_DISK)
-      val nH = relax(truncateLineage(midH)).persist(MEMORY_AND_DISK)
-      val newSum = labelSum(nH, "level")
-      lvlH.unpersist(blocking = false)
-      midH.unpersist(blocking = false)
-      lvl = truncateLineage(nH); lvlH = nH
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      round += 2
-    }
-    eH.unpersist(blocking = false)
-    nodesH.unpersist(blocking = false)
-    if (!converged) {
-      lvlH.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"topologicalLevels did not converge in $maxRounds rounds — " +
-          "the graph has a cycle (not a DAG) or depth exceeds maxRounds")
-    }
-    // lvl stays persisted (the components contract)
-    lvl
   }
 
   /** Iterative Tarjan (explicit stacks — no recursion, so DFS depth = |V|
@@ -275,36 +243,37 @@ object Scc {
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxOuterRounds: Int = 25, maxPropRounds: Int = 60,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
-
-    def labelSum(df: DataFrame, c: String): java.math.BigDecimal =
-      df.agg(sum(col(c).cast("decimal(38,0)"))).head().getDecimal(0)
-
-    val (e0, e0H, e0Rows) = pin(edges
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+    val (e0, e0Rows) = s.pinBy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct())
+      .distinct())(_.count())
 
-    var (remaining, remainingH, remainingRows) = pin(
-      vertices.select(col(idCol).cast("long").as("id")).distinct())
+    var (remaining, remainingRows) = s.pinBy(
+      vertices.select(col(idCol).cast("long").as("id")).distinct())(_.count())
 
     // (id, scc) accumulator — re-pinned flat each time it grows, so it is
     // always ONE cached leaf, never a deepening union tree.
-    var assigned: DataFrame = null
-    var assignedH: DataFrame = null
+    var assigned: Lineage.Pinned = null
     def addAssigned(part: DataFrame): Unit = {
-      val grown = if (assigned == null) part else assigned.unionAll(part)
-      val (v, h, _) = pin(grown)
-      if (assignedH != null) assignedH.unpersist(blocking = false)
-      assigned = v; assignedH = h
+      val grown = s.pin(if (assigned == null) part else assigned.view.unionAll(part))
+      if (assigned != null) assigned.release()
+      assigned = grown
     }
+    // `ei` induced on the live vertex set — both endpoints live
+    def induced(ei: DataFrame): DataFrame = ei
+      .join(remaining.view.select(col("id").as("src")), Seq("src"), "left_semi")
+      .join(remaining.view.select(col("id").as("dst")), Seq("dst"), "left_semi")
 
     // Live induced edge set. Starts as e0's cache directly — re-pinning
-    // would duplicate the largest frame for nothing. (Unpersist sites may
-    // hit e0H twice on the first replacement; the second call is a no-op.)
+    // would duplicate the largest frame for nothing.
     var ei = e0
-    var eiH = e0H
     var eiRows = e0Rows
+    def reinduce(): Unit = {
+      val (nei, neiRows) = s.pinBy(induced(ei.view))(_.count())
+      ei.release()
+      ei = nei; eiRows = neiRows
+    }
     var outer = 0
     while (remainingRows > 0L && outer < maxOuterRounds) {
       if (remainingRows + eiRows <= localFinishMaxRows) {
@@ -315,8 +284,8 @@ object Scc {
         // overhead). See the scaladoc: this is the published algorithm's
         // own endgame, not a shortcut; the distributed rounds exist
         // precisely to shrink a 100 TB graph down to this budget.
-        val vs = remaining.select(col("id")).collect().map(_.getLong(0))
-        val es = ei.select(col("src"), col("dst")).collect()
+        val vs = remaining.view.select(col("id")).collect().map(_.getLong(0))
+        val es = ei.view.select(col("src"), col("dst")).collect()
           .map(r => (r.getLong(0), r.getLong(1)))
         Console.err.println(
           s"[scc] outer=$outer local-endgame vertices=${vs.length} edges=${es.length}")
@@ -326,8 +295,7 @@ object Scc {
           .select(col("id").cast("long"), col("scc").cast("long")))
         remainingRows = 0L
       }
-      if (remainingRows == 0L) { outer += 1 }
-      else {
+      if (remainingRows > 0L) {
       // --- TRIM to a fixpoint: no-in or no-out ⇒ singleton SCC ---
       // Action economy (the d54 constant): the live test is ONE fused
       // degree aggregate (has-in AND has-out in one shuffle, not two
@@ -339,163 +307,107 @@ object Scc {
       var trimmedAny = false
       while (trimming && remainingRows > 0L) {
         trimRounds += 1
-        val eLive =
-          if (trimmedAny) ei
-            .join(remaining.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(remaining.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          else ei // entry edges are already induced on `remaining`
+        // entry edges are already induced on `remaining`
+        val eLive = if (trimmedAny) induced(ei.view) else ei.view
         val deg = eLive.select(col("src").as("id"), lit(1).as("o"), lit(0).as("i"))
           .unionAll(eLive.select(col("dst").as("id"), lit(0).as("o"), lit(1).as("i")))
           .groupBy(col("id")).agg(max(col("o")).as("ho"), max(col("i")).as("hi"))
-        val live = remaining.join(
+        val (live, liveRows) = s.pinBy(remaining.view.join(
           deg.filter(col("ho") === 1 && col("hi") === 1).select(col("id")),
-          Seq("id"), "left_semi")
-        val (liveV, liveH, liveRows) = pin(live)
+          Seq("id"), "left_semi"))(_.count())
         if (liveRows == remainingRows) {
-          liveH.unpersist(blocking = false)
+          live.release()
           trimming = false
         } else {
           trimmedAny = true
-          addAssigned(remaining.join(liveV, Seq("id"), "left_anti")
+          addAssigned(remaining.view.join(live.view, Seq("id"), "left_anti")
             .select(col("id"), col("id").as("scc")))
-          remainingH.unpersist(blocking = false)
-          remaining = liveV; remainingH = liveH; remainingRows = liveRows
+          remaining.release()
+          remaining = live; remainingRows = liveRows
         }
       }
-      if (trimmedAny && remainingRows > 0L) {
-        val (nei, neiH, neiRows) = pin(ei
-          .join(remaining.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(remaining.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-        eiH.unpersist(blocking = false)
-        ei = nei; eiH = neiH; eiRows = neiRows
-      }
+      if (trimmedAny && remainingRows > 0L) reinduce()
       if (remainingRows > 0L) {
         // --- COLOR: forward min-label to fixpoint ---
-        // labelSum is the materializing action for each round's persist
+        // labelSum is the materializing action for each round's pin
         // (ONE action per round, the CC.minLabel economy).
-        var fH = remaining.select(col("id"), col("id").as("f")).persist(MEMORY_AND_DISK)
-        var prevSum = labelSum(fH, "f")
-        var f = truncateLineage(fH)
-        var prop = 0
-        var converged = false
         def colorStep(cur: DataFrame): DataFrame = {
-          val nbrMin = ei.join(cur.select(col("id").as("src"), col("f")), Seq("src"))
+          val nbrMin = ei.view.join(cur.select(col("id").as("src"), col("f")), Seq("src"))
             .groupBy(col("dst"))
             .agg(min(col("f")).as("nf"))
           cur.join(nbrMin, cur("id") === nbrMin("dst"), "left")
             .select(cur("id"), least(col("f"), coalesce(col("nf"), col("f"))).as("f"))
         }
+        val (f0, sum0) = s.pinBy(remaining.view.select(col("id"), col("id").as("f")))(
+          labelSum(_, "f"))
         // TWO propagation rounds per ACTION (the d54 constant): the mid
-        // round carries a persist marker and materializes as a side
-        // effect of the outer round's labelSum — label sums decrease
-        // strictly until the fixpoint, so sum(k) == sum(k+2) still means
-        // "nothing moved in either round", and past the fixpoint an
-        // extra min-step is the identity (labels unchanged — the output
-        // is bit-identical to single-stepping).
-        while (!converged && prop < maxPropRounds) {
-          val midH = colorStep(f).persist(MEMORY_AND_DISK)
-          // lazy truncation: .rdd plans through the persist marker, so the
-          // mid round materializes (once) inside the SAME action as the
-          // outer labelSum, and the self-referential join below sees a
-          // clean leaf instead of shared attribute ids
-          val nfH = colorStep(truncateLineage(midH)).persist(MEMORY_AND_DISK)
-          val newSum = labelSum(nfH, "f")
-          fH.unpersist(blocking = false)
-          midH.unpersist(blocking = false)
-          f = truncateLineage(nfH); fH = nfH
-          converged = newSum.compareTo(prevSum) == 0
-          prevSum = newSum
-          prop += 2
-        }
-        if (!converged) {
-          fH.unpersist(blocking = false)
+        // round is pinned lazily and materializes as a side effect of the
+        // outer round's labelSum — label sums decrease strictly until the
+        // fixpoint, so sum(k) == sum(k+2) still means "nothing moved in
+        // either round", and past the fixpoint an extra min-step is the
+        // identity (labels unchanged — the output is bit-identical to
+        // single-stepping). The mid round is read through its view, so the
+        // self-referential join sees a clean leaf instead of shared
+        // attribute ids.
+        val color = s.fixpoint(f0, sum0, (maxPropRounds + 1) / 2) { (round, cur, _) =>
+          colorStep(round.pinLazy(colorStep(cur)).view)
+        }(labelSum(_, "f"))(_.compareTo(_) == 0)
+        if (!color.converged)
           throw new IllegalStateException(
             s"SCC forward coloring did not converge in $maxPropRounds rounds " +
               "(graph diameter exceeds maxPropRounds — raise it)")
-        }
+        val f = color.state.view
         // --- SWEEP: settle pivots, grow backward within color ---
-        // Settled is a LIST of per-wave leaves (the Bfs levels economy):
-        // the anti-join reads their linear union, nothing re-materializes
-        // per round. ONE action per wave (the frontier count).
-        val (pivots, pivotsH, _) = pin(f.filter(col("id") === col("f"))
-          .select(col("id"), col("f").as("scc")))
-        val waves = scala.collection.mutable.ArrayBuffer((pivots, pivotsH))
-        var frontier = pivots
-        var frontierRows = -1L
-        var sweep = 0
-        def sweepWave(fr: DataFrame, settledIds: DataFrame): DataFrame = ei
-          .join(fr.select(col("id").as("dst"), col("scc")), Seq("dst"))
-          .select(col("src").as("id"), col("scc"))
-          .distinct()
-          .join(f, Seq("id"))
-          .filter(col("f") === col("scc"))
-          .select(col("id"), col("scc"))
-          .join(settledIds, Seq("id"), "left_anti")
-        // TWO waves per ACTION (the color-loop economy): w1 carries a
-        // persist marker and materializes inside w2's count; w2 empty ⇒
-        // preds(w1 ∪ settled) exhausted ⇒ the sweep is complete whether
-        // or not w1 added rows, so the single count still terminates
-        // correctly. Possibly-empty w1 leaves in `waves` union away.
-        while (frontierRows != 0L && sweep < maxPropRounds) {
-          val settledIds = waves.map(_._1).reduce(_ unionAll _).select(col("id"))
-          val w1H = sweepWave(frontier, settledIds).persist(MEMORY_AND_DISK)
-          val w1 = truncateLineage(w1H)
-          val w2H = sweepWave(w1, settledIds.unionAll(w1.select(col("id"))))
-            .persist(MEMORY_AND_DISK)
-          frontierRows = w2H.count()
-          waves += ((w1, w1H))
-          if (frontierRows > 0L) {
-            val w2 = truncateLineage(w2H)
-            waves += ((w2, w2H))
-            frontier = w2
-          } else w2H.unpersist(blocking = false)
-          sweep += 2
+        // The settled set is the linear union of the per-wave leaves (the
+        // Bfs levels economy): the anti-join reads it, nothing
+        // re-materializes per wave. TWO waves per action: wave 2 empty ⇒
+        // preds(wave 1 ∪ settled) exhausted ⇒ the sweep is complete whether
+        // or not wave 1 added rows. Possibly-empty leaves union away.
+        val (pivots, pivotRows) = s.pinBy(f.filter(col("id") === col("f"))
+          .select(col("id"), col("f").as("scc")))(_.count())
+        val sweep = s.wave(pivots, pivotRows, 2 * ((maxPropRounds + 1) / 2)) {
+          (frontier, _, settled) => ei.view
+            .join(frontier.select(col("id").as("dst"), col("scc")), Seq("dst"))
+            .select(col("src").as("id"), col("scc"))
+            .distinct()
+            .join(f, Seq("id"))
+            .filter(col("f") === col("scc"))
+            .select(col("id"), col("scc"))
+            .join(settled.map(_.select(col("id"))).reduce(_ unionAll _), Seq("id"), "left_anti")
         }
-        if (frontierRows != 0L) {
+        if (sweep.rows != 0L)
           throw new IllegalStateException(
             s"SCC backward sweep did not converge in $maxPropRounds rounds " +
               "(SCC internal diameter exceeds maxPropRounds — raise it)")
-        }
-        val settled = waves.map(_._1).reduce(_ unionAll _)
         // Round-count observability (the [verify-timing] convention): the
         // operator's cost is rounds × fixed job overhead, so the counts
         // ARE the profile.
         Console.err.println(
-          s"[scc] outer=$outer trimRounds=$trimRounds colorRounds=$prop " +
-            s"sweepWaves=${waves.size - 1} live=$remainingRows")
+          s"[scc] outer=$outer trimRounds=$trimRounds colorRounds=${2 * color.rounds} " +
+            s"sweepWaves=${sweep.levels.size - 1} live=$remainingRows")
+        val settled = sweep.levels.map(_.view).reduce(_ unionAll _)
         addAssigned(settled) // materializes the union into the accumulator
-        val nextRemaining = remaining.join(settled.select(col("id")), Seq("id"), "left_anti")
-        val (rV, rH, rRows) = pin(nextRemaining)
-        remainingRows = rRows
-        remainingH.unpersist(blocking = false)
-        fH.unpersist(blocking = false)
-        waves.foreach(_._2.unpersist(blocking = false))
-        remaining = rV; remainingH = rH
-        if (remainingRows > 0L) {
-          val (nei, neiH, neiRows) = pin(ei
-            .join(remaining.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(remaining.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-          eiH.unpersist(blocking = false)
-          ei = nei; eiH = neiH; eiRows = neiRows
-        }
+        val (rest, restRows) = s.pinBy(
+          remaining.view.join(settled.select(col("id")), Seq("id"), "left_anti"))(_.count())
+        remainingRows = restRows
+        remaining.release()
+        color.state.release()
+        sweep.levels.foreach(_.release())
+        remaining = rest
+        if (remainingRows > 0L) reinduce()
+      }
       }
       outer += 1
-      }
     }
-    eiH.unpersist(blocking = false)
-    e0H.unpersist(blocking = false)
-    remainingH.unpersist(blocking = false)
-    if (remainingRows > 0L) {
-      if (assignedH != null) assignedH.unpersist(blocking = false)
+    if (remainingRows > 0L)
       throw new IllegalStateException(
         s"SCC did not finish in $maxOuterRounds outer rounds " +
           "(chain-of-cycles structure — raise maxOuterRounds)")
-    }
     // assigned stays persisted — the PageRank/Bfs contract: the caller
     // reads the result from cache; blocks age out via LRU.
     if (assigned == null) // no vertices at all
       vertices.sparkSession.emptyDataFrame
         .select(lit(0L).as("id"), lit(0L).as("scc")).limit(0)
-    else assigned
+    else s.keep(assigned).view
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import graft.engine.Lineage
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Hierarchy flattening by POINTER DOUBLING: every node's depth (distance
@@ -16,11 +17,11 @@ import org.apache.spark.sql.functions._
   * node; each round is ONE equi-join shuffle of vertex-scale frames; a
   * depth-2^20 hierarchy finishes in 20 rounds.
   *
-  * Iteration hygiene matches [[PageRank]]/[[ConnectedComponents]]: each
-  * round persists its composed state, materializes it with the SAME action
-  * that evaluates the convergence aggregate (one job per round), and
-  * releases the predecessor — lineage stays one round deep, so the plan at
-  * round 20 is as small as at round 1.
+  * Iteration hygiene is [[graft.engine.Lineage]]'s: each round pins its
+  * composed state, materializes it with the SAME action that evaluates the
+  * convergence aggregate (one job per round), and releases the predecessor
+  * — lineage stays one round deep, so the plan at round 20 is as small as
+  * at round 1.
   *
   * `edges` must be (v, parent) with exactly one row per non-root node,
   * parents strictly "above" (acyclic); `root` is its own parent
@@ -29,16 +30,6 @@ import org.apache.spark.sql.functions._
   * forever.
   */
 object TreeDepth {
-
-  /** Re-root a persisted, materialized frame as a leaf over its RDD (the
-    * ConnectedComponents.truncateLineage pattern): the DATA stays cached,
-    * but the logical plan stops nesting the iteration history — each
-    * doubling round references its predecessor TWICE (self-join), so the
-    * un-truncated plan tree grows ~3× per round and Catalyst re-analysis
-    * alone was costing seconds by round 5 (measured: round times grew
-    * 0.3 → 3.3 s while the data size stayed flat). */
-  private def truncateLineage(df: DataFrame): DataFrame =
-    graft.engine.Lineage.truncate(df)
 
   /** One action per round: (unresolved-pointer count, total row count).
     * The total detects SILENT node loss — a node whose parent is neither
@@ -53,41 +44,46 @@ object TreeDepth {
   }
 
   def depths(edges: DataFrame, root: Long, maxRounds: Int = 40): DataFrame = {
-    val spark = edges.sparkSession
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-    val rootRow = spark.range(1).select(
+    val rootRow = edges.sparkSession.range(1).select(
       lit(root).as("v"), lit(root).as("anc"), lit(0L).as("d"))
-    var reach = edges.select(col("v").cast("long").as("v"),
+    doubling("TreeDepth", edges.select(col("v").cast("long").as("v"),
         col("parent").cast("long").as("anc"), lit(1L).as("d"))
-      .unionAll(rootRow)
-      .persist(MEMORY_AND_DISK)
+      .unionAll(rootRow), root, maxRounds, "d")(_ + _)
+      .select(col("v"), col("d").as("depth"))
+  }
+
+  /** The pointer-doubling loop behind [[depths]] and [[rootPaths]]: state
+    * (v, anc, `carry`) composed with itself each round — v's pointer moves
+    * to its ancestor's ancestor and the carried values combine as
+    * `combine(v's, anc's)`. Each round is pinned with the [[probe]] as its
+    * one action; the predecessor is released. Both refusals (a dropped node,
+    * an unresolved pointer after `maxRounds`) release every cache. The
+    * final state STAYS persisted: the returned frame reads it, and
+    * unpersisting here would hand the caller a lineage that is the whole
+    * round-chain of joins. One vertex-scale cache entry per distinct input
+    * plan; Bench's clearCache between queries (and the session's LRU)
+    * retire it — same contract as PageRank's returned ranks. */
+  private def doubling(name: String, reach: DataFrame, root: Long, maxRounds: Int,
+      carry: String)(combine: (Column, Column) => Column): DataFrame = Lineage.scope { s =>
     // materialize + first convergence probe in one action
-    var (pending, total) = probe(reach, root)
-    val expected = total
-    var round = 0
-    while (pending > 0 && round < maxRounds) {
-      val prev = reach
-      reach = truncateLineage(reach).alias("a")
-        .join(truncateLineage(reach).select(col("v").as("bv"), col("anc").as("banc"),
-          col("d").as("bd")).alias("b"), col("a.anc") === col("bv"))
+    val (reach0, first) = s.pinBy(reach)(probe(_, root))
+    val expected = first._2
+    val doubled = s.fixpoint(reach0, first, if (first._1 > 0) maxRounds else 0) {
+      // each round references its predecessor TWICE (self-join), so it
+      // reads the truncated view: the un-truncated plan tree grew ~3× per
+      // round and Catalyst re-analysis alone cost seconds by round 5
+      (_, cur, _) => cur.alias("a")
+        .join(cur.select(col("v").as("bv"), col("anc").as("banc"),
+          col(carry).as("b" + carry)).alias("b"), col("a.anc") === col("bv"))
         .select(col("a.v").as("v"), col("banc").as("anc"),
-          (col("a.d") + col("bd")).as("d"))
-        .persist(MEMORY_AND_DISK)
-      val p = probe(reach, root); pending = p._1; total = p._2
-      prev.unpersist(blocking = false)
-      round += 1
-    }
+          combine(col("a." + carry), col("b" + carry)).as(carry))
+    }(probe(_, root))((_, p) => p._1 == 0)
+    val (pending, total) = doubled.value
     require(total == expected,
-      s"TreeDepth: ${expected - total} node(s) dropped — their parent is neither the root nor a listed vertex (disconnected input)")
+      s"$name: ${expected - total} node(s) dropped — their parent is neither the root nor a listed vertex (disconnected input)")
     require(pending == 0,
-      s"TreeDepth: $pending nodes unresolved after $maxRounds doubling rounds — cyclic input")
-    // The final state STAYS persisted: the returned frame reads it, and
-    // unpersisting here would hand the caller a lineage that is the whole
-    // round-chain of joins. One vertex-scale cache entry per distinct
-    // input plan; Bench's clearCache between queries (and the session's
-    // LRU) retire it — same contract as PageRank's returned ranks.
-    reach.select(col("v"), col("d").as("depth"))
+      s"$name: $pending nodes unresolved after $maxRounds doubling rounds — cyclic input")
+    s.keep(doubled.state).frame
   }
 
   /** Full ancestor closure — every (node, proper ancestor) pair — by
@@ -101,34 +97,20 @@ object TreeDepth {
     *
     * This is the subtree-rollup primitive: aggregate any per-node measure
     * over `anc` and every node gets its proper-descendant total. */
-  def ancestorClosure(edges: DataFrame, root: Long, maxRounds: Int = 40): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var c = edges.select(col("v").cast("long").as("v"),
-        col("parent").cast("long").as("anc"))
-      .persist(MEMORY_AND_DISK)
-    var size = c.count()
-    var round = 0
-    var grown = true
-    while (grown && round < maxRounds) {
-      val prev = c
-      val base = truncateLineage(c)
-      c = base.unionAll(
+  def ancestorClosure(
+      edges: DataFrame, root: Long, maxRounds: Int = 40): DataFrame = Lineage.scope { s =>
+    val (c0, size0) = s.pinBy(edges.select(col("v").cast("long").as("v"),
+      col("parent").cast("long").as("anc")))(_.count())
+    val closure = s.fixpoint(c0, size0, maxRounds) { (_, base, _) =>
+      base.unionAll(
           base.alias("a").join(base.select(col("v").as("bv"), col("anc").as("banc")).alias("b"),
             col("a.anc") === col("bv"))
             .select(col("a.v").as("v"), col("banc").as("anc")))
         .distinct()
-        .persist(MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val newSize = c.count()
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        println(f"[closure] round=$round size=$size -> $newSize ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      prev.unpersist(blocking = false)
-      grown = newSize != size
-      size = newSize
-      round += 1
-    }
-    require(!grown, s"TreeDepth.ancestorClosure: still growing after $maxRounds rounds — cyclic input")
-    c
+    }(_.count())(_ == _)
+    require(closure.converged,
+      s"TreeDepth.ancestorClosure: still growing after $maxRounds rounds — cyclic input")
+    s.keep(closure.state).frame
   }
 
   /** Materialized path to the root ("anc₁/anc₂/…/root" climbing upward) by
@@ -141,35 +123,14 @@ object TreeDepth {
     * once resolved. Output: (v, path) with the root-LAST climb order —
     * callers wanting root-first prefix keys reverse the split array. */
   def rootPaths(edges: DataFrame, root: Long, maxRounds: Int = 40): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val rootRow = edges.sparkSession.range(1).select(
       lit(root).as("v"), lit(root).as("anc"), lit("").as("trail"))
-    var reach = edges.select(col("v").cast("long").as("v"),
+    doubling("TreeDepth.rootPaths", edges.select(col("v").cast("long").as("v"),
         col("parent").cast("long").as("anc"),
         col("parent").cast("long").cast("string").as("trail"))
-      .unionAll(rootRow)
-      .persist(MEMORY_AND_DISK)
-    var (pending, total) = probe(reach, root)
-    val expected = total
-    var round = 0
-    while (pending > 0 && round < maxRounds) {
-      val prev = reach
-      reach = truncateLineage(reach).alias("a")
-        .join(truncateLineage(reach).select(col("v").as("bv"), col("anc").as("banc"),
-          col("trail").as("btrail")).alias("b"), col("a.anc") === col("bv"))
-        .select(col("a.v").as("v"), col("banc").as("anc"),
-          when(col("btrail") === "", col("a.trail"))
-            .otherwise(concat(col("a.trail"), lit("/"), col("btrail"))).as("trail"))
-        .persist(MEMORY_AND_DISK)
-      val p = probe(reach, root); pending = p._1; total = p._2
-      prev.unpersist(blocking = false)
-      round += 1
-    }
-    require(total == expected,
-      s"TreeDepth.rootPaths: ${expected - total} node(s) dropped — their parent is neither the root nor a listed vertex (disconnected input)")
-    require(pending == 0,
-      s"TreeDepth.rootPaths: $pending nodes unresolved after $maxRounds rounds — cyclic input")
-    reach.select(col("v"),
+      .unionAll(rootRow), root, maxRounds, "trail") { (a, b) =>
+      when(b === "", a).otherwise(concat(a, lit("/"), b))
+    }.select(col("v"),
       when(col("v") === root, lit("")).otherwise(col("trail")).as("path"))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ListBuffer
 
+import graft.engine.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,8 +37,8 @@ import org.apache.spark.sql.functions._
   * enforced loudly: candidate inventories past `maxCandidates` refuse
   * with the count rather than silently collecting gigabytes (production
   * SentencePiece trains on a corpus SAMPLE for the same reason; sample
-  * upstream, then train). The distinct-word frame is persisted once and
-  * re-rooted as an RDD leaf (the BpeTrain lineage rule).
+  * upstream, then train). The distinct-word frame is pinned once and read
+  * through its truncated view ([[graft.engine.Lineage]]).
   *
   * @param docs         corpus frame
   * @param tokenCol     array<string> column of pre-split words
@@ -64,10 +65,8 @@ object UnigramLm {
       .select(explode(col(tokenCol).cast("array<string>")).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .persist()
-    wcDf.count()
-    val wc = graft.engine.Lineage.truncate(wcDf).as[(String, Long)]
-    try {
+    Lineage.scope { s =>
+      val wc = s.pin(wcDf).view.as[(String, Long)]
       // seed inventory: substring occurrence counts × word frequency —
       // one explode over the DISTINCT words, one piece-keyed aggregate
       val seed = wc.toDF("w", "n")
@@ -96,7 +95,7 @@ object UnigramLm {
         counts = roundCounts
       }
       trace.toSeq.toDF("round", "piece", "piece_count", "prob_fp")
-    } finally wcDf.unpersist(blocking = false)
+    }
   }
 
   /** Unigram-LM training with the FULL published E-step (Kudo 2018 §3.2)
@@ -145,10 +144,8 @@ object UnigramLm {
       .select(explode(col(tokenCol).cast("array<string>")).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .persist()
-    wcDf.count()
-    val wc = graft.engine.Lineage.truncate(wcDf).as[(String, Long)]
-    try {
+    Lineage.scope { s =>
+      val wc = s.pin(wcDf).view.as[(String, Long)]
       val seed = wc.toDF("w", "n")
         .select(explode(flatten(transform(
           sequence(lit(1), length(col("w"))),
@@ -190,7 +187,7 @@ object UnigramLm {
         }).toMap
       }
       trace.toSeq.toDF("round", "piece", "ec_fp", "prob_fp")
-    } finally wcDf.unpersist(blocking = false)
+    }
   }
 
   /** Exact forward-backward expected counts for one word under integer
@@ -320,10 +317,8 @@ object UnigramLm {
       .select(explode(col(tokenCol).cast("array<string>")).as("w"))
       .filter(col("w").isNotNull && col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .persist()
-    wcDf.count()
-    val wc = graft.engine.Lineage.truncate(wcDf).as[(String, Long)]
-    try {
+    Lineage.scope { s =>
+      val wc = s.pin(wcDf).view.as[(String, Long)]
       val seed = wc.toDF("w", "n")
         .select(explode(flatten(transform(
           sequence(lit(1), length(col("w"))),
@@ -373,7 +368,7 @@ object UnigramLm {
         val c = counts.getOrElse(p, 0L)
         (p, c, if (total == 0L) 0L else c * 1000000L / total)
       }.toDF("piece", "piece_count", "prob_fp")
-    } finally wcDf.unpersist(blocking = false)
+    }
   }
 
   /** Corpus-scale ENCODING with a trained unigram-LM vocabulary — the

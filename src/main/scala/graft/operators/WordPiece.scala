@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ListBuffer
 
+import graft.engine.Lineage
 import graft.functions.expr.BpeMergePass
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -95,15 +96,11 @@ object WordPiece {
     * by freq on both the distributed and endgame paths. */
   private def trainLoop(symbols: DataFrame, rounds: Int,
       mergedSymbol: (String, String) => String,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = symbols.sparkSession
     import spark.implicits._
 
-    def truncate(df: DataFrame): DataFrame =
-      graft.engine.Lineage.truncate(df)
-
-    val h0 = symbols.persist()
     // serial-endgame cutover (the Scc/Bfs doctrine, see ByteBpe.train):
     // under the rows+symbols budget, collect once and finish in
     // LocalSubword. WordPiece's likelihood score makes this the ONLY
@@ -111,39 +108,37 @@ object WordPiece {
     // cnt/(lc*rc) can INCREASE when a unit count drops (LocalSubword
     // scans the candidate map instead), and distributed rounds above
     // budget pay one full argmax aggregate each anyway.
-    val stw = h0.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L)))
-      .collect()(0)
+    val (h0, stw) = s.pinBy(symbols)(
+      _.agg(count(lit(1)), coalesce(sum(size(col("toks"))), lit(0L))).collect()(0))
     val (hRows, hSyms) = (stw.getLong(0), stw.getLong(1))
     if (hRows + hSyms <= localFinishMaxRows) {
       // null arrays: same rationale as BpeTrain's endgame (distributed
       // path drops them via explode; the collect must match)
-      val rows = h0.select(col("toks"), col("freq"))
+      val rows = h0.frame.select(col("toks"), col("freq"))
         .filter(col("toks").isNotNull).collect()
-      h0.unpersist(blocking = false)
+      h0.release()
       Console.err.println(
         s"[wordpiece] local-endgame rows=$hRows symbols=$hSyms rounds<=$rounds")
       val toks = rows.map(_.getSeq[String](0).toArray)
       val ws = rows.map(_.getLong(1))
-      return LocalSubword
+      LocalSubword
         .wordPieceLocal(toks, ws, rounds, mergedSymbol)
         .toDF("round", "left", "right", "pair_count", "left_count", "right_count")
         .withColumn("round", col("round").cast("long"))
-    }
-    var cur = truncate(h0)
-    val handles = ListBuffer(h0)
-    val merges = ListBuffer.empty[(Int, String, String, Long, Long, Long)]
-    try {
+    } else {
+      var cur = h0
+      val merges = ListBuffer.empty[(Int, String, String, Long, Long, Long)]
       var round = 1
       var exhausted = false
       while (round <= rounds && !exhausted) {
-        val pairs = cur.select(col("freq"), explode(zip_with(
+        val pairs = cur.view.select(col("freq"), explode(zip_with(
           slice(col("toks"), lit(1), size(col("toks")) - 1),
           slice(col("toks"), lit(2), size(col("toks")) - 1),
           (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
           .groupBy(col("p.l").as("l"), col("p.r").as("r"))
           .agg(sum(col("freq")).as("cnt"))
           .filter(col("cnt") >= 2)
-        val units = cur.select(col("freq"), explode(col("toks")).as("s"))
+        val units = cur.view.select(col("freq"), explode(col("toks")).as("s"))
           .groupBy(col("s")).agg(sum(col("freq")).as("uc"))
         val cands = pairs
           .join(broadcast(units.select(col("s").as("l"), col("uc").as("lc"))), Seq("l"))
@@ -177,21 +172,17 @@ object WordPiece {
           val t = top.get // explicit select order: l, r, cnt, lc, rc
           val (l, r) = (t.getString(0), t.getString(1))
           merges += ((round, l, r, t.getLong(2), t.getLong(3), t.getLong(4)))
-          val next = cur
+          val next = s.pin(cur.view
             .select(BpeMergePass(col("toks"), l, r, mergedSymbol(l, r)).as("toks"),
-              col("freq"))
-            .persist()
-          next.count()
-          val leaf = truncate(next)
-          handles += next
-          cur = leaf
-          handles.remove(0).unpersist(blocking = false)
+              col("freq")))
+          cur.release()
+          cur = next
           round += 1
         }
       }
-    } finally handles.foreach(_.unpersist(blocking = false))
-    merges.toSeq.toDF("round", "left", "right", "pair_count", "left_count", "right_count")
-      .withColumn("round", col("round").cast("long"))
+      merges.toSeq.toDF("round", "left", "right", "pair_count", "left_count", "right_count")
+        .withColumn("round", col("round").cast("long"))
+    }
   }
 
   /** Greedy longest-match-first segmentation — the published WordPiece

@@ -33,4 +33,17 @@ class BoundedCachesSpec extends AnyFunSuite {
         (0L until 200L).map(i => (i % 7, i)).toSet)
     } finally BoundedCaches.releaseAll()
   }
+
+  test("SPARK_GRAFT_MAXLIVE: default 6, whole numbers >= 0, malformed fails naming the variable") {
+    assert(BoundedCaches.maxLive(Map.empty[String, String].get) == 6)
+    assert(BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> " 9 ").get) == 9)
+    assert(BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> "0").get) == 0)
+    for (bad <- Seq("six", "", "-1", "1.5", "99999999999")) {
+      val e = intercept[IllegalArgumentException] {
+        BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> bad).get)
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_MAXLIVE"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }
