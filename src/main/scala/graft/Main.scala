@@ -1,11 +1,12 @@
 package graft
 
 import graft.engine.GraftSession
-import graft.io.{ObjectStore, S3}
+import graft.io.{ObjectStore, ParquetSource, S3}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import graft.pipelines.{CorePipelines, DimensionPipelines, PoaPipelines, ServicePipelines}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** CLI entry — the reference's `main.py:26-45` module dispatch
   * (`--modules all|core|poa|cronos|auac` or a comma list) over the DAG
@@ -79,10 +80,17 @@ object Main {
   }
 
   /** The parquet-seam registry over the concrete pipelines. Source reads
-    * are lazy inside run() so --list and module filtering never touch io. */
-  def registry(in: String, out: String): Seq[Pipeline] = {
+    * are lazy inside run() so --list and module filtering never touch io.
+    * Every parquet read, source or `$out` read-back, goes through one
+    * [[ParquetSource.Memo]] per registry call, that is per run: each
+    * distinct path is resolved once, from one footer read where the plan
+    * is built, instead of by a schema-inference job at every read. */
+  def registry(in: String, out: String,
+      sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] = {
     def src(spark: SparkSession, table: String): DataFrame =
-      spark.read.parquet(s"$in/$table.parquet")
+      sources.read(spark, s"$in/$table.parquet")
+    def back(spark: SparkSession, table: String): DataFrame =
+      sources.read(spark, s"$out/$table.parquet")
     def sink(df: DataFrame, table: String): Unit =
       df.write.mode("overwrite").parquet(s"$out/$table.parquet")
     val load = current_timestamp()
@@ -195,7 +203,7 @@ object Main {
             src(ctx.spark, "titolare_model"),
             src(ctx.spark, "tipologia_richiedente"),
             src(ctx.spark, "natura_titolare_templ"),
-            ctx.spark.read.parquet(s"$out/municipalities.parquet"), load), "companies")
+            back(ctx.spark, "municipalities"), load), "companies")
       },
       new Pipeline {
         val name = "resolutions"
@@ -240,7 +248,7 @@ object Main {
           ServicePipelines.requirements(
             src(ctx.spark, "requisito_templ"),
             src(ctx.spark, "tipo_risposta"),
-            ctx.spark.read.parquet(s"$out/requirement_taxonomies.parquet"),
+            back(ctx.spark, "requirement_taxonomies"),
             load), "requirements")
       },
       new Pipeline {
@@ -267,7 +275,7 @@ object Main {
         def run(ctx: PipelineContext): Unit = sink(
           ServicePipelines.healthcareCompanies(
             src(ctx.spark, "azienda_sanitaria"),
-            ctx.spark.read.parquet(s"$out/ulss.parquet")), "healthcare_companies")
+            back(ctx.spark, "ulss")), "healthcare_companies")
       },
       new Pipeline {
         val name = "operational_offices"
@@ -280,7 +288,7 @@ object Main {
         def run(ctx: PipelineContext): Unit = sink(
           CorePipelines.operationalOffices(
             src(ctx.spark, "sede_oper_model"),
-            ctx.spark.read.parquet(s"$out/municipalities.parquet"),
+            back(ctx.spark, "municipalities"),
             src(ctx.spark, "tipo_punto_fisico_templ"), load), "operational_offices")
       },
       new Pipeline {
@@ -298,15 +306,14 @@ object Main {
         // (src/core.py:1770-1786) — a genuine DAG edge, not an implied
         // order. The reference's warn-and-continue on an unreadable
         // target is modeled by the Option: read failure -> None -> keep
-        // every row, log the warn.
+        // every row, log the warn. The memo resolves the path eagerly, so
+        // a missing or unreadable target fails inside the try, and caches
+        // nothing when it does.
         override val dependsOn = Seq("udos")
         def run(ctx: PipelineContext): Unit = {
           val target =
-            try {
-              val t = ctx.spark.read.parquet(s"$out/udos.parquet")
-              t.schema // force schema resolution inside the try
-              Some(t)
-            } catch { case e: Throwable =>
+            try Some(back(ctx.spark, "udos"))
+            catch { case NonFatal(e) =>
               System.err.println(
                 s"[udo_status_history] could not read back udos target " +
                   s"($out/udos.parquet): ${e.getMessage} — continuing unvalidated")
@@ -352,7 +359,7 @@ object Main {
             src(ctx.spark, "utente_model"),
             src(ctx.spark, "anagrafica_utente_model"),
             src(ctx.spark, "uo_model"),
-            ctx.spark.read.parquet(s"$out/municipalities.parquet"), load), "users")
+            back(ctx.spark, "municipalities"), load), "users")
       })
   }
 

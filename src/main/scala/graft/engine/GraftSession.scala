@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   *
   * [[builder]] also sizes Spark's JVM-wide codegen class cache
   * ([[CodegenCacheMaxEntries]], via [[Codegen.size]]) and prints one stderr
-  * line with the scratch directory it chose, why, and the cache cap in
-  * effect, so every session (`local`, the test session, every main) starts
-  * with the same, visible engine configuration.
+  * line with the scratch directory it chose, why, the cache cap and the
+  * [[sizing]] in effect, so every session (`local`, the test session,
+  * every main) starts with the same, visible engine configuration.
   */
 object GraftSession {
 
@@ -26,10 +26,11 @@ object GraftSession {
     *    key skew shows up at scale (TPC-H-ish data is uniform; real data isn't).
     *  - auto broadcast threshold raised: every dimension in the reference's
     *    join inventory (SURVEY §2.5) is ≤ thousands of rows.
-    *  - shuffle partitions default 32 to match local[32]; override per env.
+    *  - shuffle partitions default 32 to match local[32]; override per env
+    *    (see [[sizing]]).
     */
   def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val size = envSizing
     val (localDir, localDirWhy) = scratchDir(sys.env.get)
     // A cap the user already put in the SparkConf (spark-submit --conf or
     // -Dspark.sql.codegen.cache.maxEntries) wins over ours.
@@ -41,11 +42,12 @@ object GraftSession {
       case None => s"unknown (requested $codegenCap)"
     }
     System.err.println(s"[graft] session '$appName': spark.local.dir=$localDir " +
-      s"($localDirWhy); codegen cache cap=$capNote entries")
+      s"($localDirWhy); codegen cache cap=$capNote entries; cpus=${size.cpus}, " +
+      s"shuffle partitions=${size.shufflePartitions}")
     SparkSession
       .builder()
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+      .config("spark.sql.shuffle.partitions", size.shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -127,10 +129,28 @@ object GraftSession {
         }
     }
 
+  /** The engine's two size knobs: `SPARK_GRAFT_CPUS`, the local master's
+    * thread count (default 32), and `SPARK_GRAFT_SHUFFLE_PARTITIONS`
+    * (default: the cpu count). Each must be a positive whole number; a
+    * malformed value fails naming its variable instead of reaching Spark
+    * as a master URL or a conf string it rejects later, or not at all. */
+  private[graft] final case class Sizing(cpus: Int, shufflePartitions: Int)
+
+  private[graft] def sizing(env: String => Option[String]): Sizing = {
+    def positive(name: String): Option[Int] = env(name).map { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive whole number, got '$v'"))
+    }
+    val cpus = positive("SPARK_GRAFT_CPUS").getOrElse(32)
+    Sizing(cpus, positive("SPARK_GRAFT_SHUFFLE_PARTITIONS").getOrElse(cpus))
+  }
+
+  /** This JVM's sizing, parsed once; [[builder]] and [[local]] share it. */
+  private lazy val envSizing: Sizing = sizing(sys.env.get)
+
   /** Local session for tests / CLI mains. */
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = builder(appName).master(s"local[$cpus]").getOrCreate()
+    val s = builder(appName).master(s"local[${envSizing.cpus}]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

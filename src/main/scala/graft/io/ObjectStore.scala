@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * retry, so a failed run leaves orphans. Here:
   *  - parallelism is partition-level: one client per partition via
   *    `mapPartitions`, scaling with the cluster instead of a driver pool;
-  *  - object names are DETERMINISTIC (id + content hash), so task retries
-  *    and re-runs overwrite instead of orphaning — the exactly-once story
+  *  - object names are DETERMINISTIC (id + content hash + file name, each
+  *    segment made path-safe by [[keySegment]]), so task retries and
+  *    re-runs overwrite instead of orphaning — the exactly-once story
   *    SURVEY §7.2 requires;
   *  - the client is a trait; prod wires an S3/MinIO client, tests a local
   *    filesystem.
@@ -23,10 +24,14 @@ object ObjectStore {
     def ensureBucket(bucket: String): Unit
   }
 
-  /** Local-filesystem client (tests / dev). */
+  /** Local-filesystem client (tests / dev). Refuses a key that would
+    * land outside `root/bucket` (`..` segments, an absolute key). */
   final class LocalFsClient(root: String) extends Client {
     def put(bucket: String, key: String, bytes: Array[Byte], contentType: String): Unit = {
-      val p = java.nio.file.Paths.get(root, bucket, key)
+      val dir = java.nio.file.Paths.get(root, bucket).toAbsolutePath.normalize
+      val p = dir.resolve(key).normalize
+      require(p.startsWith(dir) && p != dir,
+        s"object key '$key' resolves to $p, outside the bucket directory $dir")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, bytes)
     }
@@ -35,6 +40,24 @@ object ObjectStore {
   }
 
   final case class Uploaded(id: String, objectKey: String, nBytes: Long)
+
+  /** One object-key segment: the UTF-8 bytes of `s` outside
+    * `[A-Za-z0-9._-]` percent-encoded, and a bare `.` or `..` encoded
+    * whole. A segment is then plain ASCII, whatever the JVM's locale (a
+    * POSIX locale cannot name a file with a non-ASCII name), and can be
+    * neither a path separator nor a parent reference. */
+  def keySegment(s: String): String = {
+    val out = new StringBuilder
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>
+      val c = (b & 0xff).toChar
+      if (c.isLetterOrDigit && c < 0x80 || c == '.' || c == '_' || c == '-') out += c
+      else out ++= f"%%${b & 0xff}%02X"
+    }
+    out.result() match {
+      case "." | ".." => s.replace(".", "%2E")
+      case encoded => encoded
+    }
+  }
 
   /** The reference's content-type table (`src/core.py:709-712`, applied with
     * an octet-stream default at `:938`) keyed by the stripped type code,
@@ -90,7 +113,8 @@ object ObjectStore {
         require(id != null && name != null && payload != null,
           s"upload precondition violated: null id/name/payload at id=$id name=$name " +
             "(filter null attachments before uploading)")
-        val key = s"$id/$hash/$name" // deterministic → retry-idempotent
+        // deterministic → retry-idempotent
+        val key = s"${keySegment(id)}/$hash/${keySegment(name)}"
         client.put(bucket, key, payload, mime)
         Uploaded(id, key, payload.length.toLong)
       }

@@ -9,6 +9,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inference; here parquet already carries its schema and Catalyst prunes
   * columns/pushes filters into the scan, so a `Tables.load` inside a larger
   * plan reads only what the query needs.
+  *
+  * A load was never free at construction, though: `spark.read.parquet`
+  * runs a one-task Spark job to infer the schema from a footer before any
+  * query runs. [[load]] reads that footer itself, without a job
+  * ([[ParquetSource]]), so building a query over these tables starts no
+  * job; [[loadMerged]] keeps Spark's inference, which must merge footers.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -23,7 +29,7 @@ object Tables {
     * never double division (ns epoch values exceed 2^53).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    lowerNanoTs(spark.read.parquet(s"$dir/$name.parquet"), name)
+    lowerNanoTs(ParquetSource.read(spark, s"$dir/$name.parquet"), name)
 
   /** The ts-normalizing lowering, shared by the batch loader and the
     * streaming readers ([[graft.streaming.EventStreams.readTableStream]]) so

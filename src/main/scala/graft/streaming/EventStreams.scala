@@ -19,7 +19,7 @@ object EventStreams {
     * batch loader uses, so stream/batch parity can't drift on the
     * ns-lowering expression. */
   def readTableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/$name.parquet").schema
+    val batchSchema = graft.io.ParquetSource.schema(spark, s"$dir/$name.parquet")
     val raw = spark.readStream.schema(batchSchema)
       .option("pathGlobFilter", s"$name.parquet") // file source wants a dir
       .parquet(dir)

@@ -55,4 +55,16 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.scratchDir(Map("SPARK_GRAFT_LOCAL_DIR" -> "/x").get) ==
       ("/x", "SPARK_GRAFT_LOCAL_DIR"))
   }
+
+  test("sizing: SPARK_GRAFT_CPUS and SPARK_GRAFT_SHUFFLE_PARTITIONS parse as positive ints") {
+    assert(GraftSession.sizing(Map.empty[String, String].get) == GraftSession.Sizing(32, 32))
+    assert(GraftSession.sizing(Map("SPARK_GRAFT_CPUS" -> " 4 ").get) == GraftSession.Sizing(4, 4))
+    assert(GraftSession.sizing(Map("SPARK_GRAFT_CPUS" -> "4",
+      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "64").get) == GraftSession.Sizing(4, 64))
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS");
+         bad <- Seq("0", "-2", "", "four", "1.5", "4g", "99999999999")) {
+      val e = intercept[IllegalArgumentException](GraftSession.sizing(Map(name -> bad).get))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.io.{Jdbc, ObjectStore}
+import graft.io.{Jdbc, ObjectStore, ParquetSource}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
+import org.apache.spark.TestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -77,6 +79,102 @@ class PipelineIoSpec extends AnyFunSuite {
       val f = java.nio.file.Paths.get(tmp, "bucket", u.objectKey)
       assert(java.nio.file.Files.size(f) == u.nBytes)
     }
+  }
+
+  test("object keys: any name becomes one ASCII segment under id/hash/") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_keys").toString
+    val names = Seq("relazione è già.pdf", "../../escape.pdf", "a/b.pdf", "..", ".", "日本.txt")
+    val rows = names.zipWithIndex.map { case (n, i) => (s"r$i", n, "application/pdf", n.getBytes) }
+      .toDF("id", "name", "mime", "payload")
+    val mapping = ObjectStore.upload(rows, "bucket",
+      () => new ObjectStore.LocalFsClient(tmp)).collect().sortBy(_.id)
+    val bucket = java.nio.file.Paths.get(tmp, "bucket").toRealPath()
+    mapping.zip(names).foreach { case (u, name) =>
+      val parts = u.objectKey.split("/", -1)
+      assert(parts.length == 3 && parts(0) == u.id, u.objectKey)
+      assert(parts(1).matches("[0-9a-f]{32}"), u.objectKey)
+      assert(parts(2).matches("[A-Za-z0-9._%-]+") && parts(2) != "." && parts(2) != "..",
+        u.objectKey)
+      assert(java.net.URLDecoder.decode(parts(2), "UTF-8") == name)
+      val f = bucket.resolve(u.objectKey).normalize
+      assert(f.startsWith(bucket) && java.nio.file.Files.size(f) == u.nBytes, f)
+    }
+    assert(ObjectStore.keySegment("plain-name_1.pdf") == "plain-name_1.pdf")
+    assert(ObjectStore.keySegment("è /") == "%C3%A8%20%2F")
+    assert(ObjectStore.keySegment("..") == "%2E%2E" && ObjectStore.keySegment(".") == "%2E")
+    val client = new ObjectStore.LocalFsClient(tmp)
+    for (bad <- Seq("../outside.pdf", "x/../../outside.pdf", "/abs/outside.pdf", ".")) {
+      val e = intercept[IllegalArgumentException](client.put("bucket", bad, Array[Byte](1), "x"))
+      assert(e.getMessage.contains("outside the bucket directory"), e.getMessage)
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "outside.pdf")))
+  }
+
+  /** Names of the stages `body` submits that scan a collection
+    * `SparkContext.parallelize` distributed outside any query plan: the
+    * shape of Spark's footer-merge job (`SchemaMergeUtils
+    * .mergeSchemasInParallel` parallelizes the file list and reads the
+    * footers in its tasks). A plan's local-relation scan parallelizes
+    * too, but under its operator's scope, not `parallelize`. */
+  private def inferenceStages(body: => Any): Seq[String] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(r =>
+            r.name == "ParallelCollectionRDD" && r.scope.exists(_.name == "parallelize")))
+          stages.add(e.stageInfo.name)
+    }
+    TestBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; TestBridge.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    stages.asScala.toSeq
+  }
+
+  test("one registry resolves each distinct parquet path once per run, with no inference job") {
+    val in = java.nio.file.Files.createTempDirectory("graft-memo-in").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-memo-out").toString
+    MigrationFixtures.write(spark, in)
+    val resolved = scala.collection.mutable.ArrayBuffer.empty[String]
+    val memo = new ParquetSource.Memo((s, p) => {
+      resolved.synchronized(resolved += p); ParquetSource.schema(s, p)
+    })
+    val inference = inferenceStages(
+      Runner.run(PipelineContext(spark), Main.registry(in, out, memo)))
+    val sources = new java.io.File(in).list().filter(_.endsWith(".parquet"))
+      .map(f => s"$in/$f").toSet
+    val readBacks = Set("municipalities", "requirement_taxonomies", "ulss", "udos")
+      .map(t => s"$out/$t.parquet")
+    assert(resolved.toSet == sources ++ readBacks)
+    assert(resolved.size == resolved.toSet.size,
+      s"resolved more than once: ${resolved.diff(resolved.distinct).distinct}")
+    assert(inference.isEmpty, s"schema-inference jobs ran: $inference")
+    assert(inferenceStages(spark.read.parquet(s"$in/uo_model.parquet")).nonEmpty,
+      "control: Spark's own inference job is detected")
+  }
+
+  test("udo_status_history: an unreadable udos target warns, writes unvalidated, is not cached") {
+    val in = java.nio.file.Files.createTempDirectory("graft-hist-in").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-hist-out").toString
+    MigrationFixtures.write(spark, in)
+    val pipes = Main.registry(in, out).map(p => p.name -> p).toMap
+    val ctx = PipelineContext(spark)
+    def history() = spark.read.parquet(s"$out/udo_status_history.parquet")
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try pipes("udo_status_history").run(ctx)
+    finally System.setErr(saved)
+    val warned = err.toString("UTF-8")
+    assert(warned.contains("[udo_status_history] could not read back udos target") &&
+      warned.contains(s"$out/udos.parquet") && warned.contains("continuing unvalidated"), warned)
+    assert(history().count() == 2, "unvalidated: the orphan history row is kept")
+    // The failed read-back is not memoized: once udos lands, the same
+    // registry validates against it and drops the orphan.
+    pipes("udos").run(ctx)
+    pipes("udo_status_history").run(ctx)
+    assert(history().count() == 1, "validated: the orphan history row drops")
   }
 
   test("content-type mapping: known extensions map, unknown falls to octet-stream") {
