@@ -249,14 +249,13 @@ object Bench {
     // numbers from first-pass JIT/page-cache warmup (r8's open d21
     // question). Each round prints its own JSON line; the LAST line is the
     // steadiest and is the one the driver's tail parse picks up.
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "1").toInt
+    val rounds = GraftSession.positiveInt(sys.env.get, "SPARK_GRAFT_BENCH_ROUNDS").getOrElse(1)
     val spark = GraftSession.local("graft-bench")
     val qs = SparkEntry.queries
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the pass to a comma-separated
     // subset — the idle fresh-JVM re-measure tool for driver-round
     // watchlist queries (never set in the driver's own run).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.selected(sys.env.get, "SPARK_GRAFT_BENCH_ONLY")
     val names = headline.filter(qs.contains)
       .filter(n => only.forall(_.contains(n)))
     // A failed query must be VISIBLE, not a fast-looking small number:

@@ -1,11 +1,14 @@
 package graft
 
-import graft.engine.GraftSession
+import graft.engine.{Codegen, GraftSession}
 import graft.io.{ObjectStore, ParquetSource, S3}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import graft.pipelines.{CorePipelines, DimensionPipelines, PoaPipelines, ServicePipelines}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.csv.CsvSchemaBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import scala.util.control.NonFatal
 
 /** CLI entry — the reference's `main.py:26-45` module dispatch
@@ -64,29 +67,84 @@ object Main {
   /** Seed-CSV read (S4 shape, `src/core.py:74-120,1898-1915`): header +
     * inferred schema, with named columns PINNED to string — the reference's
     * `schema_overrides={"istat_code": pl.String}`, which exists because an
-    * inferred int silently eats ISTAT codes' leading zeros. */
+    * inferred int silently eats ISTAT codes' leading zeros. The schema is
+    * inferred on the driver from one read of the file
+    * ([[CsvSchemaBridge.inferredSchema]]), without the two Spark jobs
+    * `inferSchema` starts; a path that is not one file falls back to
+    * Spark's inference. */
   def seedCsv(
       spark: SparkSession, path: String,
       stringCols: Set[String] = Set.empty): DataFrame = {
-    val inferred = spark.read
-      .option("header", "true").option("inferSchema", "true").csv(path)
-    if (stringCols.isEmpty) inferred
-    else {
-      val schema = org.apache.spark.sql.types.StructType(inferred.schema.map(f =>
-        if (stringCols(f.name)) f.copy(dataType = org.apache.spark.sql.types.StringType)
-        else f))
-      spark.read.option("header", "true").schema(schema).csv(path)
-    }
+    val inferred = CsvSchemaBridge.inferredSchema(spark, path).getOrElse(spark.read
+      .option("header", "true").option("inferSchema", "true").csv(path).schema)
+    val schema = StructType(inferred.map(f =>
+      if (stringCols(f.name)) f.copy(dataType = StringType) else f))
+    spark.read.schema(schema).option("header", "true").csv(path)
   }
+
+  /** Total input size under which a migration run's pipelines run
+    * without generated code ([[Codegen.interpreted]]). A migration runs
+    * each plan once: on small inputs the Janino compiles of its plans
+    * cost more than generated code saves, while on large ones the
+    * interpreted operators are the slower part. Measured per pipeline,
+    * compiled against interpreted, on generated inputs of 6.2 to 110 MiB
+    * (README "Scale posture"): no pipeline ran slower interpreted at
+    * 11.2 MiB, and `production_factors` ran 28% slower at 21.7 MiB. */
+  val InterpretBelowBytes: Long = 16L << 20
 
   /** The parquet-seam registry over the concrete pipelines. Source reads
     * are lazy inside run() so --list and module filtering never touch io.
     * Every parquet read, source or `$out` read-back, goes through one
     * [[ParquetSource.Memo]] per registry call, that is per run: each
     * distinct path is resolved once, from one footer read where the plan
-    * is built, instead of by a schema-inference job at every read. */
+    * is built, instead of by a schema-inference job at every read.
+    *
+    * Each registry call also decides once, when its first pipeline runs,
+    * whether the run's pipelines run interpreted: they do when the bytes
+    * under `in` total less than [[InterpretBelowBytes]]. The decision
+    * wraps each whole pipeline, upload jobs and `$out` read-backs
+    * included, and is printed as one `[graft] migration inputs` line. */
   def registry(in: String, out: String,
-      sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] = {
+      sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] =
+    registry(in, out, sources, InterpretBelowBytes)
+
+  /** [[registry]] with the interpretation bound given: tests force either
+    * side of it on the same fixtures. */
+  private[graft] def registry(in: String, out: String,
+      sources: ParquetSource.Memo, interpretBelowBytes: Long): Seq[Pipeline] = {
+    var interpret: Option[Boolean] = None
+    def interpreted(spark: SparkSession): Boolean = synchronized {
+      if (interpret.isEmpty) interpret = Some(interpretRun(spark, in, interpretBelowBytes))
+      interpret.get
+    }
+    pipelines(in, out, sources).map { p =>
+      new Pipeline {
+        val name = p.name
+        override val dependsOn = p.dependsOn
+        override val module = p.module
+        def run(ctx: PipelineContext): Unit =
+          if (interpreted(ctx.spark)) Codegen.interpreted(ctx.spark)(p.run(ctx)) else p.run(ctx)
+      }
+    }
+  }
+
+  /** Whether a run over the inputs under `in` runs interpreted: one
+    * content summary of `in` (a missing `in` counts as empty; its
+    * pipelines then fail on their own reads), compared with the bound,
+    * and the decision printed. */
+  private def interpretRun(spark: SparkSession, in: String, belowBytes: Long): Boolean = {
+    val p = new Path(in)
+    val bytes =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
+    val interpret = bytes < belowBytes
+    def mib(b: Long) = f"${b / (1L << 20).toDouble}%.1f MiB"
+    System.err.println(s"[graft] migration inputs ${mib(bytes)} (bound ${mib(belowBytes)}): " +
+      s"plans run ${if (interpret) "interpreted" else "compiled"}")
+    interpret
+  }
+
+  private def pipelines(in: String, out: String, sources: ParquetSource.Memo): Seq[Pipeline] = {
     def src(spark: SparkSession, table: String): DataFrame =
       sources.read(spark, s"$in/$table.parquet")
     def back(spark: SparkSession, table: String): DataFrame =

@@ -12,7 +12,8 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val spark = graft.engine.GraftSession.local("profileq")
     val dir = sys.env.getOrElse("SFDIR", "/root/testdata/sf0.1")
-    val iters = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ITERS", "3").toInt
+    val iters = graft.engine.GraftSession.positiveInt(sys.env.get, "SPARK_GRAFT_PROFILE_ITERS")
+      .getOrElse(3)
     args.foreach { name =>
       for (i <- 1 to iters) {
         graft.engine.BoundedCaches.releaseAll()

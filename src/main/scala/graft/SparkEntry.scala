@@ -37,4 +37,19 @@ object SparkEntry {
     * the same parquet tables. Omitted entries → rows-only check. */
   lazy val oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(o => d.name -> o)).toMap
+
+  /** The query names the comma-separated variable `name` selects (the dev
+    * mains' `*_ONLY` subsets), None when it is unset. An empty list, or a
+    * name that is not in [[queries]], fails naming the variable, the
+    * latter listing the known names: a typo must not select nothing and
+    * pass as an empty run. */
+  private[graft] def selected(env: String => Option[String], name: String): Option[Set[String]] =
+    env(name).map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.contains)
+      require(names.nonEmpty, s"$name is set but names no query")
+      require(unknown.isEmpty, s"$name names unknown queries ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"known: ${queries.keys.toSeq.sorted.mkString(", ")}")
+      names
+    }
 }

@@ -7,7 +7,7 @@ package graft
   */
 object TimeN {
   def main(args: Array[String]): Unit = {
-    val reps = sys.env.getOrElse("REPS", "5").toInt
+    val reps = graft.engine.GraftSession.positiveInt(sys.env.get, "REPS").getOrElse(5)
     val dir = sys.env.getOrElse("SFDIR", "/root/testdata/sf0.1")
     val spark = graft.engine.GraftSession.local("timen")
     args.foreach { name =>

@@ -14,8 +14,7 @@ object Verify {
     // to named queries — the targeted re-gate loop, mirroring Bench's
     // SPARK_GRAFT_BENCH_ONLY. The driver sets neither, so its gate always
     // covers the full catalog.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.selected(sys.env.get, "SPARK_GRAFT_VERIFY_ONLY")
     val queries = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names(n) })
     val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]

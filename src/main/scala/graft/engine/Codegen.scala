@@ -1,11 +1,13 @@
 package graft.engine
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.internal.SQLConf
 import scala.util.Try
 
-/** Spark's generated-code class cache and its compile counters.
+/** Spark's generated-code class cache, its compile counters, and a scope
+  * that runs work without generated code ([[interpreted]]).
   *
   * `CodeGenerator` keeps ONE cache of compiled classes for the whole JVM,
   * sized from `SQLConf.get` the first time the object is touched and never
@@ -28,6 +30,34 @@ object Codegen {
   def count(): Count =
     Count(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       CodeGenerator.compileTime / 1000000L)
+
+  /** Session-conf values that make Spark plan and run `body` without
+    * generated code: no whole-stage fusion, and every projection,
+    * predicate and ordering built by the interpreted factory instead of
+    * the codegen-with-fallback one. Both keys are needed: with only the
+    * first, `UnsafeProjection` and `Predicate` still compile. The second
+    * is a Spark-internal key; `MainSpec` pins that it still takes
+    * effect. */
+  val InterpretedConf: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Run `body` with [[InterpretedConf]] set on the session conf and
+    * restore the previous values (set or unset) afterwards, also when
+    * `body` throws. For work that runs once over small inputs, where
+    * Janino compile time outweighs what generated code saves.
+    *
+    * The setting is session-wide, not scoped to `body`'s own queries:
+    * anything else running on the session meanwhile runs interpreted too.
+    * That is safe for its caller, [[graft.pipeline.Runner]], which runs
+    * one pipeline at a time, and the values are propagated to that
+    * pipeline's tasks with the rest of the session conf. */
+  def interpreted[T](spark: SparkSession)(body: => T): T = {
+    val saved = InterpretedConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    InterpretedConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 
   /** Size the JVM-wide cache to `requested` entries if it is not sized yet
     * and return the cap it really has. The first touch happens under an

@@ -137,13 +137,19 @@ object GraftSession {
   private[graft] final case class Sizing(cpus: Int, shufflePartitions: Int)
 
   private[graft] def sizing(env: String => Option[String]): Sizing = {
-    def positive(name: String): Option[Int] = env(name).map { v =>
+    val cpus = positiveInt(env, "SPARK_GRAFT_CPUS").getOrElse(32)
+    Sizing(cpus, positiveInt(env, "SPARK_GRAFT_SHUFFLE_PARTITIONS").getOrElse(cpus))
+  }
+
+  /** The variable `name` as a positive whole number, None when unset. A
+    * malformed value fails naming the variable. Every count-valued
+    * variable (the sizing above, the dev mains' repeat counts) parses
+    * through this. */
+  private[graft] def positiveInt(env: String => Option[String], name: String): Option[Int] =
+    env(name).map { v =>
       v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
         s"$name must be a positive whole number, got '$v'"))
     }
-    val cpus = positive("SPARK_GRAFT_CPUS").getOrElse(32)
-    Sizing(cpus, positive("SPARK_GRAFT_SHUFFLE_PARTITIONS").getOrElse(cpus))
-  }
 
   /** This JVM's sizing, parsed once; [[builder]] and [[local]] share it. */
   private lazy val envSizing: Sizing = sizing(sys.env.get)

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.csv.CsvSchemaBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,8 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * generator has produced (the r7 testdata regeneration changed the layout
   * under a running round — this spec is the canary that makes the next
   * drift a named failure instead of nine silently-vanished queries), and
-  * the job-free source resolution [[ParquetSource]] gives `load`: the
-  * schema Spark would infer, and no Spark job to get it. */
+  * the job-free source resolution [[ParquetSource]] gives `load`, and
+  * [[CsvSchemaBridge]] gives the migration's seed CSVs: the schema Spark
+  * would infer, and no Spark job to get it. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -181,5 +183,69 @@ class TablesSpec extends AnyFunSuite {
     assert(jobsDuring { memo.read(spark, dir); memo.read(spark, dir) } == 0)
     assert(jobsDuring(spark.read.parquet(dir)) >= 1,
       "control: Spark's own inference runs a job, so the listener sees jobs")
+  }
+
+  /** Spark's own inference of a headered CSV, the schema seed reads used
+    * to get from two jobs. */
+  private def sparkCsvSchema(path: String): StructType =
+    spark.read.option("header", "true").option("inferSchema", "true").csv(path).schema
+
+  /** A seed written the way the benchmark's generator writes them (Python
+    * `csv.DictWriter`: CRLF line ends, 300 municipalities whose ISTAT codes
+    * have leading zeros), and a file with one column per inferable type,
+    * empty values, quoted separators and a repeated header line. */
+  private def writeSeeds(dir: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/seed"))
+    def put(name: String, lines: Seq[String], eol: String = "\r\n"): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/seed/$name"),
+        lines.mkString("", eol, eol))
+    put("municipalities.csv", "id,name,istat_code,province_id" +: (0 until 300).map(i =>
+      s"${1000 + i},Comune $i,0${27000 + i},${20 + i % 8}"))
+    put("typed.csv", Seq(
+      "i,l,d,b,day,ts,s,e",
+      "1,3000000000,1.5,true,2024-01-02,2024-01-02 03:04:05,\"a,b\",",
+      "i,l,d,b,day,ts,s,e",
+      ",7,2,false,2024-02-03,2024-02-03 00:00:00,x,"), eol = "\n")
+  }
+
+  test("seed CSV schema: resolved on the driver, equal to Spark's inference") {
+    val in = tmpDir("graft_seed_csv")
+    MigrationFixtures.write(spark, in)
+    writeSeeds(s"$in/bench")
+    val seeds = Seq("regions", "provinces", "municipalities", "permissions")
+      .map(n => s"$in/seed/$n.csv") ++
+      Seq("municipalities", "typed").map(n => s"$in/bench/seed/$n.csv")
+    seeds.foreach { path =>
+      val inferred = sparkCsvSchema(path)
+      assert(CsvSchemaBridge.inferredSchema(spark, path).contains(inferred), path)
+      assert(Main.seedCsv(spark, path).schema == inferred, path)
+    }
+    assert(sparkCsvSchema(seeds(5)).map(_.dataType) == Seq(IntegerType, LongType, DoubleType,
+      BooleanType, DateType, TimestampType, StringType, StringType),
+      "control: the typed file exercises every inferred type")
+    val mun = s"$in/bench/seed/municipalities.csv"
+    assert(sparkCsvSchema(mun)("istat_code").dataType == IntegerType,
+      "control: inference reads ISTAT codes as ints")
+    val pinned = Main.seedCsv(spark, mun, Set("istat_code"))
+    assert(pinned.schema("istat_code").dataType == StringType)
+    assert(pinned.schema("province_id").dataType == IntegerType)
+    assert(pinned.where(col("id") === 1000).head().getAs[String]("istat_code") == "027000")
+    assert(pinned.count() == 300)
+    // Not one file: Spark's inference answers (a directory), or fails (a
+    // missing path) with Spark's own error.
+    assert(CsvSchemaBridge.inferredSchema(spark, s"$in/seed").isEmpty)
+    assert(Main.seedCsv(spark, s"$in/seed").columns.nonEmpty)
+    assert(CsvSchemaBridge.inferredSchema(spark, s"$in/seed/none.csv").isEmpty)
+    intercept[org.apache.spark.sql.AnalysisException](Main.seedCsv(spark, s"$in/seed/none.csv"))
+  }
+
+  test("building a seed frame starts no Spark job; Spark's CSV inference starts two") {
+    val in = tmpDir("graft_seed_jobs")
+    writeSeeds(in)
+    val mun = s"$in/seed/municipalities.csv"
+    assert(jobsDuring(Main.seedCsv(spark, mun, Set("istat_code"))) == 0)
+    assert(jobsDuring(Main.seedCsv(spark, s"$in/seed/typed.csv")) == 0)
+    assert(jobsDuring(sparkCsvSchema(mun)) == 2,
+      "control: Spark's own inference runs its two jobs, so the listener sees them")
   }
 }
