@@ -4,11 +4,8 @@ import graft.engine.{Codegen, GraftSession}
 import graft.io.{ObjectStore, ParquetSource, S3}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import graft.pipelines.{CorePipelines, DimensionPipelines, PoaPipelines, ServicePipelines}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.csv.CsvSchemaBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
 import scala.util.control.NonFatal
 
 /** CLI entry — the reference's `main.py:26-45` module dispatch
@@ -65,32 +62,25 @@ object Main {
   }
 
   /** Seed-CSV read (S4 shape, `src/core.py:74-120,1898-1915`): header +
-    * inferred schema, with named columns PINNED to string — the reference's
-    * `schema_overrides={"istat_code": pl.String}`, which exists because an
-    * inferred int silently eats ISTAT codes' leading zeros. The schema is
-    * inferred on the driver from one read of the file
-    * ([[CsvSchemaBridge.inferredSchema]]), without the two Spark jobs
-    * `inferSchema` starts; a path that is not one file falls back to
-    * Spark's inference. */
-  def seedCsv(
-      spark: SparkSession, path: String,
-      stringCols: Set[String] = Set.empty): DataFrame = {
-    val inferred = CsvSchemaBridge.inferredSchema(spark, path).getOrElse(spark.read
-      .option("header", "true").option("inferSchema", "true").csv(path).schema)
-    val schema = StructType(inferred.map(f =>
-      if (stringCols(f.name)) f.copy(dataType = StringType) else f))
-    spark.read.schema(schema).option("header", "true").csv(path)
-  }
+    * the seed's declared schema ([[seeds]]). The reference infers the
+    * types and pins `istat_code` to a string
+    * (`schema_overrides={"istat_code": pl.String}`), because an inferred
+    * int silently eats ISTAT codes' leading zeros. The seeds are fixed
+    * files, so their types are declared as inference gives them, with
+    * `istat_code` a string, and building the frame starts no Spark job
+    * (`inferSchema` starts two). The header is checked against the
+    * declared names (`enforceSchema=false`): a seed whose columns differ
+    * fails naming them instead of being read by position. */
+  def seedCsv(spark: SparkSession, path: String, ddl: String): DataFrame =
+    spark.read.schema(ddl).option("header", "true").option("enforceSchema", "false").csv(path)
 
-  /** Total input size under which a migration run's pipelines run
-    * without generated code ([[Codegen.interpreted]]). A migration runs
-    * each plan once: on small inputs the Janino compiles of its plans
-    * cost more than generated code saves, while on large ones the
-    * interpreted operators are the slower part. Measured per pipeline,
-    * compiled against interpreted, on generated inputs of 6.2 to 110 MiB
-    * (README "Scale posture"): no pipeline ran slower interpreted at
-    * 11.2 MiB, and `production_factors` ran 28% slower at 21.7 MiB. */
-  val InterpretBelowBytes: Long = 16L << 20
+  /** The seed pipelines, each with its CSV's schema; a pipeline reads
+    * `seed/<name>.csv` under the input directory. */
+  private[graft] val seeds: Seq[(String, String)] = Seq(
+    "regions" -> "id INT, name STRING",
+    "provinces" -> "id INT, name STRING, region_id INT",
+    "municipalities" -> "id INT, name STRING, istat_code STRING, province_id INT",
+    "permissions" -> "id INT, name STRING")
 
   /** The parquet-seam registry over the concrete pipelines. Source reads
     * are lazy inside run() so --list and module filtering never touch io.
@@ -99,52 +89,29 @@ object Main {
     * distinct path is resolved once, from one footer read where the plan
     * is built, instead of by a schema-inference job at every read.
     *
-    * Each registry call also decides once, when its first pipeline runs,
-    * whether the run's pipelines run interpreted: they do when the bytes
-    * under `in` total less than [[InterpretBelowBytes]]. The decision
-    * wraps each whole pipeline, upload jobs and `$out` read-backs
-    * included, and is printed as one `[graft] migration inputs` line. */
+    * Every pipeline runs without generated code ([[Codegen.interpreted]]),
+    * upload jobs and `$out` read-backs included. A migration builds each
+    * plan once over a few thousand rows, so the Janino compiles of its
+    * plans cost more than generated code saves: on the benchmark's inputs
+    * they were 190 compile units and 7-11 s of a 26-37 s cold pass.
+    * Compiled and interpreted runs were compared per pipeline on inputs
+    * of 6.2 to 110 MiB (README "Scale posture"): the pass was no slower
+    * interpreted at any of them, although from 21.7 MiB up the pipelines
+    * over the largest tables were. */
   def registry(in: String, out: String,
       sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] =
-    registry(in, out, sources, InterpretBelowBytes)
-
-  /** [[registry]] with the interpretation bound given: tests force either
-    * side of it on the same fixtures. */
-  private[graft] def registry(in: String, out: String,
-      sources: ParquetSource.Memo, interpretBelowBytes: Long): Seq[Pipeline] = {
-    var interpret: Option[Boolean] = None
-    def interpreted(spark: SparkSession): Boolean = synchronized {
-      if (interpret.isEmpty) interpret = Some(interpretRun(spark, in, interpretBelowBytes))
-      interpret.get
-    }
     pipelines(in, out, sources).map { p =>
       new Pipeline {
         val name = p.name
         override val dependsOn = p.dependsOn
         override val module = p.module
-        def run(ctx: PipelineContext): Unit =
-          if (interpreted(ctx.spark)) Codegen.interpreted(ctx.spark)(p.run(ctx)) else p.run(ctx)
+        def run(ctx: PipelineContext): Unit = Codegen.interpreted(ctx.spark)(p.run(ctx))
       }
     }
-  }
 
-  /** Whether a run over the inputs under `in` runs interpreted: one
-    * content summary of `in` (a missing `in` counts as empty; its
-    * pipelines then fail on their own reads), compared with the bound,
-    * and the decision printed. */
-  private def interpretRun(spark: SparkSession, in: String, belowBytes: Long): Boolean = {
-    val p = new Path(in)
-    val bytes =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
-      catch { case _: java.io.FileNotFoundException => 0L }
-    val interpret = bytes < belowBytes
-    def mib(b: Long) = f"${b / (1L << 20).toDouble}%.1f MiB"
-    System.err.println(s"[graft] migration inputs ${mib(bytes)} (bound ${mib(belowBytes)}): " +
-      s"plans run ${if (interpret) "interpreted" else "compiled"}")
-    interpret
-  }
-
-  private def pipelines(in: String, out: String, sources: ParquetSource.Memo): Seq[Pipeline] = {
+  /** The registry's pipelines as they run with generated code: specs
+    * compare the two on the same fixtures. */
+  private[graft] def pipelines(in: String, out: String, sources: ParquetSource.Memo): Seq[Pipeline] = {
     def src(spark: SparkSession, table: String): DataFrame =
       sources.read(spark, s"$in/$table.parquet")
     def back(spark: SparkSession, table: String): DataFrame =
@@ -154,11 +121,11 @@ object Main {
     val load = current_timestamp()
     /** CSV-seed passthrough pipelines (regions/provinces/municipalities/
       * permissions): the reference loads these verbatim from seed files. */
-    def seedPipeline(pname: String, csv: String, stringCols: Set[String] = Set.empty) =
+    def seedPipeline(pname: String, ddl: String) =
       new Pipeline {
         val name = pname
         def run(ctx: PipelineContext): Unit =
-          sink(seedCsv(ctx.spark, s"$in/seed/$csv", stringCols), pname)
+          sink(seedCsv(ctx.spark, s"$in/seed/$pname.csv", ddl), pname)
       }
     /** One-source one-function pipelines, the dominant registry shape. */
     def simple(pname: String, table: String, mod: String = "core")(
@@ -174,11 +141,7 @@ object Main {
     // touching run body) and fail task serialization; this one captures
     // only the path string / the serializable S3 config.
     val resolutionClient = objectClientFactory(s"$out/_objects")
-    Seq(
-      seedPipeline("regions", "regions.csv"),
-      seedPipeline("provinces", "provinces.csv"),
-      seedPipeline("municipalities", "municipalities.csv", Set("istat_code")),
-      seedPipeline("permissions", "permissions.csv"),
+    seeds.map { case (pname, ddl) => seedPipeline(pname, ddl) } ++ Seq(
       simple("ulss", "ulss_territoriale") { (_, d) =>
         DimensionPipelines.ulss(d) },
       simple("districts", "distretto_templ") { (_, d) =>

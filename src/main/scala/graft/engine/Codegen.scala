@@ -43,9 +43,11 @@ object Codegen {
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   /** Run `body` with [[InterpretedConf]] set on the session conf and
-    * restore the previous values (set or unset) afterwards, also when
-    * `body` throws. For work that runs once over small inputs, where
-    * Janino compile time outweighs what generated code saves.
+    * restore the previous values afterwards, also when `body` throws: a
+    * key the session had set gets its value back, a key it had not set is
+    * unset again (reading it would give Spark's default, which must not
+    * become an explicit setting). For work that runs once over small
+    * inputs, where Janino compile time outweighs what generated code saves.
     *
     * The setting is session-wide, not scoped to `body`'s own queries:
     * anything else running on the session meanwhile runs interpreted too.
@@ -53,7 +55,8 @@ object Codegen {
     * one pipeline at a time, and the values are propagated to that
     * pipeline's tasks with the rest of the session conf. */
   def interpreted[T](spark: SparkSession)(body: => T): T = {
-    val saved = InterpretedConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val saved = InterpretedConf.map { case (k, _) => k -> set.get(k) }
     InterpretedConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
@@ -78,19 +81,30 @@ object Codegen {
     * Spark-private) from the Guava cache behind `CodeGenerator.cache`;
     * None if this Spark build lays it out differently. */
   def cacheMaxEntries(): Option[Long] = Try {
-    def member(o: AnyRef, name: String): AnyRef = {
-      val classes = Iterator.iterate[Class[_]](o.getClass)(_.getSuperclass).takeWhile(_ != null).toSeq
-      classes.flatMap(_.getDeclaredMethods).find(m => m.getName == name && m.getParameterCount == 0)
-        .map { m => m.setAccessible(true); m.invoke(o) }
-        .getOrElse {
-          val f = classes.flatMap(_.getDeclaredFields).find(_.getName == name).get
-          f.setAccessible(true)
-          f.get(o)
-        }
-    }
     // CodeGenerator.cache: NonFateSharingCache -> .cache: Guava LocalCache
     // wrapper -> .localCache -> .maxWeight (entries, under unit weights)
     val guava = member(member(CodeGenerator, "cache"), "cache")
     member(member(guava, "localCache"), "maxWeight").asInstanceOf[Long]
   }.toOption
+
+  /** Drop every compiled class from the JVM-wide cache, so the next
+    * queries compile all their units: specs that count compiles use it to
+    * be independent of what ran before them in the JVM. */
+  private[graft] def clearCache(): Unit = {
+    val cache = member(CodeGenerator, "cache") // a Spark-private NonFateSharingCache
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
+  /** A member of `o` by name, a no-argument method or else a field, looked
+    * up on its class and superclasses whatever its visibility. */
+  private def member(o: AnyRef, name: String): AnyRef = {
+    val classes = Iterator.iterate[Class[_]](o.getClass)(_.getSuperclass).takeWhile(_ != null).toSeq
+    classes.flatMap(_.getDeclaredMethods).find(m => m.getName == name && m.getParameterCount == 0)
+      .map { m => m.setAccessible(true); m.invoke(o) }
+      .getOrElse {
+        val f = classes.flatMap(_.getDeclaredFields).find(_.getName == name).get
+        f.setAccessible(true)
+        f.get(o)
+      }
+  }
 }

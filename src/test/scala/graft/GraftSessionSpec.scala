@@ -33,6 +33,19 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(second <= 5, s"second cycle recompiled $second units (first: $first)")
   }
 
+  test("codegen cache: a cleared cache compiles a cached plan again") {
+    val salt = System.nanoTime() % 1000000007L
+    def compiles(): Long = {
+      val before = Codegen.count()
+      assert(spark.range(4).selectExpr(s"id + $salt AS v").collect().length == 4)
+      (Codegen.count() - before).compiles
+    }
+    assert(compiles() >= 1)
+    assert(compiles() == 0, "control: the second run hits the cache")
+    Codegen.clearCache()
+    assert(compiles() >= 1)
+  }
+
   test("scratch dir: malformed SPARK_GRAFT_SHM_MIN_FREE_GB fails naming the variable") {
     for (bad <- Seq("16g", "", "-1", "1.5")) {
       val e = intercept[IllegalArgumentException] {

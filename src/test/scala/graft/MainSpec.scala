@@ -149,15 +149,6 @@ class MainSpec extends AnyFunSuite {
       Set("requirement_taxonomies", "requirement_lists", "requirements", "procedures"))
   }
 
-  /** `body`'s stderr, captured, and its value. */
-  private def stderrOf[T](body: => T): (String, T) = {
-    val err = new java.io.ByteArrayOutputStream
-    val saved = System.err
-    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
-    val v = try body finally System.setErr(saved)
-    (err.toString("UTF-8"), v)
-  }
-
   /** Every target table under `out`, as sorted JSON rows with the run's
     * load timestamp (any timestamp at or after `since`) nulled. */
   private def targets(out: String, since: java.sql.Timestamp): Map[String, Seq[String]] =
@@ -172,35 +163,34 @@ class MainSpec extends AnyFunSuite {
     }.toMap
 
   private val codegenKeys = graft.engine.Codegen.InterpretedConf.map(_._1)
-  private def codegenConf() = codegenKeys.map(k => k -> spark.conf.getOption(k))
+  /** The codegen keys as the session has them set: None where unset. */
+  private def codegenConf() = {
+    val set = spark.conf.getAll
+    codegenKeys.map(k => k -> set.get(k))
+  }
 
-  test("a registry run under the input bound runs interpreted, and writes what a compiled run writes") {
+  test("a registry run compiles a handful of units, and writes what a compiled run writes") {
     import graft.engine.Codegen
     import graft.io.ParquetSource
-    import graft.pipeline.{PipelineContext, Runner}
+    import graft.pipeline.{Pipeline, PipelineContext, Runner}
     val in = java.nio.file.Files.createTempDirectory("graft-interp-in").toString
     MigrationFixtures.write(spark, in)
-    def run(bound: Long): (String, String, Codegen.Count) = {
+    def run(pipes: String => Seq[Pipeline]): (String, Codegen.Count) = {
       val out = java.nio.file.Files.createTempDirectory("graft-interp-out").toString
+      // An empty class cache: each run compiles every unit it needs,
+      // whatever ran before it in this JVM.
+      Codegen.clearCache()
       val before = Codegen.count()
-      val (err, _) = stderrOf(Runner.run(PipelineContext(spark),
-        Main.registry(in, out, new ParquetSource.Memo, bound)))
-      (out, err, Codegen.count() - before)
+      Runner.run(PipelineContext(spark), pipes(out))
+      (out, Codegen.count() - before)
     }
     val conf0 = codegenConf()
     val since = new java.sql.Timestamp(System.currentTimeMillis())
-    // Compiled first: an earlier compiled run in this JVM would leave its
-    // classes cached, and this run would not need to compile them.
-    val (compiledOut, compiledErr, compiled) = run(0L)
-    val (interpretedOut, interpretedErr, interpreted) = run(Main.InterpretBelowBytes)
+    val (compiledOut, compiled) = run(out => Main.pipelines(in, out, new ParquetSource.Memo))
+    val (interpretedOut, interpreted) = run(out => Main.registry(in, out))
     assert(codegenConf() == conf0, "the session's codegen settings are restored")
-    def decisions(err: String) = err.linesIterator.filter(_.startsWith("[graft] migration inputs")).toSeq
-    assert(decisions(compiledErr).size == 1 && decisions(compiledErr).head.endsWith("plans run compiled"),
-      compiledErr)
-    assert(decisions(interpretedErr).size == 1 &&
-      decisions(interpretedErr).head.endsWith("plans run interpreted"), interpretedErr)
     // A Spark that stops honouring the factory-mode key fails here.
-    assert(interpreted.compiles <= 15, s"interpreted run compiled $interpreted")
+    assert(interpreted.compiles <= 15, s"the registry run compiled $interpreted")
     assert(compiled.compiles >= 50, s"the compiled run compiled only $compiled")
     val a = targets(compiledOut, since)
     val b = targets(interpretedOut, since)
@@ -209,24 +199,26 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("the codegen settings are restored after each pipeline, also when it throws") {
+    import graft.engine.Codegen
     val in = java.nio.file.Files.createTempDirectory("graft-interp-empty").toString
     val out = java.nio.file.Files.createTempDirectory("graft-interp-out").toString
     val pipes = Main.registry(in, out).map(p => p.name -> p).toMap
     val ctx = graft.pipeline.PipelineContext(spark)
-    // A value of the session's own, not the default, is what comes back.
+    val session0 = codegenConf()
+    // One key set to a value of the session's own, not the default, and
+    // one unset: the first comes back, the second stays unset.
+    spark.conf.unset(codegenKeys(0))
     spark.conf.set(codegenKeys(1), "CODEGEN_ONLY")
     try {
       val conf0 = codegenConf()
-      assert(conf0 == Seq(codegenKeys(0) -> Some("true"), codegenKeys(1) -> Some("CODEGEN_ONLY")))
+      assert(conf0 == Seq(codegenKeys(0) -> None, codegenKeys(1) -> Some("CODEGEN_ONLY")))
       // No seed under an empty input: the pipeline fails on its read.
-      val (err, _) = stderrOf(intercept[org.apache.spark.sql.AnalysisException](
-        pipes("regions").run(ctx)))
-      assert(err.contains("plans run interpreted"), err)
+      intercept[org.apache.spark.sql.AnalysisException](pipes("regions").run(ctx))
       assert(codegenConf() == conf0)
       var inside = Seq.empty[(String, Option[String])]
-      graft.engine.Codegen.interpreted(spark) { inside = codegenConf() }
-      assert(inside == graft.engine.Codegen.InterpretedConf.map { case (k, v) => k -> Some(v) })
+      Codegen.interpreted(spark) { inside = codegenConf() }
+      assert(inside == Codegen.InterpretedConf.map { case (k, v) => k -> Some(v) })
       assert(codegenConf() == conf0)
-    } finally spark.conf.unset(codegenKeys(1))
+    } finally session0.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.csv.CsvSchemaBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,8 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * generator has produced (the r7 testdata regeneration changed the layout
   * under a running round — this spec is the canary that makes the next
   * drift a named failure instead of nine silently-vanished queries), and
-  * the job-free source resolution [[ParquetSource]] gives `load`, and
-  * [[CsvSchemaBridge]] gives the migration's seed CSVs: the schema Spark
+  * the job-free source resolution [[ParquetSource]] gives `load`, and the
+  * declared schemas give the migration's seed CSVs: the schema Spark
   * would infer, and no Spark job to get it. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -190,62 +189,60 @@ class TablesSpec extends AnyFunSuite {
   private def sparkCsvSchema(path: String): StructType =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path).schema
 
-  /** A seed written the way the benchmark's generator writes them (Python
-    * `csv.DictWriter`: CRLF line ends, 300 municipalities whose ISTAT codes
-    * have leading zeros), and a file with one column per inferable type,
-    * empty values, quoted separators and a repeated header line. */
-  private def writeSeeds(dir: String): Unit = {
+  /** The four seeds written the way the benchmark's generator writes them
+    * (Python `csv.DictWriter`: CRLF line ends; 300 municipalities whose
+    * ISTAT codes have leading zeros). */
+  private def writeBenchSeeds(dir: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/seed"))
-    def put(name: String, lines: Seq[String], eol: String = "\r\n"): Unit =
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/seed/$name"),
-        lines.mkString("", eol, eol))
-    put("municipalities.csv", "id,name,istat_code,province_id" +: (0 until 300).map(i =>
+    def put(name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/seed/$name.csv"),
+        lines.mkString("", "\r\n", "\r\n"))
+    put("regions", Seq("id,name", "5,Veneto", "6,Friuli"))
+    put("provinces", "id,name,region_id" +: (0 until 8).map(i => s"${20 + i},Provincia $i,${5 + i % 2}"))
+    put("municipalities", "id,name,istat_code,province_id" +: (0 until 300).map(i =>
       s"${1000 + i},Comune $i,0${27000 + i},${20 + i % 8}"))
-    put("typed.csv", Seq(
-      "i,l,d,b,day,ts,s,e",
-      "1,3000000000,1.5,true,2024-01-02,2024-01-02 03:04:05,\"a,b\",",
-      "i,l,d,b,day,ts,s,e",
-      ",7,2,false,2024-02-03,2024-02-03 00:00:00,x,"), eol = "\n")
+    put("permissions", "id,name" +: (0 until 12).map(i => s"${i + 1},perm_$i"))
   }
 
-  test("seed CSV schema: resolved on the driver, equal to Spark's inference") {
-    val in = tmpDir("graft_seed_csv")
-    MigrationFixtures.write(spark, in)
-    writeSeeds(s"$in/bench")
-    val seeds = Seq("regions", "provinces", "municipalities", "permissions")
-      .map(n => s"$in/seed/$n.csv") ++
-      Seq("municipalities", "typed").map(n => s"$in/bench/seed/$n.csv")
-    seeds.foreach { path =>
-      val inferred = sparkCsvSchema(path)
-      assert(CsvSchemaBridge.inferredSchema(spark, path).contains(inferred), path)
-      assert(Main.seedCsv(spark, path).schema == inferred, path)
+  test("seed CSV schemas: the declared types are Spark's inference, with istat_code a string") {
+    val fixtures = tmpDir("graft_seed_fixtures")
+    MigrationFixtures.write(spark, fixtures)
+    val bench = tmpDir("graft_seed_bench")
+    writeBenchSeeds(bench)
+    assert(Main.seeds.map(_._1) == Seq("regions", "provinces", "municipalities", "permissions"))
+    for (dir <- Seq(fixtures, bench); (name, ddl) <- Main.seeds) {
+      val path = s"$dir/seed/$name.csv"
+      val inferred = StructType(sparkCsvSchema(path).map(f =>
+        if (f.name == "istat_code") f.copy(dataType = StringType) else f))
+      assert(Main.seedCsv(spark, path, ddl).schema == inferred, path)
     }
-    assert(sparkCsvSchema(seeds(5)).map(_.dataType) == Seq(IntegerType, LongType, DoubleType,
-      BooleanType, DateType, TimestampType, StringType, StringType),
-      "control: the typed file exercises every inferred type")
-    val mun = s"$in/bench/seed/municipalities.csv"
+    val mun = s"$bench/seed/municipalities.csv"
     assert(sparkCsvSchema(mun)("istat_code").dataType == IntegerType,
       "control: inference reads ISTAT codes as ints")
-    val pinned = Main.seedCsv(spark, mun, Set("istat_code"))
-    assert(pinned.schema("istat_code").dataType == StringType)
-    assert(pinned.schema("province_id").dataType == IntegerType)
+    val pinned = Main.seedCsv(spark, mun, Main.seeds.toMap.apply("municipalities"))
     assert(pinned.where(col("id") === 1000).head().getAs[String]("istat_code") == "027000")
+    assert(pinned.where(col("id") === 1299).head().getAs[Int]("province_id") == 23)
     assert(pinned.count() == 300)
-    // Not one file: Spark's inference answers (a directory), or fails (a
-    // missing path) with Spark's own error.
-    assert(CsvSchemaBridge.inferredSchema(spark, s"$in/seed").isEmpty)
-    assert(Main.seedCsv(spark, s"$in/seed").columns.nonEmpty)
-    assert(CsvSchemaBridge.inferredSchema(spark, s"$in/seed/none.csv").isEmpty)
-    intercept[org.apache.spark.sql.AnalysisException](Main.seedCsv(spark, s"$in/seed/none.csv"))
+  }
+
+  test("a seed whose header differs from its declared columns fails naming them") {
+    val dir = tmpDir("graft_seed_header")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/regions.csv"),
+      "id,code\n5,VEN\n")
+    val e = intercept[Exception](
+      Main.seedCsv(spark, s"$dir/regions.csv", Main.seeds.toMap.apply("regions")).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(messages.contains("code") && messages.contains("name"), messages)
   }
 
   test("building a seed frame starts no Spark job; Spark's CSV inference starts two") {
     val in = tmpDir("graft_seed_jobs")
-    writeSeeds(in)
-    val mun = s"$in/seed/municipalities.csv"
-    assert(jobsDuring(Main.seedCsv(spark, mun, Set("istat_code"))) == 0)
-    assert(jobsDuring(Main.seedCsv(spark, s"$in/seed/typed.csv")) == 0)
-    assert(jobsDuring(sparkCsvSchema(mun)) == 2,
+    writeBenchSeeds(in)
+    Main.seeds.foreach { case (name, ddl) =>
+      assert(jobsDuring(Main.seedCsv(spark, s"$in/seed/$name.csv", ddl)) == 0, name)
+    }
+    assert(jobsDuring(sparkCsvSchema(s"$in/seed/municipalities.csv")) == 2,
       "control: Spark's own inference runs its two jobs, so the listener sees them")
   }
 }
