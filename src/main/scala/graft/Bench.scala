@@ -2,8 +2,9 @@ package graft
 
 import graft.engine.{Codegen, GraftSession}
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":...,"queries":{name:sec}}. Headline set =
+/** Benchmark main: runs the headline queries (or the catalog queries
+  * SPARK_GRAFT_BENCH_ONLY names) on SPARK_GRAFT_SF_DIR and prints one JSON
+  * line {"metric":...,"queries":{name:sec}}. Headline set =
   * the scale-sensitive queries (fact-fact joins, wide aggregation, windows,
   * dedup/similarity/text ops), not the whole per-operator catalog — the
   * catalog is correctness surface; this is the throughput surface.
@@ -242,6 +243,23 @@ object Bench {
           "raise the driver cap"))
   }
 
+  /** The queries a pass runs: exactly the catalog names the comma-separated
+    * `SPARK_GRAFT_BENCH_ONLY` selects (headline or not), sorted, or the
+    * [[headline]] when it is unset. */
+  private[graft] def selectNames(env: String => Option[String]): Seq[String] =
+    SparkEntry.selected(env, "SPARK_GRAFT_BENCH_ONLY").fold(headline)(_.toSeq.sorted)
+
+  /** One noop-sink run of a query, split where the frame exists:
+    * `construct` is the catalog call (Catalyst analysis plus any
+    * construct-time driver jobs: trainer loops, quantile probes, count
+    * folds), `exec` the sink. A run that throws counts its time up to the
+    * throw, so `total` is the run's whole wall time either way. */
+  private final case class Run(construct: Double, exec: Double, failure: Option[Throwable]) {
+    def total: Double = construct + exec
+  }
+
+  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ROUNDS > 1 repeats the whole headline pass in ONE
@@ -250,20 +268,28 @@ object Bench {
     // question). Each round prints its own JSON line; the LAST line is the
     // steadiest and is the one the driver's tail parse picks up.
     val rounds = GraftSession.positiveInt(sys.env.get, "SPARK_GRAFT_BENCH_ROUNDS").getOrElse(1)
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those catalog queries — the
+    // idle fresh-JVM re-measure tool for driver-round watchlist queries and
+    // for any query outside the headline (never set in the driver's own run).
+    val names = selectNames(sys.env.get)
     val spark = GraftSession.local("graft-bench")
-    val qs = SparkEntry.queries
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the pass to a comma-separated
-    // subset — the idle fresh-JVM re-measure tool for driver-round
-    // watchlist queries (never set in the driver's own run).
-    val only = SparkEntry.selected(sys.env.get, "SPARK_GRAFT_BENCH_ONLY")
-    val names = headline.filter(qs.contains)
-      .filter(n => only.forall(_.contains(n)))
-    // A failed query must be VISIBLE, not a fast-looking small number:
-    // run() reports success and failures are listed by name in the JSON,
-    // so a regression can't hide behind a short failure path.
-    def run(name: String): Boolean =
-      try { qs(name)(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-      catch { case _: Throwable => false }
+    // A failed query must be VISIBLE, not a fast-looking small number: its
+    // cause goes to stderr and BENCH.out, and failures are listed by name in
+    // the JSON, so a regression can't hide behind a short failure path.
+    def run(name: String): Run = {
+      val t0 = System.nanoTime()
+      var t1 = -1L
+      val failure =
+        try {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          t1 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          None
+        } catch { case e: Throwable => Some(e) }
+      val t2 = System.nanoTime()
+      if (t1 < 0) t1 = t2 // failed before the frame existed
+      Run((t1 - t0) / 1e9, (t2 - t1) / 1e9, failure)
+    }
     for (round <- 1 to rounds) {
       val measured = names.map { name =>
         // Hygiene between queries: the caching operators benched since r7
@@ -282,38 +308,43 @@ object Bench {
         spark.catalog.clearCache()
         System.gc()
         val codegen0 = Codegen.count()
-        run(name)
+        val warm = run(name)
         val codegen1 = Codegen.count()
-        var ok = true
-        def timed(): Double = {
-          val t0 = System.nanoTime()
-          ok &= run(name)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val base = Array.fill(Iters)(timed())
-        val baseMed = base.sorted.apply(Iters / 2)
-        val noisy = base.min > 0 && base.max / base.min >= NoisySpread
-        val times =
-          (if (baseMed < ShortQuerySec ||
-            (noisy && baseMed < ExtraIterMaxSec))
-            base ++ Array.fill(ExtraIters)(timed())
-          else base).sorted
-        val median = times(times.length / 2)
-        val compiles = ((codegen1 - codegen0).compiles, (Codegen.count() - codegen1).compiles)
-        ((name, median, times.head, times.last, ok), compiles)
+        val base = Seq.fill(Iters)(run(name))
+        val baseTimes = base.map(_.total)
+        val baseMed = median(baseTimes)
+        val noisy = baseTimes.min > 0 && baseTimes.max / baseTimes.min >= NoisySpread
+        val runs =
+          if (baseMed < ShortQuerySec || (noisy && baseMed < ExtraIterMaxSec))
+            base ++ Seq.fill(ExtraIters)(run(name))
+          else base
+        val times = runs.map(_.total)
+        val failure = runs.flatMap(_.failure).headOption
+        failure.foreach(e => System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}"))
+        val (med, construct, exec) =
+          (median(times), median(runs.map(_.construct)), median(runs.map(_.exec)))
+        // Full-precision per-query detail: stdout for humans AND ./BENCH.out
+        // for whole-file readers (the driver's tail cap never truncates a
+        // file), min/max included there. `construct`/`exec` are the timed
+        // runs' medians of a run's two halves (is the cost in the plan or
+        // in construct-time driver work?), `cold_construct` the warm-up
+        // run's construction. `compiles` counts generated-code compile
+        // units in the warm-up run and across all timed runs. Timed
+        // compiles are code that differs between runs, or a query that
+        // outgrew the codegen class cache; a second round whose warm-ups
+        // still compile means the whole pass outgrew it.
+        val line =
+          f"BENCH $name%-28s median=$med%.4f min=${times.min}%.4f max=${times.max}%.4f " +
+            f"construct=$construct%.4f exec=$exec%.4f cold_construct=${warm.construct}%.4f " +
+            s"${if (failure.isEmpty) "ok" else "FAILED"} compiles " +
+            s"warm=${(codegen1 - codegen0).compiles} timed=${(Codegen.count() - codegen1).compiles}" +
+            failure.fold("")(e => s" cause=${e.getClass.getName}: " +
+              String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
+        ((name, med, times.min, times.max, failure.isEmpty), line)
       }
       val results = measured.map(_._1)
-      // Full-precision per-query detail: stdout for humans AND ./BENCH.out
-      // for whole-file readers (the driver's tail cap never truncates a
-      // file), min/max included there. `compiles` counts generated-code
-      // compile units in the warm-up run and across all timed runs. Timed
-      // compiles are code that differs between runs, or a query that
-      // outgrew the codegen class cache; a second round whose warm-ups
-      // still compile means the whole pass outgrew it.
-      val detail = measured.map { case ((k, med, mn, mx, ok), (warm, timed)) =>
-        f"BENCH $k%-28s median=$med%.4f min=$mn%.4f max=$mx%.4f " +
-          s"${if (ok) "ok" else "FAILED"} compiles warm=$warm timed=$timed"
-      }
+      val detail = measured.map(_._2)
       detail.foreach(println)
       import java.nio.file.StandardOpenOption._
       val outFile = java.nio.file.Paths.get("BENCH.out")

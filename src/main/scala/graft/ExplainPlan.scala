@@ -1,18 +1,18 @@
 package graft
 
-/** Plan-audit helper: `runMain graft.ExplainPlan <sfDir> <query> [query…]`
-  * prints each query's formatted executed plan plus the scan/exchange
-  * tallies that matter for the 100 TB posture (a profiling query that
-  * re-reads its source N times, or an unexpected SinglePartition
-  * exchange, shows up here before it shows up in a bench regression).
+/** Plan-audit helper: `runMain graft.ExplainPlan <sfDir> <query|ALL> [query…]`
+  * prints each query's scan/exchange tallies that matter for the 100 TB
+  * posture (a profiling query that re-reads its source N times, or an
+  * unexpected SinglePartition exchange, shows up here before it shows up
+  * in a bench regression). Named queries also print their formatted
+  * physical plan; `ALL` audits the whole catalog, tallies only.
   */
 object ExplainPlan {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExplainPlan <sfDir> <query|ALL> [query…]")
+    val all = args(1) == "ALL"
+    val names = if (all) SparkEntry.queries.keys.toSeq.sorted else args.drop(1).toSeq
     val spark = graft.engine.GraftSession.local("graft-explain")
-    val names =
-      if (args.lift(1).contains("ALL")) SparkEntry.queries.keys.toSeq.sorted
-      else args.drop(1).toSeq
     try names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, args(0))
       val plan = df.queryExecution.executedPlan.toString
@@ -21,7 +21,7 @@ object ExplainPlan {
         " exchanges=" + "Exchange".r.findAllIn(plan).length +
         " singlePartition=" + "Exchange SinglePartition".r.findAllIn(plan).length +
         " bnlj=" + "BroadcastNestedLoopJoin".r.findAllIn(plan).length)
-      if (sys.env.contains("GRAFT_EXPLAIN_FULL")) println(plan)
+      if (!all) df.explain("formatted")
     } finally spark.stop()
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.engine.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact distributed k-th-smallest selection (median, exact percentiles)
   * — the order statistic without the global sort.
@@ -30,9 +30,10 @@ import org.apache.spark.storage.StorageLevel
   * released only AFTER the successor has materialized through its first
   * action — so the probe and count of round r read a cache, and round r+1's
   * filter computes from round r's cache instead of re-running the whole
-  * filter chain from the source scan. The registry is bounded at one live
-  * frame plus its predecessor (the PrefixSum bounded-persist discipline),
-  * and every persist is released on exit, including the failure path.
+  * filter chain from the source scan. At most one live frame plus its
+  * predecessor is pinned, and the [[Lineage.scope]] releases every pin on
+  * exit, including the failure path. Rounds read the pinned frame itself,
+  * not a truncated view: 3–4 rounds keep the plan small.
   */
 object Selection {
 
@@ -69,25 +70,16 @@ object Selection {
     var rows = -1L    // rows remaining in the candidate set
     val probes = (1 until buckets).map(_.toDouble / buckets).toArray
     var resolved: Option[Double] = None
-    // live-cache registry: the current round's frame + its predecessor
-    var prevCached: Option[DataFrame] = None
-    var liveCached: Option[DataFrame] = None
-    def releaseAll(): Unit = {
-      prevCached.foreach(_.unpersist(blocking = false))
-      liveCached.foreach(_.unpersist(blocking = false))
-      prevCached = None; liveCached = None
-    }
-    try {
+    Lineage.scope { scope =>
+      var live: Option[Lineage.Pinned] = None
       while (resolved.isEmpty && (rows < 0 || rows > localLimit)) {
-        cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
-        prevCached = liveCached
-        liveCached = Some(cur)
-        val bounds = cur.stat.approxQuantile(valueCol, probes, 0.001)
-          .distinct.sorted(Ordering.Double.TotalOrdering)
+        val (p, bounds) = scope.pinBy(cur)(_.stat.approxQuantile(valueCol, probes, 0.001)
+          .distinct.sorted(Ordering.Double.TotalOrdering))
         // first action on this round's cache has run: predecessor is safe
         // to drop without forcing a recompute from the source
-        prevCached.foreach(_.unpersist(blocking = false))
-        prevCached = None
+        live.foreach(_.release())
+        live = Some(p)
+        cur = p.frame
         if (bounds.isEmpty) {
           // degenerate: too few rows for any boundary — resolve locally
           rows = if (total < 0) { total = cur.count(); total } else 0L
@@ -150,7 +142,7 @@ object Selection {
         tail(rank.toInt - 1).getDouble(0)
       }
       (value, total)
-    } finally releaseAll()
+    }
   }
 
   private def checkedRank(rankOf: Long => Long, total: Long): Long = {

@@ -10,7 +10,7 @@ import scala.collection.mutable
   * instead of a hand-maintained call order, so "municipalities before
   * companies" is declared, not implied by line order.
   */
-final case class PipelineContext(spark: SparkSession, conf: Map[String, String] = Map.empty)
+final case class PipelineContext(spark: SparkSession)
 
 trait Pipeline {
   def name: String

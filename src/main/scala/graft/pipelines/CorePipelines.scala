@@ -27,15 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object CorePipelines {
 
-  /** Default audit-flag semantics: `DISABLED == 'S'` (case/space dirty).
-    * Reference: `src/utils.py:388-398`. */
-  private def auditCols(loadTime: Column): Seq[Column] =
-    Audit.handleTimestamps(
-      Audit.romeToUtc(col("CREATION")),
-      Audit.romeToUtc(col("LAST_MOD")),
-      lower(trim(col("DISABLED"))), "s",
-      loadTime)
-
   /** `migrate_toponyms` (`src/core.py:123-147`): normalize id, trim name,
     * audit triple. The minimal pipeline shape (same as ulss, districts,
     * udo classifications, …). */
@@ -43,7 +34,7 @@ object CorePipelines {
     toponimoTempl.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        Text.handleText(col("NOME")).as("name")) ++ auditCols(loadTime): _*)
+        Text.handleText(col("NOME")).as("name")) ++ Audit.columns(loadTime): _*)
 
   /** Company-form enum semantics (`src/core.py:203-218`): dirty free-text
     * legal forms normalize to a canonical enum, unmapped → OTHER. */
@@ -87,7 +78,7 @@ object CorePipelines {
           trim(col("PIVA")).as("vat_number"),
           col("business_applicant_type"),
           col("nature"),
-          col("municipality_id")) ++ auditCols(loadTime): _*)
+          col("municipality_id")) ++ Audit.columns(loadTime): _*)
       .drop("tr_id", "nat_id", "mun_istat")
   }
 
@@ -112,7 +103,7 @@ object CorePipelines {
           Text.handleId(col("CLIENTID")).as("id"),
           Text.handleText(col("NOME")).as("name"),
           col("resolution_type"),
-          col("ALLEGATO").as("attachment")) ++ auditCols(loadTime): _*)
+          col("ALLEGATO").as("attachment")) ++ Audit.columns(loadTime): _*)
     val atti = atto
       .join(broadcast(ta), Text.handleId(col("ID_TIPO_FK")) === col("ta_id"), "left")
       .select(
@@ -121,7 +112,7 @@ object CorePipelines {
           concat(trim(col("ANNO")), lit("-"), trim(col("NUMERO")),
             lit(" ["), Text.handleId(col("CLIENTID")), lit("]")).as("name"),
           col("resolution_type"),
-          lit(null).cast("binary").as("attachment")) ++ auditCols(loadTime): _*)
+          lit(null).cast("binary").as("attachment")) ++ Audit.columns(loadTime): _*)
     delib.unionByName(atti, allowMissingColumns = true)
   }
 
@@ -228,7 +219,7 @@ object CorePipelines {
         Text.handleId(col("ID_CLASSIFICAZIONE_UDO_FK")).as("udo_type_classification_id"),
         ynFlag(col("OSPEDALIERO")).as("is_hospital"),
         ynFlag(col("SALUTE_MENTALE")).as("is_mental_health"),
-        ynFlag(col("POSTI_LETTO")).as("has_beds")) ++ auditCols(loadTime): _*)
+        ynFlag(col("POSTI_LETTO")).as("has_beds")) ++ Audit.columns(loadTime): _*)
     val amb = ambito.select(
       Text.handleId(col("CLIENTID")).as("amb_id"),
       Text.handleText(col("NOME")).as("scope_name"),
@@ -328,7 +319,7 @@ object CorePipelines {
         lit(true).as("is_used_in_poa"),
         nullStr.as("grouping_specialty_id"),
         trim(col("ID_BRANCA").cast("string")).as("old_id"),
-        nullStr.as("parent_specialty_id")) ++ auditCols(loadTime): _*)
+        nullStr.as("parent_specialty_id")) ++ Audit.columns(loadTime): _*)
     // The scalar guard: exactly ONE branch may be flagged ALTRO. collect()
     // here is bounded by that same contract (≤ a handful of rows even when
     // the invariant is violated — the take(2) caps it).
@@ -350,7 +341,7 @@ object CorePipelines {
         lit(true).as("is_used_in_poa"),
         nullStr.as("grouping_specialty_id"),
         nullStr.as("old_id"),
-        lit(parentId).as("parent_specialty_id")) ++ auditCols(loadTime): _*)
+        lit(parentId).as("parent_specialty_id")) ++ Audit.columns(loadTime): _*)
     val disciplines = disciplina.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
@@ -364,7 +355,7 @@ object CorePipelines {
         coalesce(col("POA") === 1, lit(false)).as("is_used_in_poa"),
         Text.handleId(col("ID_RAGG_DISCIPL_TEMPL_FK")).as("grouping_specialty_id"),
         trim(col("ID_DISCIPLINA").cast("string")).as("old_id"),
-        nullStr.as("parent_specialty_id")) ++ auditCols(loadTime): _*)
+        nullStr.as("parent_specialty_id")) ++ Audit.columns(loadTime): _*)
     branches.unionByName(artic).unionByName(disciplines)
   }
 
@@ -498,7 +489,7 @@ object CorePipelines {
           col("LATITUDINE").try_cast("decimal(8,2)").as("lat"),
           col("LONGITUDINE").try_cast("decimal(8,2)").as("lon"),
           Text.handleId(col("ID_TOPONIMO_FK")).as("toponym_id"),
-          col("municipality_id")) ++ auditCols(loadTime): _*)
+          col("municipality_id")) ++ Audit.columns(loadTime): _*)
       .drop("mun_istat", "tpf_id")
   }
 
@@ -547,7 +538,7 @@ object CorePipelines {
         yFlag(col("FLAG_MODULO")).as("is_module"),
         lit(null).cast("string").as("organigram_node_id"),
         when(trim(col("PROVENIENZA_UO")) === "ORGANIGRAMMA_TREE", lit(null))
-          .otherwise(Text.strip(col("ID_UO"))).as("uo_fk")) ++ auditCols(loadTime): _*)
+          .otherwise(Text.strip(col("ID_UO"))).as("uo_fk")) ++ Audit.columns(loadTime): _*)
     val sede = sedeOper.select(
       Text.handleId(col("CLIENTID")).as("oo_id"),
       Text.handleId(col("ID_STRUTTURA_FK")).as("ps_id"))

@@ -13,13 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object DimensionPipelines {
 
-  private def auditCols(loadTime: Column): Seq[Column] =
-    Audit.handleTimestamps(
-      Audit.romeToUtc(col("CREATION")),
-      Audit.romeToUtc(col("LAST_MOD")),
-      lower(trim(col("DISABLED"))), "s",
-      loadTime)
-
   /** `migrate_ulss` (`src/core.py:150-169`): trimmed name, verbatim code —
     * no CLIENTID upstream; the reference target keys on a PG serial. At
     * the parquet seam no database mints that serial, so a row without an
@@ -47,7 +40,7 @@ object DimensionPipelines {
         Text.handleId(col("CLIENTID")).as("id"),
         Text.replaceFirst(Text.stripSuffix(trim(col("TITOLARE")), "-"), "-", " - ")
           .as("name"),
-        col("DISTRETTO").as("code")) ++ auditCols(loadTime): _*)
+        col("DISTRETTO").as("code")) ++ Audit.columns(loadTime): _*)
 
   /** `migrate_company_types` (`src/core.py:243-272`): lowercased id and the
     * two strict-'S' POA flags (exact compare, no trim/fold —
@@ -60,7 +53,7 @@ object DimensionPipelines {
         coalesce(col("SHOW_DICHIARAZIONE_DIR_SAN") === "S", lit(false))
           .as("is_show_health_director_declaration_poa"),
         coalesce(col("ORGANIGRAMMA_ATTIVO") === "S", lit(false)).as("is_active_poa")
-      ) ++ auditCols(loadTime): _*)
+      ) ++ Audit.columns(loadTime): _*)
 
   /** `migrate_physical_structures` (`src/core.py:367-412`): projection plus
     * the P15/P16 JSON `extra` envelope — {docway_file_id, area_id}, all
@@ -74,7 +67,7 @@ object DimensionPipelines {
         trim(col("CODICE_PF_SECONDARIO")).as("secondary_code"),
         Text.handleId(col("ID_DISTRETTO_FK")).as("district_id"),
         Text.handleId(col("ID_TITOLARE_FK")).as("company_id")) ++
-        auditCols(loadTime) :+
+        Audit.columns(loadTime) :+
         JsonCols.jsonEnvelope(
           "docway_file_id" -> col("ID_FASCICOLO_DOCWAY"),
           "area_id" -> col("ID_COMPRENSORIO_FK")).as("extra"): _*)
@@ -95,7 +88,7 @@ object DimensionPipelines {
         trim(col("RAGIONE_SOCIALE_DI_PROPRIETA")).as("owner_business_name"),
         trim(col("PIVA_DI_PROPRIETA")).as("owner_vat_number"),
         coalesce(col("FLAG_DI_PROPRIETA") === 1, lit(false)).as("is_own_property")) ++
-        auditCols(loadTime) :+
+        Audit.columns(loadTime) :+
         JsonCols.jsonEnvelope(
           "docway_file_id" -> col("ID_FASCICOLO_DOCWAY")).as("extra"): _*)
 
@@ -122,7 +115,7 @@ object DimensionPipelines {
           trim(col("DENOMINAZIONE")).as("name"),
           col("ORDINE").cast("int").as("sort_order"),
           EnumMap.handleEnumMappingOrNull(col("macroarea_raw"), macroareaMapping)
-            .as("macroarea")) ++ auditCols(loadTime): _*)
+            .as("macroarea")) ++ Audit.columns(loadTime): _*)
   }
 
   /** `migrate_resolution_types` (`src/core.py:715-747`): delibera + atto
@@ -137,11 +130,11 @@ object DimensionPipelines {
     val delib = tipoDelibera.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        upper(trim(col("NOME"))).as("name")) ++ auditCols(loadTime): _*)
+        upper(trim(col("NOME"))).as("name")) ++ Audit.columns(loadTime): _*)
     val atti = tipoAtto.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        upper(trim(col("DESCR"))).as("name")) ++ auditCols(loadTime): _*)
+        upper(trim(col("DESCR"))).as("name")) ++ Audit.columns(loadTime): _*)
     val w = Window.partitionBy(col("name")).orderBy(col("id"))
     delib.unionByName(atti)
       .withColumn("__rn", row_number().over(w))
@@ -158,7 +151,7 @@ object DimensionPipelines {
         trim(col("DENOMINAZIONE")).as("name"),
         trim(col("DESCR")).as("description"),
         Text.handleId(col("ID_TITOLARE_FK")).as("company_id")) ++
-        auditCols(loadTime): _*)
+        Audit.columns(loadTime): _*)
 
   /** `migrate_production_factor_types` (`src/core.py:1086-1115`): DESCR
     * doubles as `code` with whitespace runs collapsed. */
@@ -170,7 +163,7 @@ object DimensionPipelines {
         trim(col("NOME")).as("name"),
         Text.handleText(col("DESCR")).as("code"),
         trim(col("TIPOLOGIA_FATT_PROD")).as("category")) ++
-        auditCols(loadTime): _*)
+        Audit.columns(loadTime): _*)
 
   /** ""/"?"/null → 0, else UInt16-pinned int (`src/core.py:1131-1143`).
     * Documented divergence: other garbage nulls (try_cast) where the
@@ -202,7 +195,7 @@ object DimensionPipelines {
         bedCount(col("VALORE3")).as("num_hospital_beds"),
         nulText(col("VALORE2")).as("room_name"),
         nulText(col("DESCR")).as("room_code")) ++
-        auditCols(loadTime): _*)
+        Audit.columns(loadTime): _*)
 
   /** `migrate_udo_type_classifications` (`src/core.py:1167-1196`). */
   def udoTypeClassifications(
@@ -210,7 +203,7 @@ object DimensionPipelines {
     classificazioneUdoTempl.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        trim(col("NOME")).as("name")) ++ auditCols(loadTime): _*)
+        trim(col("NOME")).as("name")) ++ Audit.columns(loadTime): _*)
 
   /** `migrate_user_companies` (`src/core.py:1917-1952`): the operator
     * bridge; is_legal_representative is the reference's open TODO —
@@ -222,7 +215,7 @@ object DimensionPipelines {
         lit(false).as("is_legal_representative"),
         Text.handleId(col("ID_UTENTE_FK")).as("user_id"),
         Text.handleId(col("ID_TITOLARE_FK")).as("company_id")) ++
-        auditCols(loadTime): _*)
+        Audit.columns(loadTime): _*)
 
   /** The three two-column bridge migrations, one shape
     * (`src/core.py:1536-1553` udo_production_factors, `:1556-1573`

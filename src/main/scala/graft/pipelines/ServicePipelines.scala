@@ -12,13 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object ServicePipelines {
 
-  private def auditCols(loadTime: Column): Seq[Column] =
-    Audit.handleTimestamps(
-      Audit.romeToUtc(col("CREATION")),
-      Audit.romeToUtc(col("LAST_MOD")),
-      lower(trim(col("DISABLED"))), "s",
-      loadTime)
-
   /** Token normalization the auac module applies to enum-ish dimension
     * names: trim, uppercase, spaces → underscores, plus one extra literal
     * replacement ('/' for response types; '.' removed for procedure
@@ -65,7 +58,7 @@ object ServicePipelines {
             .otherwise(col("ID_TIPO_SPECIFICO_REQUISITO_FK")),
           lit(fallbackId)).as("requirement_taxonomy_id"),
         Text.handleId(col("ID_TIPO_RISPOSTA_FK")).as("risposta_fk")) ++
-        auditCols(loadTime): _*)
+        Audit.columns(loadTime): _*)
       .join(broadcast(risposta), col("risposta_fk") === col("tr_id"), "left")
       .drop("risposta_fk", "tr_id")
   }

@@ -48,4 +48,15 @@ object Audit {
     handleCreatedAt(creation, default).as("created_at"),
     handleUpdatedAt(lastMod, creation, default).as("updated_at"),
     handleDisabledAt(flag, disabledValue, lastMod, creation).as("disabled_at"))
+
+  /** The triple every Oracle-sourced migration pipeline appends: Rome-local
+    * `CREATION`/`LAST_MOD` to UTC, disabled when `DISABLED == 'S'`
+    * (case/space dirty), `loadTime` the fallback. Reference:
+    * `src/utils.py:388-398`. */
+  def columns(loadTime: Column): Seq[Column] =
+    handleTimestamps(
+      romeToUtc(col("CREATION")),
+      romeToUtc(col("LAST_MOD")),
+      lower(trim(col("DISABLED"))), "s",
+      loadTime)
 }

@@ -122,4 +122,8 @@ class AllQueriesExecuteSpec extends AnyFunSuite {
     val stale = PlanBudget.allowed.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"PlanBudget.allowed names unknown queries: $stale")
   }
+
+  test("SparkEntry.entry, the driver's smoke query, returns rows at sf0.001") {
+    assert(SparkEntry.entry(TestSpark.spark).count() > 0)
+  }
 }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DevMainConfSpec extends AnyFunSuite {
 
   test("repeat counts parse as positive ints, naming the variable when malformed") {
-    for (name <- Seq("SPARK_GRAFT_BENCH_ROUNDS", "SPARK_GRAFT_PROFILE_ITERS", "REPS")) {
+    for (name <- Seq("SPARK_GRAFT_BENCH_ROUNDS")) {
       assert(GraftSession.positiveInt(Map.empty[String, String].get, name).isEmpty)
       assert(GraftSession.positiveInt(Map(name -> " 3 ").get, name).contains(3))
       for (bad <- Seq("0", "-1", "", "three", "2.5", "99999999999")) {
@@ -33,5 +33,16 @@ class DevMainConfSpec extends AnyFunSuite {
       val empty = intercept[IllegalArgumentException](SparkEntry.selected(Map(name -> " , ").get, name))
       assert(empty.getMessage.contains(name), empty.getMessage)
     }
+  }
+
+  test("Bench runs exactly the queries SPARK_GRAFT_BENCH_ONLY names, else the headline") {
+    val outside = SparkEntry.queries.keys.filterNot(Bench.headline.contains).min
+    assert(Bench.selectNames(Map("SPARK_GRAFT_BENCH_ONLY" -> s"$outside,q1_pricing_summary").get) ==
+      Seq(outside, "q1_pricing_summary").sorted)
+    assert(Bench.selectNames(Map.empty[String, String].get) == Bench.headline)
+  }
+
+  test("every Bench headline name is a catalog query") {
+    assert(Bench.headline.filterNot(SparkEntry.queries.contains).isEmpty)
   }
 }

@@ -160,4 +160,14 @@ class LoopActionCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     val biased = delta(4, 8)(l => collected(RandomWalks.node2vecWalks(e, seeds, l)))
     assert((deep, biased) == ((6, 2), (6, 2)))
   }
+
+  test("Selection: one quickselect round per halving") {
+    // two buckets halve the distinct candidates each round: 8 rows resolve
+    // in 3 rounds, 32 in 5. A round spends two actions and two jobs, the
+    // quantile probe that materializes its cache and the bucket count; it
+    // reads its predecessor's cache directly, with no truncation.
+    def run(n: Int) = Selection.kthOfCount((1L to n.toLong).toDF("v"), "v",
+      total => (total + 1) / 2, buckets = 2, localLimit = 1L)
+    assert(delta(8, 32)(run) == (4, 4))
+  }
 }

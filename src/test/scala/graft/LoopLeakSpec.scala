@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ConnectedComponents, Mis, Scc, TreeDepth}
+import graft.operators.{ConnectedComponents, Mis, Scc, Selection, TreeDepth}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-loop operators' refusal paths release every cache they
@@ -87,5 +87,12 @@ class LoopLeakSpec extends AnyFunSuite {
     val msg = refusesWithoutLeak(ConnectedComponents.starContractionWithRelease(
       (1L to 10L).toDF("id"), "id", chain.toDF("a", "b"), "a", "b", maxIters = 1))
     assert(msg.contains("did not converge"))
+  }
+
+  test("Selection.kthOfCount with a rank past the row count") {
+    // the rank is checked after the first round has pinned its frame
+    val msg = refusesWithoutLeak(Selection.kthOfCount(
+      (1L to 20L).toDF("v"), "v", total => total + 1, buckets = 2, localLimit = 1L))
+    assert(msg.contains("exceeds row count"))
   }
 }
