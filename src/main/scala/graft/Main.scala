@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{Codegen, GraftSession}
+import graft.engine.GraftSession
 import graft.io.{ObjectStore, ParquetSource, S3}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import graft.pipelines.{CorePipelines, DimensionPipelines, PoaPipelines, ServicePipelines}
@@ -22,9 +22,14 @@ import scala.util.control.NonFatal
   * functions for `graft.io.Jdbc` reads/appends — the pipeline bodies are
   * already pure DataFrame → DataFrame.
   *
-  * Flags: `--modules <list>` (default all), `--list` (print the selected
-  * execution order, run nothing), `--in <dir>` / `--out <dir>` (required
-  * unless --list).
+  * Each pipeline is declared once, in one form, in [[registry]]; the
+  * [[Runner]] orders them, selects the modules and runs each one without
+  * generated code.
+  *
+  * Flags: `--modules <list>` (default all), `--list` (print the execution
+  * order a run of the selection would have, run nothing; a selection that
+  * severs the DAG fails as the run would), `--in <dir>` / `--out <dir>`
+  * (required unless --list).
   */
 object Main {
 
@@ -89,299 +94,177 @@ object Main {
     * distinct path is resolved once, from one footer read where the plan
     * is built, instead of by a schema-inference job at every read.
     *
-    * Every pipeline runs without generated code ([[Codegen.interpreted]]),
-    * upload jobs and `$out` read-backs included. A migration builds each
-    * plan once over a few thousand rows, so the Janino compiles of its
-    * plans cost more than generated code saves: on the benchmark's inputs
-    * they were 190 compile units and 7-11 s of a 26-37 s cold pass.
-    * Compiled and interpreted runs were compared per pipeline on inputs
-    * of 6.2 to 110 MiB (README "Scale posture"): the pass was no slower
-    * interpreted at any of them, although from 21.7 MiB up the pipelines
-    * over the largest tables were. */
+    * Every pipeline is declared by `pipeline(name, module, dependsOn)` with
+    * a body over an `Io` handle, whose `sink` writes the pipeline's own
+    * target: the target table is the pipeline's name. [[Runner.run]] runs
+    * them without generated code. */
   def registry(in: String, out: String,
-      sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] =
-    pipelines(in, out, sources).map { p =>
-      new Pipeline {
-        val name = p.name
-        override val dependsOn = p.dependsOn
-        override val module = p.module
-        def run(ctx: PipelineContext): Unit = Codegen.interpreted(ctx.spark)(p.run(ctx))
-      }
+      sources: ParquetSource.Memo = new ParquetSource.Memo): Seq[Pipeline] = {
+    final class Io(val spark: SparkSession, name: String) {
+      def src(table: String): DataFrame = sources.read(spark, s"$in/$table.parquet")
+      def back(table: String): DataFrame = sources.read(spark, target(table))
+      def sink(df: DataFrame): Unit = df.write.mode("overwrite").parquet(target(name))
+      def target(table: String): String = s"$out/$table.parquet"
     }
-
-  /** The registry's pipelines as they run with generated code: specs
-    * compare the two on the same fixtures. */
-  private[graft] def pipelines(in: String, out: String, sources: ParquetSource.Memo): Seq[Pipeline] = {
-    def src(spark: SparkSession, table: String): DataFrame =
-      sources.read(spark, s"$in/$table.parquet")
-    def back(spark: SparkSession, table: String): DataFrame =
-      sources.read(spark, s"$out/$table.parquet")
-    def sink(df: DataFrame, table: String): Unit =
-      df.write.mode("overwrite").parquet(s"$out/$table.parquet")
-    val load = current_timestamp()
-    /** CSV-seed passthrough pipelines (regions/provinces/municipalities/
-      * permissions): the reference loads these verbatim from seed files. */
-    def seedPipeline(pname: String, ddl: String) =
-      new Pipeline {
-        val name = pname
-        def run(ctx: PipelineContext): Unit =
-          sink(seedCsv(ctx.spark, s"$in/seed/$pname.csv", ddl), pname)
-      }
-    /** One-source one-function pipelines, the dominant registry shape. */
-    def simple(pname: String, table: String, mod: String = "core")(
-        body: (PipelineContext, DataFrame) => DataFrame) =
+    def pipeline(pname: String, mod: String = "core", deps: Seq[String] = Nil)(
+        body: Io => Unit): Pipeline =
       new Pipeline {
         val name = pname
         override val module = mod
-        def run(ctx: PipelineContext): Unit =
-          sink(body(ctx, src(ctx.spark, table)), pname)
+        override val dependsOn = deps
+        def run(ctx: PipelineContext): Unit = body(new Io(ctx.spark, pname))
       }
-    // Hoisted OUT of the anonymous Pipeline below: an inline lambda there
-    // would close over the Pipeline instance (which holds a SparkSession-
-    // touching run body) and fail task serialization; this one captures
-    // only the path string / the serializable S3 config.
+    val load = current_timestamp()
+    // Hoisted OUT of the resolutions body below: the upload ships this
+    // factory to every task, and a lambda written inside a pipeline could
+    // close over the Pipeline or its Io handle (both hold the
+    // SparkSession) and fail task serialization; this one captures only
+    // the path string / the serializable S3 config.
     val resolutionClient = objectClientFactory(s"$out/_objects")
-    seeds.map { case (pname, ddl) => seedPipeline(pname, ddl) } ++ Seq(
-      simple("ulss", "ulss_territoriale") { (_, d) =>
-        DimensionPipelines.ulss(d) },
-      simple("districts", "distretto_templ") { (_, d) =>
-        DimensionPipelines.districts(d, load) },
-      simple("company_types", "tipo_titolare_templ") { (_, d) =>
-        DimensionPipelines.companyTypes(d, load) },
-      simple("physical_structures", "struttura_model") { (_, d) =>
-        DimensionPipelines.physicalStructures(d, load) },
-      simple("buildings", "edificio_str_templ") { (_, d) =>
-        DimensionPipelines.buildings(d, load) },
-      new Pipeline {
-        val name = "grouping_specialties"
-        def run(ctx: PipelineContext): Unit = sink(
-          DimensionPipelines.groupingSpecialties(
-            src(ctx.spark, "ragg_discpl"),
-            src(ctx.spark, "macroarea_programmazione"), load), "grouping_specialties")
+    // CSV-seed passthrough pipelines (regions/provinces/municipalities/
+    // permissions): the reference loads these verbatim from seed files.
+    seeds.map { case (pname, ddl) =>
+      pipeline(pname)(io => io.sink(seedCsv(io.spark, s"$in/seed/$pname.csv", ddl)))
+    } ++ Seq(
+      pipeline("ulss")(io => io.sink(DimensionPipelines.ulss(io.src("ulss_territoriale")))),
+      pipeline("districts")(io =>
+        io.sink(DimensionPipelines.districts(io.src("distretto_templ"), load))),
+      pipeline("company_types")(io =>
+        io.sink(DimensionPipelines.companyTypes(io.src("tipo_titolare_templ"), load))),
+      pipeline("physical_structures")(io =>
+        io.sink(DimensionPipelines.physicalStructures(io.src("struttura_model"), load))),
+      pipeline("buildings")(io =>
+        io.sink(DimensionPipelines.buildings(io.src("edificio_str_templ"), load))),
+      pipeline("grouping_specialties")(io => io.sink(DimensionPipelines.groupingSpecialties(
+        io.src("ragg_discpl"), io.src("macroarea_programmazione"), load))),
+      pipeline("resolution_types")(io => io.sink(DimensionPipelines.resolutionTypes(
+        io.src("tipo_delibera"), io.src("tipo_atto"), load))),
+      pipeline("operational_units")(io =>
+        io.sink(DimensionPipelines.operationalUnits(io.src("uo_model"), load))),
+      pipeline("production_factor_types")(io => io.sink(
+        DimensionPipelines.productionFactorTypes(io.src("tipo_fattore_prod_templ"), load))),
+      pipeline("production_factors")(io =>
+        io.sink(DimensionPipelines.productionFactors(io.src("fatt_prod_udo_model"), load))),
+      pipeline("udo_type_classifications")(io => io.sink(
+        DimensionPipelines.udoTypeClassifications(io.src("classificazione_udo_templ"), load))),
+      pipeline("user_companies")(io =>
+        io.sink(DimensionPipelines.userCompanies(io.src("operatore_model"), load))),
+      pipeline("udo_production_factors")(io => io.sink(DimensionPipelines.bindPair(
+        io.src("bind_udo_fatt_prod"),
+        "ID_FATTORE_FK", "production_factor_id", "ID_UDO_FK", "udo_id"))),
+      pipeline("udo_type_production_factor_types")(io => io.sink(DimensionPipelines.bindPair(
+        io.src("bind_tipo_22_tipo_fatt"),
+        "ID_TIPO_UDO_22_FK", "udo_type_id", "ID_TIPO_FATT_FK", "production_factor_type_id"))),
+      pipeline("udo_resolutions")(io => io.sink(DimensionPipelines.bindPair(
+        io.src("bind_atto_udo"), "ID_UDO_FK", "udo_id", "ID_ATTO_FK", "resolution_id"))),
+      pipeline("udo_specialties")(io => io.sink(CorePipelines.udoSpecialties(
+        io.src("bind_udo_branca"), io.src("bind_udo_branca_altro"),
+        io.src("bind_udo_disciplina"), io.src("uo_model")))),
+      pipeline("requirement_taxonomies", "auac")(io => io.sink(
+        ServicePipelines.requirementTaxonomies(
+          io.src("tipo_requisito"), io.src("tipo_specifico_requisito"), load))),
+      pipeline("requirement_lists", "auac")(io =>
+        io.sink(ServicePipelines.requirementLists(io.src("lista_requisiti_templ"), load))),
+      pipeline("cronos_taxonomies", "cronos")(io =>
+        io.sink(ServicePipelines.cronosTaxonomy(io.src("classificazione_programmazione")))),
+      pipeline("dm70_taxonomies", "cronos")(io =>
+        io.sink(ServicePipelines.cronosTaxonomy(io.src("classificazione_dm_70")))),
+      pipeline("toponyms")(io => io.sink(CorePipelines.toponyms(io.src("toponimo_templ"), load))),
+      // municipalities out-read: the reference joins the MIGRATED table
+      // (src/core.py:288), same single-source-of-truth edge as
+      // operational_offices/users.
+      pipeline("companies", deps = Seq("municipalities"))(io => io.sink(CorePipelines.companies(
+        io.src("titolare_model"), io.src("tipologia_richiedente"),
+        io.src("natura_titolare_templ"), io.back("municipalities"), load))),
+      pipeline("resolutions") { io =>
+        val branches = CorePipelines.resolutionBranches(
+          io.src("delibera_templ"), io.src("tipo_delibera"),
+          io.src("atto_model"), io.src("tipo_atto"), load)
+        val (mapped, release) = CorePipelines.attachMappingWithRelease(
+          branches, "resolutions", resolutionClient)
+        try io.sink(CorePipelines.disambiguateNames(mapped).drop("attachment"))
+        finally release()
       },
-      new Pipeline {
-        val name = "resolution_types"
-        def run(ctx: PipelineContext): Unit = sink(
-          DimensionPipelines.resolutionTypes(
-            src(ctx.spark, "tipo_delibera"),
-            src(ctx.spark, "tipo_atto"), load), "resolution_types")
-      },
-      simple("operational_units", "uo_model") { (_, d) =>
-        DimensionPipelines.operationalUnits(d, load) },
-      simple("production_factor_types", "tipo_fattore_prod_templ") { (_, d) =>
-        DimensionPipelines.productionFactorTypes(d, load) },
-      simple("production_factors", "fatt_prod_udo_model") { (_, d) =>
-        DimensionPipelines.productionFactors(d, load) },
-      simple("udo_type_classifications", "classificazione_udo_templ") { (_, d) =>
-        DimensionPipelines.udoTypeClassifications(d, load) },
-      simple("user_companies", "operatore_model") { (_, d) =>
-        DimensionPipelines.userCompanies(d, load) },
-      simple("udo_production_factors", "bind_udo_fatt_prod") { (_, d) =>
-        DimensionPipelines.bindPair(d,
-          "ID_FATTORE_FK", "production_factor_id", "ID_UDO_FK", "udo_id") },
-      simple("udo_type_production_factor_types", "bind_tipo_22_tipo_fatt") { (_, d) =>
-        DimensionPipelines.bindPair(d,
-          "ID_TIPO_UDO_22_FK", "udo_type_id", "ID_TIPO_FATT_FK", "production_factor_type_id") },
-      simple("udo_resolutions", "bind_atto_udo") { (_, d) =>
-        DimensionPipelines.bindPair(d,
-          "ID_UDO_FK", "udo_id", "ID_ATTO_FK", "resolution_id") },
-      new Pipeline {
-        val name = "udo_specialties"
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.udoSpecialties(
-            src(ctx.spark, "bind_udo_branca"),
-            src(ctx.spark, "bind_udo_branca_altro"),
-            src(ctx.spark, "bind_udo_disciplina"),
-            src(ctx.spark, "uo_model")), "udo_specialties")
-      },
-      new Pipeline {
-        val name = "requirement_taxonomies"
-        override val module = "auac"
-        def run(ctx: PipelineContext): Unit = sink(
-          ServicePipelines.requirementTaxonomies(
-            src(ctx.spark, "tipo_requisito"),
-            src(ctx.spark, "tipo_specifico_requisito"), load), "requirement_taxonomies")
-      },
-      simple("requirement_lists", "lista_requisiti_templ", mod = "auac") { (_, d) =>
-        ServicePipelines.requirementLists(d, load) },
-      simple("cronos_taxonomies", "classificazione_programmazione", mod = "cronos") { (_, d) =>
-        ServicePipelines.cronosTaxonomy(d) },
-      simple("dm70_taxonomies", "classificazione_dm_70", mod = "cronos") { (_, d) =>
-        ServicePipelines.cronosTaxonomy(d) },
-      new Pipeline {
-        val name = "toponyms"
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.toponyms(src(ctx.spark, "toponimo_templ"), load), "toponyms")
-      },
-      new Pipeline {
-        val name = "companies"
-        // municipalities out-read: the reference joins the MIGRATED table
-        // (src/core.py:288), same single-source-of-truth edge as
-        // operational_offices/users.
-        override val dependsOn = Seq("municipalities")
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.companies(
-            src(ctx.spark, "titolare_model"),
-            src(ctx.spark, "tipologia_richiedente"),
-            src(ctx.spark, "natura_titolare_templ"),
-            back(ctx.spark, "municipalities"), load), "companies")
-      },
-      new Pipeline {
-        val name = "resolutions"
-        def run(ctx: PipelineContext): Unit = {
-          val branches = CorePipelines.resolutionBranches(
-            src(ctx.spark, "delibera_templ"), src(ctx.spark, "tipo_delibera"),
-            src(ctx.spark, "atto_model"), src(ctx.spark, "tipo_atto"), load)
-          val (mapped, release) = CorePipelines.attachMappingWithRelease(
-            branches, "resolutions", resolutionClient)
-          try sink(CorePipelines.disambiguateNames(mapped).drop("attachment"), "resolutions")
-          finally release()
-        }
-      },
-      new Pipeline {
-        val name = "udo_types"
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.udoTypes(
-            src(ctx.spark, "tipo_udo_22_templ"),
-            src(ctx.spark, "bind_tipo_22_ambito"),
-            src(ctx.spark, "ambito_templ"),
-            src(ctx.spark, "bind_tipo_22_natura"),
-            src(ctx.spark, "natura_titolare_templ"),
-            src(ctx.spark, "bind_tipo_22_flusso"),
-            src(ctx.spark, "flusso_templ"), load), "udo_types")
-      },
-      new Pipeline {
-        val name = "specialties"
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.specialties(
-            src(ctx.spark, "disciplina_templ"),
-            src(ctx.spark, "branca_templ"),
-            src(ctx.spark, "artic_branca_altro_templ"), load), "specialties")
-      },
-      new Pipeline {
-        val name = "requirements"
-        override val module = "auac"
-        // requirement_taxonomies is read BACK from the target in the
-        // reference (src/auac.py:150) — a real DAG edge, so the fallback
-        // scalar always finds the '-' row the upstream pipeline minted.
-        override val dependsOn = Seq("requirement_taxonomies")
-        def run(ctx: PipelineContext): Unit = sink(
-          ServicePipelines.requirements(
-            src(ctx.spark, "requisito_templ"),
-            src(ctx.spark, "tipo_risposta"),
-            back(ctx.spark, "requirement_taxonomies"),
-            load), "requirements")
-      },
-      new Pipeline {
-        val name = "procedures"
-        override val module = "auac"
-        def run(ctx: PipelineContext): Unit = sink(
-          ServicePipelines.procedures(
-            src(ctx.spark, "domanda_inst"),
-            src(ctx.spark, "tipo_proc_templ"), load), "procedures")
-      },
-      new Pipeline {
-        val name = "healthcare_companies"
-        override val module = "cronos"
-        // The reference joins the MIGRATED ulss target read back from PG
-        // (src/cronos.py:100) — at the parquet seam that target is
-        // $out/ulss.parquet with the surrogate id the ulss pipeline mints.
-        // Reading $in/ulss.parquet here instead would let two independent
-        // ulss sources drift. Consequence of the real edge: cronos cannot
-        // run without core in the same selection (`--modules core,cronos`
-        // or all) — the Runner refuses a severed DAG rather than joining
-        // stale data, which is the fail-fast the reference only gets by
-        // assuming core already populated PG.
-        override val dependsOn = Seq("ulss")
-        def run(ctx: PipelineContext): Unit = sink(
-          ServicePipelines.healthcareCompanies(
-            src(ctx.spark, "azienda_sanitaria"),
-            back(ctx.spark, "ulss")), "healthcare_companies")
-      },
-      new Pipeline {
-        val name = "operational_offices"
-        // municipalities is read BACK from the migrated target
-        // (src/core.py:429 reads the PG table the municipalities seed load
-        // wrote) — same out-read + dependsOn pattern as requirements /
-        // udo_status_history: one municipalities source of truth, not an
-        // $in copy that can drift from the seed the DAG actually loaded.
-        override val dependsOn = Seq("municipalities")
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.operationalOffices(
-            src(ctx.spark, "sede_oper_model"),
-            back(ctx.spark, "municipalities"),
-            src(ctx.spark, "tipo_punto_fisico_templ"), load), "operational_offices")
-      },
-      new Pipeline {
-        val name = "udos"
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.udos(
-            src(ctx.spark, "udo_model"),
-            src(ctx.spark, "sede_oper_model"),
-            src(ctx.spark, "struttura_model"),
-            src(ctx.spark, "uo_model"), load), "udos")
-      },
-      new Pipeline {
-        val name = "udo_status_history"
-        // The read-back validation consumes the LOADED udos target
-        // (src/core.py:1770-1786) — a genuine DAG edge, not an implied
-        // order. The reference's warn-and-continue on an unreadable
-        // target is modeled by the Option: read failure -> None -> keep
-        // every row, log the warn. The memo resolves the path eagerly, so
-        // a missing or unreadable target fails inside the try, and caches
-        // nothing when it does.
-        override val dependsOn = Seq("udos")
-        def run(ctx: PipelineContext): Unit = {
-          val target =
-            try Some(back(ctx.spark, "udos"))
-            catch { case NonFatal(e) =>
-              System.err.println(
-                s"[udo_status_history] could not read back udos target " +
-                  s"($out/udos.parquet): ${e.getMessage} — continuing unvalidated")
-              None
-            }
-          sink(
-            CorePipelines.udosHistory(
-              src(ctx.spark, "stato_udo"),
-              src(ctx.spark, "udo_model"),
-              src(ctx.spark, "storico_posti_letto"),
-              target), "udo_status_history")
-        }
-      },
-      new Pipeline {
-        val name = "poa_truncate"
-        override val module = "poa"
-        // Parquet-seam analogue of the reference's TRUNCATE-only poa
-        // module (src/poa.py:28-52): remove each target table's output.
-        // Deletion goes through the Hadoop FileSystem resolved FROM the
-        // out path — java.io.File would be a silent no-op on any
-        // non-local URI (hdfs://, s3a://: exists() false, nothing
-        // deleted), leaving stale poa tables exactly where the
-        // reference's TRUNCATE always clears them. A DB-backed
-        // deployment calls PoaPipelines.truncate(conn).
-        def run(ctx: PipelineContext): Unit = {
-          val conf = ctx.spark.sparkContext.hadoopConfiguration
-          PoaPipelines.tables.foreach { t =>
-            val p = new org.apache.hadoop.fs.Path(s"$out/$t.parquet")
-            val fs = p.getFileSystem(conf)
-            if (fs.exists(p)) { fs.delete(p, true); () }
+      pipeline("udo_types")(io => io.sink(CorePipelines.udoTypes(
+        io.src("tipo_udo_22_templ"),
+        io.src("bind_tipo_22_ambito"), io.src("ambito_templ"),
+        io.src("bind_tipo_22_natura"), io.src("natura_titolare_templ"),
+        io.src("bind_tipo_22_flusso"), io.src("flusso_templ"), load))),
+      pipeline("specialties")(io => io.sink(CorePipelines.specialties(
+        io.src("disciplina_templ"), io.src("branca_templ"),
+        io.src("artic_branca_altro_templ"), load))),
+      // requirement_taxonomies is read BACK from the target in the
+      // reference (src/auac.py:150) — a real DAG edge, so the fallback
+      // scalar always finds the '-' row the upstream pipeline minted.
+      pipeline("requirements", "auac", Seq("requirement_taxonomies"))(io =>
+        io.sink(ServicePipelines.requirements(io.src("requisito_templ"),
+          io.src("tipo_risposta"), io.back("requirement_taxonomies"), load))),
+      pipeline("procedures", "auac")(io => io.sink(ServicePipelines.procedures(
+        io.src("domanda_inst"), io.src("tipo_proc_templ"), load))),
+      // The reference joins the MIGRATED ulss target read back from PG
+      // (src/cronos.py:100) — at the parquet seam that target is
+      // $out/ulss.parquet with the surrogate id the ulss pipeline mints.
+      // Reading $in/ulss.parquet here instead would let two independent
+      // ulss sources drift. Consequence of the real edge: cronos cannot
+      // run without core in the same selection (`--modules core,cronos`
+      // or all) — the Runner refuses a severed DAG rather than joining
+      // stale data, which is the fail-fast the reference only gets by
+      // assuming core already populated PG.
+      pipeline("healthcare_companies", "cronos", Seq("ulss"))(io => io.sink(
+        ServicePipelines.healthcareCompanies(io.src("azienda_sanitaria"), io.back("ulss")))),
+      // municipalities is read BACK from the migrated target
+      // (src/core.py:429 reads the PG table the municipalities seed load
+      // wrote) — same out-read + dependsOn pattern as requirements /
+      // udo_status_history: one municipalities source of truth, not an
+      // $in copy that can drift from the seed the DAG actually loaded.
+      pipeline("operational_offices", deps = Seq("municipalities"))(io =>
+        io.sink(CorePipelines.operationalOffices(io.src("sede_oper_model"),
+          io.back("municipalities"), io.src("tipo_punto_fisico_templ"), load))),
+      pipeline("udos")(io => io.sink(CorePipelines.udos(
+        io.src("udo_model"), io.src("sede_oper_model"),
+        io.src("struttura_model"), io.src("uo_model"), load))),
+      // The read-back validation consumes the LOADED udos target
+      // (src/core.py:1770-1786) — a genuine DAG edge, not an implied
+      // order. The reference's warn-and-continue on an unreadable
+      // target is modeled by the Option: read failure -> None -> keep
+      // every row, log the warn. The memo resolves the path eagerly, so
+      // a missing or unreadable target fails inside the try, and caches
+      // nothing when it does.
+      pipeline("udo_status_history", deps = Seq("udos")) { io =>
+        val target =
+          try Some(io.back("udos"))
+          catch { case NonFatal(e) =>
+            System.err.println(
+              s"[udo_status_history] could not read back udos target " +
+                s"(${io.target("udos")}): ${e.getMessage} — continuing unvalidated")
+            None
           }
+        io.sink(CorePipelines.udosHistory(
+          io.src("stato_udo"), io.src("udo_model"), io.src("storico_posti_letto"), target))
+      },
+      // Parquet-seam analogue of the reference's TRUNCATE-only poa
+      // module (src/poa.py:28-52): remove each target table's output.
+      // Deletion goes through the Hadoop FileSystem resolved FROM the
+      // out path — java.io.File would be a silent no-op on any
+      // non-local URI (hdfs://, s3a://: exists() false, nothing
+      // deleted), leaving stale poa tables exactly where the
+      // reference's TRUNCATE always clears them. A DB-backed
+      // deployment calls PoaPipelines.truncate(conn).
+      pipeline("poa_truncate", "poa") { io =>
+        val conf = io.spark.sparkContext.hadoopConfiguration
+        PoaPipelines.tables.foreach { t =>
+          val p = new org.apache.hadoop.fs.Path(io.target(t))
+          val fs = p.getFileSystem(conf)
+          if (fs.exists(p)) { fs.delete(p, true); () }
         }
       },
-      new Pipeline {
-        val name = "users"
-        // users joins the already-migrated municipalities dimension (the
-        // reference reads it back from PG, src/core.py:1829) — read the
-        // $out target the municipalities pipeline wrote, same pattern as
-        // operational_offices, so both consumers see the ONE loaded copy.
-        override val dependsOn = Seq("companies", "municipalities")
-        def run(ctx: PipelineContext): Unit = sink(
-          CorePipelines.users(
-            src(ctx.spark, "utente_model"),
-            src(ctx.spark, "anagrafica_utente_model"),
-            src(ctx.spark, "uo_model"),
-            back(ctx.spark, "municipalities"), load), "users")
-      })
+      // users joins the already-migrated municipalities dimension (the
+      // reference reads it back from PG, src/core.py:1829) — read the
+      // $out target the municipalities pipeline wrote, same pattern as
+      // operational_offices, so both consumers see the ONE loaded copy.
+      pipeline("users", deps = Seq("companies", "municipalities"))(io =>
+        io.sink(CorePipelines.users(io.src("utente_model"), io.src("anagrafica_utente_model"),
+          io.src("uo_model"), io.back("municipalities"), load))))
   }
 
   /** Object-store client factory for attachment uploads: a real
@@ -413,9 +296,7 @@ object Main {
     val args = parseArgs(argv, knownModules)
     if (args.list) {
       val pipes = registry(args.in.getOrElse("<in>"), args.out.getOrElse("<out>"))
-      val selected = Runner.order(pipes).filter(p =>
-        args.modules.contains("all") || args.modules.contains(p.module))
-      selected.foreach(p => println(s"${p.module}/${p.name}"))
+      Runner.select(pipes, args.modules).foreach(p => println(s"${p.module}/${p.name}"))
       return
     }
     val spark = GraftSession.local("graft-etl")

@@ -51,9 +51,9 @@ object Codegen {
     *
     * The setting is session-wide, not scoped to `body`'s own queries:
     * anything else running on the session meanwhile runs interpreted too.
-    * That is safe for its caller, [[graft.pipeline.Runner]], which runs
-    * one pipeline at a time, and the values are propagated to that
-    * pipeline's tasks with the rest of the session conf. */
+    * That is safe for its caller, [[graft.pipeline.Runner.run]], which runs
+    * each pipeline inside it, one pipeline at a time, and the values are
+    * propagated to that pipeline's tasks with the rest of the session conf. */
   def interpreted[T](spark: SparkSession)(body: => T): T = {
     val set = spark.conf.getAll
     val saved = InterpretedConf.map { case (k, _) => k -> set.get(k) }

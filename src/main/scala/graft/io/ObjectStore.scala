@@ -91,9 +91,9 @@ object ObjectStore {
     * `src/core.py:1006-1009`). `clientFactory` runs once per partition.
     *
     * PRECONDITION: id, name, and payload are non-null — callers filter
-    * the null-attachment half FIRST (as `attachMapping` does). Violations
-    * fail with a row-identifying error instead of an anonymous NPE deep
-    * in the client. */
+    * the null-attachment half FIRST (as `attachMappingWithRelease` does).
+    * Violations fail with a row-identifying error instead of an anonymous
+    * NPE deep in the client. */
   def upload(
       rows: DataFrame, bucket: String,
       clientFactory: () => Client,

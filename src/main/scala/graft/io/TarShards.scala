@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** WebDataset-style TAR shard ingestion — the de-facto container for
@@ -99,7 +99,7 @@ object TarShards {
     * REAL read path can oracle entry counts and byte totals from
     * `range()` arithmetic (the m7 pattern). Returns the directory. */
   def synthesizeShards(nShards: Int, samplesPerShard: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tarshards")
+    val dir = java.nio.file.Paths.get(GraftBridge.tempDir("graft_tarshards"))
     (1 to nShards).foreach { s =>
       val entries = (0 until samplesPerShard).flatMap { i =>
         val key = f"s$s%02d_$i%04d"

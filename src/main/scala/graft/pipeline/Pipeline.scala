@@ -45,34 +45,50 @@ object Runner {
     done.toSeq.map(byName)
   }
 
-  /** Run the selected modules ("all" or a set), fail-fast (first error
-    * aborts, matching main.py:65-71), logging elapsed time and codegen
-    * compiles per pipeline —
-    * through the timestamped [[RunLog]] when one is supplied (the
-    * reference's console+file dual sink), else silently (callers print
-    * the returned results). */
-  def run(
-      ctx: PipelineContext,
-      pipelines: Seq[Pipeline],
-      modules: Set[String] = Set("all"),
-      log: Option[RunLog] = None): Seq[Result] = {
+  /** The pipelines a run of `modules` ("all" or a set) runs, in run
+    * order. A selection that severs the DAG is refused: a selected pipeline
+    * whose dependency was filtered out would run against missing/stale
+    * upstream data with nothing surfacing it. */
+  def select(pipelines: Seq[Pipeline], modules: Set[String]): Seq[Pipeline] = {
     val selected = order(pipelines).filter(p =>
       modules.contains("all") || modules.contains(p.module))
-    // Module selection must not sever the DAG: a selected pipeline whose
-    // dependency was filtered out would run against missing/stale upstream
-    // data with nothing surfacing it.
     val selectedNames = selected.map(_.name).toSet
     selected.foreach(p => p.dependsOn.foreach(d =>
       require(selectedNames.contains(d),
         s"pipeline '${p.name}' (module '${p.module}') depends on '$d', " +
           s"which the module selection $modules excludes")))
-    selected.map { p =>
+    selected
+  }
+
+  /** Run the selected modules ([[select]]), fail-fast (first error
+    * aborts, matching main.py:65-71), logging elapsed time and codegen
+    * compiles per pipeline —
+    * through the timestamped [[RunLog]] when one is supplied (the
+    * reference's console+file dual sink), else silently (callers print
+    * the returned results).
+    *
+    * Every pipeline runs without generated code ([[Codegen.interpreted]]),
+    * upload jobs and `$out` read-backs included; the loop below runs one
+    * pipeline at a time, which that session-wide setting requires. A
+    * migration builds each plan once over a few thousand rows, so the
+    * Janino compiles of its plans cost more than generated code saves: on
+    * the benchmark's inputs they were 190 compile units and 7-11 s of a
+    * 26-37 s cold pass. Compiled and interpreted runs were compared per
+    * pipeline on inputs of 6.2 to 110 MiB (README "Scale posture"): the
+    * pass was no slower interpreted at any of them, although from 21.7 MiB
+    * up the pipelines over the largest tables were. */
+  def run(
+      ctx: PipelineContext,
+      pipelines: Seq[Pipeline],
+      modules: Set[String] = Set("all"),
+      log: Option[RunLog] = None): Seq[Result] = {
+    select(pipelines, modules).map { p =>
       val t0 = System.nanoTime()
       val codegen0 = Codegen.count()
       ctx.spark.sparkContext.setJobDescription(s"pipeline:${p.name}")
       log.foreach(_.info(s"Starting pipeline '${p.name}' (module ${p.module})"))
       try {
-        p.run(ctx)
+        Codegen.interpreted(ctx.spark)(p.run(ctx))
         val ms = (System.nanoTime() - t0) / 1000000
         ctx.spark.sparkContext.setJobDescription(null)
         // Pipelines run one at a time, so the JVM-wide compile counters'

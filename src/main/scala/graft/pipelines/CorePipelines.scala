@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    (`src/core.py:275-364`);
   *  - resolutions — branch/union/split/side-effect/join-back/rename
   *    (`src/core.py:750-1046`), decomposed into [[resolutionBranches]],
-  *    [[attachMapping]], and [[disambiguateNames]] so the object-store
+  *    [[attachMappingWithRelease]], and [[disambiguateNames]] so the object-store
   *    side effect sits between plannable stages;
   *  - [[udoTypes]] — arrays + grouped-list bridges + PG text[] literals
   *    (`src/core.py:1294-1455`), the full column list;
@@ -122,17 +122,8 @@ object CorePipelines {
     * the reference's MIME table — `src/core.py:709-712,938`), join the
     * id→object mapping back, and ASSERT completeness — every uploaded row
     * must have a mapping (`src/core.py:1012`). Returns the re-unioned frame
-    * (`src/core.py:1014-1020`).
-    *
-    * Long-lived sessions should prefer [[attachMappingWithRelease]] and
-    * call the release hook after the sink action — this form leaves the
-    * (bounded, metadata-only) mapping cache pinned for the session. */
-  def attachMapping(
-      resolutions: DataFrame, bucket: String,
-      clientFactory: () => ObjectStore.Client): DataFrame =
-    attachMappingWithRelease(resolutions, bucket, clientFactory)._1
-
-  /** [[attachMapping]] plus a cache-release hook.
+    * (`src/core.py:1014-1020`), with a hook that releases the mapping's
+    * cache.
     *
     * The upload `mapPartitions` executes exactly ONCE per run: the mapping
     * is persisted and forced by the completeness assert, so the caller's

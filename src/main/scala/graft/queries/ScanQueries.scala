@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.io.Tables
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -298,7 +298,7 @@ object ScanQueries {
       import org.apache.spark.sql.types._
       val sel = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_tfrecord").toString
+      val tmp = GraftBridge.tempDir("graft_tfrecord")
       val manifest = TfRecordExport
         .writeShards(sel.repartition(4, col("doc_id")), tmp)
         .collect() // 4-row manifest — bounded, and materializes the write
@@ -340,7 +340,7 @@ object ScanQueries {
         col("doc_id").cast("long").as("id"),
         concat(lit("https://example.com/doc/"), col("doc_id")).as("uri"),
         col("text").as("body"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_warc").toString
+      val tmp = GraftBridge.tempDir("graft_warc")
       WarcIo.writeShards(docs.repartition(4, col("id")), tmp).collect()
       WarcIo.readResponses(spark, tmp)
     },
@@ -377,7 +377,7 @@ object ScanQueries {
         col("doc_id").cast("long").as("id"),
         concat(lit("https://example.com/doc/"), col("doc_id")).as("uri"),
         html.as("body"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_wet").toString
+      val tmp = GraftBridge.tempDir("graft_wet")
       WarcIo.writeShards(docs.repartition(4, col("id")), tmp).collect()
       WarcIo.readResponses(spark, tmp)
         .select(col("target_uri"), HtmlText.extract(col("body")).as("clean_text"))
@@ -430,7 +430,7 @@ object ScanQueries {
         col("doc_id").cast("long").as("id"),
         concat(lit("https://example.com/doc/"), col("doc_id")).as("uri"),
         html.as("body"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_wat").toString
+      val tmp = GraftBridge.tempDir("graft_wat")
       WarcIo.writeShards(docs.repartition(4, col("id")), tmp).collect()
       WarcIo.readResponses(spark, tmp)
         .select(col("target_uri"), WatMeta.title(col("body")).as("title"),
@@ -456,7 +456,7 @@ object ScanQueries {
         |UNION ALL SELECT doc_id, NULL, lang, CAST(n_chars AS BIGINT), 2
         |FROM documents""".stripMargin) { (spark, dir) =>
       val docs = Tables.load(spark, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+      val tmp = GraftBridge.tempDir("graft_evolve")
       docs.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$tmp/batch=1")
       docs.select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
@@ -487,7 +487,7 @@ object ScanQueries {
       import org.apache.spark.sql.types._
       val sel = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val tmp = GraftBridge.tempDir("graft_compact")
       sel.repartition(16, col("doc_id")).write.mode("overwrite").parquet(s"$tmp/in")
       val inBytes = {
         val hp = new org.apache.hadoop.fs.Path(s"$tmp/in")
@@ -551,7 +551,7 @@ object ScanQueries {
         col("doc_id").cast("long").as("id"),
         concat(lit("https://example.com/doc/"), col("doc_id")).as("uri"),
         col("text").as("body"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_wat_req").toString
+      val tmp = GraftBridge.tempDir("graft_wat_req")
       WarcIo.writeShards(docs.repartition(4, col("id")), tmp,
         withCapture = true).collect()
       val meta = WarcIo.readMetadata(spark, tmp)
@@ -615,7 +615,7 @@ object ScanQueries {
         when(pmod(col("doc_id"), lit(3L)) === 1,
           concat(lit("/private/p"), col("doc_id")))
           .otherwise(concat(lit("/pub/p"), col("doc_id"))))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_crawl_funnel").toString
+      val tmp = GraftBridge.tempDir("graft_crawl_funnel")
       WarcIo.writeShards(
         src.select(col("doc_id").cast("long").as("id"), uri.as("uri"), html.as("body"))
           .repartition(4, col("id")), tmp).collect()
@@ -667,7 +667,7 @@ object ScanQueries {
       import org.apache.spark.sql.types._
       val sel = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_arrow").toString
+      val tmp = GraftBridge.tempDir("graft_arrow")
       val manifest = ArrowExport
         .writeShards(sel.repartition(4, col("doc_id")), tmp)
         .collect() // 4-row manifest — bounded, and materializes the write

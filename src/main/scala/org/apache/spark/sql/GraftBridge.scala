@@ -75,4 +75,11 @@ object GraftBridge {
     classic.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
   }
+
+  /** A fresh scratch directory `<java.io.tmpdir>/<prefix>-<uuid>`, deleted
+    * recursively when the JVM exits (Spark's own shutdown-hook registry,
+    * which also cleans its block-manager dirs). For query-local files that
+    * the returned frames read lazily, so they cannot be deleted sooner. */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
 }

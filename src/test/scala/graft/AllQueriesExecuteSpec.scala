@@ -98,9 +98,8 @@ class AllQueriesExecuteSpec extends AnyFunSuite {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
         val df = fn(spark, TestSpark.sfDir)
-        val plan = df.queryExecution.executedPlan.toString
-        val sp = "Exchange SinglePartition".r.findAllIn(plan).length
-        val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).length
+        val t = ExplainPlan.tally(df.queryExecution.executedPlan)
+        val (sp, bnlj) = (t.singlePartition, t.bnlj)
         val (aSp, aBnlj) = PlanBudget.allowed.getOrElse(name, (0, 0))
         if ((sp, bnlj) != (aSp, aBnlj))
           planDrift += s"$name: singlePartition=$sp (budget $aSp), bnlj=$bnlj (budget $aBnlj)"

@@ -60,6 +60,20 @@ class MainSpec extends AnyFunSuite {
     assert(pipes.filter(_.module == "poa").map(_.name) == Seq("poa_truncate"))
   }
 
+  test("module selection: what a run runs, in order; a severed DAG fails, --list too") {
+    import graft.pipeline.Runner
+    val pipes = Main.registry("/in", "/out")
+    assert(Runner.select(pipes, Set("auac")).map(_.name) ==
+      Seq("requirement_taxonomies", "requirement_lists", "procedures", "requirements"))
+    val all = Runner.select(pipes, Set("all"))
+    assert(all.size == 37 && all == Runner.order(pipes))
+    val severed = intercept[IllegalArgumentException](Runner.select(pipes, Set("cronos")))
+    assert(severed.getMessage.contains("depends on 'ulss'"), severed)
+    val listed = intercept[IllegalArgumentException](
+      Main.main(Array("--list", "--modules", "cronos")))
+    assert(listed.getMessage == severed.getMessage)
+  }
+
   test("end-to-end dispatch: all five pipelines run off parquet fixtures") {
     val in = java.nio.file.Files.createTempDirectory("graft-cli-in").toString
     val out = java.nio.file.Files.createTempDirectory("graft-cli-out").toString
@@ -171,23 +185,25 @@ class MainSpec extends AnyFunSuite {
 
   test("a registry run compiles a handful of units, and writes what a compiled run writes") {
     import graft.engine.Codegen
-    import graft.io.ParquetSource
     import graft.pipeline.{Pipeline, PipelineContext, Runner}
     val in = java.nio.file.Files.createTempDirectory("graft-interp-in").toString
     MigrationFixtures.write(spark, in)
-    def run(pipes: String => Seq[Pipeline]): (String, Codegen.Count) = {
+    val ctx = PipelineContext(spark)
+    def run(runAll: Seq[Pipeline] => Unit): (String, Codegen.Count) = {
       val out = java.nio.file.Files.createTempDirectory("graft-interp-out").toString
       // An empty class cache: each run compiles every unit it needs,
       // whatever ran before it in this JVM.
       Codegen.clearCache()
       val before = Codegen.count()
-      Runner.run(PipelineContext(spark), pipes(out))
+      runAll(Main.registry(in, out))
       (out, Codegen.count() - before)
     }
     val conf0 = codegenConf()
     val since = new java.sql.Timestamp(System.currentTimeMillis())
-    val (compiledOut, compiled) = run(out => Main.pipelines(in, out, new ParquetSource.Memo))
-    val (interpretedOut, interpreted) = run(out => Main.registry(in, out))
+    // The same pipelines in the same order, run with generated code: bare
+    // `run` calls, outside the Runner that runs them interpreted.
+    val (compiledOut, compiled) = run(pipes => Runner.order(pipes).foreach(_.run(ctx)))
+    val (interpretedOut, interpreted) = run(pipes => Runner.run(ctx, pipes))
     assert(codegenConf() == conf0, "the session's codegen settings are restored")
     // A Spark that stops honouring the factory-mode key fails here.
     assert(interpreted.compiles <= 15, s"the registry run compiled $interpreted")
@@ -212,8 +228,11 @@ class MainSpec extends AnyFunSuite {
     try {
       val conf0 = codegenConf()
       assert(conf0 == Seq(codegenKeys(0) -> None, codegenKeys(1) -> Some("CODEGEN_ONLY")))
-      // No seed under an empty input: the pipeline fails on its read.
-      intercept[org.apache.spark.sql.AnalysisException](pipes("regions").run(ctx))
+      // No seed under an empty input: the pipeline fails on its read, and
+      // the Runner rethrows that failure naming the pipeline.
+      val failed = intercept[RuntimeException](
+        graft.pipeline.Runner.run(ctx, Seq(pipes("regions"))))
+      assert(failed.getCause.isInstanceOf[org.apache.spark.sql.AnalysisException], failed)
       assert(codegenConf() == conf0)
       var inside = Seq.empty[(String, Option[String])]
       Codegen.interpreted(spark) { inside = codegenConf() }

@@ -59,10 +59,16 @@ class ObservabilitySpec extends AnyFunSuite {
     val idle = new Pipeline {
       val name = "idle"; def run(ctx: PipelineContext): Unit = ()
     }
+    // Runner runs pipelines interpreted, so a plain query compiles nothing;
+    // a generator with no interpreted fallback still compiles, as the
+    // migration's own such operators do.
     val compiling = new Pipeline {
       val name = "compiling"; override val dependsOn = Seq("idle")
-      def run(ctx: PipelineContext): Unit =
-        ctx.spark.range(4).selectExpr(s"id * 3 + $salt AS v").collect()
+      def run(ctx: PipelineContext): Unit = {
+        import org.apache.spark.sql.catalyst.expressions.Literal
+        import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+        GenerateUnsafeProjection.generate(Seq(Literal(salt)))
+      }
     }
     val results = Runner.run(PipelineContext(spark), Seq(idle, compiling), Set("all"), Some(log))
     log.close()

@@ -110,21 +110,23 @@ class ReferencePipelineSpec extends AnyFunSuite {
       "null NUMERO propagates to null name")
 
     val root = java.nio.file.Files.createTempDirectory("graft-os-test").toString
-    val merged = CorePipelines.attachMapping(
+    val (merged, release) = CorePipelines.attachMappingWithRelease(
       branches, "resolutions", () => new ObjectStore.LocalFsClient(root))
-    assert(merged.count() == 4)
-    val keys = merged.filter(col("object_key").isNotNull)
-      .collect().map(_.getAs[String]("object_key"))
-    assert(keys.length == 2, "both delibere uploaded, atti skipped")
-    keys.foreach(k => assert(
-      java.nio.file.Files.exists(java.nio.file.Paths.get(root, "resolutions", k)),
-      s"object $k must exist on the store"))
+    try {
+      assert(merged.count() == 4)
+      val keys = merged.filter(col("object_key").isNotNull)
+        .collect().map(_.getAs[String]("object_key"))
+      assert(keys.length == 2, "both delibere uploaded, atti skipped")
+      keys.foreach(k => assert(
+        java.nio.file.Files.exists(java.nio.file.Paths.get(root, "resolutions", k)),
+        s"object $k must exist on the store"))
 
-    val named = CorePipelines.disambiguateNames(merged)
-      .filter(col("name").startsWith("Delibera"))
-      .collect().map(r => r.getAs[String]("id") -> r.getAs[String]("name")).toMap
-    assert(named("d1") == "Delibera annuale", "first keeper unchanged (id order)")
-    assert(named("d2") == "Delibera annuale (1)", "second gets ' (1)'")
+      val named = CorePipelines.disambiguateNames(merged)
+        .filter(col("name").startsWith("Delibera"))
+        .collect().map(r => r.getAs[String]("id") -> r.getAs[String]("name")).toMap
+      assert(named("d1") == "Delibera annuale", "first keeper unchanged (id order)")
+      assert(named("d2") == "Delibera annuale (1)", "second gets ' (1)'")
+    } finally release()
   }
 
   test("upload executes exactly once per run; content type derives from the name") {
@@ -603,10 +605,13 @@ class ReferencePipelineSpec extends AnyFunSuite {
     val branches = CorePipelines.resolutionBranches(
       delibera, tipoDelibera, atto, tipoAtto, lit(load))
     val root = java.nio.file.Files.createTempDirectory("graft-os-test2").toString
-    def keysOf(): Seq[String] = CorePipelines.attachMapping(
+    def keysOf(): Seq[String] = {
+      val (merged, release) = CorePipelines.attachMappingWithRelease(
         branches, "b", () => new ObjectStore.LocalFsClient(root))
-      .filter(col("object_key").isNotNull)
-      .collect().map(_.getAs[String]("object_key")).toSeq.sorted
+      try merged.filter(col("object_key").isNotNull)
+        .collect().map(_.getAs[String]("object_key")).toSeq.sorted
+      finally release()
+    }
     assert(keysOf() == keysOf(), "retry/re-run must overwrite, not orphan")
   }
 }

@@ -162,6 +162,22 @@ class TarShardsSpec extends AnyFunSuite {
     assert(back.head._2.toSeq == data.toSeq)
   }
 
+  test("scratch directories live under java.io.tmpdir and are deleted at JVM exit") {
+    val dir = org.apache.spark.sql.GraftBridge.tempDir("graft_probe")
+    val f = new java.io.File(dir)
+    assert(f.isDirectory && f.getName.startsWith("graft_probe"))
+    assert(f.getParentFile.getCanonicalPath ==
+      new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath)
+    assert(org.apache.spark.TestBridge.deletedAtExit(dir))
+    val shards = TarShards.synthesizeShards(1, 1)
+    assert(new java.io.File(shards, "shard-0001.tar").isFile)
+    assert(org.apache.spark.TestBridge.deletedAtExit(shards))
+    val control = java.nio.file.Files.createTempDirectory("graft_control")
+    try assert(!org.apache.spark.TestBridge.deletedAtExit(control.toString),
+      "control: a plain temp directory is not registered")
+    finally java.nio.file.Files.delete(control)
+  }
+
   test("hostile input fails loudly: bad size field, overrun, non-advancing walk") {
     val good = TarShards.tarBytes(Seq("a.txt" -> "hello".getBytes))
     // corrupt the size field with non-octal garbage
