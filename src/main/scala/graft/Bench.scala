@@ -44,7 +44,7 @@ object Bench {
     "a23_exact_median",
     "e13_interval_overlap_join",
     // r8 verdict item 4: the shingle-graph family (triangles, ROI rollup,
-    // keeper election), one streaming batch twin, and the heaviest
+    // keeper election), first-touch attribution, and the heaviest
     // t-query — previously invisible cross-round.
     "d24_triangle_count",
     "d25_dedup_savings",

@@ -13,13 +13,6 @@ object GraftConf {
   final case class Knob(key: String, default: String, doc: String)
 
   val knobs: Seq[Knob] = Seq(
-    Knob("spark.graft.rangeJoin.bucketWidth", "0 (off)",
-      "Opt-in width for BucketedRangeJoinRule: point-in-interval theta " +
-        "joins rewrite to a bucketed equi join; width ≈ typical interval " +
-        "length. 0 disables the rewrite."),
-    Knob("spark.graft.rangeJoin.maxBucketsPerInterval", "4096",
-      "Guard for a mis-sized bucketWidth: an interval exploding past this " +
-        "many buckets fails loudly naming the conf instead of OOMing."),
     Knob("spark.graft.shingle.maxDf", "0 (off)",
       "Stop-shingle cap for the inverted-index Jaccard family: shingles " +
         "with document frequency above the cap are dropped from the " +

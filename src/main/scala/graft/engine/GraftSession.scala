@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** SparkSession factory for the graft engine.
   *
@@ -68,11 +68,7 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
-      // Managed-table warehouse for BUCKETED layouts (io/Bucketed): kept
-      // out of the repo tree; on a cluster this is the shared warehouse
-      // path instead.
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
+      .config("spark.sql.warehouse.dir", warehouseDir(sys.env.get))
       .config("spark.local.dir", localDir)
   }
 
@@ -128,6 +124,13 @@ object GraftSession {
           else (disk, s"disk: $shm has $vs")
         }
     }
+
+  /** Managed-table warehouse for bucketed layouts (`Layout.writeBucketed`):
+    * `SPARK_GRAFT_WAREHOUSE` on a deployment with a shared warehouse path,
+    * else a fresh directory of this JVM's own under `java.io.tmpdir`,
+    * deleted at exit, so two JVMs never save tables into one directory. */
+  private[graft] def warehouseDir(env: String => Option[String]): String =
+    env("SPARK_GRAFT_WAREHOUSE").getOrElse(GraftBridge.tempDir("graft_warehouse"))
 
   /** The engine's two size knobs: `SPARK_GRAFT_CPUS`, the local master's
     * thread count (default 32), and `SPARK_GRAFT_SHUFFLE_PARTITIONS`

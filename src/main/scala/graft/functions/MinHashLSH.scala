@@ -72,10 +72,8 @@ object MinHashLSH {
       xxhash64(concat_ws("_", slice(minhash, b * rowsPerBand + 1, rowsPerBand)))): _*)
 
   /** Exploded LSH band index: one (id, band_idx, sig) row per band — the
-    * shared probe/build shape for the batch self-join ([[candidatePairs]])
-    * and the streaming stream-static gate (EventStreams
-    * .nearDupCandidatesStream). Works on static AND streaming frames: the
-    * minhash fold and the posexplode are stateless per-row expressions. */
+    * build shape of the self-join in [[candidatePairs]]. The minhash fold
+    * and the posexplode are stateless per-row expressions. */
   def bandIndex(
       docs: DataFrame,
       idCol: String,

@@ -256,7 +256,7 @@ object NgramLm {
     *
     * Determinism: each discount is an exact RATIONAL of n1..n4 — the
     * numerators/denominators stay BigInt, the value rounds HALF-UP to
-    * thousandths (the [[estimateDiscount]] convention), clamps into
+    * thousandths, clamps into
     * [1, 999] for D1 and [1, 1000·i] for D2/D3+ (above: D1 must stay
     * strictly inside (0,1) for singleton mass to survive, and a D2/D3+
     * exceeding its bucket's count would leave negative mass — the
@@ -828,31 +828,6 @@ object NgramLm {
           .when(col("_ppb_tertile") === 0, "head")
           .when(col("_ppb_tertile") === 1, "middle")
           .otherwise("tail").as("bucket"))
-  }
-
-  /** Chen & Goodman (1998)'s estimated absolute discount for Kneser-Ney,
-    * D = n1/(n1 + 2·n2) with n1/n2 = the number of bigram types seen
-    * exactly once/twice in the reference — computed distributed (one
-    * 1-row fold over the bigram counts) and rounded half-up to the
-    * nearest thousandth, returned as a (num, 1000) rational that plugs
-    * straight into [[scoreKneserNey]]'s exact-integer discount guard
-    * (clamped to [1, 999]: D must stay inside (0, 1) for the discounted
-    * mass to remain a probability). */
-  def estimateDiscount(reference: DataFrame, refTextCol: String): (Long, Long) = {
-    val refBg = explodedRef(bigrams(reference, Seq.empty, refTextCol), "bg")
-    val row = refBg.groupBy(col("p.w1"), col("p.w2"))
-      .agg(count(lit(1)).as("c2"))
-      .agg(sum(when(col("c2") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("c2") === 2, 1L).otherwise(0L)).as("n2"))
-      .collect()(0)
-    // SUM over an EMPTY frame is NULL — reach the loud require, not an NPE
-    val n1 = if (row.isNullAt(0)) 0L else row.getLong(0)
-    val n2 = if (row.isNullAt(1)) 0L else row.getLong(1)
-    require(n1 > 0,
-      "no singleton bigrams in the reference — the Chen-Goodman estimate " +
-        "is undefined; pass an explicit discount to scoreKneserNey")
-    val den = BigInt(n1) + 2 * BigInt(n2)
-    (clampThousandths(BigInt(n1), den, 999L), 1000L)
   }
 
   /** DSIR-style importance weighting for data selection (Xie et al. 2023,

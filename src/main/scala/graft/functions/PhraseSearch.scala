@@ -8,22 +8,13 @@ import org.apache.spark.sql.functions._
   * n-word phrase, OVERLAPPING occurrences included (the standard
   * positional-index semantics: "a a a" holds "a a" twice).
   *
-  * Two published plans, same answer:
+  * [[occurrences]] is the SCAN plan (grep flavor): a higher-order
+  * filter over each doc's token array checking slice equality at every
+  * start. Pure Catalyst, ZERO shuffle, zero UDFs; the right plan when
+  * the corpus is scanned anyway or phrases change per run.
   *
-  *  - [[occurrences]] — the SCAN path (grep flavor): a higher-order
-  *    filter over each doc's token array checking slice equality at
-  *    every start. Pure Catalyst, ZERO shuffle, zero UDFs; the right
-  *    plan when the corpus is scanned anyway or phrases change per run.
-  *  - [[occurrencesViaPostings]] — the INDEX path (inverted-positional
-  *    flavor): posexplode to (doc, pos, term) postings, filter each
-  *    phrase term's slice (the selectivity win — only phrase terms ever
-  *    enter a join), then k−1 equi-joins on (doc, pos−offset). The
-  *    right plan against a MATERIALIZED postings table where the scan
-  *    is the expensive part. Bit-identical output by construction;
-  *    PhraseSearchSpec pins the equivalence.
-  *
-  * Both tokenize with [[TextTokens.tokens]] (the corpus-wide contract),
-  * emit 1-based start positions in ascending order, and keep zero-hit
+  * It tokenizes with [[TextTokens.tokens]] (the corpus-wide contract),
+  * emits 1-based start positions in ascending order, and keeps zero-hit
   * docs (n_occurrences 0, empty array) — absence is part of the report.
   */
 object PhraseSearch {
@@ -44,30 +35,6 @@ object PhraseSearch {
         i => slice(ts, i.cast("int"), lit(k)) === phraseArray(phrase)))
       .otherwise(array().cast("array<bigint>"))
     docs.select(col(idCol), starts.as("starts"))
-      .withColumn("n_occurrences", size(col("starts")).cast("long"))
-      .withColumn("contains", col("n_occurrences") > 0)
-  }
-
-  /** Index path: same output via positional postings + k−1 equi-joins.
-    * Zero-hit docs rejoin through a left join on the doc spine. */
-  def occurrencesViaPostings(docs: DataFrame, idCol: String, textCol: String,
-      phrase: Seq[String]): DataFrame = {
-    require(phrase.nonEmpty, "empty phrase")
-    val postings = docs.select(col(idCol).as("__id"),
-      posexplode(TextTokens.tokens(col(textCol))).as(Seq("__p", "__t")))
-    def slice(term: String, off: Int) = postings
-      .filter(col("__t") === term)
-      .select(col("__id"), (col("__p") - off).as("__start"))
-    val hits = phrase.zipWithIndex
-      .map { case (w, i) => slice(w, i) }
-      .reduce((a, b) => a.join(b, Seq("__id", "__start")))
-      .groupBy(col("__id"))
-      // postings are 0-based; the contract is 1-based ascending
-      .agg(sort_array(collect_list(col("__start") + 1)).cast("array<bigint>").as("starts"))
-    docs.select(col(idCol))
-      .join(hits.withColumnRenamed("__id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("starts"), array().cast("array<bigint>")).as("starts"))
       .withColumn("n_occurrences", size(col("starts")).cast("long"))
       .withColumn("contains", col("n_occurrences") > 0)
   }

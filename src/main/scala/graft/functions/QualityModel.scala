@@ -85,30 +85,6 @@ object QualityModel {
       .withColumn("keep", col("score_num_fp") >= lit(thresholdFp) * col("n_grams"))
   }
 
-  /** STATELESS scorer — identical output to [[score]] (parity pinned in
-    * QualityModelSpec) with no explode, no join, no aggregation: the
-    * weight table rides along as a LITERAL map and the per-doc sum is a
-    * fold over the gram array. This is the STREAMING-compatible form
-    * (score's doc-keyed groupBy would be unbounded state on a stream);
-    * the trade is that the model must fit in a plan literal — fine for
-    * lexicon-scale models, and a 2M-bucket fastText table (~30 MB of
-    * longs) is the practical ceiling; past that, batch-score with
-    * [[score]] instead. */
-  def scoreStateless(docs: DataFrame, idCol: String, textCol: String,
-      weights: Map[Long, Long], buckets: Long,
-      biasFp: Long, thresholdFp: Long): DataFrame = {
-    val wmap = typedLit(weights)
-    docs
-      .select(col(idCol), canonTokens(col(textCol)).as("__toks"))
-      .select(col(idCol), gramBuckets(col("__toks"), buckets).as("__g"))
-      .select(col(idCol),
-        size(col("__g")).cast("long").as("n_grams"),
-        aggregate(col("__g"), lit(0L),
-          (acc, b) => acc + coalesce(element_at(wmap, b), lit(0L))).as("sum_w_fp"))
-      .withColumn("score_num_fp", lit(biasFp) * col("n_grams") + col("sum_w_fp"))
-      .withColumn("keep", col("score_num_fp") >= lit(thresholdFp) * col("n_grams"))
-  }
-
   // ---- the t57/q11 fixture model (shared so the two gates can't drift) ----
 
   /** The gate lexicon: engine-vocabulary quality markers with 1e-6

@@ -51,8 +51,8 @@ object RobotsTxt {
     * into one rule set, and a domain with no matching group falls back
     * to its `*` groups (a crawler its robots.txt never names obeys the
     * star rules — [[starGroupRules]] is exactly the `agent = "*"` view).
-    * Output schema is identical to [[starGroupRules]], so verdicts and
-    * the stream gate compose unchanged. Google's longest-prefix token
+    * Output schema is identical to [[starGroupRules]], so [[verdicts]]
+    * composes unchanged. Google's longest-prefix token
     * extension is out of scope — the RFC specifies exact match. */
   def agentGroupRules(robots: DataFrame, domainCol: String, textCol: String,
       agent: String): DataFrame = {
@@ -102,87 +102,6 @@ object RobotsTxt {
       .join(delay, Seq("domain"), "left")
   }
 
-  /** STATELESS verdicts for a URL STREAM — the online politeness gate of
-    * a continuously crawling pipeline: the rule table is STATIC (robots
-    * files refresh on their own slow cadence), so it ships as a
-    * plan-literal map (domain → rules sorted by the RFC resolution
-    * order) and each URL resolves with ONE aggregate() fold over its
-    * domain's rule array — no join state, no window state, each
-    * micro-batch row scored and forgotten (the qualityGateStream
-    * contract). Matching is the same native [[RobotsMatch]]; ties
-    * beyond (length, Allow-first) keep the FIRST rule in the sorted
-    * order — the total tie-break batch [[verdicts]]' fixtures assume.
-    * Output schema is row-identical to [[verdicts]]; StreamingSpec pins
-    * stream == batch on wildcard rule sets.
-    *
-    * @param rules (domain, kind, prefix, crawl_delay) — collect
-    *              [[starGroupRules]]' (bounded, vocabulary-scale)
-    *              output; the loud-bound contract is the caller's
-    */
-  def verdictsStateless(urls: DataFrame, idCol: String, domainCol: String,
-      pathCol: String, rules: Seq[(String, String, String, Option[Long])]): DataFrame = {
-    // The sort must replicate the ENGINE-side order exactly, or stream and
-    // batch can pick different winners on non-ASCII patterns: Spark's
-    // length() counts CODE POINTS (not Java's UTF-16 code units — they
-    // differ on supplementary-plane chars), and the batch tie-break
-    // col("prefix").asc compares UTF8String BYTES (= code-point order,
-    // while String.compareTo is UTF-16 order: surrogates sort below
-    // U+E000..U+FFFF). So: codePointCount + a UTF-8 byte-wise comparator.
-    def utf8Lt(a: String, b: String): Boolean = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < x.length && i < y.length) {
-        val c = (x(i) & 0xff) - (y(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      x.length < y.length
-    }
-    val byDomain: Map[String, Seq[(String, String)]] = rules.groupBy(_._1)
-      .map { case (d, rs) =>
-        d -> rs.map(r => (r._2, r._3))
-          .sortWith { case ((k1, p1), (k2, p2)) =>
-            val l1 = p1.codePointCount(0, p1.length)
-            val l2 = p2.codePointCount(0, p2.length)
-            if (l1 != l2) l1 > l2
-            else {
-              val r1 = if (k1 == "allow") 0 else 1
-              val r2 = if (k2 == "allow") 0 else 1
-              if (r1 != r2) r1 < r2 else utf8Lt(p1, p2)
-            }
-          }
-      }
-    val delays: Map[String, Long] =
-      rules.flatMap(r => r._4.map(r._1 -> _)).groupMapReduce(_._1)(_._2)(math.min)
-    val rulesLit = typedLit(byDomain)
-    val delayLit = typedLit(delays)
-    val base = urls.select(col(idCol).as("id"),
-      col(domainCol).as("domain"), col(pathCol).as("path"))
-    val rs = coalesce(element_at(rulesLit, col("domain")),
-      typedLit(Seq.empty[(String, String)]))
-    val init = struct(lit(-1).as("len"), lit(2).as("kr"),
-      lit(null).cast("string").as("kind"), lit(null).cast("string").as("prefix"))
-    val best = aggregate(rs, init, (acc, r) => {
-      val k = r.getField("_1")
-      val p = r.getField("_2")
-      val kr = when(k === "allow", 0).otherwise(1)
-      val better = graft.functions.expr.RobotsMatch(col("path"), p) &&
-        (length(p) > acc.getField("len") ||
-          (length(p) === acc.getField("len") && kr < acc.getField("kr")))
-      when(better,
-        struct(length(p).as("len"), kr.as("kr"), k.as("kind"), p.as("prefix")))
-        .otherwise(acc)
-    })
-    base.withColumn("__b", best)
-      .select(col("id"), col("domain"), col("path"),
-        col("__b").getField("kind").as("matched_kind"),
-        col("__b").getField("prefix").as("matched_prefix"),
-        element_at(delayLit, col("domain")).as("crawl_delay"),
-        (col("__b").getField("kind").isNull ||
-          col("__b").getField("kind") === "allow").as("allowed"))
-  }
-
   /** Per-URL verdicts: (urls: idCol, domainCol, pathCol) against
     * [[starGroupRules]] output → (id, domain, path, matched_kind,
     * matched_prefix, crawl_delay, allowed). */
@@ -196,8 +115,7 @@ object RobotsTxt {
     // the final prefix.asc makes the order TOTAL — with wildcard matching
     // two distinct same-length same-kind rules CAN both match (impossible
     // for literal prefixes), and an untotaled row_number would pick
-    // arbitrarily per run, flaking the hash and breaking the documented
-    // parity with verdictsStateless' (len, kind, prefix) sort
+    // arbitrarily per run, flaking the hash
     val w = Window.partitionBy(col("id"))
       .orderBy(length(col("prefix")).desc,
         when(col("kind") === "allow", 0).otherwise(1).asc,

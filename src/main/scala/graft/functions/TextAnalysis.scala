@@ -117,14 +117,10 @@ object TextAnalysis {
   /** Quality metrics: lengths, avg token length, punctuation ratio,
     * stopword ratio, and a boolean keep/drop flag — the standard
     * heuristics-pipeline shape. Ratios are rounded so they hash
-    * identically across engines. */
-  def qualityColumns(text: Column, stopwords: Seq[String]): Seq[(String, Column)] =
-    qualityColumnsFromTokens(text, TextTokens.tokens(text), stopwords)
-
-  /** [[qualityColumns]] over a caller-supplied token array. When `toks` is
-    * an alias from a lower projection (referenced here 6+ times, non-cheap,
-    * so CollapseProject keeps it a real column), the tokenization runs once
-    * per row instead of once per metric. */
+    * identically across engines. `toks` is the caller's token array: when
+    * it is an alias from a lower projection (referenced here 6+ times,
+    * non-cheap, so CollapseProject keeps it a real column), the
+    * tokenization runs once per row instead of once per metric. */
   def qualityColumnsFromTokens(
       text: Column, toks: Column, stopwords: Seq[String]): Seq[(String, Column)] = {
     val nChars = length(text)

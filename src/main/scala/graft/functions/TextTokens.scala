@@ -15,7 +15,7 @@ object TextTokens {
     split(lower(trim(text)), "\\s+")
 
   /** ALL word n-gram shingles in document order, duplicates kept ("a b c",
-    * "b c d", ...) — the raw stream [[wordShinglesFromTokens]] deduplicates.
+    * "b c d", ...) — the raw stream [[wordShingles]] deduplicates.
     * Empty array when the document has fewer than n tokens (guarded:
     * Spark's `sequence(1, stop)` DESCENDS when stop < 1, so the short-doc
     * case must not reach it).
@@ -31,10 +31,6 @@ object TextTokens {
       transform(sequence(lit(1), count), i => concat_ws(" ", slice(toks, i, lit(n)))))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** Distinct word n-gram shingles from a materialized token column. */
-  def wordShinglesFromTokens(toks: Column, n: Int): Column =
-    array_distinct(wordShinglesAllFromTokens(toks, n))
 
   /** Inline-text convenience for SMALL frames and tests — embeds the
     * tokenizer in the shingle lambda (quadratic per doc; see

@@ -64,5 +64,4 @@ object UnicodeNormalize {
     GraftBridge.column(UnicodeNormalize(GraftBridge.expression(c), form))
 
   def nfc(c: Column): Column = apply(c, "NFC")
-  def nfkc(c: Column): Column = apply(c, "NFKC")
 }

@@ -99,18 +99,4 @@ object ZValue {
     } yield shiftleft(shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * k + i)
     terms.reduce(_ bitwiseOR _)
   }
-
-  /** Linear map of a numeric column from [min, max] onto the z-grid
-    * [0, 2^bits), clamping outliers — the normalization step for
-    * non-integer or wide-range dimensions. min/max come from stats the
-    * caller already has (a 100 TB layout job reads table metadata, not a
-    * scan). */
-  def normalizeToBits(c: Column, minV: Double, maxV: Double, bits: Int): Column = {
-    import org.apache.spark.sql.functions.{floor, greatest, least, lit}
-    require(maxV > minV)
-    val cells = (1L << bits) - 1
-    least(lit(cells), greatest(lit(0L),
-      floor((c.cast("double") - lit(minV)) / lit(maxV - minV) * lit(cells + 1))
-        .cast("long")))
-  }
 }

@@ -69,31 +69,13 @@ object Layout {
   }
 
   /** Z-order clustered write: range-partition then sort by the Morton key
-    * of (`colA`, `colB`), so every output file covers a NARROW min-max
-    * envelope on BOTH columns — the multi-dimensional companion to
-    * [[writePartitioned]] (one-dimensional pruning) for predicates that
-    * alternate between two columns. One range shuffle at write time; see
-    * [[statsIndex]] for turning the envelopes into a file-pruning list. */
-  def writeZOrdered(
-      df: DataFrame, path: String, colA: String, colB: String,
-      numFiles: Int, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    require(!df.columns.contains("__z"),
-      "writeZOrdered reserves the column name __z; rename it before writing")
-    val keyed = df.withColumn("__z",
-      graft.functions.expr.ZValue.zValue(col(colA), col(colB)))
-    keyed
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(mode).parquet(path)
-  }
-
-  /** k-dimensional companion to [[writeZOrdered]]: clusters on
-    * [[graft.functions.expr.ZValue.zValueN]] (the composed bit-arithmetic
-    * interleave that generalizes the codegen'd 2-column fast path) so
-    * box predicates over ANY subset of `cols` prune at both the file
-    * level ([[statsIndex]]) and the parquet row-group level (reader
-    * min/max stats — measured in ZOrderSpec). */
+    * [[graft.functions.expr.ZValue.zValueN]] of `cols` (the composed
+    * bit-arithmetic interleave that generalizes the codegen'd 2-column
+    * fast path), so every output file and parquet row group covers a
+    * NARROW min-max envelope on every column — the multi-dimensional
+    * companion to [[writePartitioned]]: box predicates over ANY subset of
+    * `cols` prune row groups by the reader's min/max stats (measured in
+    * ZOrderSpec). One range shuffle at write time. */
   def writeZOrderedN(
       df: DataFrame, path: String, cols: Seq[String], bits: Int,
       numFiles: Int, mode: SaveMode = SaveMode.Overwrite): Unit = {
@@ -106,22 +88,4 @@ object Layout {
       .drop("__z")
       .write.mode(mode).parquet(path)
   }
-
-  /** File-level min-max stats index over a parquet directory — the
-    * data-skipping catalog a lakehouse keeps per table. One narrow
-    * aggregate keyed on `_metadata.file_path` (no shuffle wider than
-    * #files); the output is file-count-sized and drives
-    * [[pruneFiles]]-style planning without touching data. */
-  def statsIndex(spark: SparkSession, path: String, cols: Seq[String]): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(count(lit(1)).as("rows"),
-        cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))): _*)
-
-  /** Files whose [min, max] envelope on `column` may contain `value` —
-    * the planning-time skip list (no false negatives; envelope overlap
-    * only). Consumers pass the survivors to `spark.read.parquet(files:_*)`. */
-  def pruneFiles(index: DataFrame, column: String, value: Long): DataFrame =
-    index.filter(col(s"min_$column") <= value && col(s"max_$column") >= value)
-      .select(col("file"))
 }

@@ -31,10 +31,9 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     lowerNanoTs(ParquetSource.read(spark, s"$dir/$name.parquet"), name)
 
-  /** The ts-normalizing lowering, shared by the batch loader and the
-    * streaming readers ([[graft.streaming.EventStreams.readTableStream]]) so
-    * the two paths cannot drift apart on the expression. Handles both
-    * physical layouts the corpus generator has produced over time:
+  /** The ts-normalizing lowering behind [[load]] (TablesSpec pins it
+    * against every corpus table's footer). Handles both physical layouts
+    * the corpus generator has produced over time:
     *
     *   - nanosecond epoch longs (read as `LongType` under
     *     `spark.sql.legacy.parquet.nanosAsLong=true`): truncated to µs with
@@ -45,7 +44,7 @@ object Tables {
     *     engine session is pinned to UTC, so the cast preserves the
     *     wall-clock instant and matches the DuckDB oracle's plain
     *     TIMESTAMP semantics, while restoring the event-time type that
-    *     `unix_micros`, watermarks, and window() require.
+    *     `unix_micros` and window() require.
     */
   def lowerNanoTs(df: DataFrame, name: String): DataFrame =
     df.schema.fields.foldLeft(df) { (d, f) =>
@@ -56,10 +55,6 @@ object Tables {
         d.withColumn("ts", d.col("ts").cast(org.apache.spark.sql.types.TimestampType))
       else d
     }
-
-  /** Register every test table as a temp view for spark.sql use. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** Schema-evolution read: union all parquet batches under `path`,
     * merging schemas (`mergeSchema`) so batches written before a column

@@ -347,74 +347,4 @@ object WarcIo {
       StructField("http_status", IntegerType, nullable = false),
       StructField("body", StringType, nullable = false))))
   }
-
-  case class WarcResponse(warc_type: String, target_uri: String,
-      record_id: String, content_length: Long, http_status: Int, body: String)
-
-  case class WarcRequest(target_uri: String, record_id: String,
-      concurrent_to: String, content_length: Long, method: String,
-      req_path: String, http_version: String, host: String, user_agent: String)
-
-  /** STREAMING twin of [[readRequests]] — the fetch-side WAT of a
-    * CONTINUOUS crawl: new `.warc` shards flow through the identical
-    * Content-Length parser + HTTP request-line splitter via the
-    * binaryFile file-stream source (stateless per shard, exactly-once
-    * per the file-source contract, same as [[readResponsesStream]]).
-    * Parity with the batch reader is pinned in StreamingSpec. */
-  def readRequestsStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", "*.warc")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(path)
-      .select(org.apache.spark.sql.functions.col("path"),
-        org.apache.spark.sql.functions.col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (f, bytes) =>
-        parseRecords(bytes, f).collect {
-          case ("request", uri, rid, cto, len, payload) =>
-            val (method, reqPath, version, headers) = parseHttpRequest(payload, f)
-            def h(name: String): String =
-              headers.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }.orNull
-            WarcRequest(uri, rid, cto, len, method, reqPath, version,
-              h("Host"), h("User-Agent"))
-        }
-      }
-      .toDF()
-  }
-
-  /** STREAMING twin of [[readResponses]] — continuous crawl ingest: new
-    * `.warc` shards landing in `path` flow through the SAME
-    * Content-Length-driven parser + HTTP splitter via Spark's
-    * `binaryFile` file-stream source (each shard is one self-contained
-    * unit of work, exactly-once per the file-source contract; shards
-    * must land atomically, e.g. rename-into-place — the usual
-    * file-stream discipline). Completely stateless per shard; parity
-    * with the batch reader is pinned in StreamingSpec. */
-  def readResponsesStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", "*.warc")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(path)
-      .select(org.apache.spark.sql.functions.col("path"),
-        org.apache.spark.sql.functions.col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (f, bytes) =>
-        parseRecords(bytes, f).collect {
-          case ("response", uri, rid, _, len, payload) =>
-            val (status, body) = parseHttp(payload, f)
-            WarcResponse("response", uri, rid, len, status, new String(body, Ascii))
-        }
-      }
-      .toDF()
-  }
 }

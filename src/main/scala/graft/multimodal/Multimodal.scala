@@ -574,33 +574,11 @@ object Multimodal {
     }(newMediaRowEncoder(kf.sparkSession))
   }
 
-  /** PNG keyframe SINK: one `<media>_<scene>.png` file per keyframe,
-    * written attempt-unique + atomic-rename (the WarcIo shard
-    * discipline); returns the manifest (file, media_id, scene_idx,
-    * bytes). Files land byte-identical to the dataset payloads —
-    * pinned in MultimodalSpec by an ImageIO re-read from disk. */
-  def writeKeyframePngs(kf: Dataset[SceneKeyframe], path: String): DataFrame = {
-    import kf.sparkSession.implicits._
-    new java.io.File(path).mkdirs()
-    kf.mapPartitions { rows =>
-      val tc = org.apache.spark.TaskContext.get()
-      rows.map { k =>
-        val file = new java.io.File(path, s"${k.media_id}_${k.scene_idx}.png")
-        val tmp = new java.io.File(path,
-          s"${k.media_id}_${k.scene_idx}.png.tmp-${tc.taskAttemptId()}")
-        java.nio.file.Files.write(tmp.toPath, k.png)
-        java.nio.file.Files.move(tmp.toPath, file.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        (file.getPath, k.media_id, k.scene_idx, k.png.length.toLong)
-      }
-    }.toDF("file", "media_id", "scene_idx", "bytes")
-  }
-
-  /** Real frame sampling for AVI payloads: demux every `everyN`-th `##dc`
-    * frame as its standalone JPEG — the genuine version of the
-    * fixed-slice [[sampleFrames]] stub contract. Frames distribute
-    * row-wise downstream, same as the stub path. */
+  /** Frame sampling for AVI payloads: one video row explodes to every
+    * `everyN`-th `##dc` frame, demuxed as its standalone JPEG — the 1→many
+    * generator shape video pipelines need. Frame payloads distribute
+    * row-wise, so a 2 GB video's frames spread across tasks downstream
+    * instead of pinning one task. */
   def sampleAviFrames(media: Dataset[MediaRow], everyN: Int): Dataset[Frame] = {
     import media.sparkSession.implicits._
     require(everyN > 0)
@@ -729,28 +707,6 @@ object Multimodal {
   }
 
   case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Frame sampling: one video row explodes to every `everyN`-th frame —
-    * the 1→many generator shape video pipelines need. The stub treats the
-    * body as fixed-size frame slices; a real implementation demuxes. Frame
-    * payloads distribute row-wise, so a 2 GB video's frames spread across
-    * tasks downstream instead of pinning one task. */
-  def sampleFrames(
-      media: Dataset[MediaRow], frameBytes: Int, everyN: Int): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    require(frameBytes > 0 && everyN > 0)
-    media.filter(col("kind") === "video").as[MediaRow].flatMap { r =>
-      val body = r.payload.drop(16)
-      // Fixed-size frames ONLY: a trailing partial slice is not a frame
-      // (the stub contract is fixed-size slices; emitting an
-      // input-length-dependent runt frame would hand consumers a
-      // truncated payload).
-      body.grouped(frameBytes).zipWithIndex.collect {
-        case (slice, idx) if idx % everyN == 0 && slice.length == frameBytes =>
-          Frame(r.media_id, idx, slice)
-      }
-    }
-  }
 
   /** Closed-form block luminance for the PNG corpus / perceptual-hash
     * gates — REPLICATED in the m9/m10 oracles' range() arithmetic; change
@@ -895,14 +851,4 @@ object Multimodal {
       }
     }.toDF("media_id", "width", "height", "ahash_hi", "ahash_lo", "dhash")
   }
-
-  /** Metadata-level ops stay relational (no decode): filter by declared
-    * dims, route by kind, size accounting — pure Catalyst. */
-  def mediaStats(media: Dataset[MediaRow]): DataFrame =
-    media.toDF()
-      .groupBy(col("kind"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(length(col("payload"))).as("total_bytes"),
-        avg(col("meta_width") * col("meta_height")).as("avg_pixels"))
 }

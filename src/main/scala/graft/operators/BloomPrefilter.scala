@@ -41,41 +41,6 @@ object BloomPrefilter {
   def filterMightContain(fact: DataFrame, factKey: String, bloomBytes: Array[Byte]): DataFrame =
     fact.filter(BloomMightContainLong.mightContain(col(factKey), bloomBytes))
 
-  /** Exact LEFT ANTI join with Bloom ROUTING on the probe side:
-    * bit-identical to `fact ▷ dim` (rows of `fact` with no `dim` match),
-    * but only sketch-positive rows reach the join exchange.
-    *
-    * Anti joins invert the semi-join pruning rule: a Bloom "definitely
-    * not present" is a PROOF of anti-membership, so those rows are kept
-    * outright and never shuffle; only "might contain" rows (true matches
-    * + false positives) go through the exact anti join, which clears the
-    * false positives. With an fpp of 0.01 and a mostly-novel probe side
-    * (the incremental-dedup shape: today's crawl vs yesterday's corpus),
-    * ~99% of genuinely-new rows skip the exchange entirely — the build
-    * side is the ONLY full shuffle-scale structure, and it is a sketch,
-    * never the key set. Both branches are one scan (the filter and its
-    * negation read the same cached/columnar source), unioned back.
-    * Integral keys only, same contract as [[semiJoin]]. */
-  def antiJoin(
-      fact: DataFrame, factKey: String,
-      dim: DataFrame, dimKey: String,
-      expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    requireIntegral(fact, factKey, "fact")
-    requireIntegral(dim, dimKey, "dim")
-    val keys = dim.select(col(dimKey).cast("long").as(dimKey))
-    val bloom = build(keys, dimKey, expectedItems, fpp)
-    val might = BloomMightContainLong.mightContain(col(factKey), bloom)
-    // A NULL probe key makes `might` NULL, which both `filter(!might)` and
-    // `filter(might)` would drop — but the plain anti join this mirrors
-    // KEEPS null-key rows (a null key never equals any dim key). Route
-    // nulls to the kept branch so the bit-identical contract holds for
-    // nullable keys.
-    val definitelyNovel = fact.filter(coalesce(!might, lit(true)))
-    val needsCheck = fact.filter(coalesce(might, lit(false)))
-    definitelyNovel.unionAll(
-      needsCheck.join(keys, needsCheck(factKey).cast("long") === keys(dimKey), "left_anti"))
-  }
-
   private def requireIntegral(df: DataFrame, key: String, side: String): Unit = {
     import org.apache.spark.sql.types._
     val dt = df.schema(key).dataType

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.engine.Lineage
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact distributed k-th-smallest selection (median, exact percentiles)
@@ -36,15 +36,6 @@ import org.apache.spark.sql.functions._
   * not a truncated view: 3–4 rounds keep the plan small.
   */
 object Selection {
-
-  /** The k-th smallest (1-based) value of `valueCol`, as a Double-typed
-    * scalar. `df` rows with null `valueCol` must be pre-filtered. */
-  def kthSmallest(
-      df: DataFrame, valueCol: String, k: Long,
-      buckets: Int = 128, localLimit: Long = 100000L): Double = {
-    require(k >= 1, s"rank k must be >= 1, got $k")
-    select(df, valueCol, _ => k, buckets, localLimit)._1
-  }
 
   /** Selection where the rank is a function of the (initially unknown)
     * total row count — e.g. the median's `n => (n + 1) / 2`. The count

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Keyed snapshot reconciliation: classify every key across two table
   * versions as added / removed / changed / unchanged with ONE full outer
-  * join — the audit complement of [[Upsert]] (which APPLIES a changeset,
-  * where this DERIVES one). The reference's migration validates loads by
+  * join — the audit complement of [[Upsert]] (which COMPACTS a change
+  * log, where this DERIVES one). The reference's migration validates loads by
   * row-count logging only (src/utils.py:180,223); a keyed diff is the
   * scalable version of that check, and doubles as a CDC changeset
   * extractor between runs.

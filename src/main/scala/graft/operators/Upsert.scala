@@ -4,17 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Incremental merge — the scale replacement for the reference's
+/** CDC compaction — the scale replacement for the reference's
   * truncate-and-full-reload prologue (`src/utils.py:226-243`): at 100 TB
   * you apply the day's changes, you don't rewrite the world.
-  *
-  * Both operators are one hash shuffle on the key set:
-  *  - [[latestSnapshot]] compacts a change log to its newest row per key
-  *    (CDC compaction: the input may carry many versions of a key);
-  *  - [[applyChanges]] merges a compacted change set into a base snapshot
-  *    with last-wins semantics and tombstone deletes — MERGE INTO
-  *    semantics on plain immutable storage: read base ∪ changes, emit the
-  *    next snapshot.
+  * [[latestSnapshot]] compacts a change log to its newest row per key
+  * (the input may carry many versions of a key) in one hash shuffle on
+  * the key set.
   *
   * Determinism: version order is (ts, then tiebreak columns) — callers
   * with possible same-key-same-ts changes pass an explicit tiebreak so
@@ -31,27 +26,5 @@ object Upsert {
     changes.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Merge changes into base: per key, the newest of (base row, change
-    * rows) wins; a winning row with `deleteCol == true` is a tombstone and
-    * drops the key. Base rows carry no delete flag → supply it as false.
-    * Schemas must match on `keys ++ ts ++ data`; extra change-side columns
-    * are dropped. */
-  def applyChanges(
-      base: DataFrame, changes: DataFrame, keys: Seq[String], ts: String,
-      deleteCol: String, tiebreak: Seq[String] = Nil): DataFrame = {
-    val cols = base.columns
-    val b = base.withColumn("__del", lit(false))
-      // base loses same-ts conflicts to changes: a re-applied batch wins
-      .withColumn("__src", lit(0))
-    // NULL delete flag means "not a tombstone": without the coalesce the
-    // !__del predicate would be NULL and silently drop the key.
-    val c = changes.select(
-        (cols.map(col) :+ coalesce(col(deleteCol), lit(false)).as("__del")).toIndexedSeq: _*)
-      .withColumn("__src", lit(1))
-    latestSnapshot(b.unionByName(c), keys, ts, tiebreak :+ "__src")
-      .filter(!col("__del"))
-      .select(cols.map(col).toIndexedSeq: _*)
   }
 }

@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Event-stream analytics in batch form over `events` (the same transforms
-  * run under Structured Streaming in graft.streaming — these batch versions
-  * are the oracle-checkable semantics pin).
+/** Event-stream analytics in batch form over `events`: sessions, windows,
+  * funnels and event-time joins, each checked against the DuckDB oracle.
   */
 object EventQueries {
 
@@ -63,8 +62,7 @@ object EventQueries {
       sessionized(spark, dir)
     },
 
-    // Tumbling-window aggregation (hourly): the batch twin of the
-    // streaming watermark+window query in graft.streaming.EventStreams.
+    // Tumbling-window aggregation (hourly).
     QueryDef.sql(
       "e2_tumbling_hourly",
       """SELECT date_trunc('hour', ts) AS window_start, event_type,

@@ -32,7 +32,6 @@ object QueryDef {
   */
 object Num {
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
-  def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
 
   /** Exact decimal sum of a 2-dp measure, surfaced as double. */
   def sumMoney(c: Column): Column = sum(dec2(c)).cast(DoubleType)

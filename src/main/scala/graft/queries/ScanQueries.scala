@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.io.Tables
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,13 +30,14 @@ object ScanQueries {
     },
 
     // S4: CSV scan with explicit schema overrides (src/utils.py:184-203) —
-    // round-trips nation through CSV; values must survive exactly.
+    // round-trips nation through the reference's CSV export layout (K3,
+    // one headered file per table); values must survive exactly.
     QueryDef.sql(
       "s4_csv_roundtrip",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (spark, dir) =>
       val nation = Tables.load(spark, dir, "nation")
-      val tmp = s"/tmp/graft_csv/nation"
-      nation.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+      val tmp = s"${GraftBridge.tempDir("graft_csv")}/nation.csv"
+      graft.io.CsvExport.exportFrame(nation, tmp)
       val schema = StructType(Seq(
         StructField("n_nationkey", IntegerType),
         StructField("n_name", StringType),
@@ -75,7 +76,7 @@ object ScanQueries {
       "SELECT doc_id, text, lang, source, n_chars FROM documents") { (spark, dir) =>
       val docs = Tables.load(spark, dir, "documents")
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val tmp = "/tmp/graft_jsonl/documents"
+      val tmp = GraftBridge.tempDir("graft_jsonl")
       docs.write.mode("overwrite").json(tmp)
       spark.read.schema(docs.schema).json(tmp)
     },
@@ -90,10 +91,10 @@ object ScanQueries {
       "s8_partition_pruned_scan",
       """SELECT doc_id, lang, n_chars, source FROM documents
         |WHERE source IN ('src2', 'src5')""".stripMargin) { (spark, dir) =>
-      val tmp = "/tmp/graft_part/documents"
-      Tables.load(spark, dir, "documents")
-        .select("doc_id", "lang", "n_chars", "source")
-        .write.mode("overwrite").partitionBy("source").parquet(tmp)
+      val tmp = GraftBridge.tempDir("graft_part")
+      graft.io.Layout.writePartitioned(
+        Tables.load(spark, dir, "documents").select("doc_id", "lang", "n_chars", "source"),
+        tmp, Seq("source"))
       spark.read.parquet(tmp)
         .filter(col("source").isin("src2", "src5"))
         .select("doc_id", "lang", "n_chars", "source")
@@ -108,7 +109,7 @@ object ScanQueries {
       "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders") { (spark, dir) =>
       val orders = Tables.load(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val tmp = "/tmp/graft_orc/orders"
+      val tmp = GraftBridge.tempDir("graft_orc")
       orders.write.mode("overwrite").orc(tmp)
       spark.read.schema(orders.schema).orc(tmp)
     },

@@ -2027,11 +2027,11 @@ object TextQueries {
             .as("hapax_frac"))
     },
 
-    // Frame-sample planning: the deterministic evenly-spaced offset math of
-    // graft.multimodal.Multimodal.sampleFrames, surfaced as an oracled
-    // query over scalar metadata (n_chars stands in for the frame count —
-    // the real pipeline runs this same arithmetic on media metadata before
-    // any binary decode, so the PLAN is what must be exact). offsets[i] =
+    // Frame-sample planning: deterministic evenly-spaced frame offsets,
+    // surfaced as an oracled query over scalar metadata (n_chars stands in
+    // for the frame count — the real pipeline runs this same arithmetic on
+    // media metadata before any binary decode, so the PLAN is what must be
+    // exact). offsets[i] =
     // floor(i·n/k): pure per-row expression work, scan-only, no shuffle;
     // the array serializes at the output boundary (a1/p23 flatten rule).
     QueryDef.sql(

@@ -18,8 +18,4 @@ object EnumMap {
   /** Variant with no default: unmapped → null (`src/core.py:804`). */
   def handleEnumMappingOrNull(c: Column, mapping: Map[String, String]): Column =
     element_at(typedLit(mapping), Text.handleId(c))
-
-  /** Exact-key variant (no normalization), for already-clean codes. */
-  def mapExact(c: Column, mapping: Map[String, String], default: String): Column =
-    coalesce(element_at(typedLit(mapping), c), lit(default))
 }

@@ -6,17 +6,11 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for hot keys at scale.
   *
   * AQE's skew-join splitting (enabled in [[graft.engine.GraftSession]])
-  * handles skewed sort-merge joins at runtime; these helpers cover the two
-  * cases AQE does not:
-  *
-  *  - a grouped aggregation where one key holds a large share of all rows
-  *    (one reducer becomes the straggler) → [[saltedAggregate]] splits every
-  *    group into `salts` subgroups, aggregates partially, then combines —
-  *    two small shuffles instead of one skewed one;
-  *  - a shuffled equi-join whose big side has hot keys and whose other side
-  *    is too large to broadcast outright → [[saltedJoin]] salts the big side
-  *    and explodes the small side `salts`-fold, so a hot key's rows spread
-  *    over `salts` reducers.
+  * handles skewed sort-merge joins at runtime; [[saltedJoin]] covers the
+  * case AQE does not: a shuffled equi-join whose big side has hot keys and
+  * whose other side is too large to broadcast outright. It salts the big
+  * side and explodes the small side `salts`-fold, so a hot key's rows
+  * spread over `salts` reducers (j20 runs it under the oracle).
   *
   * Salts are deterministic (hash of the full row or key, not `rand()`), so
   * retried tasks reproduce identical output — required for exactly-once
@@ -36,37 +30,6 @@ object Skew {
     * salted stage — which also shrinks the data. */
   def salt(salts: Int, cols: Column*): Column =
     pmod(hash(cols: _*), lit(salts))
-
-  /** Two-stage grouped aggregation for skewed group keys.
-    *
-    * `partialAggs` run per (key, salt); `finalAggs` combine the partials per
-    * key. The caller supplies both stages because they differ for
-    * non-decomposable aggregates (avg = sum+count partial, sum/sum final).
-    * For decomposable aggregates (sum/count/min/max) the same expression
-    * works in both, e.g.:
-    * {{{
-    * Skew.saltedAggregate(df, Seq(col("k")), 16,
-    *   partialAggs = Seq(sum("v").as("v"), count(lit(1)).as("n")),
-    *   finalAggs   = Seq(sum("v").as("v"), sum("n").as("n")))
-    * }}}
-    */
-  def saltedAggregate(
-      df: DataFrame, keys: Seq[Column], salts: Int,
-      partialAggs: Seq[Column], finalAggs: Seq[Column]): DataFrame = {
-    require(salts >= 1, "salts must be >= 1")
-    require(!df.columns.contains("__salt"), "input already has a __salt column")
-    val allCols = df.columns.map(col).toSeq
-    val partial = df.withColumn("__salt", salt(salts, allCols: _*))
-      .groupBy(keys :+ col("__salt"): _*)
-      .agg(partialAggs.head, partialAggs.tail: _*)
-    // The final stage groups by the PARTIAL OUTPUT's key columns (grouped
-    // keys come first in groupBy output, in order) — re-resolving the
-    // caller's key EXPRESSIONS here would fail for anything beyond bare
-    // col(...) because their inputs no longer exist after the first agg.
-    val keyNames = partial.columns.take(keys.size)
-    partial.groupBy(keyNames.map(col).toIndexedSeq: _*)
-      .agg(finalAggs.head, finalAggs.tail: _*)
-  }
 
   /** Salted inner equi-join on `bigKey === smallKey`: the big side gets a
     * deterministic per-row salt, the small side is exploded once per salt

@@ -65,17 +65,6 @@ object GraftBridge {
     ds.sparkSession.sharedState.cacheManager.cacheQuery(ds, Some(name), level)
   }
 
-  /** Register a SQL function on an EXISTING session (the extensions path
-    * only applies to sessions built with `withExtensions`/the config —
-    * `getOrCreate` on a live session ignores it). */
-  def registerFunction(
-      spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-  }
-
   /** A fresh scratch directory `<java.io.tmpdir>/<prefix>-<uuid>`, deleted
     * recursively when the JVM exits (Spark's own shutdown-hook registry,
     * which also cleans its block-manager dirs). For query-local files that

@@ -73,17 +73,6 @@ class BloomPrefilterSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("integral"))
   }
 
-  test("graft_bloom_might_contain widens an INT probe key like graft_zvalue") {
-    graft.engine.GraftFunctions.registerAll(spark)
-    val bytes = BloomPrefilter.build(Seq(7L).toDF("k"), "k", expectedItems = 16, fpp = 0.001)
-    Seq(7, 8).toDF("k").createOrReplaceTempView("bloom_probe_int")
-    val lit = s"X'${bytes.map("%02x".format(_)).mkString}'"
-    val got = spark.sql(
-      s"SELECT k FROM bloom_probe_int WHERE graft_bloom_might_contain(k, $lit)")
-      .collect().map(_.getInt(0)).toSet
-    assert(got.contains(7), "inserted key must pass through the INT→LONG cast")
-  }
-
   test("prefilter adds a Filter, not an Exchange") {
     val bloomed = BloomPrefilter
       .semiJoin(li, "l_orderkey", hi, "o_orderkey", expectedItems = 1 << 14)

@@ -69,6 +69,20 @@ class GraftSessionSpec extends AnyFunSuite {
       ("/x", "SPARK_GRAFT_LOCAL_DIR"))
   }
 
+  test("warehouse: SPARK_GRAFT_WAREHOUSE verbatim, else a per-JVM directory under java.io.tmpdir") {
+    assert(GraftSession.warehouseDir(Map("SPARK_GRAFT_WAREHOUSE" -> "/x/wh").get) == "/x/wh")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir")).getCanonicalPath
+    val a = GraftSession.warehouseDir(Map.empty[String, String].get)
+    val b = GraftSession.warehouseDir(Map.empty[String, String].get)
+    assert(a != b, "each call picks a fresh directory")
+    for (d <- Seq(a, b)) {
+      val f = new java.io.File(d)
+      assert(f.isDirectory && f.getName.startsWith("graft_warehouse"), d)
+      assert(f.getParentFile.getCanonicalPath == tmp, d)
+      assert(org.apache.spark.TestBridge.deletedAtExit(d))
+    }
+  }
+
   test("sizing: SPARK_GRAFT_CPUS and SPARK_GRAFT_SHUFFLE_PARTITIONS parse as positive ints") {
     assert(GraftSession.sizing(Map.empty[String, String].get) == GraftSession.Sizing(32, 32))
     assert(GraftSession.sizing(Map("SPARK_GRAFT_CPUS" -> " 4 ").get) == GraftSession.Sizing(4, 4))

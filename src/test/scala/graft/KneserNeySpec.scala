@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.NgramLm
-import org.apache.spark.sql.functions._
 
 class KneserNeySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -330,28 +329,6 @@ class KneserNeySpec extends AnyFunSuite {
     val got = NgramLm.perplexityBuckets(scored, "doc_id", "lang")
       .orderBy("doc_id").as[(Long, String, Long, Long, String)].collect()
     assert(got.map(_._5).toSeq == Seq("head", "middle", "tail"), got.toSeq.toString)
-  }
-
-  test("estimateDiscount: Chen-Goodman n1/(n1+2*n2) rounded to thousandths") {
-    // reference: n1 = 12 singleton bigram types, n2 = 0 doubles → D = 1,
-    // clamped to 999/1000 (D must stay inside (0,1))
-    assert(NgramLm.estimateDiscount(reference, "text") == ((999L, 1000L)))
-    // a mixed corpus: bigrams (a,b)×1, (c,d)×2 → n1=1, n2=1 →
-    // D = 1/3 = 0.333…, half-up → 333
-    val mixed = Seq("a b", "c d", "c d").zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    assert(NgramLm.estimateDiscount(mixed, "text") == ((333L, 1000L)))
-    // no singletons → loud refusal
-    val e = intercept[IllegalArgumentException](
-      NgramLm.estimateDiscount(
-        Seq((1L, "x y"), (2L, "x y")).toDF("doc_id", "text"), "text"))
-    assert(e.getMessage.contains("singleton"), e.getMessage)
-    // the estimate plugs into the scorer's guard
-    val (dn, dd) = NgramLm.estimateDiscount(mixed, "text")
-    val s = NgramLm.scoreKneserNey(mixed, "text",
-      Seq((1L, "c d")).toDF("doc_id", "text"), "doc_id", "text", dn, dd)
-      .as[(Long, Long, Long)].head()
-    assert(s._2 == 1L && s._3 < 0L)
   }
 
   test("short docs, unseen everything, and the discount guard") {

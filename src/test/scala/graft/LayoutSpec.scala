@@ -133,26 +133,6 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
-  test("z-ordered write + stats index: point predicates prune files on BOTH columns") {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_test"
-    try {
-      val df = (0L until 64L).flatMap(x => (0L until 64L).map(y => (x, y)))
-        .toDF("x", "y")
-      Layout.writeZOrdered(df, dir, "x", "y", numFiles = 16)
-      val idx = Layout.statsIndex(spark, dir, Seq("x", "y"))
-      val total = idx.count()
-      assert(total >= 8, s"expected ~16 files, got $total")
-      val hitX = Layout.pruneFiles(idx, "x", 7L).count()
-      val hitY = Layout.pruneFiles(idx, "y", 7L).count()
-      assert(hitX <= total / 2 && hitY <= total / 2,
-        s"z-layout must prune most files on BOTH dims (x hits $hitX, y hits $hitY of $total)")
-      // No false negatives: the surviving files hold every matching row.
-      val survivors = Layout.pruneFiles(idx, "x", 7L).collect().map(_.getString(0))
-      val got = spark.read.parquet(survivors: _*).filter(col("x") === 7L).count()
-      assert(got == 64L, "pruned read must still see all 64 x=7 rows")
-    } finally deleteRecursively(new java.io.File(dir))
-  }
-
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
     f.delete(): Unit

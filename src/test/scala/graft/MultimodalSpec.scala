@@ -35,27 +35,6 @@ class MultimodalSpec extends AnyFunSuite {
       assert(r.payload.length <= origBytes(r.media_id), "resize must not grow payload"))
   }
 
-  test("frame sampling explodes videos to every Nth frame, deterministically") {
-    val corpus = Multimodal.synthesizeCorpus(spark, 30)
-    val frames = Multimodal.sampleFrames(corpus, frameBytes = 64, everyN = 2)
-      .collect().sortBy(f => (f.media_id, f.frame_idx))
-    assert(frames.nonEmpty)
-    assert(frames.forall(_.frame_idx % 2 == 0), "only every 2nd frame kept")
-    val videoIds = corpus.filter(_.kind == "video").collect().map(_.media_id).toSet
-    assert(frames.map(_.media_id).toSet.subsetOf(videoIds), "only videos explode")
-    val again = Multimodal.sampleFrames(corpus, 64, 2)
-      .collect().sortBy(f => (f.media_id, f.frame_idx))
-    assert(frames.map(f => (f.media_id, f.frame_idx, f.frame.toSeq)).toSeq ==
-      again.map(f => (f.media_id, f.frame_idx, f.frame.toSeq)).toSeq)
-  }
-
-  test("media stats stay relational over the binary column") {
-    val stats = Multimodal.mediaStats(Multimodal.synthesizeCorpus(spark, 30))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(stats.values.sum == 30)
-    assert(stats.keySet == Set("image", "audio", "video"))
-  }
-
   test("REAL PNG decode through the partition-batched plumbing (javax.imageio)") {
     import spark.implicits._
     // A genuine 2×2 PNG encoded in-memory: black, white, and two grays —
@@ -302,7 +281,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(calm.forall(r => r.n_scenes == 1L && r.cuts_csv == ""))
   }
 
-  test("scene keyframes: one PNG per scene, byte-level file sink, overwrite-safe") {
+  test("scene keyframes: one PNG per scene at the frame dims, in the scene's gray") {
     import graft.multimodal.Multimodal
     val kf = Multimodal.sceneKeyframes(
       Multimodal.synthesizeSceneAviCorpus(spark, 8), thresholdFp = 80000000L)
@@ -317,19 +296,5 @@ class MultimodalSpec extends AnyFunSuite {
     assert(img != null && img.getWidth == 24 && img.getHeight == 24) // id 1: w=24,h=24
     val g = img.getRGB(3, 3) & 0xff
     assert(math.abs(g - 200) <= 4, s"scene-B keyframe gray $g far from 200")
-    // byte-level sink: files land byte-identical, atomic-renamed; re-run
-    // overwrites in place
-    val dir = java.nio.file.Files.createTempDirectory("graft_kf").toString
-    val manifest = Multimodal.writeKeyframePngs(kf, dir).collect()
-    assert(manifest.length == rows.size)
-    val f = new java.io.File(dir, "1_1.png")
-    assert(f.isFile)
-    assert(java.nio.file.Files.readAllBytes(f.toPath).toSeq ==
-      rows((1L, 1L)).png.toSeq, "file bytes must equal the dataset payload")
-    val disk = javax.imageio.ImageIO.read(f)
-    assert(disk.getWidth == 24 && disk.getHeight == 24)
-    Multimodal.writeKeyframePngs(kf, dir).collect() // idempotent re-run
-    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".png")) ==
-      rows.size)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.Tables
-import graft.operators.BloomPrefilter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,25 +63,6 @@ class PackingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(routed === plain)
     assert(routed.nonEmpty, "sf0.001 batch should contain novel docs")
-  }
-
-  test("bloom anti join operator is exact on integral keys") {
-    val fact = (0L to 999L).toDF("k")
-    val dim = (0L to 999L by 3).toDF("k")
-    val got = BloomPrefilter.antiJoin(fact, "k", dim, "k", 400, 0.05)
-      .collect().map(_.getLong(0)).toSet
-    assert(got === (0L to 999L).filter(_ % 3 != 0).toSet)
-  }
-
-  test("bloom anti join keeps null-key probe rows, like the plain anti join") {
-    val fact = Seq[java.lang.Long](1L, 2L, 3L, null, null).toDF("k")
-    val dim = Seq(2L, 4L).toDF("k")
-    val plain = fact.join(dim, fact("k") === dim("k"), "left_anti")
-      .collect().map(r => Option(r.get(0))).toSeq.sortBy(_.map(_.toString))
-    val routed = BloomPrefilter.antiJoin(fact, "k", dim, "k", 16, 0.01)
-      .collect().map(r => Option(r.get(0))).toSeq.sortBy(_.map(_.toString))
-    assert(routed === plain, "null probe keys must survive the Bloom routing")
-    assert(routed.count(_.isEmpty) === 2, "both null-key rows kept")
   }
 
   test("NfcNormalize: composes decomposed sequences, identity on NFC, idempotent") {

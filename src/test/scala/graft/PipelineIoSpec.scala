@@ -188,45 +188,18 @@ class PipelineIoSpec extends AnyFunSuite {
     assert(out("odd.xyz") == "application/octet-stream")
   }
 
-  test("csv export (K3): export/<t>.csv per table, headered, both layouts") {
+  test("csv export (K3): <t>.csv is one headered file, overwritten in place") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    graft.io.CsvExport.exportTables(
-      spark, TestSpark.sfDir, Seq("region", "nation"), tmp)
-    // distributed layout: <t>.csv is a directory of part files
-    val regionBack = spark.read.option("header", "true").csv(s"$tmp/region.csv")
-    assert(regionBack.count() == 5 && regionBack.columns.contains("r_name"))
-    // single-file layout (reference parity): <t>.csv is one plain file
-    graft.io.CsvExport.exportTables(
-      spark, TestSpark.sfDir, Seq("nation"), tmp, singleFile = true)
+    val nation = graft.io.Tables.load(spark, TestSpark.sfDir, "nation")
     val f = java.nio.file.Paths.get(tmp, "nation.csv")
-    assert(java.nio.file.Files.isRegularFile(f), "singleFile must be a plain file")
-    val firstLine = java.nio.file.Files.readAllLines(f).get(0)
-    assert(firstLine.contains("n_name"), "header row present")
-    assert(spark.read.option("header", "true").csv(f.toString).count() == 25)
-  }
-
-  test("jsonl export: round-trips values, honors shard count and codec") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    val docs = graft.io.Tables.load(spark, TestSpark.sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    graft.io.JsonlExport.write(docs, s"$tmp/docs", shards = Some(3))
-    // exactly 3 shards, each a plain text file of JSON lines
-    val parts = new java.io.File(s"$tmp/docs").listFiles()
-      .filter(_.getName.startsWith("part-"))
-    assert(parts.length == 3, "shards pin the part-file count")
-    val firstLine = scala.io.Source.fromFile(parts.head).getLines().next()
-    assert(firstLine.startsWith("{") && firstLine.contains("\"doc_id\""))
-    // schema-first read-back is value-identical
-    val back = graft.io.JsonlExport.read(spark, s"$tmp/docs", docs.schema)
-    assert(back.except(docs).isEmpty && docs.except(back).isEmpty)
-    assert(back.count() == docs.count())
-    // gzip codec: compressed shard names, same read-back
-    graft.io.JsonlExport.write(docs, s"$tmp/docs_gz", codec = Some("gzip"))
-    val gzParts = new java.io.File(s"$tmp/docs_gz").listFiles()
-      .filter(_.getName.startsWith("part-"))
-    assert(gzParts.nonEmpty && gzParts.forall(_.getName.endsWith(".gz")))
-    assert(graft.io.JsonlExport.read(spark, s"$tmp/docs_gz", docs.schema)
-      .count() == docs.count())
+    for (_ <- 1 to 2) {
+      graft.io.CsvExport.exportFrame(nation, f.toString)
+      assert(java.nio.file.Files.isRegularFile(f), "<t>.csv must be a plain file")
+      assert(java.nio.file.Files.readAllLines(f).get(0).contains("n_name"), "header row present")
+      assert(spark.read.option("header", "true").csv(f.toString).count() == 25)
+    }
+    assert(new java.io.File(tmp).list().toSeq.filterNot(_.startsWith(".")) == Seq("nation.csv"),
+      "the staging directory is gone")
   }
 
   test("orc round-trip: values identical, predicate pushdown reaches the scan") {

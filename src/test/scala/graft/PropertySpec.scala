@@ -262,21 +262,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("bloom anti join == except for arbitrary fact/dim key sets") {
-    val keyGen = Gen.listOfN(300, Gen.chooseNum(-1000L, 1000L))
-    for (round <- 1 to Rounds) {
-      val fact = samples(keyGen, round)
-      val dim = samples(keyGen, round + 100)
-      val got = graft.operators.BloomPrefilter.antiJoin(
-          fact.toDF("k"), "k", dim.toDF("k"), "k",
-          expectedItems = math.max(dim.size, 1).toLong, fpp = 0.05)
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val dimSet = dim.toSet
-      val want = fact.filterNot(dimSet).sorted
-      assert(got == want, s"round $round: bloom-routed anti join must equal set difference")
-    }
-  }
-
   test("packing offsets tile: prefix sum == local scan for arbitrary token counts") {
     val countGen = Gen.listOfN(200, Gen.chooseNum(0L, 700L))
     for (round <- 1 to Rounds) {
@@ -338,36 +323,6 @@ class PropertySpec extends AnyFunSuite {
       val second = Similarity.semDedup(survivors, "vec_id", "embedding", "label", 0.9)
       assert(second.filter(col("is_dup")).count() == 0L,
         s"round $round: re-dedup of survivors must be a no-op")
-    }
-  }
-
-  test("BucketedRangeJoinRule == theta join on arbitrary points, intervals, widths") {
-    import graft.plans.BucketedRangeJoinRule
-    BucketedRangeJoinRule.install(spark)
-    (1 to Rounds).foreach { round =>
-      val pts = samples(Gen.listOfN(30, Gen.chooseNum(-100.0, 100.0)), round)
-      // negative spans produce INVERTED intervals on purpose (the theta
-      // semantics the rule must preserve even where the operator API
-      // would reject them)
-      val ivs = samples(Gen.listOfN(20,
-        Gen.zip(Gen.chooseNum(-100.0, 100.0), Gen.chooseNum(-40.0, 40.0))), round + 100)
-        .map { case (lo, span) => (lo, lo + span) }
-      val w = samples(Gen.oneOf(0.7, 3.0, 13.0, 50.0, 1000.0), round + 200)
-      val p = pts.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("pid", "p")
-      val iv = ivs.zipWithIndex.map { case ((lo, hi), i) => (i.toLong, lo, hi) }
-        .toDF("iid", "lo", "hi")
-      def pii = p.join(iv, col("p") >= col("lo") && col("p") < col("hi"))
-      def ovl = iv.as("a").join(iv.as("b"),
-        col("a.lo") < col("b.hi") && col("b.lo") < col("a.hi"))
-      val wantP = pii.collect().map(_.toString).sorted.toSeq
-      val wantO = ovl.collect().map(_.toString).sorted.toSeq
-      spark.conf.set(BucketedRangeJoinRule.WidthConf, w.toString)
-      try {
-        assert(pii.collect().map(_.toString).sorted.toSeq == wantP,
-          s"round $round width $w: point-in-interval rows diverged")
-        assert(ovl.collect().map(_.toString).sorted.toSeq == wantO,
-          s"round $round width $w: overlap rows diverged")
-      } finally spark.conf.unset(BucketedRangeJoinRule.WidthConf)
     }
   }
 

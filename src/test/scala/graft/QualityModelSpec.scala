@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.QualityModel
-import org.apache.spark.sql.functions._
 
 /** Laws for the fastText-style quality classifier — the t57 gate pins
   * cross-engine parity; these pin the semantics parity can't see (the
@@ -55,22 +54,6 @@ class QualityModelSpec extends AnyFunSuite {
       .as[(Long, Long)].collect()
     assert(wt.length == 1 && wt.head._2 == 15L)
     assert(wt.head._1 >= 0L && wt.head._1 < QualityModel.gateBuckets)
-  }
-
-  test("scoreStateless == score row-for-row (the streaming-compatible form)") {
-    val docs = Seq(
-      (1L, "batch fast batch"), (2L, "slow slow dup"), (3L, ""),
-      (4L, "the quick brown spark vector runs fast café")).toDF("doc_id", "text")
-    val joined = QualityModel.score(docs, "doc_id", "text",
-      QualityModel.gateWeights(spark), QualityModel.gateBuckets,
-      QualityModel.gateBiasFp, QualityModel.gateThresholdFp)
-    val wmap = QualityModel.gateWeights(spark)
-      .as[(Long, Long)].collect().toMap
-    val stateless = QualityModel.scoreStateless(docs, "doc_id", "text",
-      wmap, QualityModel.gateBuckets,
-      QualityModel.gateBiasFp, QualityModel.gateThresholdFp)
-    assert(stateless.exceptAll(joined).unionAll(joined.exceptAll(stateless)).count() == 0L,
-      "the fold-over-literal-map form must equal the explode+join form")
   }
 
   test("non-ASCII text folds to '?' before hashing instead of throwing") {

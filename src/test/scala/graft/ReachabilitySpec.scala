@@ -1,0 +1,113 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every top-level `object`/`class`/`trait` in src/main must be reachable
+  * from the four mains (`Main`, `Verify`, `Bench`, `ExplainPlan`): code that
+  * only a spec reaches is not part of the surface, so it goes (or gets
+  * wired into a query or a pipeline). The closure is textual and needs no
+  * Spark session: comments are stripped, then each reached file's
+  * identifiers reach the top-level definitions of that name, whose files
+  * are scanned in turn. A shared simple name over-reaches, never under.
+  */
+class ReachabilitySpec extends AnyFunSuite {
+
+  private val roots = Seq("Main", "Verify", "Bench", "ExplainPlan")
+
+  /** The knob registry: no main reads it, `GraftConfSpec` does. */
+  private val allowed = Set("GraftConf")
+
+  /** Drops `//` and (nested) block comments; string and char literals are
+    * kept verbatim so a `//` inside a URL literal is not a comment. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder(src.length)
+    var i = 0
+    val n = src.length
+    def at(s: String) = src.startsWith(s, i)
+    while (i < n) {
+      if (at("//")) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 0
+        while (i < n && (depth > 0 || at("/*"))) {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+        }
+        out += ' '
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) n else end + 3
+        out ++= src.substring(i, stop)
+        i = stop
+      } else if (src(i) == '"') {
+        out += '"'; i += 1
+        while (i < n && src(i) != '"' && src(i) != '\n') {
+          if (src(i) == '\\' && i + 1 < n) { out += src(i); i += 1 }
+          out += src(i); i += 1
+        }
+        if (i < n) { out += src(i); i += 1 }
+      } else if (src(i) == '\'' && i + 2 < n &&
+          (src(i + 2) == '\'' || (src(i + 1) == '\\' && i + 3 < n && src(i + 3) == '\''))) {
+        val stop = if (src(i + 2) == '\'') i + 3 else i + 4
+        out ++= src.substring(i, stop)
+        i = stop
+      } else { out += src(i); i += 1 }
+    }
+    out.result()
+  }
+
+  private val topLevelDef =
+    """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:object|class|trait)\s+(\w+)""".r
+  private val ident = """[A-Za-z_][A-Za-z0-9_]*""".r
+
+  private lazy val sources: Map[String, String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString ->
+        stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      .toMap
+  }
+
+  /** Top-level definition name → the files defining it. */
+  private lazy val defs: Map[String, Set[String]] =
+    sources.toSeq.flatMap { case (path, text) =>
+      topLevelDef.findAllMatchIn(text).map(_.group(1) -> path)
+    }.groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }
+
+  /** The names a file uses, its own definition headers excluded. */
+  private def uses(text: String): Set[String] =
+    ident.findAllIn(topLevelDef.replaceAllIn(text, " ")).toSet
+
+  private def reached: Set[String] = {
+    var names = roots.toSet
+    var queue = roots.flatMap(defs.getOrElse(_, Set.empty)).distinct
+    var seen = queue.toSet
+    while (queue.nonEmpty) {
+      val file = queue.head
+      queue = queue.tail
+      uses(sources(file)).filter(defs.contains).foreach { name =>
+        names += name
+        defs(name).filterNot(seen).foreach { f => seen += f; queue :+= f }
+      }
+    }
+    names
+  }
+
+  test("comment stripping keeps string literals and drops nested comments") {
+    val src = "val u = \"s3://b/k\" // Gone\n/* a /* Gone */ b */ val c = '/'"
+    val s = stripComments(src)
+    assert(s.contains("\"s3://b/k\"") && s.contains("val c = '/'"))
+    assert(!s.contains("Gone"))
+  }
+
+  test("every top-level definition in src/main is reachable from the four mains") {
+    roots.foreach(r => assert(defs.contains(r), s"main $r not found in src/main/scala"))
+    val unreached = (defs.keySet -- reached -- allowed).toSeq.sorted
+    assert(unreached.isEmpty,
+      s"defined in src/main but reached from no main: ${unreached.mkString(", ")}")
+  }
+}

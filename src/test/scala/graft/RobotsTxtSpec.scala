@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.RobotsTxt
-import org.apache.spark.sql.functions._
 
 class RobotsTxtSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -111,31 +110,5 @@ class RobotsTxtSpec extends AnyFunSuite {
     // unnamed crawler falls back to the star group
     val o = verdictsFor("otherbot", Seq("/x/a", "/g/a"))
     assert(o(0)._7 == false && o(0)._5 == "/x/" && o(1)._7 == true)
-  }
-
-  test("stateless == batch on non-ASCII patterns (codepoint length, UTF-8 tie order)") {
-    // Patterns chosen to split the Java-String and engine orderings:
-    //  - "/𐀀" (U+10000, ONE codepoint / TWO UTF-16 units) vs "/é" — equal
-    //    in Spark's length() but unequal in p.length, so a UTF-16-length
-    //    sort would rank them differently than the engine;
-    //  - on the length tie, UTF-16 order puts the surrogate pair BELOW
-    //    U+E000..U+FFFF while UTF-8 byte order puts it above — "/�"
-    //    (U+FFFD) vs "/𐀀" flips between the two comparators.
-    val robots = "User-agent: *\nDisallow: /𐀀\nAllow: /é\nDisallow: /�\nAllow: /a"
-    val paths = Seq("/𐀀x", "/éx", "/�x", "/ax", "/zz")
-    val rules = RobotsTxt.starGroupRules(
-      Seq(("d", robots)).toDF("domain", "txt"), "domain", "txt")
-    val urls = paths.zipWithIndex.map { case (p, i) => (i.toLong, "d", p) }
-      .toDF("id", "domain", "path")
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getString(3),
-      r.getString(4), r.getBoolean(6))
-    val batch = RobotsTxt.verdicts(urls, "id", "domain", "path", rules)
-      .collect().map(key).toSet
-    val ruleSeq = rules.collect().map(r => (r.getString(0), r.getString(1),
-      r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Long]))).toSeq
-    val stateless = RobotsTxt.verdictsStateless(urls, "id", "domain", "path", ruleSeq)
-      .collect().map(key).toSet
-    assert(stateless == batch,
-      s"stateless and batch diverged on non-ASCII patterns:\n$stateless\nvs\n$batch")
   }
 }

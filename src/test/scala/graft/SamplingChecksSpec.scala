@@ -1,11 +1,10 @@
 package graft
 
 import graft.functions.Sampling
-import graft.transforms.Checks
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Sampling determinism/rate pins and data-quality gate behavior. */
+/** Sampling determinism and rate pins. */
 class SamplingChecksSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -53,23 +52,5 @@ class SamplingChecksSpec extends AnyFunSuite {
       when(col("id") === 1L, -5.0).when(col("id") === 2L, 0.0).otherwise(col("w")))
     val b = draw(withBad)
     assert(!b.contains(1L) && !b.contains(2L), "non-positive weights never sampled")
-  }
-
-  test("checks pass through clean data and fail with violation counts") {
-    val clean = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val dirty = Seq((1L, "a"), (1L, "b"), (3L, null)).toDF("k", "v")
-    // chainable on success
-    assert(Checks.requireNonNull(
-      Checks.requireUnique(clean, Seq("k")), Seq("v")).count() == 2)
-    val dup = intercept[Checks.CheckFailed](Checks.requireUnique(dirty, Seq("k")))
-    assert(dup.violations == 1, "one duplicated key value")
-    val nn = intercept[Checks.CheckFailed](Checks.requireNonNull(dirty, Seq("v")))
-    assert(nn.violations == 1)
-    val fk = intercept[Checks.CheckFailed](
-      Checks.requireFkCoverage(dirty, "k", clean, "k"))
-    assert(fk.violations == 1, "k=3 has no parent")
-    Checks.requireExactly(dirty, 1, col("v").isNull) // passes
-    assert(intercept[Checks.CheckFailed](
-      Checks.requireExactly(dirty, 2, col("v").isNull)).violations == 1)
   }
 }

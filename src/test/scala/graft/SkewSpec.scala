@@ -17,18 +17,6 @@ class SkewSpec extends AnyFunSuite {
     (hot ++ cold).toDF("k", "v")
   }
 
-  test("saltedAggregate == plain groupBy aggregate") {
-    val plain = skewed.groupBy("k")
-      .agg(sum("v").as("v"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Skew.saltedAggregate(
-      skewed, Seq(col("k")), salts = 8,
-      partialAggs = Seq(sum("v").as("v"), count(lit(1)).as("n")),
-      finalAggs = Seq(sum("v").as("v"), sum("n").as("n")))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
-
   test("saltedJoin == plain inner join") {
     val dim = Seq(("hot", "HOT"), ("k1", "K1"), ("k2", "K2")).toDF("dk", "label")
     val plain = skewed.join(dim, skewed("k") === dim("dk"))

@@ -178,6 +178,28 @@ class TarShardsSpec extends AnyFunSuite {
     finally java.nio.file.Files.delete(control)
   }
 
+  test("s4, s7, s8 and s9 read a fresh scratch directory under java.io.tmpdir per build") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
+    def scratchOf(name: String): String = {
+      val files = SparkEntry.queries(name)(spark, TestSpark.sfDir).inputFiles
+      assert(files.nonEmpty, name)
+      // <tmpdir>/<prefix>-<uuid>/... : the directory directly under tmpdir
+      val dirs = files.map { f =>
+        var p = new java.io.File(new java.net.URI(f)).getCanonicalFile
+        while (p.getParentFile != null && p.getParentFile.getPath != tmp) p = p.getParentFile
+        assert(p.getParentFile != null, s"$name reads $f outside $tmp")
+        p.getPath
+      }.distinct
+      assert(dirs.length == 1, s"$name reads ${dirs.toSeq}")
+      dirs.head
+    }
+    for (q <- Seq("s4_csv_roundtrip", "s7_jsonl_roundtrip", "s8_partition_pruned_scan",
+        "s9_orc_roundtrip")) {
+      val (a, b) = (scratchOf(q), scratchOf(q))
+      assert(a != b, s"$q: two builds share $a")
+    }
+  }
+
   test("hostile input fails loudly: bad size field, overrun, non-advancing walk") {
     val good = TarShards.tarBytes(Seq("a.txt" -> "hello".getBytes))
     // corrupt the size field with non-octal garbage

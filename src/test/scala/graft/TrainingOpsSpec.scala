@@ -98,58 +98,6 @@ class TrainingOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("SQL surface: graft_* functions register and match the Column API") {
-    graft.engine.GraftFunctions.registerAll(spark)
-    val dot = spark.sql(
-      "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
-    assert(dot == 11.0)
-    Seq(("a b c d", 1L)).toDF("text", "id").createOrReplaceTempView("sqlfn_docs")
-    val viaSql = spark.sql(
-      "SELECT graft_minhash(graft_shingles(text, 3), 16, 42L) AS mh FROM sqlfn_docs")
-      .head().getSeq[Long](0)
-    val viaColumns = Seq(("a b c d", 1L)).toDF("text", "id")
-      .select(graft.functions.MinHashLSH.minhashes(
-        array_distinct(graft.functions.expr.HashedWordShingles(col("text"), 3)), 16).as("mh"))
-      .head().getSeq[Long](0)
-    assert(viaSql == viaColumns, "SQL and Column formulations must agree bit-for-bit")
-    val s = spark.sql(
-      "SELECT CAST(graft_sum_scaled(v, 2) AS DOUBLE) AS s FROM VALUES (123L), (877L) t(v)")
-      .head().getDouble(0)
-    assert(s == 10.0, "int128 sum usable as a SQL aggregate")
-    val sketch = graft.operators.BloomPrefilter.build(
-      Seq(42L).toDF("k"), "k", expectedItems = 16, fpp = 0.01)
-    val hex = sketch.map("%02x".format(_)).mkString
-    val probes = spark.sql(
-      s"SELECT graft_bloom_might_contain(42L, x'$hex') AS yes," +
-        s" graft_bloom_might_contain(987654321L, x'$hex') AS no")
-      .head()
-    assert(probes.getBoolean(0), "an inserted key must probe true")
-    assert(!probes.getBoolean(1), "a distant key should probe false at fpp=0.01")
-    val nfc = spark.sql(
-      "SELECT graft_nfc_normalize('café') AS n, length(graft_nfc_normalize('café')) AS l")
-      .head()
-    assert(nfc.getString(0) == "café" && nfc.getInt(1) == 4,
-      "SQL NFC must compose the combining mark like the Column API")
-    val z = spark.sql("SELECT graft_zvalue(3L, 5L) AS z").head().getLong(0)
-    assert(z == graft.functions.expr.ZValue.interleave(3L, 5L),
-      "SQL zvalue must match the Column/eval path")
-    val zInt = spark.sql("SELECT graft_zvalue(3, 5) AS z").head().getLong(0)
-    assert(zInt == z, "INT inputs must coerce like the Column API does")
-    val shingles = spark.sql(
-      "SELECT graft_word_shingles('A b a B c', 2, true) AS d, " +
-        "graft_word_shingles('a b a b c', 2, false) AS a").head()
-    assert(shingles.getSeq[String](0) == Seq("a b", "b a", "b c"),
-      "distinct string shingles, first-occurrence order")
-    assert(shingles.getSeq[String](1) == Seq("a b", "b a", "a b", "b c"),
-      "raw stream keeps duplicates in document order")
-    val cms = graft.operators.CountMin.build(
-      Seq.fill(7)("tok").toDF("t"), "t", eps = 1e-3)
-    val cmsHex = cms.map("%02x".format(_)).mkString
-    val est = spark.sql(
-      s"SELECT graft_cms_estimate('tok', x'$cmsHex') AS e").head().getLong(0)
-    assert(est == 7L, "SQL CMS probe must match the built sketch")
-  }
-
   test("connected components: chains collapse to min label; singletons keep their own") {
     import graft.operators.ConnectedComponents
     // a 5-chain (1-2-3-4-5), a 2-cycle (10,11), and singleton 20
@@ -314,17 +262,5 @@ class TrainingOpsSpec extends AnyFunSuite {
     val got = NgramLm.importanceWeights(ref, ref, "text", pool, "doc_id", "text")
       .select("weight_fp6", "selected").as[(Long, Boolean)].collect()
     assert(got.forall { case (w, sel) => w == 0L && !sel }, got.toSeq.toString)
-  }
-
-  test("SQL surface: graft_jaro_winkler and graft_simhash64 match the Column API") {
-    graft.engine.GraftFunctions.registerAll(spark)
-    val jw = spark.sql("SELECT graft_jaro_winkler('MARTHA', 'MARHTA') AS j")
-      .head().getDouble(0)
-    assert(math.abs(jw - 0.9611111111111111) < 1e-15)
-    val viaSql = spark.sql("SELECT graft_simhash64(array(1L, 2L, 3L)) AS h").head().getLong(0)
-    import org.apache.spark.sql.functions._
-    val viaCol = Seq(Seq(1L, 2L, 3L)).toDF("a")
-      .select(graft.functions.SimHash.simhash64(col("a"))).head().getLong(0)
-    assert(viaSql == viaCol)
   }
 }

@@ -3,22 +3,17 @@ package graft
 import graft.operators.Upsert
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Incremental-merge pins: last-wins compaction, tombstone deletes,
-  * change-beats-base on equal timestamps (batch re-application), and
-  * idempotence of applying the same change set twice. */
+/** CDC compaction pin: the newest row per key wins, with an explicit
+  * tiebreak for same-key-same-ts changes. */
 class UpsertSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val base = Seq(
-    (1L, 10L, "a-v1"), (2L, 10L, "b-v1"), (3L, 10L, "c-v1")
-  ).toDF("k", "ts", "v")
-
   private lazy val changes = Seq(
-    (1L, 20L, "a-v2", false), // update
-    (2L, 20L, "b-del", true), // delete
-    (3L, 5L, "c-stale", false), // older than base -> base wins
-    (4L, 20L, "d-new", false), // insert
+    (1L, 20L, "a-v2", false),
+    (2L, 20L, "b-del", true), // a tombstone is just another version here
+    (3L, 5L, "c-stale", false),
+    (4L, 20L, "d-new", false),
     (4L, 15L, "d-old", false) // superseded within the same change set
   ).toDF("k", "ts", "v", "is_delete")
 
@@ -26,35 +21,5 @@ class UpsertSpec extends AnyFunSuite {
     val snap = Upsert.latestSnapshot(changes, Seq("k"), "ts", tiebreak = Seq("v"))
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(snap == Map(1L -> "a-v2", 2L -> "b-del", 3L -> "c-stale", 4L -> "d-new"))
-  }
-
-  test("applyChanges: update, tombstone delete, stale-change loses, insert") {
-    val next = Upsert.applyChanges(base, changes, Seq("k"), "ts", "is_delete")
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(next == Map(1L -> "a-v2", 3L -> "c-v1", 4L -> "d-new"))
-  }
-
-  test("equal-timestamp conflict: the change wins (batch re-application)") {
-    val sameTs = Seq((1L, 10L, "a-reapplied", false)).toDF("k", "ts", "v", "is_delete")
-    val next = Upsert.applyChanges(base, sameTs, Seq("k"), "ts", "is_delete")
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(next(1L) == "a-reapplied")
-  }
-
-  test("NULL delete flag means not-a-tombstone, never a silent drop") {
-    val nullFlag = Seq(
-      (1L, 20L, "a-v2", None: Option[Boolean]),    // update with null flag
-      (2L, 20L, "b-del", Some(true))               // real tombstone
-    ).toDF("k", "ts", "v", "is_delete")
-    val next = Upsert.applyChanges(base, nullFlag, Seq("k"), "ts", "is_delete")
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(next == Map(1L -> "a-v2", 3L -> "c-v1"),
-      "null flag row must survive as an update; true flag still deletes")
-  }
-
-  test("applying the same changes twice == applying once (idempotent merge)") {
-    val once = Upsert.applyChanges(base, changes, Seq("k"), "ts", "is_delete")
-    val twice = Upsert.applyChanges(once, changes, Seq("k"), "ts", "is_delete")
-    assert(once.collect().map(_.toSeq).toSet == twice.collect().map(_.toSeq).toSet)
   }
 }

@@ -17,7 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * to a fraction of the identical scan over a random layout. */
 class ZOrderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private def deinterleave(z: Long, n: Int, bits: Int): Seq[Long] =
     (0 until n).map { i =>
@@ -50,13 +49,6 @@ class ZOrderSpec extends AnyFunSuite {
       ZValue.zValueN(Seq(col("a"), col("b")), 31) =!=
         ZValue.zValue(col("a"), col("b"))).count()
     assert(n == 0, "the two formulations must be bit-identical")
-  }
-
-  test("normalizeToBits maps [min,max] onto the grid and clamps outliers") {
-    val df = Seq(-5.0, 0.0, 50.0, 100.0, 250.0).toDF("v")
-    val got = df.select(ZValue.normalizeToBits(col("v"), 0.0, 100.0, 4).as("g"))
-      .as[Long].collect().toSeq
-    assert(got == Seq(0L, 0L, 8L, 15L, 15L))
   }
 
   test("box predicate over a z-ordered layout prunes row groups; random layout scans everything") {
