@@ -14,8 +14,10 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
   * with `master` unset and shuffle partitions sized to cores × executors.
   *
   * [[builder]] also sizes Spark's JVM-wide codegen class cache
-  * ([[CodegenCacheMaxEntries]], via [[Codegen.size]]) and prints one stderr
-  * line with the scratch directory it chose, why, the cache cap and the
+  * ([[CodegenCacheMaxEntries]], via [[Codegen.size]]), installs
+  * [[graft.io.LocalFileSystem]] for `file://` ([[fileSystem]]) and prints
+  * one stderr line with the scratch directory it chose, why, the cache
+  * cap, the `file://` FileSystem class in effect and why, and the
   * [[sizing]] in effect, so every session (`local`, the test session,
   * every main) starts with the same, visible engine configuration.
   */
@@ -41,9 +43,11 @@ object GraftSession {
       case Some(n) => s"$n (requested $codegenCap, but the cache was sized earlier in this JVM)"
       case None => s"unknown (requested $codegenCap)"
     }
+    // Likewise a file:// implementation already in the SparkConf.
+    val (fileImpl, fileNote) = fileSystem(new SparkConf().getOption(FileImplKey))
     System.err.println(s"[graft] session '$appName': spark.local.dir=$localDir " +
-      s"($localDirWhy); codegen cache cap=$capNote entries; cpus=${size.cpus}, " +
-      s"shuffle partitions=${size.shufflePartitions}")
+      s"($localDirWhy); codegen cache cap=$capNote entries; file://=$fileNote; " +
+      s"cpus=${size.cpus}, shuffle partitions=${size.shufflePartitions}")
     SparkSession
       .builder()
       .appName(appName)
@@ -63,6 +67,7 @@ object GraftSession {
       // cap to executor JVMs on a cluster, whose caches are sized from
       // the SQL conf a task propagates.
       .config(Codegen.CacheMaxEntriesKey, codegenCap)
+      .config(FileImplKey, fileImpl)
       // Kryo for broadcasts/closures (e.g. the ANN index matrix); DataFrame
       // shuffles already use Tungsten encoders either way.
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -84,6 +89,24 @@ object GraftSession {
     * queries can hit, and an unbounded cap saved just 337 of its 4615
     * compiles at 2000. */
   val CodegenCacheMaxEntries: Int = 2000
+
+  private[graft] val FileImplKey = "spark.hadoop.fs.file.impl"
+
+  /** The `file://` FileSystem class to configure (`requested`, the
+    * SparkConf's, else [[graft.io.LocalFileSystem]], which sets
+    * permissions without forking `chmod`) and the startup line's note:
+    * the class in effect and why. Hadoop's FileSystem cache is JVM-wide
+    * and its key ignores the configuration, so a FileSystem cached
+    * earlier in this JVM stays in effect whatever this session asks for. */
+  private[graft] def fileSystem(requested: Option[String]): (String, String) = {
+    val impl = requested.getOrElse(classOf[graft.io.LocalFileSystem].getName)
+    val inEffect = GraftBridge.localFileSystemClass(impl).getName
+    val why =
+      if (inEffect != impl) s"requested $impl, but a file:// FileSystem was cached earlier in this JVM"
+      else if (requested.isDefined) s"$FileImplKey in the SparkConf"
+      else "graft's default: permissions without a forked chmod"
+    (impl, s"$inEffect ($why)")
+  }
 
   /** Shuffle/spill scratch dir (`spark.local.dir`) and why it was chosen,
     * the reason printed in the session's startup line.

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.transforms.Text
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -78,7 +79,7 @@ object ObjectStore {
     * reference's `application/octet-stream` default (`src/core.py:938`). */
   def contentTypeFor(typeCode: Column): Column =
     coalesce(
-      element_at(typedLit(mimeTypesMapping), lower(trim(typeCode))),
+      element_at(typedLit(mimeTypesMapping), Text.lower(trim(typeCode))),
       lit("application/octet-stream"))
 
   /** Content type from a file-name column: last-extension lookup with the

@@ -509,7 +509,7 @@ object CorePipelines {
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
         stripCrLf(col("DESCR")).as("name"),
-        coalesce(upper(trim(col("STATO"))), lit("NUOVA")).as("status"),
+        coalesce(Text.upper(trim(col("STATO"))), lit("NUOVA")).as("status"),
         stripCrLf(col("ID_UNIVOCO")).as("code"),
         Text.handleId(col("ID_TIPO_UDO_22_FK")).as("udo_type_id"),
         Text.handleId(col("ID_SEDE_FK")).as("operational_office_id"),
@@ -634,7 +634,7 @@ object CorePipelines {
   def udosHistory(
       statoUdo: DataFrame, udoModel: DataFrame, storicoPostiLetto: DataFrame,
       udosTarget: Option[DataFrame]): DataFrame = {
-    val statusNorm = upper(trim(col("STATO")))
+    val statusNorm = Text.upper(trim(col("STATO")))
     val hist = statoUdo.select(
       Text.handleId(col("CLIENTID")).as("hist_id"),
       Text.handleId(col("ID_UDO_FK")).as("udo_id"),

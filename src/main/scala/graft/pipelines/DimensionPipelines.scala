@@ -130,11 +130,11 @@ object DimensionPipelines {
     val delib = tipoDelibera.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        upper(trim(col("NOME"))).as("name")) ++ Audit.columns(loadTime): _*)
+        Text.upper(trim(col("NOME"))).as("name")) ++ Audit.columns(loadTime): _*)
     val atti = tipoAtto.select(
       Seq(
         Text.handleId(col("CLIENTID")).as("id"),
-        upper(trim(col("DESCR"))).as("name")) ++ Audit.columns(loadTime): _*)
+        Text.upper(trim(col("DESCR"))).as("name")) ++ Audit.columns(loadTime): _*)
     val w = Window.partitionBy(col("name")).orderBy(col("id"))
     delib.unionByName(atti)
       .withColumn("__rn", row_number().over(w))

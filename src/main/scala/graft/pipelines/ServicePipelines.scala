@@ -21,7 +21,7 @@ object ServicePipelines {
     * cleanup had (fixed here like `Arrays.elementCleanup`). */
   private def enumToken(c: Column, drop: String, replacement: String): Column =
     regexp_replace(
-      regexp_replace(upper(trim(c)), " ", "_"),
+      regexp_replace(Text.upper(trim(c)), " ", "_"),
       java.util.regex.Pattern.quote(drop), replacement)
 
   /** `migrate_requirements` (`src/auac.py:135-209`): the fallback-scalar +
@@ -140,7 +140,7 @@ object ServicePipelines {
       Text.handleId(col("CLIENTID")).as("id"),
       trim(col("NOME")).as("name"),
       Text.handleId(col("ID_DELIBERA_TEMPL")).as("resolution_id"),
-      Audit.handleDisabledAt(lower(trim(col("DISABLED"))), "s",
+      Audit.handleDisabledAt(Text.lower(trim(col("DISABLED"))), "s",
         Audit.romeToUtc(col("LAST_MOD")),
         Audit.romeToUtc(col("CREATION"))).as("disabled_at"),
       Audit.handleCreatedAt(Audit.romeToUtc(col("CREATION")), loadTime).as("created_at"),

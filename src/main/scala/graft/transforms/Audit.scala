@@ -57,6 +57,6 @@ object Audit {
     handleTimestamps(
       romeToUtc(col("CREATION")),
       romeToUtc(col("LAST_MOD")),
-      lower(trim(col("DISABLED"))), "s",
+      Text.lower(trim(col("DISABLED"))), "s",
       loadTime)
 }

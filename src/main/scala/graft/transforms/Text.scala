@@ -1,6 +1,7 @@
 package graft.transforms
 
-import org.apache.spark.sql.Column
+import graft.functions.expr.CaseMap
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Pure `Column => Column` text builders.
@@ -17,18 +18,6 @@ object Text {
   def handleText(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, "\\x00", ""), "\\s+", " "))
 
-  /** Canonical id normalization: strip + lowercase.
-    * Reference: `src/utils.py:444-465`. The strip must remove ALL edge
-    * whitespace with Polars `strip_chars()` semantics — and Polars
-    * delegates to Rust `char::is_whitespace`, the full Unicode
-    * White_Space property, NOT just ASCII: a CLIENTID edged with NBSP
-    * (U+00A0), U+2028, or an ideographic space (U+3000) must normalize
-    * identically to the reference or it silently misses every join it
-    * keys. [[WsClass]] IS White_Space written as an explicit class, in
-    * syntax that compiles the same in Java regex (Spark side) and RE2
-    * (DuckDB oracle side). Costs a regexp instead of a trim-charset
-    * loop — still whole-stage codegen, and id normalization is never
-    * the hot loop. */
   /** Whitespace strip WITHOUT case folding — for case-sensitive codes
     * (the reference's bare `str.strip_chars()`, same whitespace class as
     * [[handleId]]). */
@@ -41,7 +30,26 @@ object Text {
     * U+3000). */
   private val WsClass = "[\\t-\\r\\u0085\\p{Z}]"
 
+  /** Canonical id normalization: strip + lowercase.
+    * Reference: `src/utils.py:444-465`. The strip must remove ALL edge
+    * whitespace with Polars `strip_chars()` semantics — and Polars
+    * delegates to Rust `char::is_whitespace`, the full Unicode
+    * White_Space property, NOT just ASCII: a CLIENTID edged with NBSP
+    * (U+00A0), U+2028, or an ideographic space (U+3000) must normalize
+    * identically to the reference or it silently misses every join it
+    * keys. [[WsClass]] IS White_Space written as an explicit class, in
+    * syntax that compiles the same in Java regex (Spark side) and RE2
+    * (DuckDB oracle side). Costs a regexp instead of a trim-charset
+    * loop — still whole-stage codegen, and id normalization is never
+    * the hot loop. */
   def handleId(c: Column): Column = lower(strip(c))
+
+  /** Spark's `lower`/`upper` (ICU case mapping) for the migration's call
+    * sites, minus Spark's ~1.5 s per-JVM title-case table: see
+    * [[graft.functions.expr.CaseMap]]. The catalog queries keep Spark's
+    * own functions. */
+  def lower(c: Column): Column = GraftBridge.column(CaseMap(GraftBridge.expression(c), upper = false))
+  def upper(c: Column): Column = GraftBridge.column(CaseMap(GraftBridge.expression(c), upper = true))
 
   /** Replace only the FIRST occurrence of a literal `target`.
     * Polars `str.replace` is first-occurrence (`src/core.py:189`) while

@@ -1,5 +1,10 @@
 package org.apache.spark.sql
 
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
@@ -71,4 +76,16 @@ object GraftBridge {
     * the returned frames read lazily, so they cannot be deleted sooner. */
   def tempDir(prefix: String): String =
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getPath
+
+  /** The class of the `file://` FileSystem that Spark's Hadoop
+    * configuration gets in this JVM once `fs.file.impl` is `impl`. Hadoop
+    * caches FileSystems JVM-wide under a key without the configuration,
+    * so an instance cached earlier wins over `impl`. When none is cached,
+    * this creates and caches one from the configuration Spark derives
+    * from the system properties, as a context it starts would. */
+  def localFileSystemClass(impl: String): Class[_] = {
+    val conf = new Configuration(SparkHadoopUtil.get.conf)
+    conf.set("fs.file.impl", impl)
+    FileSystem.get(URI.create("file:///"), conf).getClass
+  }
 }

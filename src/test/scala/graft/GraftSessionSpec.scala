@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The session's engine-level settings take effect: the codegen class cache
   * really has the builder's cap (Spark sizes it once per JVM, from whatever
   * conf is current at its first use), a warm loop larger than Spark's
-  * default 100 entries stops recompiling, and the scratch-dir guard fails
-  * loudly on a malformed bound.
+  * default 100 entries stops recompiling, the scratch-dir guard fails
+  * loudly on a malformed bound, and the startup line names the `file://`
+  * FileSystem in effect.
   */
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -81,6 +82,18 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(f.getParentFile.getCanonicalPath == tmp, d)
       assert(org.apache.spark.TestBridge.deletedAtExit(d))
     }
+  }
+
+  test("file://: graft's FileSystem unless the SparkConf names one; the note names the class in effect") {
+    spark // a GraftSession has cached this JVM's file:// FileSystem
+    val ours = classOf[graft.io.LocalFileSystem].getName
+    assert(GraftSession.fileSystem(None) ==
+      (ours, s"$ours (graft's default: permissions without a forked chmod)"))
+    val stock = classOf[org.apache.hadoop.fs.LocalFileSystem].getName
+    assert(GraftSession.fileSystem(Some(stock)) == (stock,
+      s"$ours (requested $stock, but a file:// FileSystem was cached earlier in this JVM)"))
+    assert(GraftSession.fileSystem(Some(ours)) ==
+      (ours, s"$ours (spark.hadoop.fs.file.impl in the SparkConf)"))
   }
 
   test("sizing: SPARK_GRAFT_CPUS and SPARK_GRAFT_SHUFFLE_PARTITIONS parse as positive ints") {

@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI smoke (reference `main.py:26-45`): arg parsing, module dispatch over
   * the DAG runner, and one end-to-end run of the bundled parquet-seam
-  * registry against Oracle-shaped fixtures — every target table lands. */
+  * registry against Oracle-shaped fixtures — every target table lands,
+  * and no plan of the run uses Spark's own `lower`/`upper`/`initcap`. */
 class MainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -75,13 +80,32 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("end-to-end dispatch: all five pipelines run off parquet fixtures") {
-    val in = java.nio.file.Files.createTempDirectory("graft-cli-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-cli-out").toString
+    val in = GraftBridge.tempDir("graft-cli-in")
+    val out = GraftBridge.tempDir("graft-cli-out")
     MigrationFixtures.write(spark, in)
 
-    val results = Main.execute(
+    // No plan of the run may hold Spark's own case mapping: its first use
+    // builds a title-case table for every code point (~1.5 s per JVM).
+    // The migration case-maps through Text.lower/upper instead.
+    val caseMapped = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      private def check(qe: QueryExecution): Unit =
+        qe.analyzed.foreachWithSubqueries(_.expressions.foreach(_.foreach {
+          case e @ (_: Lower | _: Upper | _: InitCap) => caseMapped.add(e.toString)
+          case _ =>
+        }))
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = check(qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = check(qe)
+    }
+    spark.listenerManager.register(listener)
+    val results = try Main.execute(
       Main.Args(Set("all"), list = false, Some(in), Some(out)), spark)
+    finally {
+      org.apache.spark.TestBridge.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
     assert(results.map(_.name).toSet == allPipelineNames)
+    assert(caseMapped.isEmpty, caseMapped)
 
     def readOut(t: String) = spark.read.parquet(s"$out/$t.parquet")
     assert(readOut("toponyms").count() == 1)
@@ -186,11 +210,11 @@ class MainSpec extends AnyFunSuite {
   test("a registry run compiles a handful of units, and writes what a compiled run writes") {
     import graft.engine.Codegen
     import graft.pipeline.{Pipeline, PipelineContext, Runner}
-    val in = java.nio.file.Files.createTempDirectory("graft-interp-in").toString
+    val in = GraftBridge.tempDir("graft-interp-in")
     MigrationFixtures.write(spark, in)
     val ctx = PipelineContext(spark)
     def run(runAll: Seq[Pipeline] => Unit): (String, Codegen.Count) = {
-      val out = java.nio.file.Files.createTempDirectory("graft-interp-out").toString
+      val out = GraftBridge.tempDir("graft-interp-out")
       // An empty class cache: each run compiles every unit it needs,
       // whatever ran before it in this JVM.
       Codegen.clearCache()
@@ -216,8 +240,8 @@ class MainSpec extends AnyFunSuite {
 
   test("the codegen settings are restored after each pipeline, also when it throws") {
     import graft.engine.Codegen
-    val in = java.nio.file.Files.createTempDirectory("graft-interp-empty").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-interp-out").toString
+    val in = GraftBridge.tempDir("graft-interp-empty")
+    val out = GraftBridge.tempDir("graft-interp-out")
     val pipes = Main.registry(in, out).map(p => p.name -> p).toMap
     val ctx = graft.pipeline.PipelineContext(spark)
     val session0 = codegenConf()

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.expr.ZValue
 import graft.io.Layout
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -57,8 +58,9 @@ class ZOrderSpec extends AnyFunSuite {
     val data = spark.range(n).select(
       (col("id") * 2654435761L % 1024).cast("long").as("x"),
       (col("id") * 40503 % 1024).cast("long").as("y"))
-    val zPath = "/tmp/graft_zorder/clustered"
-    val rPath = "/tmp/graft_zorder/random"
+    val dir = GraftBridge.tempDir("graft_zorder")
+    val zPath = s"$dir/clustered"
+    val rPath = s"$dir/random"
     Layout.writeZOrderedN(data, zPath, Seq("x", "y"), bits = 10, numFiles = 32)
     // counterfactual: same rows, random order, same file count
     data.repartition(32, col("x") * 0 + rand(seed = 7) * 32)
