@@ -292,9 +292,9 @@ object Bench {
     }
     for (round <- 1 to rounds) {
       val measured = names.map { name =>
-        // Hygiene between queries: the caching operators benched since r7
-        // (quickselect, PageRank) release their persists on exit, but a
-        // failure path or executor-side stragglers can leave blocks behind;
+        // Hygiene between queries: a round-loop operator's scope releases
+        // its rounds on exit, but its kept result (PageRank's ranks,
+        // minLabel's labels) and the BoundedCaches frames stay cached;
         // this is a dedicated bench session, so a global wipe evicts
         // nothing anyone else owns. releaseAll also DROPS the BoundedCaches
         // references — clearCache evicts blocks but the registry would

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Lineage}
 import graft.io.{ObjectStore, ParquetSource, S3}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import graft.pipelines.{CorePipelines, DimensionPipelines, PoaPipelines, ServicePipelines}
@@ -180,10 +180,10 @@ object Main {
         val branches = CorePipelines.resolutionBranches(
           io.src("delibera_templ"), io.src("tipo_delibera"),
           io.src("atto_model"), io.src("tipo_atto"), load)
-        val (mapped, release) = CorePipelines.attachMappingWithRelease(
-          branches, "resolutions", resolutionClient)
-        try io.sink(CorePipelines.disambiguateNames(mapped).drop("attachment"))
-        finally release()
+        Lineage.scope { s =>
+          val mapped = CorePipelines.attachMapping(s, branches, "resolutions", resolutionClient)
+          io.sink(CorePipelines.disambiguateNames(mapped).drop("attachment"))
+        }
       },
       pipeline("udo_types")(io => io.sink(CorePipelines.udoTypes(
         io.src("tipo_udo_22_templ"),

@@ -3,10 +3,10 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 
 /** Bounded registry for DataFrames persisted INSIDE a lazily-returned
-  * query (same contract as PrefixSum's private registry): a query that
-  * caches an intermediate has no post-execution hook to release it, so
-  * repeated invocations (Bench's warm+N loop) would stack cache entries
-  * and lean on LRU eviction. Registering keeps only the newest
+  * query (the one owner of cached frames besides [[Lineage]]'s scopes): a
+  * query that caches an intermediate has no post-execution hook to release
+  * it, so repeated invocations (Bench's warm+N loop) would stack cache
+  * entries and lean on LRU eviction. Registering keeps only the newest
   * [[MaxLive]] frames, non-blocking-unpersisting the eldest; an evicted
   * frame that is re-executed later just recomputes its lineage —
   * semantics are unaffected.

@@ -5,18 +5,22 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-/** The round-loop lifecycle of the iterative operators (PageRank, Hits,
-  * ConnectedComponents, Scc, Bfs, …, and the subword trainers): persist
+/** The program's one scoped-cache lifecycle ([[BoundedCaches]] is the
+  * other owner of cached frames, for those a lazily returned query keeps).
+  * It covers the round loops of the iterative operators (PageRank, Hits,
+  * ConnectedComponents, Scc, Bfs, …, and the subword trainers) — persist
   * each round's state, materialize it with the round's one action, read it
   * onward through a lineage-truncated view, and release it once the next
-  * round no longer needs it — on the normal path and when the operator
-  * refuses or fails.
+  * round no longer needs it — and the resolutions upload mapping, pinned
+  * by the completeness check that fills it and released after the sink.
+  * Either way the frames are released on the normal path and when the
+  * body refuses or fails.
   *
   * Frames are pinned inside a [[Scope]] ([[scope]]), which releases every
   * frame still registered with it when the body exits, however it exits.
-  * A frame the operator returns is taken out of the scope with
-  * [[Scope.keep]] and released by the caller ([[Pinned.release]], the
-  * `WithRelease` hooks) or by the session's cache LRU.
+  * A frame an operator returns is taken out of the scope with
+  * [[Scope.keep]]; kept results go to the session cache, which releases
+  * them (`catalog.clearCache`, or its LRU).
   *
   * Truncation: a pinned frame's [[Pinned.view]] re-roots the persisted,
   * materialized frame as a LEAF over its RDD, so a round's plan does not

@@ -92,7 +92,7 @@ object ObjectStore {
     * `src/core.py:1006-1009`). `clientFactory` runs once per partition.
     *
     * PRECONDITION: id, name, and payload are non-null — callers filter
-    * the null-attachment half FIRST (as `attachMappingWithRelease` does).
+    * the null-attachment half FIRST (as `CorePipelines.attachMapping` does).
     * Violations fail with a row-identifying error instead of an anonymous
     * NPE deep in the client. */
   def upload(
@@ -120,35 +120,5 @@ object ObjectStore {
         Uploaded(id, key, payload.length.toLong)
       }
     }
-  }
-
-  final case class UploadStats(
-      files: Long, bytes: Long, seconds: Double, filesPerSecond: Double)
-
-  /** [[upload]] driven to completion with the reference's throughput
-    * report (`src/core.py:990-995`): one action materializes the mapping
-    * (persisted — the caller's join-back reads the cache, never re-uploads)
-    * and the elapsed wall time becomes a files/sec line through the run
-    * log. Returns (mapping, stats); callers own unpersisting the mapping
-    * once joined back. */
-  def uploadAndLog(
-      rows: DataFrame, bucket: String,
-      clientFactory: () => Client,
-      log: Option[graft.pipeline.RunLog] = None,
-      idCol: String = "id", nameCol: String = "name",
-      mimeCol: String = "mime", payloadCol: String = "payload"): (Dataset[Uploaded], UploadStats) = {
-    val mapping = upload(rows, bucket, clientFactory, idCol, nameCol, mimeCol, payloadCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    val agg = mapping.toDF().agg(
-      count(lit(1)).as("files"),
-      coalesce(sum(col("nBytes")), lit(0L)).as("bytes")).head()
-    val seconds = (System.nanoTime() - t0) / 1e9
-    val files = agg.getLong(0)
-    val rate = if (seconds > 0) files / seconds else 0.0
-    val stats = UploadStats(files, agg.getLong(1), seconds, rate)
-    log.foreach(_.info(
-      f"Completed upload of $files%d/$files%d files in $seconds%.2f seconds ($rate%.2f files/sec)"))
-    (mapping, stats)
   }
 }

@@ -41,7 +41,7 @@ object Bfs {
     *         unreachable vertices are absent
     */
   def hopDistances(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0, 64], got $maxHops (for unbounded reachability use ConnectedComponents)")
     val (eP, eRows) = s.pinBy(

@@ -40,7 +40,7 @@ object BpeTrain {
     *         merge, in training order; stops early when no pair repeats
     */
   def train(docs: DataFrame, tokenCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
     import spark.implicits._

@@ -109,7 +109,7 @@ object ByteBpe {
     *         when no pair reaches weighted count 2
     */
   def train(docs: DataFrame, textCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = docs.sparkSession
     import spark.implicits._

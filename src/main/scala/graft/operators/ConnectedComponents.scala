@@ -16,25 +16,16 @@ import org.apache.spark.sql.functions._
   * label-sum aggregate (decimal — an id-sum overflows a long at billions
   * of vertices) between rounds: strictly smaller iff something changed.
   * Rounds needed ≤ graph diameter; near-dup clusters are clique-like
-  * (diameter 1-2). For adversarial long-chain graphs at 100 TB, the
-  * alternating large-star/small-star variant converges in O(log n) rounds
-  * — this implementation documents that as the scale escape hatch and
-  * guards with `maxIters`.
+  * (diameter 1-2); a graph whose diameter exceeds `maxIters` is refused.
   *
   * Cache lifecycle ([[graft.engine.Lineage]]): each round's labels are
   * pinned, materialized by the convergence aggregate, and the PREVIOUS
   * round is released — lineage would otherwise deepen by two joins per
-  * round and recompute the whole history every action. The returned frame is the final (vertex-count ×
-  * 16 bytes) label set, still cached; long-lived sessions use
-  * [[minLabelWithRelease]] and release after consuming.
+  * round and recompute the whole history every action. The returned frame
+  * is the final (vertex-count × 16 bytes) label set, still cached: the
+  * session cache releases it (`clearCache`, or its LRU).
   */
 object ConnectedComponents {
-
-  def minLabel(
-      vertices: DataFrame, idCol: String,
-      edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 20): DataFrame =
-    minLabelWithRelease(vertices, idCol, edges, srcCol, dstCol, maxIters)._1
 
   /** Weighted union-find with path compression over collected (id, edge)
     * arrays, labels = min id per component — the [[Scc.tarjanMinLabels]]
@@ -85,87 +76,6 @@ object ConnectedComponents {
     Array.tabulate(n)(k => (ids(k), minId.get(find(idx.get(ids(k)))).longValue))
   }
 
-  /** Alternating large-star/small-star contraction — the O(log n)-round
-    * variant for graphs whose diameter defeats [[minLabel]] (long chains),
-    * after Kiveris et al., "Connected Components in MapReduce and Beyond"
-    * (SoCC'14 — public algorithm).
-    *
-    *  - large-star: every node u links each LARGER neighbor to
-    *    m = min(N(u) ∪ {u});
-    *  - small-star: every node u links each ≤-neighbor and itself to the
-    *    minimum among them.
-    *
-    * Each half-round is one groupBy-min shuffle + an explode back to
-    * edges; rounds until the canonical edge set fixpoints (exact `except`
-    * check, one join per round — no hash-collision shortcuts). At the
-    * fixpoint every node is directly attached to its component minimum.
-    * Same cache lifecycle and release contract as [[minLabel]].
-    */
-  def starContractionWithRelease(
-      vertices: DataFrame, idCol: String,
-      edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 30): (DataFrame, () => Unit) = Lineage.scope { s =>
-    import org.apache.spark.sql.expressions.Window
-
-    // canonical undirected pair set (a < b), deduped
-    val cur0 = s.pin(edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct())
-
-    def adjacency(e: DataFrame): DataFrame =
-      e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-
-    // large-star: m = min over N(u) ∪ {u}; emit (v, m) for v ∈ N(u), v > u
-    def largeStar(e: DataFrame): DataFrame = {
-      val adj = adjacency(e)
-      val m = min(least(col("v"), col("u"))).over(Window.partitionBy(col("u")))
-      adj.withColumn("m", m)
-        .filter(col("v") > col("u"))
-        .select(least(col("v"), col("m")).as("a"), greatest(col("v"), col("m")).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-    }
-
-    // small-star: over neighbors v ≤ u (plus u itself): link all to their min
-    def smallStar(e: DataFrame): DataFrame = {
-      val adjLe = adjacency(e).filter(col("v") <= col("u"))
-      val m = min(col("v")).over(Window.partitionBy(col("u"))) // v ≤ u, so min incl. u is min(v)
-      adjLe.withColumn("m", m)
-        .select(explode(array(col("v"), col("u"))).as("n"), col("m"))
-        .filter(col("n") =!= col("m"))
-        .select(col("m").as("a"), col("n").as("b")) // m < n always
-        .distinct()
-    }
-
-    // Each round references the prior frame several times, so it reads the
-    // prior round's truncated view (building on the raw plan quadruples the
-    // logical tree per round: OOM by round ~10 just RENDERING it).
-    var cur = cur0
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val next = s.pin(smallStar(largeStar(cur.view)))
-      // exact fixpoint: identical canonical pair sets
-      converged = next.view.except(cur.view).isEmpty && cur.view.except(next.view).isEmpty
-      cur.release()
-      cur = next
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxIters rounds")
-    // At the fixpoint each edge is (componentMin, member); isolated
-    // vertices label themselves.
-    val verts = vertices.select(col(idCol).cast("long").as("id"))
-    val labels = s.keep(s.pin(verts
-      .join(cur.view.select(col("b").as("id"), col("a").as("lbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("label"))))
-    (labels.frame, () => labels.release())
-  }
-
   /** @param localFinishMaxRows the serial-endgame cutover (the
     *        [[Scc.components]] doctrine): when vertices + directed edge
     *        rows fit under this count-scale driver budget, the graph is
@@ -174,11 +84,11 @@ object ConnectedComponents {
     *        bit-identical output. 0 forces the all-distributed path
     *        (the parity spec uses this). At 100 TB the entry check fails
     *        and the label-propagation rounds run unchanged. */
-  def minLabelWithRelease(
+  def minLabel(
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 20,
-      localFinishMaxRows: Long = 4000000L): (DataFrame, () => Unit) = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     // Pinned for the loop: every round's neighbor-min join reads the
     // edge set, and without the cache each labelSum action would re-run
     // the caller's whole edge-producing subplan (e.g. d13's pair
@@ -208,10 +118,8 @@ object ConnectedComponents {
       _.agg(sum(col("label").cast("decimal(38,0)")).as("s"), count(lit(1)).as("n")).head())
     val firstSum = first.getDecimal(0)
     val vertexRows = first.getLong(1)
-    if (firstSum == null) { // no vertices: trivially converged
-      val empty = s.keep(labels0)
-      (empty.frame, () => empty.release())
-    } else if (vertexRows + edgeRows <= localFinishMaxRows) {
+    if (firstSum == null) s.keep(labels0).frame // no vertices: trivially converged
+    else if (vertexRows + edgeRows <= localFinishMaxRows) {
       // --- SERIAL ENDGAME (the Scc.components doctrine): the whole graph
       // fits the documented driver budget — one collect + union-find
       // replaces diameter-many fixed-overhead distributed rounds.
@@ -223,10 +131,9 @@ object ConnectedComponents {
       val labeled = unionFindMinLabels(ids, es)
       undirected.release()
       labels0.release()
-      val out = s.keep(s.pin(vertices.sparkSession.createDataFrame(labeled.toSeq)
+      s.keep(s.pin(vertices.sparkSession.createDataFrame(labeled.toSeq)
         .toDF("id", "label")
-        .select(col("id").cast("long"), col("label").cast("long"))))
-      (out.view, () => out.release())
+        .select(col("id").cast("long"), col("label").cast("long")))).view
     } else {
       // Each round references `labels` twice, so it reads the previous
       // round's truncated view or the logical plan grows geometrically with
@@ -241,12 +148,10 @@ object ConnectedComponents {
       }(labelSum)(_.compareTo(_) == 0)
       if (!labels.converged)
         throw new IllegalStateException(
-          s"connected components did not converge in $maxIters rounds " +
-            "(long-chain graph: use starContractionWithRelease)")
+          s"connected components did not converge in $maxIters rounds")
       // truncated view over the still-persisted final labels, so a caller
       // referencing the result more than once doesn't re-nest the rounds
-      val done = s.keep(labels.state)
-      (done.view, () => done.release())
+      s.keep(labels.state).view
     }
   }
 }

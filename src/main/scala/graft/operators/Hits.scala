@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   * Cache lifecycle ([[graft.engine.Lineage]]): the edge list and vertex
   * set are pinned once; each round's (a, h) pair is pinned and the
   * previous round released — lineage stays one round deep, so the plan
-  * does not grow with `rounds`.
+  * does not grow with `rounds`. The final round stays cached until the
+  * session cache releases it.
   *
   * Reference scope: the reference engine has no graph operators — this is
   * part of the training-data-pipeline extension surface (link-structure
@@ -34,18 +35,12 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
-  /** Hook-less form for one-shot processes; see [[runWithRelease]]. */
-  def run(edges: DataFrame, rounds: Int): DataFrame =
-    runWithRelease(edges, rounds)._1
-
   /** @param edges  columns `src`, `dst` (long ids), directed; duplicates
     *               allowed (parallel edges weight both update directions)
     * @param rounds number of synchronous (authority, hub) update rounds
-    * @return ((v, hub, authority) for every vertex appearing in `edges`,
-    *         release hook for the returned frame's cache)
+    * @return (v, hub, authority) for every vertex appearing in `edges`
     */
-  def runWithRelease(
-      edges: DataFrame, rounds: Int): (DataFrame, () => Unit) = Lineage.scope { s =>
+  def run(edges: DataFrame, rounds: Int): DataFrame = Lineage.scope { s =>
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = s.pinLazy(edges.select(col("src").cast("long"), col("dst").cast("long")))
 
@@ -83,7 +78,6 @@ object Hits {
         .select(vs("v"), coalesce(col("h"), lit(0L)).as("hub"),
           coalesce(col("a"), lit(0L)).as("authority"))
     }
-    val out = s.keep(fin)
-    (out.view, () => out.release())
+    s.keep(fin).view
   }
 }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * pinned, the previous round released — lineage stays one round deep, so
   * the plan does not grow with `iters` and a 100 TB run is `iters` bounded
   * passes. The returned frame is the final (vertex-count × 16 bytes) rank
-  * set, still cached; long-lived sessions use [[runWithRelease]] and
-  * release after consuming.
+  * set, still cached: the session cache releases it (`clearCache`, or its
+  * LRU).
   *
   * The uniform, weighted and TrustRank variants share one round loop
   * ([[iterate]]) and differ only in their SQL expression strings, which
@@ -39,21 +39,15 @@ object PageRank {
   /** 1e12 — rank mass is tracked in trillionths. */
   val Scale: Long = 1000000000000L
 
-  /** Hook-less form for one-shot processes; see [[runWithRelease]]. */
-  def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
-    runWithRelease(nodes, edges, iters)._1
-
   /** @param nodes one column `v` (long id), the full vertex set (dangling
     *              vertices included)
     * @param edges columns `src`, `dst` (long ids), directed, duplicates
     *              allowed (parallel edges weight the transition)
     * @param iters number of synchronous rounds (fixed, no convergence test —
     *              deterministic plans beat adaptive stopping for parity)
-    * @return ((v, r) with r the fixed-point rank at [[Scale]], release hook
-    *         that unpersists the returned frame)
+    * @return (v, r) with r the fixed-point rank at [[Scale]]
     */
-  def runWithRelease(
-      nodes: DataFrame, edges: DataFrame, iters: Int): (DataFrame, () => Unit) =
+  def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
     iterate(nodes, _.count(), edges, Seq("src", "dst"), count(lit(1)).as("deg"),
       n => s"$Scale div ${n}L AS r",
       "r div deg AS share",
@@ -82,12 +76,7 @@ object PageRank {
       "(r * w) div sumw AS share",
       (n, dang) => s"(($Scale * 15) div 100) div ${n}L + " +
         s"(85 * (coalesce(contrib, 0) + ${dang}L div ${n}L)) div 100 AS r",
-      iters)._1
-
-  /** Hook-less form for one-shot processes; see [[trustRankWithRelease]]. */
-  def trustRank(
-      nodes: DataFrame, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame =
-    trustRankWithRelease(nodes, edges, seeds, iters)._1
+      iters)
 
   /** TrustRank / personalized PageRank (Gyöngyi, Garcia-Molina &
     * Pedersen, VLDB 2004 — public algorithm): [[run]]'s power iteration
@@ -105,9 +94,8 @@ object PageRank {
     * Same per-round cost profile and cache lifecycle as [[run]]; seeds
     * outside `nodes` are ignored.
     */
-  def trustRankWithRelease(
-      nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
-      iters: Int): (DataFrame, () => Unit) = {
+  def trustRank(
+      nodes: DataFrame, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     val flagged = nodes
       .join(seeds.select(col("v")).distinct().withColumn("__s", lit(1L)),
         Seq("v"), "left")
@@ -143,7 +131,7 @@ object PageRank {
       vertices: DataFrame, mass: DataFrame => Long,
       edges: DataFrame, edgeCols: Seq[String], degree: Column,
       initial: Long => String, share: String, update: (Long, Long) => String,
-      iters: Int): (DataFrame, () => Unit) = Lineage.scope { s =>
+      iters: Int): DataFrame = Lineage.scope { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val carried = vertices.columns.toSeq.filter(_ != "v")
     // Inputs are re-read every round — persist both, or an expensive
@@ -198,8 +186,7 @@ object PageRank {
         .selectExpr(("v" +: carried) :+ update(n, dang): _*)
     }(danglingOf)((_, _) => false)
     // the final round's view stays cached (multi-reference callers don't
-    // re-nest the round chain); release via the hook
-    val out = s.keep(ranks.state)
-    (out.view.select(col("v"), col("r")), () => out.release())
+    // re-nest the round chain)
+    s.keep(ranks.state).view.select(col("v"), col("r"))
   }
 }

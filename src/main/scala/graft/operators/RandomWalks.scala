@@ -63,7 +63,7 @@ object RandomWalks {
   def deepWalks(
       edges: DataFrame, seeds: DataFrame,
       length: Int, walksPerSeed: Int = 1,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     require(length >= 1 && length <= 64,
       s"walk length must be in [1, 64], got $length")
     require(walksPerSeed >= 1 && walksPerSeed <= 128,

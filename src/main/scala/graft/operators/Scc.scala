@@ -61,6 +61,14 @@ import org.apache.spark.sql.functions._
   */
 object Scc {
 
+  /** The default serial-endgame budget of every round-loop operator with a
+    * driver-side finish ([[components]], [[ConnectedComponents.minLabel]],
+    * [[Bfs]], [[RandomWalks]] and the subword trainers): 4e6 rows ≈ tens of
+    * MB of primitive arrays on the driver, count-scale by the repo's
+    * collect doctrine. Each operator's `localFinishMaxRows` parameter
+    * defaults to it; 0 forces the all-distributed path. */
+  val LocalFinishMaxRows: Long = 4000000L
+
   private def labelSum(df: DataFrame, c: String): java.math.BigDecimal =
     df.agg(sum(col(c).cast("decimal(38,0)"))).head().getDecimal(0)
 
@@ -231,11 +239,10 @@ object Scc {
     *                 (Slota et al. run trim + FW-BW distributed for the
     *                 giant SCC, then finish the small remainder serially):
     *                 when live vertices + live edges fit under this row
-    *                 budget (default 4e6 ≈ tens of MB of primitive arrays
-    *                 on the driver — count-scale by the repo's collect
-    *                 doctrine), the live subgraph is collected ONCE and
-    *                 finished with iterative Tarjan instead of paying
-    *                 ~15 more fixed-overhead distributed actions. 0 forces
+    *                 budget ([[LocalFinishMaxRows]] by default), the live
+    *                 subgraph is collected ONCE and finished with
+    *                 iterative Tarjan instead of paying ~15 more
+    *                 fixed-overhead distributed actions. 0 forces
     *                 the all-distributed path (the parity spec uses this).
     * @return (id, scc) for every vertex, scc = min vertex id in its SCC
     */
@@ -243,7 +250,7 @@ object Scc {
       vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxOuterRounds: Int = 25, maxPropRounds: Int = 60,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     val (e0, e0Rows) = s.pinBy(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))

@@ -53,7 +53,7 @@ object WordPiece {
     *         ranking); stops early when no pair repeats
     */
   def train(docs: DataFrame, tokenCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame =
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame =
     trainLoop(docs.select(col(tokenCol).cast("array<string>").as("toks"),
         lit(1L).as("freq")),
       rounds, (l, r) => l + r, localFinishMaxRows)
@@ -78,7 +78,7 @@ object WordPiece {
     * serial-endgame budget, where the per-occurrence stream would stay
     * corpus-bound on both paths. */
   def trainFromWords(docs: DataFrame, textCol: String, rounds: Int,
-      localFinishMaxRows: Long = 4000000L): DataFrame = {
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = {
     val streams = docs
       .select(explode(graft.functions.TextTokens.tokens(col(textCol))).as("w"))
       .filter(col("w") =!= "")
@@ -96,7 +96,7 @@ object WordPiece {
     * by freq on both the distributed and endgame paths. */
   private def trainLoop(symbols: DataFrame, rounds: Int,
       mergedSymbol: (String, String) => String,
-      localFinishMaxRows: Long = 4000000L): DataFrame = Lineage.scope { s =>
+      localFinishMaxRows: Long = Scc.LocalFinishMaxRows): DataFrame = Lineage.scope { s =>
     require(rounds >= 1 && rounds <= 10000, s"rounds=$rounds out of range")
     val spark = symbols.sparkSession
     import spark.implicits._

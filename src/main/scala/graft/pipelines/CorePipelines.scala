@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.engine.Lineage
 import graft.io.ObjectStore
 import graft.transforms.{Arrays, Audit, Casts, EnumMap, Text}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -18,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    (`src/core.py:275-364`);
   *  - resolutions — branch/union/split/side-effect/join-back/rename
   *    (`src/core.py:750-1046`), decomposed into [[resolutionBranches]],
-  *    [[attachMappingWithRelease]], and [[disambiguateNames]] so the object-store
-  *    side effect sits between plannable stages;
+  *    [[attachMapping]], and [[disambiguateNames]] so the object-store side
+  *    effect sits between plannable stages;
   *  - [[udoTypes]] — arrays + grouped-list bridges + PG text[] literals
   *    (`src/core.py:1294-1455`), the full column list;
   *  - [[users]] — alias hygiene (the reference's `CLIENTID_right`) +
@@ -122,44 +123,38 @@ object CorePipelines {
     * the reference's MIME table — `src/core.py:709-712,938`), join the
     * id→object mapping back, and ASSERT completeness — every uploaded row
     * must have a mapping (`src/core.py:1012`). Returns the re-unioned frame
-    * (`src/core.py:1014-1020`), with a hook that releases the mapping's
-    * cache.
+    * (`src/core.py:1014-1020`).
     *
     * The upload `mapPartitions` executes exactly ONCE per run: the mapping
-    * is persisted and forced by the completeness assert, so the caller's
-    * sink action reads the cached (id, objectKey, nBytes) rows — never the
-    * BLOBs — instead of re-running the upload. (Deterministic keys make a
-    * re-run idempotent, but at 100 TB of attachments it would double the
-    * upload I/O.) The cached frame is metadata-only: ~100 bytes per
-    * attachment, not the payloads. Call the returned hook after the final
-    * action over the frame. */
-  def attachMappingWithRelease(
-      resolutions: DataFrame, bucket: String,
-      clientFactory: () => ObjectStore.Client): (DataFrame, () => Unit) = {
+    * is pinned in the caller's `scope` and filled by the completeness
+    * assert, so the caller's sink action reads the cached (id, objectKey,
+    * nBytes) rows — never the BLOBs — instead of re-running the upload.
+    * (Deterministic keys make a re-run idempotent, but at 100 TB of
+    * attachments it would double the upload I/O.) The cached frame is
+    * metadata-only: ~100 bytes per attachment, not the payloads. Run the
+    * final action over the frame inside `scope`; its exit releases the
+    * mapping, also when the upload or the assert throws. */
+  def attachMapping(
+      scope: Lineage.Scope, resolutions: DataFrame, bucket: String,
+      clientFactory: () => ObjectStore.Client): DataFrame = {
     val withA = resolutions.filter(col("attachment").isNotNull)
     val withoutA = resolutions.filter(col("attachment").isNull)
       .withColumn("object_key", lit(null).cast("string"))
-    val mapping = ObjectStore.upload(
+    def joined(mapping: DataFrame): DataFrame =
+      withA.join(mapping.select(col("id").as("m_id"), col("objectKey")),
+        col("id") === col("m_id"), "left")
+    // This count both asserts completeness AND materializes the pinned
+    // mapping (the join consumes every mapping partition).
+    val (mapping, missing) = scope.pinBy(ObjectStore.upload(
       withA.select(
         col("id"), col("name"),
         ObjectStore.contentTypeForName(col("name")).as("mime"),
         col("attachment").as("payload")),
-      bucket, clientFactory).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val joined = withA.join(mapping.select(col("id").as("m_id"), col("objectKey")),
-      col("id") === col("m_id"), "left")
-    // This count both asserts completeness AND materializes the persisted
-    // mapping (the join consumes every mapping partition). On the failure
-    // path the caller never receives the release hook, so the cache must
-    // not outlive the throw.
-    try {
-      val missing = joined.filter(col("objectKey").isNull).count()
-      require(missing == 0, s"$missing uploaded resolutions lost their object mapping")
-    } catch { case e: Throwable => mapping.unpersist(); throw e }
-    val merged = joined
+      bucket, clientFactory).toDF())(m => joined(m).filter(col("objectKey").isNull).count())
+    require(missing == 0, s"$missing uploaded resolutions lost their object mapping")
+    joined(mapping.frame)
       .select((withA.columns.map(col) :+ col("objectKey").as("object_key")).toIndexedSeq: _*)
       .unionByName(withoutA)
-    (merged, () => { mapping.unpersist(); () })
   }
 
   /** Oracle 'S'/'Y' char flag → boolean (`src/core.py:1251-1291` repeats

@@ -413,9 +413,8 @@ object DedupQueries {
         |FROM reach GROUP BY id""".stripMargin) { (spark, dir) =>
       val verts = Tables.load(spark, dir, "documents").select(col("doc_id"))
       // minLabel's result stays cached (vertex-count × 16 bytes — the
-      // iterative operator's documented contract); the harness process is
-      // one-shot, so the hook-less form is fine here. Long-lived sessions
-      // should call minLabelWithRelease and release after their sink.
+      // iterative operator's documented contract) until the session cache
+      // releases it (clearCache, or its LRU).
       val clusters = graft.operators.ConnectedComponents.minLabel(
         verts, "doc_id", jaccardPairs(spark, dir), "id_a", "id_b")
       clusters.select(
@@ -1398,10 +1397,8 @@ object DedupQueries {
       val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       val nodes = Tables.load(spark, dir, "documents").select(col("doc_id").as("v"))
-      // run's result stays cached (vertex-count × 16 bytes — the iterative
-      // operator's documented contract); the harness process is one-shot,
-      // so the hook-less form is fine here. Long-lived sessions should call
-      // runWithRelease and release after their sink (same trade as d13).
+      // run's result stays cached (vertex-count × 16 bytes), released by
+      // the session cache, as d13's is.
       graft.operators.PageRank.run(nodes, edges, iters = 5)
         .select(col("v").as("doc_id"), col("r").as("rank_fp"))
     },

@@ -101,12 +101,9 @@ class LoopActionCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ConnectedComponents.minLabel: one round per hop of a chain") {
-    def run(n: Int) = {
-      val (out, release) = ConnectedComponents.minLabelWithRelease(
-        (1L to n.toLong).toDF("id"), "id", chain(n).toDF("a", "b"), "a", "b",
-        localFinishMaxRows = 0L)
-      collected(out); release()
-    }
+    def run(n: Int) = collected(ConnectedComponents.minLabel(
+      (1L to n.toLong).toDF("id"), "id", chain(n).toDF("a", "b"), "a", "b",
+      localFinishMaxRows = 0L))
     assert(delta(4, 6)(run) == (4, 2))
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{ConnectedComponents, Mis, Scc, Selection, TreeDepth}
+import graft.pipeline.{Pipeline, PipelineContext}
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-loop operators' refusal paths release every cache they
@@ -8,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the operator must refuse, and requires that no new persistent RDD
   * outlives the exception. The graph sizes keep each case to a few rounds;
   * `localFinishMaxRows = 0` keeps the distributed loops in play where the
-  * operator has a serial endgame. */
+  * operator has a serial endgame. The migration's one cache, the
+  * resolutions upload mapping, is held to the same rule after a run and
+  * after an upload that fails. */
 class LoopLeakSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -74,18 +78,11 @@ class LoopLeakSpec extends AnyFunSuite {
     assert(msg.contains("maxRounds"))
   }
 
-  test("ConnectedComponents.minLabelWithRelease non-convergence") {
+  test("ConnectedComponents.minLabel non-convergence") {
     val chain = (1L until 6L).map(v => v -> (v + 1L))
-    val msg = refusesWithoutLeak(ConnectedComponents.minLabelWithRelease(
+    val msg = refusesWithoutLeak(ConnectedComponents.minLabel(
       (1L to 6L).toDF("id"), "id", chain.toDF("a", "b"), "a", "b",
       maxIters = 1, localFinishMaxRows = 0L))
-    assert(msg.contains("did not converge"))
-  }
-
-  test("ConnectedComponents.starContractionWithRelease non-convergence") {
-    val chain = (1L until 10L).map(v => v -> (v + 1L))
-    val msg = refusesWithoutLeak(ConnectedComponents.starContractionWithRelease(
-      (1L to 10L).toDF("id"), "id", chain.toDF("a", "b"), "a", "b", maxIters = 1))
     assert(msg.contains("did not converge"))
   }
 
@@ -94,5 +91,32 @@ class LoopLeakSpec extends AnyFunSuite {
     val msg = refusesWithoutLeak(Selection.kthOfCount(
       (1L to 20L).toDF("v"), "v", total => total + 1, buckets = 2, localLimit = 1L))
     assert(msg.contains("exceeds row count"))
+  }
+
+  /** `Main.registry`'s resolutions pipeline over the migration fixtures,
+    * writing under `out`. */
+  private def resolutions(out: String): Pipeline = {
+    val in = GraftBridge.tempDir("graft-leak-in")
+    MigrationFixtures.write(spark, in)
+    Main.registry(in, out).find(_.name == "resolutions").get
+  }
+
+  test("resolutions pipeline releases its upload mapping after the sink") {
+    val out = GraftBridge.tempDir("graft-leak-out")
+    val pipe = resolutions(out)
+    val before = persistentIds
+    pipe.run(PipelineContext(spark))
+    assert(persistentIds == before, s"${(persistentIds -- before).size} persistent RDD(s) left")
+    assert(spark.read.parquet(s"$out/resolutions.parquet").count() == 2)
+  }
+
+  test("resolutions pipeline whose object-store put throws") {
+    // a regular file where the local store's root directory goes: the
+    // client's put cannot create the object's directory and throws
+    val out = GraftBridge.tempDir("graft-leak-out")
+    java.nio.file.Files.write(java.nio.file.Paths.get(out, "_objects"), Array.emptyByteArray)
+    val pipe = resolutions(out)
+    val msg = refusesWithoutLeak(pipe.run(PipelineContext(spark)))
+    assert(msg.contains("_objects"), msg)
   }
 }

@@ -1,17 +1,14 @@
 package graft
 
-import graft.io.ObjectStore
 import graft.pipeline.{Pipeline, PipelineContext, RunLog, Runner}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's observability surface, re-expressed: a per-run
-  * timestamped log file mirroring the console (`src/utils.py:48-67`) and
-  * the upload throughput report (`src/core.py:990-995`), both driven
-  * through the real Runner / ObjectStore paths.
+  * timestamped log file mirroring the console (`src/utils.py:48-67`),
+  * driven through the real Runner path.
   */
 class ObservabilitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private def tmpDir(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -81,31 +78,5 @@ class ObservabilitySpec extends AnyFunSuite {
     assert(compiles.keySet == Set("idle", "compiling"), text)
     assert(compiles("idle") == 0, text)
     assert(compiles("compiling") >= 1, text)
-  }
-
-  test("uploadAndLog: files/sec line + stats over the real partitioned upload path") {
-    val dir = tmpDir("runlog")
-    val store = tmpDir("objstore")
-    val log = RunLog.timestamped(dir, echo = false)
-    val rows = (1 to 7).map(i =>
-      (s"id$i", s"f$i.pdf", "application/pdf", Array.fill(10 + i)(i.toByte)))
-      .toDF("id", "name", "mime", "payload")
-    val (mapping, stats) = ObjectStore.uploadAndLog(
-      rows, "bkt", () => new ObjectStore.LocalFsClient(store), Some(log))
-    assert(stats.files == 7)
-    assert(stats.bytes == (1 to 7).map(10L + _).sum)
-    assert(stats.seconds > 0 && stats.filesPerSecond > 0)
-    // mapping is persisted and re-readable without re-upload side effects
-    assert(mapping.count() == 7)
-    mapping.unpersist()
-    log.close()
-    val text = new String(java.nio.file.Files.readAllBytes(log.path))
-    assert(text.matches(
-      "(?s).*Completed upload of 7/7 files in \\d+\\.\\d{2} seconds \\(\\d+\\.\\d{2} files/sec\\).*"),
-      text)
-    // the objects actually landed, once each
-    val landed = java.nio.file.Files.walk(java.nio.file.Paths.get(store, "bkt"))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(landed == 7)
   }
 }

@@ -13,10 +13,9 @@ class PageRankSpec extends AnyFunSuite {
 
   private def ranks(
       nodes: Seq[Long], edges: Seq[(Long, Long)], iters: Int = 5): Map[Long, Long] = {
-    val (out, release) = PageRank.runWithRelease(
-      nodes.toDF("v"), edges.toDF("src", "dst"), iters)
+    val out = PageRank.run(nodes.toDF("v"), edges.toDF("src", "dst"), iters)
     try out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    finally release()
+    finally spark.catalog.clearCache()
   }
 
   test("no edges: uniform ranks, stable across rounds") {
@@ -45,21 +44,21 @@ class PageRankSpec extends AnyFunSuite {
   test("deterministic across repartitionings (integer arithmetic, no float order)") {
     val nodes = (1L to 20L).toDF("v")
     val edges = (1L to 19L).map(i => (i, i + 1)).toDF("src", "dst")
-    val (a, releaseA) = PageRank.runWithRelease(nodes, edges, 3)
-    val (b, releaseB) = PageRank.runWithRelease(nodes.repartition(7), edges.repartition(5), 3)
+    val a = PageRank.run(nodes, edges, 3)
+    val b = PageRank.run(nodes.repartition(7), edges.repartition(5), 3)
     val av = a.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val bv = b.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    releaseA(); releaseB()
+    spark.catalog.clearCache()
     assert(av == bv)
   }
 
   private def trust(
       nodes: Seq[Long], edges: Seq[(Long, Long)], seeds: Seq[Long],
       iters: Int = 3): Map[Long, Long] = {
-    val (out, release) = PageRank.trustRankWithRelease(
+    val out = PageRank.trustRank(
       nodes.toDF("v"), edges.toDF("src", "dst"), seeds.toDF("v"), iters)
     try out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    finally release()
+    finally spark.catalog.clearCache()
   }
 
   test("trustRank: no edges — seeds hold all mass, non-seeds hold none") {

@@ -4,13 +4,21 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every top-level `object`/`class`/`trait` in src/main must be reachable
+/** Textual structure checks over src/main, on comment-stripped sources and
+  * with no Spark session.
+  *
+  * Reachability: every top-level `object`/`class`/`trait` must be reachable
   * from the four mains (`Main`, `Verify`, `Bench`, `ExplainPlan`): code that
   * only a spec reaches is not part of the surface, so it goes (or gets
-  * wired into a query or a pipeline). The closure is textual and needs no
-  * Spark session: comments are stripped, then each reached file's
-  * identifiers reach the top-level definitions of that name, whose files
-  * are scanned in turn. A shared simple name over-reaches, never under.
+  * wired into a query or a pipeline). Each reached file's identifiers reach
+  * the top-level definitions of that name, whose files are scanned in turn.
+  * A shared simple name over-reaches, never under.
+  *
+  * Cache ownership: only `graft.engine` (`Lineage`'s scopes and
+  * `BoundedCaches`) and `GraftBridge` persist, unpersist or checkpoint a
+  * frame, and no `def` returns a release hook (`() => Unit`): a cached
+  * frame is released by its scope or by the session cache, never by a
+  * hand-carried callback.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
@@ -97,6 +105,44 @@ class ReachabilitySpec extends AnyFunSuite {
     names
   }
 
+  /** Files that may cache by hand: the engine's cache owners and the bridge. */
+  private def cacheOwner(path: String): Boolean =
+    path.contains("/graft/engine/") || path.endsWith("/GraftBridge.scala")
+
+  /** A persist, unpersist, cache or checkpoint call, `BoundedCaches.persist`
+    * (the registry's own entry point) excepted. */
+  private val cacheCall =
+    """(?<!BoundedCaches)\.(?:persist|unpersist|checkpoint|localCheckpoint)\(|\.cache\(\)""".r
+
+  private val defName = """\bdef\s+[^\s(\[:=]+""".r
+
+  /** Each `def`'s written result type ("" when none is written): the text
+    * after its type and value parameter lists' `:`, up to the `=` or `{`
+    * that opens the body, or the end of the line. */
+  private def resultTypes(text: String): Seq[String] =
+    defName.findAllMatchIn(text).map { m =>
+      var i = m.end
+      var depth = 0
+      def step(): Unit = {
+        if (text(i) == '(' || text(i) == '[') depth += 1
+        else if (text(i) == ')' || text(i) == ']') depth -= 1
+        i += 1
+      }
+      def opens = text(i) == '(' || text(i) == '['
+      while (i < text.length && (depth > 0 || opens || text(i).isWhitespace)) step()
+      if (i >= text.length || text(i) != ':') ""
+      else {
+        val start = i + 1
+        step()
+        while (i < text.length && !(depth == 0 && (text(i) == '\n' || text(i) == '{' ||
+            (text(i) == '=' && !text.startsWith("=>", i))))) step()
+        text.substring(start, i)
+      }
+    }.toSeq
+
+  private def returnsHook(text: String): Boolean =
+    resultTypes(text).exists(_.replaceAll("\\s+", "").contains("()=>Unit"))
+
   test("comment stripping keeps string literals and drops nested comments") {
     val src = "val u = \"s3://b/k\" // Gone\n/* a /* Gone */ b */ val c = '/'"
     val s = stripComments(src)
@@ -109,5 +155,23 @@ class ReachabilitySpec extends AnyFunSuite {
     val unreached = (defs.keySet -- reached -- allowed).toSeq.sorted
     assert(unreached.isEmpty,
       s"defined in src/main but reached from no main: ${unreached.mkString(", ")}")
+  }
+
+  test("cache ownership: only graft.engine caches by hand, and no def returns a release hook") {
+    // controls: the detectors see a multi-line hook-returning def, a hook
+    // parameter is not a hook result, and the registry's entry point passes
+    assert(returnsHook("def f(\n  a: Int, b: () => Unit\n): (Int, () => Unit) = x"))
+    assert(!returnsHook("def f(body: () => Unit)(g: Int => Unit): Unit = body()"))
+    assert(cacheCall.findFirstIn("df.persist(MEMORY_AND_DISK)").isDefined)
+    assert(cacheCall.findFirstIn("graft.engine.BoundedCaches.persist(df)").isEmpty)
+    val caching = sources.toSeq.collect {
+      case (path, text) if !cacheOwner(path) && cacheCall.findFirstIn(text).isDefined => path
+    }.sorted
+    val hooks = sources.toSeq.collect {
+      case (path, text) if returnsHook(text) => path
+    }.sorted
+    assert(caching.isEmpty && hooks.isEmpty,
+      s"cache calls outside graft.engine in: ${caching.mkString(", ")}; " +
+        s"defs returning a () => Unit release hook in: ${hooks.mkString(", ")}")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.Lineage
 import graft.io.ObjectStore
 import graft.pipelines.{CorePipelines, ServicePipelines}
 import org.apache.spark.sql.Row
@@ -110,9 +111,9 @@ class ReferencePipelineSpec extends AnyFunSuite {
       "null NUMERO propagates to null name")
 
     val root = java.nio.file.Files.createTempDirectory("graft-os-test").toString
-    val (merged, release) = CorePipelines.attachMappingWithRelease(
-      branches, "resolutions", () => new ObjectStore.LocalFsClient(root))
-    try {
+    Lineage.scope { s =>
+      val merged = CorePipelines.attachMapping(
+        s, branches, "resolutions", () => new ObjectStore.LocalFsClient(root))
       assert(merged.count() == 4)
       val keys = merged.filter(col("object_key").isNotNull)
         .collect().map(_.getAs[String]("object_key"))
@@ -126,7 +127,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
         .collect().map(r => r.getAs[String]("id") -> r.getAs[String]("name")).toMap
       assert(named("d1") == "Delibera annuale", "first keeper unchanged (id order)")
       assert(named("d2") == "Delibera annuale (1)", "second gets ' (1)'")
-    } finally release()
+    }
   }
 
   test("upload executes exactly once per run; content type derives from the name") {
@@ -135,9 +136,8 @@ class ReferencePipelineSpec extends AnyFunSuite {
       ("r1", "doc one.pdf", "payload-a".getBytes),
       ("r2", "plain name", "payload-b".getBytes)
     ).toDF("id", "name", "attachment")
-    val (merged, release) = CorePipelines.attachMappingWithRelease(
-      res, "b", () => new RecordingClient)
-    try {
+    Lineage.scope { s =>
+      val merged = CorePipelines.attachMapping(s, res, "b", () => new RecordingClient)
       // two caller actions over the merged frame — e.g. a count then the
       // real sink — must NOT re-run the upload side effect
       merged.count()
@@ -148,7 +148,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
         "known extension maps to its content type (src/core.py:709-712,938)")
       assert(puts.exists { case (k, ct) => k.startsWith("r2/") && ct == "application/octet-stream" },
         "extension-less name falls back to octet-stream")
-    } finally release()
+    }
   }
 
   test("udo_types: grouped-list bridges, element mapping, PG literals, scope filter") {
@@ -606,11 +606,11 @@ class ReferencePipelineSpec extends AnyFunSuite {
       delibera, tipoDelibera, atto, tipoAtto, lit(load))
     val root = java.nio.file.Files.createTempDirectory("graft-os-test2").toString
     def keysOf(): Seq[String] = {
-      val (merged, release) = CorePipelines.attachMappingWithRelease(
-        branches, "b", () => new ObjectStore.LocalFsClient(root))
-      try merged.filter(col("object_key").isNotNull)
-        .collect().map(_.getAs[String]("object_key")).toSeq.sorted
-      finally release()
+      Lineage.scope { s =>
+        CorePipelines.attachMapping(s, branches, "b", () => new ObjectStore.LocalFsClient(root))
+          .filter(col("object_key").isNotNull)
+          .collect().map(_.getAs[String]("object_key")).toSeq.sorted
+      }
     }
     assert(keysOf() == keysOf(), "retry/re-run must overwrite, not orphan")
   }

@@ -104,21 +104,18 @@ class TrainingOpsSpec extends AnyFunSuite {
     val verts = Seq(1L, 2L, 3L, 4L, 5L, 10L, 11L, 20L).toDF("id")
     val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (10L, 11L), (11L, 10L))
       .toDF("a", "b")
-    val (labels, release) = ConnectedComponents.minLabelWithRelease(
-      verts, "id", edges, "a", "b")
+    val labels = ConnectedComponents.minLabel(verts, "id", edges, "a", "b")
     try {
       val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
         10L -> 10L, 11L -> 10L, 20L -> 20L))
       // the serial union-find endgame and the forced all-distributed
       // label-propagation path must agree bit-for-bit
-      val (dist, release2) = ConnectedComponents.minLabelWithRelease(
+      val dist = ConnectedComponents.minLabel(
         verts, "id", edges, "a", "b", localFinishMaxRows = 0L)
-      try {
-        val gotDist = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(gotDist == got, "endgame vs distributed parity")
-      } finally release2()
-    } finally release()
+      val gotDist = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotDist == got, "endgame vs distributed parity")
+    } finally spark.catalog.clearCache()
   }
 
   test("d10: planted n-gram flags positive, absent n-gram stays negative") {
