@@ -1,7 +1,9 @@
 package graft.engine
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** SparkSession factory for the graft engine.
   *
@@ -10,20 +12,41 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
   * session, UTC session timezone (the reference normalizes Europe/Rome
   * timestamps to naive UTC-like values, `src/utils.py:298-306`), AQE on so
   * joins/aggregations re-plan at runtime, and a shuffle-partition count sized
-  * for the local[32] test harness. On a real cluster the same builder is used
-  * with `master` unset and shuffle partitions sized to cores × executors.
+  * for the local[32] test harness. A cluster entry point would go through
+  * [[start]] too, with `master` unset and shuffle partitions sized to
+  * cores × executors.
   *
-  * [[builder]] also sizes Spark's JVM-wide codegen class cache
-  * ([[CodegenCacheMaxEntries]], via [[Codegen.size]]), installs
-  * [[graft.io.LocalFileSystem]] for `file://` ([[fileSystem]]) and prints
-  * one stderr line with the scratch directory it chose, why, the cache
-  * cap, the `file://` FileSystem class in effect and why, and the
-  * [[sizing]] in effect, so every session (`local`, the test session,
-  * every main) starts with the same, visible engine configuration.
+  * [[start]] is the one way a session is built (`local`: the four mains
+  * and the benchmark harness; the test session). It sizes Spark's
+  * JVM-wide codegen class cache ([[CodegenCacheMaxEntries]], via
+  * [[Codegen.size]]), installs [[graft.io.LocalFileSystem]] for `file://`
+  * ([[fileSystem]]) and gives the context a lean Hadoop configuration
+  * ([[leanHadoopConf]]). Every session prints one stderr line with the
+  * scratch directory it chose, why, the cache cap, the `file://`
+  * FileSystem class in effect and why, the [[sizing]] in effect and the
+  * Hadoop configuration's size, so every session starts with the same,
+  * visible engine configuration.
+  *
+  * The lean Hadoop configuration: the context's `hadoopConfiguration`
+  * keeps no entry that only Hadoop's bundled `*-default.xml` resources
+  * set (1,071 of its 1,077 entries on Hadoop 3.4: `yarn-default.xml` 520,
+  * `core-default.xml` 357, `mapred-default.xml` 194). Spark copies that
+  * configuration about four times per parquet read, serializes it (one
+  * gzip stream per entry, ~110 KB) into every write job's task binary and
+  * every file scan's broadcast, deserializes it in every write task, and
+  * Parquet's writer iterates it once per task; a local run reads none of
+  * the yarn and mapred job settings, and a dropped core key reads as the
+  * code default Hadoop falls back to (a migration pass writes the same
+  * bytes and modes either way). Kept: site files (`core-site.xml` …), the
+  * SparkConf's `spark.hadoop.*` (so a deployment that needs a dropped
+  * value sets it there), Spark's own settings, graft's `fs.file.impl`, and
+  * any default a kept value names as `${key}`. The startup line counts
+  * both.
   */
 object GraftSession {
 
-  /** Defaults chosen for 100 TB posture:
+  /** The session's settings and the startup line that describes them.
+    * Defaults chosen for 100 TB posture:
     *  - AQE + skew-join handling: runtime re-plan beats static planning when
     *    key skew shows up at scale (TPC-H-ish data is uniform; real data isn't).
     *  - auto broadcast threshold raised: every dimension in the reference's
@@ -31,7 +54,7 @@ object GraftSession {
     *  - shuffle partitions default 32 to match local[32]; override per env
     *    (see [[sizing]]).
     */
-  def builder(appName: String = "graft"): SparkSession.Builder = {
+  private def configured(appName: String): (SparkSession.Builder, String) = {
     val size = envSizing
     val (localDir, localDirWhy) = scratchDir(sys.env.get)
     // A cap the user already put in the SparkConf (spark-submit --conf or
@@ -45,10 +68,10 @@ object GraftSession {
     }
     // Likewise a file:// implementation already in the SparkConf.
     val (fileImpl, fileNote) = fileSystem(new SparkConf().getOption(FileImplKey))
-    System.err.println(s"[graft] session '$appName': spark.local.dir=$localDir " +
+    val line = s"[graft] session '$appName': spark.local.dir=$localDir " +
       s"($localDirWhy); codegen cache cap=$capNote entries; file://=$fileNote; " +
-      s"cpus=${size.cpus}, shuffle partitions=${size.shufflePartitions}")
-    SparkSession
+      s"cpus=${size.cpus}, shuffle partitions=${size.shufflePartitions}"
+    (SparkSession
       .builder()
       .appName(appName)
       .config("spark.sql.shuffle.partitions", size.shufflePartitions.toString)
@@ -74,7 +97,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .config("spark.sql.warehouse.dir", warehouseDir(sys.env.get))
-      .config("spark.local.dir", localDir)
+      .config("spark.local.dir", localDir), line)
   }
 
   /** Cap for Spark's JVM-wide codegen class cache (Spark's default: 100).
@@ -177,12 +200,52 @@ object GraftSession {
         s"$name must be a positive whole number, got '$v'"))
     }
 
-  /** This JVM's sizing, parsed once; [[builder]] and [[local]] share it. */
+  /** This JVM's sizing, parsed once; [[configured]] and [[local]] share it. */
   private lazy val envSizing: Sizing = sizing(sys.env.get)
+
+  /** Gets or creates the session that `configure` makes of the engine's
+    * settings ([[configured]]), gives its context a lean Hadoop
+    * configuration ([[leanHadoopConf]]) and prints the startup line with
+    * the Hadoop configuration's size. */
+  private[graft] def start(appName: String)(
+      configure: SparkSession.Builder => SparkSession.Builder): SparkSession = {
+    val (b, line) = configured(appName)
+    val s = configure(b).getOrCreate()
+    val (kept, dropped) = leanHadoopConf(s.sparkContext.hadoopConfiguration)
+    System.err.println(s"$line; hadoop conf=$kept entries ($dropped bundled defaults dropped)")
+    s
+  }
+
+  /** Unsets every entry of `conf` whose sources are all Hadoop's bundled
+    * `*-default.xml` resources, and returns the entries kept and dropped.
+    * A dropped key reads as its code default, or unset; one the SparkConf
+    * or a site file sets is kept. So is a default a kept value names as
+    * `${key}`: Hadoop leaves an unresolved reference in the value as it
+    * is. A context loads all its default resources (`JobConf`,
+    * `HdfsConfiguration`) while it starts, so none reloads them later
+    * (`GraftSessionSpec` round-trips four formats to check). */
+  private[graft] def leanHadoopConf(conf: Configuration): (Int, Int) = {
+    val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val bundled = entries.keySet.filter { k =>
+      Option(conf.getPropertySources(k)).exists(_.forall(_.endsWith("-default.xml")))
+    }
+    def named(keys: Set[String]) = keys.flatMap(k => VarRef.findAllMatchIn(entries(k)).map(_.group(1)))
+    var keep = entries.keySet -- bundled
+    var added = keep
+    while (added.nonEmpty) {
+      added = named(added).intersect(bundled) -- keep
+      keep ++= added
+    }
+    val drop = bundled -- keep
+    drop.foreach(conf.unset)
+    (conf.size, drop.size)
+  }
+
+  private val VarRef = """\$\{([^}$\s]+)\}""".r
 
   /** Local session for tests / CLI mains. */
   def local(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).master(s"local[${envSizing.cpus}]").getOrCreate()
+    val s = start(appName)(_.master(s"local[${envSizing.cpus}]"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

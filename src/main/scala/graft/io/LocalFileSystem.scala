@@ -17,7 +17,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * 3 GB JVM costs a few milliseconds: on the benchmark's `migrate` pass
   * (4 cores) the median sink finished 33 ms sooner without them.
   *
-  * `GraftSession.builder` installs it as `spark.hadoop.fs.file.impl`
+  * `GraftSession.start` installs it as `spark.hadoop.fs.file.impl`
   * unless the SparkConf names another implementation.
   */
 class LocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(new LocalFileSystem.PosixRaw)

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArrowExport
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,7 +16,7 @@ class ArrowExportSpec extends AnyFunSuite {
     StructField("name", StringType)))
 
   test("IPC shard round-trip: values, nulls, and multi-batch shards survive byte-exact") {
-    val dir = java.nio.file.Files.createTempDirectory("arrowrt").toString
+    val dir = GraftBridge.tempDir("arrowrt")
     val df = spark.range(0, 1000).select(
       col("id"),
       when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 1.5).as("score"),
@@ -33,7 +34,7 @@ class ArrowExportSpec extends AnyFunSuite {
   }
 
   test("unsupported column types refuse loudly with the column name") {
-    val dir = java.nio.file.Files.createTempDirectory("arrowbad").toString
+    val dir = GraftBridge.tempDir("arrowbad")
     val err = intercept[IllegalArgumentException] {
       ArrowExport.writeShards(
         spark.range(3).select(col("id"), array(lit(1)).as("xs")), dir)
@@ -42,7 +43,7 @@ class ArrowExportSpec extends AnyFunSuite {
   }
 
   test("re-export with fewer partitions leaves no stale shards behind") {
-    val dir = java.nio.file.Files.createTempDirectory("arrowre").toString
+    val dir = GraftBridge.tempDir("arrowre")
     def frame(n: Long, parts: Int) = spark.range(0, n).select(
       col("id"), (col("id") * 1.0).as("score"), concat(lit("n"), col("id")).as("name"))
       .repartition(parts)
@@ -59,7 +60,7 @@ class ArrowExportSpec extends AnyFunSuite {
   }
 
   test("reader verifies the embedded schema against expectations — types too, not just names") {
-    val dir = java.nio.file.Files.createTempDirectory("arrowtype").toString
+    val dir = GraftBridge.tempDir("arrowtype")
     ArrowExport.writeShards(
       spark.range(5).select(col("id"), lit(1.0).as("score"), lit("x").as("name")), dir)
       .collect()
@@ -79,7 +80,7 @@ class ArrowExportSpec extends AnyFunSuite {
     // written and the intercept below would catch "no .arrows shards"
     // instead of exercising the schema check (this test was vacuous
     // before: the temp-dir NAME contained "schema")
-    val dir = java.nio.file.Files.createTempDirectory("arrowwrong").toString
+    val dir = GraftBridge.tempDir("arrowwrong")
     ArrowExport.writeShards(
       spark.range(5).select(col("id"), lit(1.0).as("score"), lit("x").as("name")), dir)
       .collect()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.Compaction
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,7 @@ class CompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp() = java.nio.file.Files.createTempDirectory("compact").toString
+  private def tmp() = GraftBridge.tempDir("compact")
 
   test("compact collapses a many-small-file directory and preserves rows exactly") {
     val in = tmp() + "/in"; val out = tmp() + "/out"

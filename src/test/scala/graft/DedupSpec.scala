@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{MinHashLSH, SimHash, TextAnalysis, TextTokens}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -169,7 +170,7 @@ class DedupSpec extends AnyFunSuite {
     // C(20,2) = 190 candidate pairs on ONE join key — exactly the skew
     // shape the guard exists for; capped at maxDf=10 those pairs vanish
     // while the low-DF near-dup pair survives untouched.
-    val dir = java.nio.file.Files.createTempDirectory("dedup-skew").toString
+    val dir = GraftBridge.tempDir("dedup-skew")
     val stopDocs = (0 until 20).map { i =>
       (i.toLong, s"common stop phrase u${i}a u${i}b u${i}c u${i}d")
     }
@@ -222,7 +223,7 @@ class DedupSpec extends AnyFunSuite {
     // 8-windows per doc, consecutive positions → exactly one island,
     // spanning precisely the passage. A third doc with no sharing must
     // produce no rows.
-    val dir = java.nio.file.Files.createTempDirectory("dedup-span").toString
+    val dir = GraftBridge.tempDir("dedup-span")
     val passage = (1 to 12).map(i => s"p$i").mkString(" ")
     val docs = Seq(
       (1L, s"a1 a2 a3 $passage a4 a5"),

@@ -1,14 +1,20 @@
 package graft
 
 import graft.engine.{Codegen, GraftSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The session's engine-level settings take effect: the codegen class cache
   * really has the builder's cap (Spark sizes it once per JVM, from whatever
   * conf is current at its first use), a warm loop larger than Spark's
   * default 100 entries stops recompiling, the scratch-dir guard fails
-  * loudly on a malformed bound, and the startup line names the `file://`
-  * FileSystem in effect.
+  * loudly on a malformed bound, the startup line names the `file://`
+  * FileSystem in effect, and the context's Hadoop configuration holds no
+  * entry only Hadoop's bundled defaults set, before or after Spark's
+  * file formats have run, while what the SparkConf, graft and a site file
+  * set is kept (`core-site.xml` on the test classpath).
   */
 class GraftSessionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -58,7 +64,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("scratch dir: the choice comes with its reason") {
-    val tmp = java.nio.file.Files.createTempDirectory("shm").toFile
+    val tmp = new java.io.File(GraftBridge.tempDir("shm"))
     val (tmpfs, why) = GraftSession.scratchDir(Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> "0").get, tmp)
     assert(tmpfs == s"$tmp/graft_scratch")
     assert(why.startsWith("tmpfs: ") && why.contains("vs the 0 GiB guard"), why)
@@ -105,6 +111,66 @@ class GraftSessionSpec extends AnyFunSuite {
          bad <- Seq("0", "-2", "", "four", "1.5", "4g", "99999999999")) {
       val e = intercept[IllegalArgumentException](GraftSession.sizing(Map(name -> bad).get))
       assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  /** Keys of `conf` that only Hadoop's bundled `*-default.xml` resources set. */
+  private def bundledOnly(conf: Configuration): Seq[String] =
+    conf.iterator().asScala.map(_.getKey).filter { k =>
+      Option(conf.getPropertySources(k)).exists(_.forall(_.endsWith("-default.xml")))
+    }.toSeq.sorted
+
+  test("hadoop conf: the startup line counts the entries kept and the bundled defaults dropped") {
+    spark // started, so `start` below gets the same session with the same settings
+    val buf = new java.io.ByteArrayOutputStream
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val again = try GraftSession.start("graft-test")(TestSpark.settings) finally System.setErr(err)
+    assert(again eq spark)
+    val kept = spark.sparkContext.hadoopConfiguration.size
+    val lines = buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft] session 'graft-test': ")).toSeq
+    assert(lines.size == 1, buf.toString("UTF-8"))
+    assert(lines.head.endsWith(s"; hadoop conf=$kept entries (0 bundled defaults dropped)"), lines.head)
+  }
+
+  test("hadoop conf: bundled defaults go; set keys and the defaults their values name stay") {
+    val conf = new Configuration()
+    val bundled = bundledOnly(conf).size
+    assert(bundled > 300, "control: a fresh Configuration loads core-default.xml")
+    conf.set("graft.test.set", "${hadoop.tmp.dir}/x")
+    val before = conf.size
+    val (kept, dropped) = GraftSession.leanHadoopConf(conf)
+    assert(kept == conf.size && kept + dropped == before)
+    assert(dropped == bundled - 1, "every bundled default but the one a set value names")
+    assert(bundledOnly(conf) == Seq("hadoop.tmp.dir"))
+    assert(conf.get("graft.test.set") == s"/tmp/hadoop-${sys.props("user.name")}/x")
+    assert(conf.get("graft.test.site") == "from-core-site")
+    assert(conf.get("fs.defaultFS") == null)
+    assert(org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).toString == "file:///")
+    assert(GraftSession.leanHadoopConf(conf) == (kept, 0), "a second prune finds nothing")
+  }
+
+  test("hadoop conf: still lean after parquet, CSV, ORC and JSON round trips") {
+    val dir = GraftBridge.tempDir("hadoop-conf")
+    val df = spark.range(20).selectExpr("id", "cast(id * 7 AS string) AS s")
+    for (fmt <- Seq("parquet", "csv", "orc", "json")) {
+      df.write.format(fmt).save(s"$dir/$fmt")
+      val back = spark.read.format(fmt).schema(df.schema).load(s"$dir/$fmt")
+      assert(back.orderBy("id").collect().toSeq == df.collect().toSeq, fmt)
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(bundledOnly(conf).isEmpty, "bundled defaults back in the context's Hadoop conf")
+    val derived = spark.sessionState.newHadoopConf().size
+    assert(derived <= 64, s"a per-query Hadoop conf has $derived entries")
+  }
+
+  test("hadoop conf: spark.hadoop.* keys, fs.file.impl and site-file keys keep their values") {
+    val sc = spark.sparkContext
+    for (conf <- Seq(sc.hadoopConfiguration, spark.sessionState.newHadoopConf())) {
+      assert(conf.get("graft.test.conf") == "from-sparkconf")
+      assert(conf.get("fs.file.impl") == sc.getConf.get(GraftSession.FileImplKey))
+      assert(conf.get("graft.test.site") == "from-core-site")
+      assert(conf.get("hadoop.security.authentication") == "simple")
     }
   }
 }

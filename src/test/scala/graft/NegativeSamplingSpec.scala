@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.NegativeSampling
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 /** Laws for the word2vec-style negative sampler — the cross-engine gate
@@ -72,7 +73,7 @@ class NegativeSamplingSpec extends AnyFunSuite {
 
   test("JSONL export round-trip: the training file reads back identical") {
     val out = draw((1L to 50L).map(i => (i, i + 9L)), Seq(5L -> 2L, 6L -> 9L))
-    val dir = java.nio.file.Files.createTempDirectory("negsamp").toString + "/triples"
+    val dir = GraftBridge.tempDir("negsamp") + "/triples"
     out.write.mode("overwrite").json(dir)
     val back = spark.read
       .schema("center LONG, context LONG, draw_idx LONG, negative LONG")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Pipeline, PipelineContext, RunLog, Runner}
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's observability surface, re-expressed: a per-run
@@ -11,7 +12,7 @@ class ObservabilitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    GraftBridge.tempDir(prefix)
 
   test("RunLog: timestamped file under logs dir, asctime | LEVEL | message lines") {
     val dir = tmpDir("runlog")

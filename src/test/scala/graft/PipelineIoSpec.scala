@@ -4,6 +4,7 @@ import graft.io.{Jdbc, ObjectStore, ParquetSource}
 import graft.pipeline.{Pipeline, PipelineContext, Runner}
 import org.apache.spark.TestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,7 +63,7 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("object-store upload: deterministic keys, partition-level clients, mapping join-back") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_os").toString
+    val tmp = GraftBridge.tempDir("graft_os")
     val rows = Seq(
       ("r1", "a.pdf", "application/pdf", "payload-one".getBytes),
       ("r2", "b.pdf", "application/pdf", "payload-two".getBytes))
@@ -82,7 +83,7 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("object keys: any name becomes one ASCII segment under id/hash/") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_keys").toString
+    val tmp = GraftBridge.tempDir("graft_keys")
     val names = Seq("relazione è già.pdf", "../../escape.pdf", "a/b.pdf", "..", ".", "日本.txt")
     val rows = names.zipWithIndex.map { case (n, i) => (s"r$i", n, "application/pdf", n.getBytes) }
       .toDF("id", "name", "mime", "payload")
@@ -133,8 +134,8 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("one registry resolves each distinct parquet path once per run, with no inference job") {
-    val in = java.nio.file.Files.createTempDirectory("graft-memo-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-memo-out").toString
+    val in = GraftBridge.tempDir("graft-memo-in")
+    val out = GraftBridge.tempDir("graft-memo-out")
     MigrationFixtures.write(spark, in)
     val resolved = scala.collection.mutable.ArrayBuffer.empty[String]
     val memo = new ParquetSource.Memo((s, p) => {
@@ -155,8 +156,8 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("udo_status_history: an unreadable udos target warns, writes unvalidated, is not cached") {
-    val in = java.nio.file.Files.createTempDirectory("graft-hist-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-hist-out").toString
+    val in = GraftBridge.tempDir("graft-hist-in")
+    val out = GraftBridge.tempDir("graft-hist-out")
     MigrationFixtures.write(spark, in)
     val pipes = Main.registry(in, out).map(p => p.name -> p).toMap
     val ctx = PipelineContext(spark)
@@ -189,7 +190,7 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("csv export (K3): <t>.csv is one headered file, overwritten in place") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = GraftBridge.tempDir("graft_csv")
     val nation = graft.io.Tables.load(spark, TestSpark.sfDir, "nation")
     val f = java.nio.file.Paths.get(tmp, "nation.csv")
     for (_ <- 1 to 2) {
@@ -203,7 +204,7 @@ class PipelineIoSpec extends AnyFunSuite {
   }
 
   test("orc round-trip: values identical, predicate pushdown reaches the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = GraftBridge.tempDir("graft_orc")
     val docs = graft.io.Tables.load(spark, TestSpark.sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     docs.write.mode("overwrite").orc(s"$tmp/docs")
@@ -219,7 +220,7 @@ class PipelineIoSpec extends AnyFunSuite {
 
   test("schema-evolution read: merged schema, NULL backfill for pre-column batches") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val tmp = GraftBridge.tempDir("graft_merge")
     // batch 1 written before column `b` existed; batch 2 after
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")
       .write.mode("append").parquet(tmp)

@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * frame, and no `def` returns a release hook (`() => Unit`): a cached
   * frame is released by its scope or by the session cache, never by a
   * hand-carried callback.
+  *
+  * Test scratch: no spec makes a temp directory with
+  * `createTempDirectory`, which nothing deletes; specs use
+  * `GraftBridge.tempDir`, deleted at JVM exit.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
@@ -71,14 +75,15 @@ class ReachabilitySpec extends AnyFunSuite {
     """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:object|class|trait)\s+(\w+)""".r
   private val ident = """[A-Za-z_][A-Za-z0-9_]*""".r
 
-  private lazy val sources: Map[String, String] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    java.nio.file.Files.walk(root).iterator().asScala
+  /** The `.scala` files under `dir`, comment-stripped, by path. */
+  private def scalaSources(dir: String): Map[String, String] =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.toString ->
         stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
       .toMap
-  }
+
+  private lazy val sources: Map[String, String] = scalaSources("src/main/scala")
 
   /** Top-level definition name → the files defining it. */
   private lazy val defs: Map[String, Set[String]] =
@@ -143,6 +148,16 @@ class ReachabilitySpec extends AnyFunSuite {
   private def returnsHook(text: String): Boolean =
     resultTypes(text).exists(_.replaceAll("\\s+", "").contains("()=>Unit"))
 
+  /** A `createTempDirectory(` call and its first argument when a literal. */
+  private val tempDirCall = """\bcreateTempDirectory\s*\(\s*("[^"]*")?""".r
+
+  /** Whether a (comment-stripped) spec makes a temp directory that nothing
+    * deletes; `TarShardsSpec`'s `graft_control`, which deletes itself, is
+    * the one exception. */
+  private def leavesTempDir(path: String, text: String): Boolean =
+    tempDirCall.findAllMatchIn(text).exists(m =>
+      !(path.endsWith("/TarShardsSpec.scala") && m.group(1) == "\"graft_control\""))
+
   test("comment stripping keeps string literals and drops nested comments") {
     val src = "val u = \"s3://b/k\" // Gone\n/* a /* Gone */ b */ val c = '/'"
     val s = stripComments(src)
@@ -173,5 +188,19 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(caching.isEmpty && hooks.isEmpty,
       s"cache calls outside graft.engine in: ${caching.mkString(", ")}; " +
         s"defs returning a () => Unit release hook in: ${hooks.mkString(", ")}")
+  }
+
+  test("test scratch: specs make temp directories with GraftBridge.tempDir, deleted at JVM exit") {
+    // controls; the call is built apart so this file holds none itself
+    val call = "java.nio.file.Files." + "createTempDirectory"
+    assert(leavesTempDir("src/test/scala/graft/XSpec.scala", s"""val d = $call("x").toString"""))
+    assert(leavesTempDir("src/test/scala/graft/TarShardsSpec.scala", s"""val d = $call("tarshards")"""))
+    assert(!leavesTempDir("src/test/scala/graft/TarShardsSpec.scala", s"""val c = $call("graft_control")"""))
+    assert(!leavesTempDir("src/test/scala/graft/XSpec.scala", stripComments(s"""// $call("x")""")))
+    val leaving = scalaSources("src/test/scala").toSeq.collect {
+      case (path, text) if leavesTempDir(path, text) => path
+    }.sorted
+    assert(leaving.isEmpty,
+      s"temp directories nothing deletes (use GraftBridge.tempDir) made in: ${leaving.mkString(", ")}")
   }
 }

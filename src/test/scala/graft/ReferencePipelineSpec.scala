@@ -3,6 +3,7 @@ package graft
 import graft.engine.Lineage
 import graft.io.ObjectStore
 import graft.pipelines.{CorePipelines, ServicePipelines}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -110,7 +111,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
     assert(branches.filter(col("id") === "a2").head().getAs[String]("name") == null,
       "null NUMERO propagates to null name")
 
-    val root = java.nio.file.Files.createTempDirectory("graft-os-test").toString
+    val root = GraftBridge.tempDir("graft-os-test")
     Lineage.scope { s =>
       val merged = CorePipelines.attachMapping(
         s, branches, "resolutions", () => new ObjectStore.LocalFsClient(root))
@@ -604,7 +605,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
     val (delibera, tipoDelibera, atto, tipoAtto) = resolutionFixtures()
     val branches = CorePipelines.resolutionBranches(
       delibera, tipoDelibera, atto, tipoAtto, lit(load))
-    val root = java.nio.file.Files.createTempDirectory("graft-os-test2").toString
+    val root = GraftBridge.tempDir("graft-os-test2")
     def keysOf(): Seq[String] = {
       Lineage.scope { s =>
         CorePipelines.attachMapping(s, branches, "b", () => new ObjectStore.LocalFsClient(root))

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TestBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +23,7 @@ class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    GraftBridge.tempDir(prefix)
 
   /** Spark jobs started while `body` runs. */
   private def jobsDuring(body: => Any): Int = {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.TarShards
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,7 +45,7 @@ class TarShardsSpec extends AnyFunSuite {
   }
 
   test("directory of shards reads one row per entry, samples group by key") {
-    val dir = java.nio.file.Files.createTempDirectory("tarshards")
+    val dir = java.nio.file.Paths.get(GraftBridge.tempDir("tarshards"))
     (1 to 3).foreach { s =>
       java.nio.file.Files.write(
         dir.resolve(f"shard-$s%04d.tar"), TarShards.tarBytes(entriesFor(s)))
@@ -64,7 +65,7 @@ class TarShardsSpec extends AnyFunSuite {
   }
 
   test("gzipped shards (.tar.gz) read transparently through the same path") {
-    val dir = java.nio.file.Files.createTempDirectory("targz")
+    val dir = java.nio.file.Paths.get(GraftBridge.tempDir("targz"))
     val tar = TarShards.tarBytes(entriesFor(5))
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
@@ -79,7 +80,7 @@ class TarShardsSpec extends AnyFunSuite {
   }
 
   test("re-sharding packs deterministically and round-trips every byte") {
-    val dir = java.nio.file.Files.createTempDirectory("reshard")
+    val dir = java.nio.file.Paths.get(GraftBridge.tempDir("reshard"))
     (1 to 2).foreach { s =>
       java.nio.file.Files.write(
         dir.resolve(f"shard-$s%04d.tar"), TarShards.tarBytes(entriesFor(s)))
@@ -108,7 +109,7 @@ class TarShardsSpec extends AnyFunSuite {
     // executing the SAME plan again after every cached block is gone — the
     // worst case of FIFO eviction / executor loss mid-query — must
     // reproduce byte-identical shards.
-    val dir = java.nio.file.Files.createTempDirectory("reshard_evict")
+    val dir = java.nio.file.Paths.get(GraftBridge.tempDir("reshard_evict"))
     (1 to 2).foreach { s =>
       java.nio.file.Files.write(
         dir.resolve(f"shard-$s%04d.tar"), TarShards.tarBytes(entriesFor(s)))
@@ -163,7 +164,7 @@ class TarShardsSpec extends AnyFunSuite {
   }
 
   test("scratch directories live under java.io.tmpdir and are deleted at JVM exit") {
-    val dir = org.apache.spark.sql.GraftBridge.tempDir("graft_probe")
+    val dir = GraftBridge.tempDir("graft_probe")
     val f = new java.io.File(dir)
     assert(f.isDirectory && f.getName.startsWith("graft_probe"))
     assert(f.getParentFile.getCanonicalPath ==

@@ -4,18 +4,24 @@ import graft.engine.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (Spark startup is ~5 s;
-  * per-suite sessions would dominate test time). */
+  * per-suite sessions would dominate test time). It starts through
+  * `GraftSession.start`, as `GraftSession.local` does, so specs run on the
+  * lean Hadoop configuration the mains get. `spark.hadoop.graft.test.conf`
+  * is a SparkConf Hadoop key for `GraftSessionSpec` to find kept. */
 object TestSpark {
   /** Smoke-tier test corpus (TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The test session's settings over the engine's, for `GraftSession.start`. */
+  val settings: SparkSession.Builder => SparkSession.Builder = _
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.warehouse.dir",
+      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
+    .config("spark.hadoop.graft.test.conf", "from-sparkconf")
+
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
-      .getOrCreate()
+    val s = GraftSession.start("graft-test")(settings)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.TfRecordExport
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,7 +32,7 @@ class TfRecordExportSpec extends AnyFunSuite {
   }
 
   test("round-trip: values, nulls, empty strings, negative longs, multi-shard") {
-    val dir = java.nio.file.Files.createTempDirectory("tfrt").toString
+    val dir = GraftBridge.tempDir("tfrt")
     val df = spark.range(0, 500).select(
       when(col("id") % 7 === 0, lit(null)).otherwise(col("id") - 250).as("id"),
       when(col("id") % 11 === 0, lit(null))
@@ -47,7 +48,7 @@ class TfRecordExportSpec extends AnyFunSuite {
   }
 
   test("reader verifies the masked CRC32C and refuses corruption loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("tfcrc").toString
+    val dir = GraftBridge.tempDir("tfcrc")
     TfRecordExport.writeShards(
       spark.range(10).select(col("id"), lit("x").as("name")).repartition(1), dir)
       .collect()
@@ -63,7 +64,7 @@ class TfRecordExportSpec extends AnyFunSuite {
   }
 
   test("re-export with fewer partitions clears stale shards; writes are deterministic") {
-    val dir = java.nio.file.Files.createTempDirectory("tfre").toString
+    val dir = GraftBridge.tempDir("tfre")
     def frame(n: Long, parts: Int) = spark.range(0, n)
       .select(col("id"), concat(lit("n"), col("id")).as("name")).repartition(parts)
     TfRecordExport.writeShards(frame(100, 5), dir).collect()
@@ -72,7 +73,7 @@ class TfRecordExportSpec extends AnyFunSuite {
     assert(files.length == 2, files.map(_.getName).toSeq.toString)
     assert(TfRecordExport.readShards(spark, dir, schema).count() == 40L)
     // determinism: same frame written twice gives byte-identical shards
-    val dir2 = java.nio.file.Files.createTempDirectory("tfdet").toString
+    val dir2 = GraftBridge.tempDir("tfdet")
     TfRecordExport.writeShards(frame(40, 2), dir2).collect()
     val a = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tfrecord"))
       .sortBy(_.getName).map(f => java.nio.file.Files.readAllBytes(f.toPath).toSeq)
@@ -85,7 +86,7 @@ class TfRecordExportSpec extends AnyFunSuite {
     val err = intercept[IllegalArgumentException] {
       TfRecordExport.writeShards(
         spark.range(3).select(col("id"), (col("id") * 1.5).as("score")),
-        java.nio.file.Files.createTempDirectory("tfbad").toString)
+        GraftBridge.tempDir("tfbad"))
     }
     assert(err.getMessage.contains("score"), err.getMessage)
   }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.WarcIo
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 class WarcIoSpec extends AnyFunSuite {
@@ -10,7 +11,7 @@ class WarcIoSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def write(rows: Seq[(Long, String, String)], parts: Int = 1): String = {
-    val dir = java.nio.file.Files.createTempDirectory("warcspec").toString
+    val dir = GraftBridge.tempDir("warcspec")
     WarcIo.writeShards(rows.toDF("id", "uri", "body").repartition(parts), dir).collect()
     dir
   }
@@ -57,7 +58,7 @@ class WarcIoSpec extends AnyFunSuite {
   }
 
   test("capture triple: request/metadata records round-trip and link by Concurrent-To") {
-    val dir = java.nio.file.Files.createTempDirectory("warcspec_cap").toString
+    val dir = GraftBridge.tempDir("warcspec_cap")
     WarcIo.writeShards(
       Seq((5L, "https://ex.org/a/b?q=1", "hello"),
         (6L, "https://ex.org", "root")).toDF("id", "uri", "body"),
