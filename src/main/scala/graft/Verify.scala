@@ -7,6 +7,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()

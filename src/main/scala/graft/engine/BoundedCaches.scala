@@ -8,8 +8,10 @@ import org.apache.spark.sql.DataFrame
   * it, so repeated invocations (Bench's warm+N loop) would stack cache
   * entries and lean on LRU eviction. Registering keeps only the newest
   * [[MaxLive]] frames, non-blocking-unpersisting the eldest; an evicted
-  * frame that is re-executed later just recomputes its lineage —
-  * semantics are unaffected.
+  * frame that is re-executed later recomputes its lineage and gives the
+  * same rows (`BoundedCachesSpec` releases t89's and t94's frames before
+  * their actions), though its rebuilt column buffers stay persisted with
+  * no cache entry owning them (ROADMAP C4).
   */
 object BoundedCaches {
   // 6, not 4 (r17): the composed t94 pipeline legitimately registers 5
@@ -20,19 +22,8 @@ object BoundedCaches {
   // of the previous one). Six holds the deepest current composition plus
   // one; the frames are pre-aggregated/count-scale, so the memory bound
   // stays far under executor budget at any gate SF.
-  // SPARK_GRAFT_MAXLIVE overrides for A/B measurement (the r17 verdict's
-  // MaxLive-vs-drift experiment) and for deployments whose compositions
-  // run deeper or whose executors run tighter than the default assumes.
-  private val MaxLive = maxLive(sys.env.get)
+  private val MaxLive = 6
   private val live = new java.util.ArrayDeque[DataFrame]
-
-  /** The frame cap: SPARK_GRAFT_MAXLIVE if set, else 6. A malformed or
-    * negative value throws IllegalArgumentException naming the variable. */
-  private[graft] def maxLive(env: String => Option[String]): Int =
-    env("SPARK_GRAFT_MAXLIVE").fold(6) { v =>
-      v.trim.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_MAXLIVE must be a whole number of frames >= 0, got '$v'"))
-    }
 
   // r18: every persisted frame is handed back RE-ROOTED on its cache
   // entry (logical plan = the InMemoryRelation leaf, not the full

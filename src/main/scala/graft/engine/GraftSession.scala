@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
   * Oracle/PG engines + a MinIO client eagerly) but Spark-first: one lazy
   * session, UTC session timezone (the reference normalizes Europe/Rome
   * timestamps to naive UTC-like values, `src/utils.py:298-306`), AQE on so
-  * joins/aggregations re-plan at runtime, and a shuffle-partition count sized
-  * for the local[32] test harness. A cluster entry point would go through
+  * joins/aggregations re-plan at runtime, and a shuffle-partition count equal
+  * to the local master's thread count. A cluster entry point would go through
   * [[start]] too, with `master` unset and shuffle partitions sized to
   * cores × executors.
   *
@@ -23,9 +23,9 @@ import scala.jdk.CollectionConverters._
   * ([[fileSystem]]) and gives the context a lean Hadoop configuration
   * ([[leanHadoopConf]]). Every session prints one stderr line with the
   * scratch directory it chose, why, the cache cap, the `file://`
-  * FileSystem class in effect and why, the [[sizing]] in effect and the
-  * Hadoop configuration's size, so every session starts with the same,
-  * visible engine configuration.
+  * FileSystem class in effect and why, the [[cpus]] in effect (the
+  * shuffle partitions equal them) and the Hadoop configuration's size, so
+  * every session starts with the same, visible engine configuration.
   *
   * The lean Hadoop configuration: the context's `hadoopConfiguration`
   * keeps no entry that only Hadoop's bundled `*-default.xml` resources
@@ -51,11 +51,11 @@ object GraftSession {
     *    key skew shows up at scale (TPC-H-ish data is uniform; real data isn't).
     *  - auto broadcast threshold raised: every dimension in the reference's
     *    join inventory (SURVEY §2.5) is ≤ thousands of rows.
-    *  - shuffle partitions default 32 to match local[32]; override per env
-    *    (see [[sizing]]).
+    *  - shuffle partitions = the cpu count, so one shuffle stage is one
+    *    wave of tasks on local[cpus] (see [[cpus]]).
     */
   private def configured(appName: String): (SparkSession.Builder, String) = {
-    val size = envSizing
+    val cpus = envCpus
     val (localDir, localDirWhy) = scratchDir(sys.env.get)
     // A cap the user already put in the SparkConf (spark-submit --conf or
     // -Dspark.sql.codegen.cache.maxEntries) wins over ours.
@@ -70,11 +70,11 @@ object GraftSession {
     val (fileImpl, fileNote) = fileSystem(new SparkConf().getOption(FileImplKey))
     val line = s"[graft] session '$appName': spark.local.dir=$localDir " +
       s"($localDirWhy); codegen cache cap=$capNote entries; file://=$fileNote; " +
-      s"cpus=${size.cpus}, shuffle partitions=${size.shufflePartitions}"
+      s"cpus=$cpus, shuffle partitions=$cpus"
     (SparkSession
       .builder()
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", size.shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -146,21 +146,18 @@ object GraftSession {
     * r19 GUARD (r18 advice): a RAM-backed scratch dir fills MEMORY when
     * shuffle volume exceeds it — Docker's default /dev/shm is 64 MB and
     * tmpfs is typically capped at 50% RAM, so the tmpfs default only
-    * applies when the mount has real headroom
-    * (SPARK_GRAFT_SHM_MIN_FREE_GB, default 16 GiB usable). Under the
-    * bound — or on any deployment whose cluster manager sets
-    * spark.local.dir itself (YARN/K8s override this config) — the
-    * scratch stays on disk-backed java.io.tmpdir.
+    * applies when the mount has `minFreeGiB` usable (16 GiB unless a
+    * caller passes another bound). Under the bound — or on any deployment
+    * whose cluster manager sets spark.local.dir itself (YARN/K8s
+    * override this config) — the scratch stays on disk-backed
+    * java.io.tmpdir.
     */
   private[graft] def scratchDir(env: String => Option[String],
-      shm: java.io.File = new java.io.File("/dev/shm")): (String, String) =
+      shm: java.io.File = new java.io.File("/dev/shm"),
+      minFreeGiB: Long = 16L): (String, String) =
     env("SPARK_GRAFT_LOCAL_DIR") match {
       case Some(dir) => (dir, "SPARK_GRAFT_LOCAL_DIR")
       case None =>
-        val minFreeGiB = env("SPARK_GRAFT_SHM_MIN_FREE_GB").fold(16L) { v =>
-          v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SHM_MIN_FREE_GB must be a whole number of GiB >= 0, got '$v'"))
-        }
         val disk = sys.props.getOrElse("java.io.tmpdir", "/tmp")
         if (!(shm.isDirectory && shm.canWrite)) (disk, s"disk: $shm is not a writable directory")
         else {
@@ -178,21 +175,16 @@ object GraftSession {
   private[graft] def warehouseDir(env: String => Option[String]): String =
     env("SPARK_GRAFT_WAREHOUSE").getOrElse(GraftBridge.tempDir("graft_warehouse"))
 
-  /** The engine's two size knobs: `SPARK_GRAFT_CPUS`, the local master's
-    * thread count (default 32), and `SPARK_GRAFT_SHUFFLE_PARTITIONS`
-    * (default: the cpu count). Each must be a positive whole number; a
-    * malformed value fails naming its variable instead of reaching Spark
-    * as a master URL or a conf string it rejects later, or not at all. */
-  private[graft] final case class Sizing(cpus: Int, shufflePartitions: Int)
-
-  private[graft] def sizing(env: String => Option[String]): Sizing = {
-    val cpus = positiveInt(env, "SPARK_GRAFT_CPUS").getOrElse(32)
-    Sizing(cpus, positiveInt(env, "SPARK_GRAFT_SHUFFLE_PARTITIONS").getOrElse(cpus))
-  }
+  /** The engine's size: `SPARK_GRAFT_CPUS`, the local master's thread
+    * count and the shuffle partition count (default 32). It must be a
+    * positive whole number; a malformed value fails naming the variable
+    * instead of reaching Spark as a master URL it rejects later. */
+  private[graft] def cpus(env: String => Option[String]): Int =
+    positiveInt(env, "SPARK_GRAFT_CPUS").getOrElse(32)
 
   /** The variable `name` as a positive whole number, None when unset. A
     * malformed value fails naming the variable. Every count-valued
-    * variable (the sizing above, the dev mains' repeat counts) parses
+    * variable (the cpus above, the dev mains' repeat counts) parses
     * through this. */
   private[graft] def positiveInt(env: String => Option[String], name: String): Option[Int] =
     env(name).map { v =>
@@ -200,8 +192,8 @@ object GraftSession {
         s"$name must be a positive whole number, got '$v'"))
     }
 
-  /** This JVM's sizing, parsed once; [[configured]] and [[local]] share it. */
-  private lazy val envSizing: Sizing = sizing(sys.env.get)
+  /** This JVM's cpu count, parsed once; [[configured]] and [[local]] share it. */
+  private lazy val envCpus: Int = cpus(sys.env.get)
 
   /** Gets or creates the session that `configure` makes of the engine's
     * settings ([[configured]]), gives its context a lean Hadoop
@@ -245,7 +237,7 @@ object GraftSession {
 
   /** Local session for tests / CLI mains. */
   def local(appName: String = "graft"): SparkSession = {
-    val s = start(appName)(_.master(s"local[${envSizing.cpus}]"))
+    val s = start(appName)(_.master(s"local[$envCpus]"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * global). Corpus scalars (N, avgdl) ride along as a 1-row broadcast.
   * Candidate volume is Σ_t qf(t)·df(t): bounded by `maxDf`, which drops
   * stop-terms from CANDIDATE GENERATION exactly like the shingle
-  * index's conf-gated stop-shingle cap (d4/d34) — at web scale "the"
+  * index's `maxDf` stop-shingle cap (d4/d34) — at web scale "the"
   * would otherwise fan every query out to the whole corpus for terms
   * whose BM25 weight is near zero anyway.
   *

@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * all-pairs stage exists anywhere. The one data-dependent skew is a
   * stop-phrase shingle with a huge TRAIN document frequency putting that
   * many rows on one key of the df-cap aggregate; `maxDf` (the d34
-  * pattern, conf `spark.graft.decontam.maxDf`, 0 = off) drops shingles
-  * whose train df exceeds the cap, REDEFINING the shingle universe —
+  * pattern, 0 = off) drops shingles whose train df exceeds the cap,
+  * REDEFINING the shingle universe —
   * n_shingles and n_overlap both count only survivors, mirrored verbatim
   * in the d65 oracle. (Ubiquitous n-grams are exactly the ones the
   * published method considers uninformative for leak detection.) At the
@@ -49,19 +49,16 @@ object Decontaminate {
     * @param minOverlap colliding-shingle count at/above which the doc is
     *                   flagged (1 = the published any-collision rule)
     * @param maxDf      drop shingles with train document frequency above
-    *                   this from the universe (0 = off; -1 = defer to the
-    *                   conf `spark.graft.decontam.maxDf`)
+    *                   this from the universe (0 = off; negative fails)
     * @return one row PER TRAIN DOC — (idCol, n_shingles, n_overlap,
     *         contaminated); docs with < n tokens keep a (0, 0, false) row
     */
   def flagOverlap(
       train: DataFrame, evalCorpus: DataFrame, idCol: String, textCol: String,
-      n: Int = 13, minOverlap: Long = 1L, maxDf: Long = -1L): DataFrame = {
+      n: Int = 13, minOverlap: Long = 1L, maxDf: Long = 0L): DataFrame = {
     require(n >= 1, s"shingle width must be >= 1, got $n")
     require(minOverlap >= 1L, s"minOverlap must be >= 1, got $minOverlap")
-    val cap =
-      if (maxDf >= 0L) maxDf
-      else train.sparkSession.conf.get("spark.graft.decontam.maxDf", "0").toLong
+    require(maxDf >= 0L, s"maxDf must be >= 0 (0 = off), got $maxDf")
     // eval vocabulary: per-doc distinct shingles (WordShingleStrings
     // dedups in one pass) then a corpus-level distinct — built
     // distributively, never collected
@@ -78,10 +75,10 @@ object Decontaminate {
         explode_outer(WordShingleStrings(col(textCol), n)).as("g"))
       .filter(col("g").isNotNull)
     val tr =
-      if (cap <= 0L) trRaw
+      if (maxDf == 0L) trRaw
       else trRaw.join(
         trRaw.groupBy(col("g")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cap).select(col("g")),
+          .filter(col("__df") <= maxDf).select(col("g")),
         Seq("g"), "left_semi")
     val sizes = tr.groupBy(col("__id")).agg(count(lit(1)).as("n_shingles"))
     val hits = tr.join(evalSh, Seq("g"), "left_semi")

@@ -93,7 +93,8 @@ object Similarity {
     */
   def bruteForceTopKBroadcast(
       vecs: DataFrame, idCol: String, vecCol: String, k: Int,
-      roundTo: Int = 6, excludeSameLabel: Option[String] = None): DataFrame = {
+      roundTo: Int = 6, excludeSameLabel: Option[String] = None,
+      maxIndexBytes: Long = 1L << 30): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     // With excludeSameLabel, a candidate sharing the query's label is
@@ -123,18 +124,16 @@ object Similarity {
       .as[(Long, Array[Double], Long)]
     // Self-enforcing "fits in memory" contract (the nearDupPairs probe
     // pattern): measure the index side with one aggregate BEFORE pulling
-    // it to the driver, and refuse loudly past a conf-gated ceiling —
-    // a silent OOM at collect() names nothing and takes the driver down.
-    val maxBytes = spark.conf.getOption("spark.graft.ann.broadcastMaxBytes")
-      .map(_.toLong).getOrElse(1L << 30)
+    // it to the driver, and refuse loudly past `maxIndexBytes` — a
+    // silent OOM at collect() names nothing and takes the driver down.
     val sz = prepped.toDF().agg(
       count(lit(1)).as("n"),
       coalesce(sum(size(col("v")).cast("long")), lit(0L)).as("dims")).head()
     val estBytes = sz.getLong(0) * 24L + sz.getLong(1) * 8L
-    require(estBytes <= maxBytes,
+    require(estBytes <= maxIndexBytes,
       s"bruteForceTopKBroadcast: index side is ~$estBytes bytes " +
-        s"(${sz.getLong(0)} vectors), over spark.graft.ann.broadcastMaxBytes=" +
-        s"$maxBytes — use bruteForceTopK (blocked pair join), lshTopK, or " +
+        s"(${sz.getLong(0)} vectors), over maxIndexBytes=$maxIndexBytes — " +
+        "use bruteForceTopK (blocked pair join), lshTopK, or " +
         "ivfTopK, which never collect the index")
     val index = prepped.collect()
     val n = index.length

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * enumeration). The one adversarial regime is a hot basket (a crawler
   * "user" touching 10⁵ items → 5·10⁹ pairs from one key): `maxBasketItems`
   * drops baskets above the cap via a size semi-join BEFORE the pair join —
-  * the same conf-gated skew guard as the edit-distance blocker
-  * (`spark.graft.editblock.maxSize`) and the shingle maxDf cap. 0 = off
-  * (exact; the correctness gate runs uncapped).
+  * the same parameter-set skew guard as the edit-distance blocker's
+  * `maxBlock` and the shingle `maxDf` cap. 0 = off (exact; the
+  * correctness gate runs uncapped).
   *
   * Numerics: support counts are exact BIGINT; lift =
   * n_baskets·c(a,b)/(c(a)·c(b)) is ONE IEEE division of exact integers

@@ -1146,7 +1146,7 @@ object AggWindowQueries {
     // division of exact integers (the t41 rule) beside its raw inputs.
     // Scale shape: the pair generator is an equi-join on the basket key —
     // fan-out per basket is C(k,2), bounded by real basket sizes (a
-    // pathological hot basket is the skew case the conf-gated size cap
+    // pathological hot basket is the skew case the size cap
     // in the spec's operator variant drops); support counts map-side
     // combine; item counts join back on the part key; n_baskets is a
     // 1-row bounded scalar fold (q2 class, budget-audited). NEVER an

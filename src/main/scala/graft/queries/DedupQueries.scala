@@ -21,7 +21,7 @@ object DedupQueries {
     * thresholds. */
   private[graft] def shinglePairStats(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxDfOverride: Option[Long] = None) = {
+      maxDf: Long = 0L) = {
     // native single-pass shingling (WordShingleStrings): this stage is
     // evaluated once per join branch by design (recompute beats caching a
     // full-corpus shingle stream), so per-branch scan cost must be a tight
@@ -41,18 +41,16 @@ object DedupQueries {
     // rows on ONE shuffle key of the g-keyed self-join below, producing
     // f²/2 candidate pairs in a single task — the one data-dependent way
     // this stage degenerates at corpus scale. The guard drops shingles
-    // whose document frequency exceeds `spark.graft.shingle.maxDf`
-    // (a left-semi join against the surviving vocabulary: one extra
-    // g-keyed aggregate, bounding every join key at maxDf rows — per-key
-    // work becomes ≤ maxDf²/2 regardless of corpus size). Semantics: the
-    // cap REDEFINES the shingle universe — intersections AND set sizes
-    // both count only surviving shingles, so Jaccard stays a true Jaccard
+    // whose document frequency exceeds `maxDf` (a left-semi join against
+    // the surviving vocabulary: one extra g-keyed aggregate, bounding
+    // every join key at maxDf rows — per-key work becomes ≤ maxDf²/2
+    // regardless of corpus size). Semantics: the cap REDEFINES the
+    // shingle universe — intersections AND set sizes both count only
+    // surviving shingles, so Jaccard stays a true Jaccard
     // over the filtered sets (mirrored in [[shingleGraphSqlWith]]).
     // Default off (0): stop-phrase frequency is corpus-relative, so the
-    // threshold is deployment conf, not a constant — d34 pins the capped
-    // path against the oracle at a forced threshold.
-    val maxDf = maxDfOverride.getOrElse(
-      spark.conf.get("spark.graft.shingle.maxDf", "0").toLong)
+    // threshold is the caller's, not a constant — d34 pins the capped
+    // path against the oracle at maxDf = 3.
     val exploded =
       if (maxDf <= 0L) explodedRaw
       else explodedRaw.join(
@@ -89,7 +87,7 @@ object DedupQueries {
     * looser 0.5. */
   private def jaccardPairs(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      threshold: Double = 0.8, maxDf: Option[Long] = None) = {
+      threshold: Double = 0.8, maxDf: Long = 0L) = {
     val j = col("inter").cast("double") /
       (col("na") + col("nb") - col("inter")).cast("double")
     shinglePairStats(spark, dir, maxDf)
@@ -378,11 +376,10 @@ object DedupQueries {
           sum(when(col("fa") === col("fb"), 1L).otherwise(0L)).as("n_exact"))
     },
 
-    // D34: d4 under a FORCED document-frequency cap (maxDf = 3) — the
-    // oracled pin of the skew guard's filtered path. In production the cap
-    // arrives via `spark.graft.shingle.maxDf`; here it is forced so the
-    // capped Spark plan (left-semi vocabulary guard) and the capped oracle
-    // CTE (HAVING COUNT(*) <= 3) are hash-compared on real data: every
+    // D34: d4 under a document-frequency cap (maxDf = 3) — the oracled
+    // pin of the skew guard's filtered path: the capped Spark plan
+    // (left-semi vocabulary guard) and the capped oracle CTE
+    // (HAVING COUNT(*) <= 3) are hash-compared on real data: every
     // planted near-dup pair survives but every Jaccard VALUE shifts (the
     // universe shrank), so a desync between guard and oracle cannot hide.
     QueryDef.sql(
@@ -391,7 +388,7 @@ object DedupQueries {
          |SELECT id_a, id_b, round(CAST(inter AS DOUBLE) / (za.n + zb.n - inter), 6) AS jaccard
          |FROM p JOIN z za ON id_a = za.doc_id JOIN z zb ON id_b = zb.doc_id
          |WHERE CAST(inter AS DOUBLE) / (za.n + zb.n - inter) >= 0.8""".stripMargin) { (spark, dir) =>
-      jaccardPairs(spark, dir, maxDf = Some(3L))
+      jaccardPairs(spark, dir, maxDf = 3L)
     },
 
     // Duplicate-cluster assignment: connected components over the near-dup
@@ -1754,10 +1751,10 @@ object DedupQueries {
     // generation is PREFIX BLOCKING (docs sharing the title's first 10
     // chars), one equi-join on the block key — never all-pairs; the O(m·n)
     // verify runs only inside blocks. Skew guard mirrors the shingle
-    // maxDf pattern: `spark.graft.editblock.maxSize` (default off; the
-    // oracle is the uncapped semantics) drops blocks larger than the cap
-    // — a boilerplate title prefix shared by f docs would otherwise put
-    // f²/2 verifies on one key. DedupSpec pins the capped path.
+    // maxDf pattern: `editNearDupPairs`' `maxBlock` drops blocks larger
+    // than the cap — a boilerplate title prefix shared by f docs would
+    // otherwise put f²/2 verifies on one key. d37 runs uncapped (0, the
+    // oracle's semantics); DedupSpec pins the capped path.
     QueryDef.sql(
       "d37_edit_near_dup",
       """WITH t AS (SELECT doc_id, substr(lower(trim(text)), 1, 40) AS title FROM documents),
@@ -1766,11 +1763,10 @@ object DedupQueries {
         |  CAST(levenshtein(a.title, b2.title) AS INT) AS dist
         |FROM b a JOIN b b2 ON a.blk = b2.blk AND a.doc_id < b2.doc_id
         |WHERE levenshtein(a.title, b2.title) <= 8""".stripMargin) { (spark, dir) =>
-      val maxBlock = spark.conf.get("spark.graft.editblock.maxSize", "0").toLong
       editNearDupPairs(
         Tables.load(spark, dir, "documents")
           .select(col("doc_id"), substring(lower(trim(col("text"))), 1, 40).as("title")),
-        maxDist = 8, maxBlock = maxBlock)
+        maxDist = 8, maxBlock = 0L)
     },
 
     // D44: label-propagation communities over the 0.5-Jaccard near-dup

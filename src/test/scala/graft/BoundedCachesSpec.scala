@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.BoundedCaches
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * on its cache entry. The cached plan of an ORDERED frame carries an
   * output ordering, and the re-rooted leaf must carry it on its own
   * attributes: otherwise canonicalizing any plan over it (cache lookup,
-  * `sameResult`, reuse) fails with `key not found`.
+  * `sameResult`, reuse) fails with `key not found`. A query whose
+  * registered frames are released between construction and its action
+  * still returns its rows.
   */
 class BoundedCachesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -34,16 +37,34 @@ class BoundedCachesSpec extends AnyFunSuite {
     } finally BoundedCaches.releaseAll()
   }
 
-  test("SPARK_GRAFT_MAXLIVE: default 6, whole numbers >= 0, malformed fails naming the variable") {
-    assert(BoundedCaches.maxLive(Map.empty[String, String].get) == 6)
-    assert(BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> " 9 ").get) == 9)
-    assert(BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> "0").get) == 0)
-    for (bad <- Seq("six", "", "-1", "1.5", "99999999999")) {
-      val e = intercept[IllegalArgumentException] {
-        BoundedCaches.maxLive(Map("SPARK_GRAFT_MAXLIVE" -> bad).get)
-      }
-      assert(e.getMessage.contains("SPARK_GRAFT_MAXLIVE"), e.getMessage)
-      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+  /** Sorted-row digest of `df`'s result. */
+  private def digest(df: DataFrame): String = {
+    val rows = df.collect().map(_.toString).sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  }
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("evicted frames: t89 and t94 released between construction and action give the same rows") {
+    for (name <- Seq("t89_trigram_kn_perplexity", "t94_corpus_to_batches")) {
+      val query = SparkEntry.queries(name)
+      try {
+        val expected = digest(query(spark, TestSpark.sfDir))
+        BoundedCaches.releaseAll()
+        // control: a normal run's registered frames all go with releaseAll
+        val before = persistentRdds
+        val again = digest(query(spark, TestSpark.sfDir))
+        BoundedCaches.releaseAll()
+        assert(again == expected)
+        assert((persistentRdds -- before).isEmpty, s"$name: control left persisted RDDs")
+        val built = query(spark, TestSpark.sfDir)
+        BoundedCaches.releaseAll()
+        assert(digest(built) == expected, s"$name: rows changed once its frames were evicted")
+        BoundedCaches.releaseAll()
+        val left = (persistentRdds -- before).toSeq.sorted.map(spark.sparkContext.getPersistentRDDs(_).name)
+        info(s"$name: ${left.size} persisted RDDs left that no registered frame owns: ${left.mkString(", ")}")
+      } finally BoundedCaches.releaseAll()
     }
   }
 }

@@ -62,6 +62,8 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(got(4L) == ((2L, 0L, false)), "df-1 shingles survive the cap")
     val uncapped = flag(train, Seq(100L -> common))
     assert(uncapped(1L) == ((2L, 2L, true)), "without the cap the copies flag")
+    val e = intercept[IllegalArgumentException](flag(train, Seq(100L -> common), maxDf = -1L))
+    assert(e.getMessage.contains("maxDf") && e.getMessage.contains("-1"), e.getMessage)
   }
 
   private def excise(

@@ -183,7 +183,7 @@ class DedupSpec extends AnyFunSuite {
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val capped = graft.queries.DedupQueries
-      .shinglePairStats(spark, dir, Some(10L))
+      .shinglePairStats(spark, dir, maxDf = 10L)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val stopPairs = for {

@@ -3,9 +3,9 @@ package graft
 import graft.engine.GraftSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The dev mains' environment variables fail with a named error instead of
-  * a bare `NumberFormatException` or, for a mistyped query subset, an empty
-  * run that looks like a passing one. */
+/** The dev mains' environment variables and arguments fail with a named
+  * error instead of a bare `NumberFormatException` or `MatchError` or, for
+  * a mistyped query subset, an empty run that looks like a passing one. */
 class DevMainConfSpec extends AnyFunSuite {
 
   test("repeat counts parse as positive ints, naming the variable when malformed") {
@@ -40,6 +40,13 @@ class DevMainConfSpec extends AnyFunSuite {
     assert(Bench.selectNames(Map("SPARK_GRAFT_BENCH_ONLY" -> s"$outside,q1_pricing_summary").get) ==
       Seq(outside, "q1_pricing_summary").sorted)
     assert(Bench.selectNames(Map.empty[String, String].get) == Bench.headline)
+  }
+
+  test("Verify rejects a wrong argument count with its usage, before starting a session") {
+    for (args <- Seq(Array.empty[String], Array("sf"), Array("sf", "out", "extra"))) {
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage.contains("usage: Verify <sfDir> <outDir>"), e.getMessage)
+    }
   }
 
   test("every Bench headline name is a catalog query") {

@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
 /** The session's engine-level settings take effect: the codegen class cache
   * really has the builder's cap (Spark sizes it once per JVM, from whatever
   * conf is current at its first use), a warm loop larger than Spark's
-  * default 100 entries stops recompiling, the scratch-dir guard fails
-  * loudly on a malformed bound, the startup line names the `file://`
+  * default 100 entries stops recompiling, the scratch-dir choice comes
+  * with its reason, the startup line names the `file://`
   * FileSystem in effect, and the context's Hadoop configuration holds no
   * entry only Hadoop's bundled defaults set, before or after Spark's
   * file formats have run, while what the SparkConf, graft and a site file
@@ -53,25 +53,17 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(compiles() >= 1)
   }
 
-  test("scratch dir: malformed SPARK_GRAFT_SHM_MIN_FREE_GB fails naming the variable") {
-    for (bad <- Seq("16g", "", "-1", "1.5")) {
-      val e = intercept[IllegalArgumentException] {
-        GraftSession.scratchDir(Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> bad).get)
-      }
-      assert(e.getMessage.contains("SPARK_GRAFT_SHM_MIN_FREE_GB"), e.getMessage)
-      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
-    }
-  }
-
   test("scratch dir: the choice comes with its reason") {
     val tmp = new java.io.File(GraftBridge.tempDir("shm"))
-    val (tmpfs, why) = GraftSession.scratchDir(Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> "0").get, tmp)
+    val none: String => Option[String] = _ => None
+    val (tmpfs, why) = GraftSession.scratchDir(none, tmp, minFreeGiB = 0L)
     assert(tmpfs == s"$tmp/graft_scratch")
     assert(why.startsWith("tmpfs: ") && why.contains("vs the 0 GiB guard"), why)
-    val (disk, whyDisk) = GraftSession.scratchDir(
-      Map("SPARK_GRAFT_SHM_MIN_FREE_GB" -> Long.MaxValue.toString).get, tmp)
+    val (disk, whyDisk) = GraftSession.scratchDir(none, tmp, minFreeGiB = Long.MaxValue)
     assert(disk == sys.props("java.io.tmpdir"))
     assert(whyDisk.startsWith("disk: "), whyDisk)
+    assert(GraftSession.scratchDir(none, tmp)._2.contains("vs the 16 GiB guard"),
+      "the default guard is 16 GiB")
     assert(GraftSession.scratchDir(Map("SPARK_GRAFT_LOCAL_DIR" -> "/x").get) ==
       ("/x", "SPARK_GRAFT_LOCAL_DIR"))
   }
@@ -102,15 +94,12 @@ class GraftSessionSpec extends AnyFunSuite {
       (ours, s"$ours (spark.hadoop.fs.file.impl in the SparkConf)"))
   }
 
-  test("sizing: SPARK_GRAFT_CPUS and SPARK_GRAFT_SHUFFLE_PARTITIONS parse as positive ints") {
-    assert(GraftSession.sizing(Map.empty[String, String].get) == GraftSession.Sizing(32, 32))
-    assert(GraftSession.sizing(Map("SPARK_GRAFT_CPUS" -> " 4 ").get) == GraftSession.Sizing(4, 4))
-    assert(GraftSession.sizing(Map("SPARK_GRAFT_CPUS" -> "4",
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "64").get) == GraftSession.Sizing(4, 64))
-    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS");
-         bad <- Seq("0", "-2", "", "four", "1.5", "4g", "99999999999")) {
-      val e = intercept[IllegalArgumentException](GraftSession.sizing(Map(name -> bad).get))
-      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+  test("cpus: SPARK_GRAFT_CPUS parses as a positive int, default 32") {
+    assert(GraftSession.cpus(Map.empty[String, String].get) == 32)
+    assert(GraftSession.cpus(Map("SPARK_GRAFT_CPUS" -> " 4 ").get) == 4)
+    for (bad <- Seq("0", "-2", "", "four", "1.5", "4g", "99999999999")) {
+      val e = intercept[IllegalArgumentException](GraftSession.cpus(Map("SPARK_GRAFT_CPUS" -> bad).get))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
 
@@ -131,6 +120,8 @@ class GraftSessionSpec extends AnyFunSuite {
     val lines = buf.toString("UTF-8").linesIterator.filter(_.startsWith("[graft] session 'graft-test': ")).toSeq
     assert(lines.size == 1, buf.toString("UTF-8"))
     assert(lines.head.endsWith(s"; hadoop conf=$kept entries (0 bundled defaults dropped)"), lines.head)
+    val cpus = GraftSession.cpus(sys.env.get)
+    assert(lines.head.contains(s"; cpus=$cpus, shuffle partitions=$cpus;"), lines.head)
   }
 
   test("hadoop conf: bundled defaults go; set keys and the defaults their values name stay") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.io.Layout
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +15,6 @@ class LayoutSpec extends AnyFunSuite {
   test("bucketed co-located join plans with zero Exchange") {
     val facts = (1 to 1000).map(i => (i.toLong, i * 2.0)).toDF("k", "v")
     val dims = (1 to 200).map(i => (i.toLong, s"d$i")).toDF("k", "name")
-    // a previous JVM's warehouse dir survives the in-memory catalog; clear
-    // both the catalog entry and the location so Overwrite can recreate
-    Seq("graft_bucket_facts", "graft_bucket_dims").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      deleteRecursively(new java.io.File(
-        s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse/$t"))
-    }
     Layout.writeBucketed(facts, "graft_bucket_facts", "k", 4, sortCol = Some("k"))
     Layout.writeBucketed(dims, "graft_bucket_dims", "k", 4, sortCol = Some("k"))
     // force the shuffle-based join path so the assertion is about bucketing,
@@ -64,7 +58,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("partition pruning: equality filter reads only its directory") {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_part_test"
+    val dir = s"${GraftBridge.tempDir("graft_part_test")}/t"
     val df = Seq(("2024-01-01", 1L, "a"), ("2024-01-02", 2L, "b"), ("2024-01-03", 3L, "c"))
       .toDF("day", "id", "payload")
     Layout.writePartitioned(df, dir, Seq("day"))
@@ -108,34 +102,24 @@ class LayoutSpec extends AnyFunSuite {
     // The 100 TB star-join lever static pruning can't reach: the fact-side
     // partition filter is only knowable AFTER the dim filter runs, so Spark
     // injects a runtime `dynamicpruning` subquery on the partition column.
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_dpp_test"
-    val dimDir = s"${System.getProperty("java.io.tmpdir")}/graft_dpp_dim"
-    try {
-      val fact = (0L until 10000L).map(i => (i, i % 8, i * 1.5)).toDF("id", "part_key", "v")
-      Layout.writePartitioned(fact, dir, Seq("part_key"))
-      // The dim must be a real scan: a literal Seq would constant-fold its
-      // filter into a LocalRelation, and with no surviving selective
-      // predicate the PartitionPruning rule (correctly) stands down.
-      (0L until 8L).map(k => (k, if (k == 3L) "keep" else "drop"))
-        .toDF("part_key", "tag").write.mode("overwrite").parquet(dimDir)
-      val joined = withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true") {
-        val j = spark.read.parquet(dir)
-          .join(spark.read.parquet(dimDir).filter(col("tag") === "keep"), Seq("part_key"))
-        val plan = j.queryExecution.executedPlan.toString
-        assert(plan.contains("dynamicpruning"),
-          s"fact scan must carry a runtime partition-pruning subquery:\n$plan")
-        j
-      }
-      assert(joined.count() == 1250L)
-    } finally {
-      deleteRecursively(new java.io.File(dir))
-      deleteRecursively(new java.io.File(dimDir))
+    val root = GraftBridge.tempDir("graft_dpp")
+    val (dir, dimDir) = (s"$root/fact", s"$root/dim")
+    val fact = (0L until 10000L).map(i => (i, i % 8, i * 1.5)).toDF("id", "part_key", "v")
+    Layout.writePartitioned(fact, dir, Seq("part_key"))
+    // The dim must be a real scan: a literal Seq would constant-fold its
+    // filter into a LocalRelation, and with no surviving selective
+    // predicate the PartitionPruning rule (correctly) stands down.
+    (0L until 8L).map(k => (k, if (k == 3L) "keep" else "drop"))
+      .toDF("part_key", "tag").write.mode("overwrite").parquet(dimDir)
+    val joined = withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true") {
+      val j = spark.read.parquet(dir)
+        .join(spark.read.parquet(dimDir).filter(col("tag") === "keep"), Seq("part_key"))
+      val plan = j.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruning"),
+        s"fact scan must carry a runtime partition-pruning subquery:\n$plan")
+      j
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
+    assert(joined.count() == 1250L)
   }
 
   private def withConf[A](key: String, value: String)(body: => A): A = {

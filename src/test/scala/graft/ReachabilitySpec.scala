@@ -21,15 +21,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-carried callback.
   *
   * Test scratch: no spec makes a temp directory with
-  * `createTempDirectory`, which nothing deletes; specs use
-  * `GraftBridge.tempDir`, deleted at JVM exit.
+  * `createTempDirectory`, which nothing deletes, or builds a fixed path
+  * under `java.io.tmpdir`, which two test JVMs would share; specs use
+  * `GraftBridge.tempDir`, per JVM and deleted at exit.
+  *
+  * Configuration reads: no `spark.graft.*` key in src/main, and only the
+  * mains and the session factory (`Main`, `Bench`, `Verify`,
+  * `GraftSession`) read the environment, so every setting is parsed
+  * where its entry point is.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val roots = Seq("Main", "Verify", "Bench", "ExplainPlan")
-
-  /** The knob registry: no main reads it, `GraftConfSpec` does. */
-  private val allowed = Set("GraftConf")
 
   /** Drops `//` and (nested) block comments; string and char literals are
     * kept verbatim so a `//` inside a URL literal is not a comment. */
@@ -158,6 +161,25 @@ class ReachabilitySpec extends AnyFunSuite {
     tempDirCall.findAllMatchIn(text).exists(m =>
       !(path.endsWith("/TarShardsSpec.scala") && m.group(1) == "\"graft_control\""))
 
+  /** An interpolated `java.io.tmpdir` read: a fixed path under it. */
+  private val fixedTmpPath = """\$\{[^}]*"java\.io\.tmpdir"[^}]*\}""".r
+
+  /** A `spark.graft.` key, or an environment read. */
+  private val graftKey = """spark\.graft\.""".r
+  private val envRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
+
+  /** The files that may read the environment: the mains that take their
+    * dev settings from it and the session factory. */
+  private val envReaders = Set("Main.scala", "Bench.scala", "Verify.scala", "GraftSession.scala")
+
+  /** Why a (comment-stripped) src/main file breaks the configuration rule,
+    * if it does. */
+  private def configFault(path: String, text: String): Option[String] =
+    if (graftKey.findFirstIn(text).isDefined) Some("a spark.graft.* key")
+    else if (envRead.findFirstIn(text).isDefined &&
+        !envReaders(java.nio.file.Paths.get(path).getFileName.toString)) Some("an environment read")
+    else None
+
   test("comment stripping keeps string literals and drops nested comments") {
     val src = "val u = \"s3://b/k\" // Gone\n/* a /* Gone */ b */ val c = '/'"
     val s = stripComments(src)
@@ -167,7 +189,7 @@ class ReachabilitySpec extends AnyFunSuite {
 
   test("every top-level definition in src/main is reachable from the four mains") {
     roots.foreach(r => assert(defs.contains(r), s"main $r not found in src/main/scala"))
-    val unreached = (defs.keySet -- reached -- allowed).toSeq.sorted
+    val unreached = (defs.keySet -- reached).toSeq.sorted
     assert(unreached.isEmpty,
       s"defined in src/main but reached from no main: ${unreached.mkString(", ")}")
   }
@@ -197,10 +219,29 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(leavesTempDir("src/test/scala/graft/TarShardsSpec.scala", s"""val d = $call("tarshards")"""))
     assert(!leavesTempDir("src/test/scala/graft/TarShardsSpec.scala", s"""val c = $call("graft_control")"""))
     assert(!leavesTempDir("src/test/scala/graft/XSpec.scala", stripComments(s"""// $call("x")""")))
-    val leaving = scalaSources("src/test/scala").toSeq.collect {
-      case (path, text) if leavesTempDir(path, text) => path
+    val tmpdir = "\"java.io." + "tmpdir\""
+    assert(fixedTmpPath.findFirstIn("val d = s\"${System.getProperty(" + tmpdir + ")}/x\"").isDefined)
+    assert(fixedTmpPath.findFirstIn("val d = s\"${sys.props(" + tmpdir + ")}/x\"").isDefined)
+    assert(fixedTmpPath.findFirstIn("val t = sys.props(" + tmpdir + ")").isEmpty)
+    val tests = scalaSources("src/test/scala").toSeq
+    val leaving = tests.collect { case (path, text) if leavesTempDir(path, text) => path }.sorted
+    val fixed = tests.collect { case (path, text) if fixedTmpPath.findFirstIn(text).isDefined => path }.sorted
+    assert(leaving.isEmpty && fixed.isEmpty,
+      s"temp directories nothing deletes (use GraftBridge.tempDir) made in: ${leaving.mkString(", ")}; " +
+        s"fixed paths under java.io.tmpdir built in: ${fixed.mkString(", ")}")
+  }
+
+  test("configuration reads: no spark.graft.* key, and the environment is read only by the mains") {
+    // controls
+    val key = "\"spark.graft.x\""
+    assert(configFault("src/main/scala/graft/X.scala", s"conf.get($key, \"0\")").isDefined)
+    assert(configFault("src/main/scala/graft/X.scala", "sys.env.get(\"A\")").isDefined)
+    assert(configFault("src/main/scala/graft/X.scala", "System.getenv(\"A\")").isDefined)
+    assert(configFault("src/main/scala/graft/Bench.scala", "sys.env.get(\"A\")").isEmpty)
+    assert(configFault("src/main/scala/graft/X.scala", stripComments(s"// conf.get($key)")).isEmpty)
+    val faults = sources.toSeq.flatMap { case (path, text) =>
+      configFault(path, text).map(why => s"$path ($why)")
     }.sorted
-    assert(leaving.isEmpty,
-      s"temp directories nothing deletes (use GraftBridge.tempDir) made in: ${leaving.mkString(", ")}")
+    assert(faults.isEmpty, s"configuration read outside the mains in: ${faults.mkString(", ")}")
   }
 }

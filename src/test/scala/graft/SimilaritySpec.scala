@@ -213,14 +213,11 @@ class SimilaritySpec extends AnyFunSuite {
     // without the driver ever pulling a row.
     val vecs = (0L until 64L).map(i =>
       (i, Array.fill(8)(i.toDouble + 1))).toDF("vec_id", "embedding")
-    spark.conf.set("spark.graft.ann.broadcastMaxBytes", "64")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.bruteForceTopKBroadcast(vecs, "vec_id", "embedding", k = 2)
-      }
-      assert(e.getMessage.contains("lshTopK") && e.getMessage.contains("ivfTopK") &&
-        e.getMessage.contains("bruteForceTopK"))
-    } finally spark.conf.unset("spark.graft.ann.broadcastMaxBytes")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.bruteForceTopKBroadcast(vecs, "vec_id", "embedding", k = 2, maxIndexBytes = 64)
+    }
+    assert(e.getMessage.contains("lshTopK") && e.getMessage.contains("ivfTopK") &&
+      e.getMessage.contains("bruteForceTopK") && e.getMessage.contains("maxIndexBytes=64"))
     // and under the default ceiling the same frame still runs
     val ok = Similarity.bruteForceTopKBroadcast(vecs, "vec_id", "embedding", k = 2)
     assert(ok.count() > 0)

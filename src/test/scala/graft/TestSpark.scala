@@ -6,8 +6,10 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (Spark startup is ~5 s;
   * per-suite sessions would dominate test time). It starts through
   * `GraftSession.start`, as `GraftSession.local` does, so specs run on the
-  * lean Hadoop configuration the mains get. `spark.hadoop.graft.test.conf`
-  * is a SparkConf Hadoop key for `GraftSessionSpec` to find kept. */
+  * lean Hadoop configuration the mains get, and the engine's per-JVM
+  * warehouse (`GraftSession.warehouseDir`), so two test JVMs share no
+  * table location. `spark.hadoop.graft.test.conf` is a SparkConf Hadoop
+  * key for `GraftSessionSpec` to find kept. */
 object TestSpark {
   /** Smoke-tier test corpus (TESTDATA.md). */
   val sfDir = "/root/testdata/sf0.001"
@@ -16,8 +18,6 @@ object TestSpark {
   val settings: SparkSession.Builder => SparkSession.Builder = _
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
     .config("spark.hadoop.graft.test.conf", "from-sparkconf")
 
   lazy val spark: SparkSession = {
